@@ -353,7 +353,7 @@ def warm_up(spark, cpus: int) -> None:
     import pandas as pd
 
     def touch(batches):
-        from docling_pdf_spark.core.batch import extract_pdf_batch  # noqa: F401
+        from docling_pdf_spark.core.batch import extract_arrow_batch  # noqa: F401
 
         for b in batches:
             yield pd.DataFrame({"id": b["id"][:1]})

@@ -126,7 +126,7 @@ def main(argv: list[str] | None = None) -> int:
     import pandas as pd
 
     def _touch(batches):
-        from docling_pdf_spark.core.batch import extract_pdf_batch  # noqa: F401
+        from docling_pdf_spark.core.batch import extract_arrow_batch  # noqa: F401
 
         for b in batches:
             yield pd.DataFrame({"id": b["id"][:1]})

@@ -52,6 +52,7 @@ def run_mode(spark, docs, mode: str, num_partitions: int):
         heavy_only_salting,
         resolve_salt_mode,
         salted_repartition,
+        with_cost,
     )
 
     resolved = mode
@@ -64,15 +65,13 @@ def run_mode(spark, docs, mode: str, num_partitions: int):
     elif resolved == "heavy":
         staged = heavy_only_salting(docs, num_partitions)
     elif resolved == "none":
-        staged = docs
+        staged = with_cost(docs)  # the kernel re-chunks by _cost_bytes
     else:
         raise ValueError(mode)
 
     t0 = time.perf_counter()
     rows = timed_partition_probe(
-        staged.select("doc_id", "spans", *(
-            ["_cost_bytes"] if "_cost_bytes" in staged.columns else []
-        ))
+        staged.select("doc_id", "spans", "_cost_bytes")
     ).collect()
     wall = time.perf_counter() - t0
     busy = sorted((r["sec"], r["rows"]) for r in rows if r["rows"] > 0)

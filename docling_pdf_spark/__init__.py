@@ -4,12 +4,12 @@ Brand-new implementation (NOT a port) with the query/data-processing
 capabilities of the reference `andreantama/docling-pdf` (a single-node
 FastAPI + docling PDF extraction worker; see SURVEY.md for the full
 file:line mapping). The reference's per-document transform is
-re-expressed as a vectorized pandas/Arrow stage over Spark DataFrames of
+re-expressed as a vectorized Arrow stage over Spark DataFrames of
 interleaved text+media documents:
 
     documents(doc_id: string,
               spans: array<struct<kind,text,media_ref,offset:int>>)
-        --mapInPandas(extract)-->
+        --mapInArrow(extract)-->
     documents_extracted(doc_id, extraction_successful, extraction_method,
                         spans, n_pages, n_chars, n_words, has_tables,
                         has_images, warning, error)

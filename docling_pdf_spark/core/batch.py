@@ -1,10 +1,10 @@
-"""Vectorized-batch wrappers around the per-doc semantics.
+"""Vectorized-batch wrapper around the per-doc semantics.
 
-These are the functions the Spark stage feeds Arrow batches into via
-``mapInPandas`` (iterator form — streams batches, bounds memory for
-oversized docs; SURVEY.md §2a X1/X15). They are plain
-pandas-DataFrame-in / pandas-DataFrame-out so the oracle and tests can
-call them without a SparkSession.
+`extract_arrow_batch` is what the Spark stage feeds Arrow batches into
+(``mapInArrow`` via pipeline._chunked_extract_arrow — iterator form,
+streams batches, bounds memory for oversized docs; SURVEY.md §2a
+X1/X15). It is plain RecordBatch-in / RecordBatch-out, so the oracle
+and tests can call it without a SparkSession.
 
 The per-doc loop INSIDE a batch is unavoidable (each payload is an
 opaque byte stream, like the reference's one-PDF-at-a-time converter
@@ -15,28 +15,10 @@ Arrow batch, never per row.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-
-import pandas as pd
 import pyarrow as pa
 
 from docling_pdf_spark.core.extract import OUTPUT_COLUMNS, extract_document
 from docling_pdf_spark.schemas import EXTRACTED_PA
-
-
-def extract_pdf_batch(batch: pd.DataFrame) -> pd.DataFrame:
-    """(doc_id, spans) batch → EXTRACTED_SCHEMA batch."""
-    doc_ids = batch["doc_id"].tolist()
-    spans_col = batch["spans"].tolist()
-    rows = [extract_document(d, s) for d, s in zip(doc_ids, spans_col)]
-    return pd.DataFrame(rows, columns=OUTPUT_COLUMNS)
-
-
-def extract_iter(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas entrypoint: Iterator[pd.DataFrame] → Iterator[pd.DataFrame]."""
-    for batch in batches:
-        if len(batch):
-            yield extract_pdf_batch(batch)
 
 
 def extract_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
@@ -45,8 +27,7 @@ def extract_arrow_batch(batch: pa.RecordBatch) -> pa.RecordBatch:
     Skips the pandas object-column round-trip entirely: to_pylist() is
     a single C call, and the output RecordBatch is built with explicit
     types from EXTRACTED_PA — no dtype inference on the nested spans
-    column. ~1.5-2× faster per batch than the pandas wrapper for this
-    struct-heavy schema."""
+    column."""
     schema = batch.schema
     doc_ids = batch.column(schema.get_field_index("doc_id")).to_pylist()
     spans = batch.column(schema.get_field_index("spans")).to_pylist()

@@ -69,8 +69,9 @@ def scan_row_groups(df: DataFrame, cap: int) -> int | None:
 
         n = 0
         for p in paths:
-            if not p.endswith(".parquet"):
-                return None
+            # identify parquet by its footer, not its name (part files
+            # need not carry a .parquet suffix); a non-parquet file
+            # raises here -> None
             n += pq.ParquetFile(p).num_row_groups
             if n >= cap:
                 return cap

@@ -2,7 +2,7 @@
 
     scan documents (pruned by resume bucket filter)
       → salted repartition on (cost_bucket, salt)     # skew-taming shuffle
-      → mapInPandas(extract_iter)                     # ONLY Python stage
+      → mapInArrow(_chunked_extract_arrow)            # ONLY Python stage
       → write documents_extracted partitioned by bucket (idempotent)
       → per-bucket metrics agg → _progress manifest commit
 
@@ -15,7 +15,8 @@ Spark-first notes:
     oversized cohort into the tasks that read their row groups. We
     repartition on a uniform salt derived from xxhash64(doc_id), with
     heavyweight docs (payload ≥ OVERSIZE_COST_BUCKET_BYTES) spread
-    round-robin so no two giants must share a task; Arrow batches are
+    round-robin so no two giants must share a task (run_extraction
+    sizes that spread to each commit group's giant count); Arrow batches are
     additionally re-chunked by cumulative payload bytes inside the UDF
     so one giant can't blow a batch (analog of the reference's 50 MB
     admission cap world, docling-pdf config.py:20).
@@ -74,30 +75,20 @@ def _chunked_extract_arrow(
     batches: Iterable["pa.RecordBatch"],
 ) -> Iterator["pa.RecordBatch"]:
     """mapInArrow body: re-chunk each Arrow batch so cumulative payload
-    stays under MAX_BATCH_PAYLOAD_BYTES (one oversized doc can't blow a
-    batch), then run the shared semantics Arrow-native — the pandas
-    object-column round-trip is skipped entirely."""
+    (the JVM-computed _cost_bytes column) stays under
+    MAX_BATCH_PAYLOAD_BYTES (one oversized doc can't blow a batch),
+    then run the shared semantics Arrow-native."""
     from docling_pdf_spark.core.batch import extract_arrow_batch
 
     for batch in batches:
         n = batch.num_rows
         if not n:
             continue
-        idx = batch.schema.get_field_index("_cost_bytes")
-        if idx >= 0:
-            cost = batch.column(idx).to_pylist()
-            # version-safe projection: RecordBatch.drop_columns only
-            # exists in pyarrow >= 16 (round-1 ADVICE — older installs
-            # are common on managed clusters)
-            batch = batch.select(
-                [n for n in batch.schema.names if n != "_cost_bytes"]
-            )
-        else:
-            spans_idx = batch.schema.get_field_index("spans")
-            cost = [
-                0 if ss is None else sum(len(s["text"] or "") for s in ss)
-                for ss in batch.column(spans_idx).to_pylist()
-            ]
+        cost = batch.column(batch.schema.get_field_index("_cost_bytes")).to_pylist()
+        # version-safe projection: RecordBatch.drop_columns only
+        # exists in pyarrow >= 16 (older installs are common on
+        # managed clusters)
+        batch = batch.select([c for c in batch.schema.names if c != "_cost_bytes"])
         start = 0
         run = 0
         for i, c in enumerate(cost):
@@ -240,19 +231,30 @@ def resolve_salt_mode(df: DataFrame, num_partitions: int) -> str:
 def heavy_only_salting(df: DataFrame, num_partitions: int) -> DataFrame:
     """Skew taming without shuffling the world (the 100 TB-correct
     variant): only the oversized cohort (~0.5% of docs, but the entire
-    stage tail if they cluster in one input split) is hash-scattered
-    across num_partitions; light docs keep the scan's narrow
-    partitioning. Shuffle volume drops from |table| to |heavy cohort|,
-    and the JVM ser/deser cost stops competing with the Python workers
-    for cores."""
+    stage tail if they cluster in one input split) is scattered across
+    num_partitions; light docs keep the scan's narrow partitioning.
+    Shuffle volume drops from |table| to |heavy cohort|, and the JVM
+    ser/deser cost stops competing with the Python workers for cores.
+
+    Each heavy partition is one more Python task, with a fixed cost even
+    when empty (~0.3 s on a 4-core VM), so run_extraction passes
+    num_partitions = min(cap, giants in the commit group) and skips this
+    branch — and its second scan of the input — for groups with no
+    giants."""
     df = with_cost(df)
     is_heavy = F.col("_cost_bytes") >= OVERSIZE_COST_BUCKET_BYTES
     light = df.where(~is_heavy)
     # round-robin, not hash: with ~#partitions giants, hashing
-    # birthday-collides several into one task (measured 25× max/median);
-    # round-robin is an exact spread and the determinism sort it needs
-    # touches only the heavy cohort
-    heavy = df.where(is_heavy).repartition(num_partitions)
+    # birthday-collides several into one task (measured 25× max/median).
+    # Round-robin is exact only within one map partition (each map task
+    # starts at its own offset: 10 giants from 10 splits into 10 slots
+    # measured [1,2,2,2,3]), so the cohort is first gathered into one
+    # doc_id-sorted partition; the sort also keeps CollapseRepartition
+    # from folding the two repartitions into one. Loads then differ by
+    # at most 1.
+    heavy = df.where(is_heavy).repartition(1)
+    if num_partitions > 1:
+        heavy = heavy.sortWithinPartitions("doc_id").repartition(num_partitions)
     return light.unionByName(heavy)
 
 
@@ -289,10 +291,11 @@ def extract(
             df = heavy_only_salting(df, num_partitions)
         elif salt_mode != "none":
             raise ValueError(f"unknown salt_mode: {salt_mode}")
-    cols = ["doc_id", "spans"]
-    if "_cost_bytes" in df.columns:
-        cols.append("_cost_bytes")
-    return df.select(*cols).mapInArrow(_chunked_extract_arrow, schema=EXTRACTED_SCHEMA)
+    if "_cost_bytes" not in df.columns:  # the salting paths add it
+        df = with_cost(df)
+    return df.select("doc_id", "spans", "_cost_bytes").mapInArrow(
+        _chunked_extract_arrow, schema=EXTRACTED_SCHEMA
+    )
 
 
 # --------------------------------------------------------------------------
@@ -363,22 +366,35 @@ def run_extraction(
     groups = [pending[i : i + group_size] for i in range(0, len(pending), group_size)]
 
     # completeness-guard input counts for ALL pending buckets in ONE
-    # doc_id-pruned scan (whole-round-review finding: the per-group
-    # recount was an extra full input scan per commit group)
-    in_counts = {
-        r["bucket"]: int(r["n"])
-        for r in docs.where(F.col("bucket").isin([int(b) for b in pending]))
+    # scan (a per-group recount would be an extra full input scan per
+    # commit group). Heavy mode also counts
+    # each bucket's giants here, so every group's heavy exchange is
+    # sized without another job.
+    heavy = salt_mode == "heavy" and bool(num_partitions)
+    aggs = [F.count("*").alias("n")]
+    if heavy:
+        aggs.append(
+            F.sum((_cost_expr() >= OVERSIZE_COST_BUCKET_BYTES).cast("long")).alias("g")
+        )
+    in_rows = (
+        docs.where(F.col("bucket").isin([int(b) for b in pending]))
         .groupBy("bucket")
-        .agg(F.count("*").alias("n"))
+        .agg(*aggs)
         .collect()
-    }
+    )
+    in_counts = {r["bucket"]: int(r["n"]) for r in in_rows}
+    giants = {r["bucket"]: int(r["g"]) for r in in_rows} if heavy else {}
 
     for gi, group in enumerate(groups):
-        started = _utcnow_iso(spark)
-        sub = docs.where(F.col("bucket").isin([int(b) for b in group]))
-        out = extract(
-            sub.drop("bucket"), num_partitions=num_partitions, salt_mode=salt_mode
-        )
+        started = _utcnow_iso()
+        sub = docs.where(F.col("bucket").isin([int(b) for b in group])).drop("bucket")
+        parts, mode = num_partitions, salt_mode
+        if heavy:
+            # one round-robin slot per giant, capped at num_partitions;
+            # a group without giants plans no heavy branch at all
+            g = sum(giants.get(b, 0) for b in group)
+            parts, mode = (min(num_partitions, g), "heavy") if g else (None, "none")
+        out = extract(sub, num_partitions=parts, salt_mode=mode)
         out = out.withColumn(
             "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
         )
@@ -406,7 +422,7 @@ def run_extraction(
             )
             .collect()
         )
-        finished = _utcnow_iso(spark)
+        finished = _utcnow_iso()
         by_bucket = {r["bucket"]: r for r in stats}
         # completeness guard (reference main.py:232-236 analog: a task
         # marked completed with no result is a 500, not a success): a
@@ -448,7 +464,7 @@ def run_extraction(
     return log
 
 
-def _utcnow_iso(spark: SparkSession) -> str:
+def _utcnow_iso() -> str:
     """Real timestamps (deliberate improvement over the reference's
     always-null created_at/completed_at, redis_manager.py:57,122)."""
     import datetime

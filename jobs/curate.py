@@ -157,15 +157,17 @@ def curate(
                     f"{sorted(_need)}, found {sorted(_cols)}"
                 )
     if quality_exemplars is not None:
+        _label = F.col("label").try_cast("double")
         _bad = (
             spark.read.parquet(quality_exemplars)
             .where(
                 # validate WITHOUT truncation: cast-to-int would floor
                 # a fractional label like 0.9 to 0 and let it pass,
-                # only to crash hours later at LogisticRegression.fit
-                # (round-6 advice, low)
-                F.col("label").isNull()
-                | ~F.col("label").cast("double").isin(0.0, 1.0)
+                # only to crash hours later at LogisticRegression.fit.
+                # try_cast: an uncastable label like 'yes' is NULL
+                # (flagged) under either ANSI mode, where cast would
+                # pass it (ANSI off) or crash (on).
+                _label.isNull() | ~_label.isin(0.0, 1.0)
             )
             .limit(1)
             .count()

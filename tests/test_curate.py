@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from docling_pdf_spark.schemas import DOCUMENTS_PA
 
@@ -798,6 +799,28 @@ def test_curate_fractional_label_rejected(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="0 or 1"):
         curate(spark, missing, out, quality_exemplars=frac_labels)
+
+
+@pytest.mark.parametrize("ansi", ["false", "true"])
+def test_curate_uncastable_label_rejected(spark, tmp_path, ansi):
+    """An uncastable label like 'yes' must hit the label guard in both
+    ANSI modes: a plain cast gives NULL under ANSI off (and NULL slips
+    past ~isin), and raises a cast error under ANSI on."""
+    from jobs.curate import curate
+
+    missing = str(tmp_path / "nope.parquet")
+    out = str(tmp_path / "o")
+    word_labels = str(tmp_path / "words.parquet")
+    pq.write_table(
+        pa.table({"text": ["a", "b"], "label": ["1", "yes"]}), word_labels
+    )
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", ansi)
+    try:
+        with pytest.raises(ValueError, match="0 or 1"):
+            curate(spark, missing, out, quality_exemplars=word_labels)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_curate_mix_stratum_typo_fails_fast(spark, tmp_path):

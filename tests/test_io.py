@@ -57,3 +57,28 @@ def test_parquet_mode_rejects_merge(spark, tmp_path):
     io = TableIO(spark, mode="parquet", warehouse=str(tmp_path))
     with pytest.raises(RuntimeError, match="iceberg-mode"):
         io.merge_progress(spark.range(1))
+
+
+def test_scan_row_groups_reads_suffixless_parquet(spark, tmp_path):
+    """Parquet part files need not end in .parquet: the probe identifies
+    them by their footer, and still reports None (unknown) for a
+    non-parquet input."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from docling_pdf_spark.functions.scanspread import (
+        scan_row_groups,
+        spread_unsplittable,
+    )
+    from docling_pdf_spark.plans import formatted_plan
+
+    part = str(tmp_path / "part-00000")
+    pq.write_table(pa.table({"id": list(range(30))}), part, row_group_size=10)
+    df = spark.read.parquet(part)
+    assert scan_row_groups(df, cap=100) == 3
+    # 3 row groups < defaultParallelism (4): the spread applies
+    assert "RoundRobinPartitioning" in formatted_plan(spread_unsplittable(df))
+
+    text = tmp_path / "notes"
+    text.write_text("not parquet\n")
+    assert scan_row_groups(spark.read.text(str(text)), cap=100) is None

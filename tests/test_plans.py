@@ -241,6 +241,43 @@ def test_auto_salt_mode_selection(spark):
     assert "_salt" in auto_sorted  # uniform salt repartition present
 
 
+@pytest.mark.parametrize("g,num_partitions", [(3, 3), (8, 8), (11, 4)])
+def test_heavy_cohort_spread_is_exact(spark, g, num_partitions):
+    """Round-robin from many map tasks is not an exact spread: each task
+    starts at its own offset, so giants from different scan splits
+    collide. heavy_only_salting gathers the cohort first, so with
+    g <= num_partitions every heavy partition holds exactly one giant,
+    and with more giants the loads differ by at most 1."""
+    from pyspark.sql import functions as F
+
+    from docling_pdf_spark.conf import OVERSIZE_COST_BUCKET_BYTES
+    from docling_pdf_spark.pipeline import heavy_only_salting
+
+    # one giant per input split: g splits, one row each
+    giants = spark.range(g, numPartitions=g).select(
+        F.concat(F.lit("giant-"), F.col("id").cast("string")).alias("doc_id"),
+        F.array(
+            F.struct(
+                F.lit("text").alias("kind"),
+                F.expr(f"repeat('x', {OVERSIZE_COST_BUCKET_BYTES})").alias("text"),
+                F.lit(None).cast("string").alias("media_ref"),
+                F.lit(0).alias("offset"),
+            )
+        ).alias("spans"),
+    )
+    loads = [
+        r["n"]
+        for r in heavy_only_salting(giants, num_partitions)
+        .where(F.col("_cost_bytes") >= OVERSIZE_COST_BUCKET_BYTES)
+        .groupBy(F.spark_partition_id().alias("pid"))
+        .agg(F.count("*").alias("n"))
+        .collect()
+    ]
+    assert sum(loads) == g
+    assert len(loads) == min(g, num_partitions)
+    assert max(loads) - min(loads) <= 1  # g <= num_partitions: all 1
+
+
 def test_detector_survives_sparse_per_split_samples(spark):
     """Second-review finding: at ~1 sampled doc per split the ANOVA
     correction cancels the between-split variance exactly, blinding the

@@ -143,3 +143,136 @@ def test_lineage_guard_rejects_changed_input(spark, corpus, tmp_path):
         f.write(b"\x00")
     with pytest.raises(RuntimeError, match="lineage mismatch"):
         run_extraction(spark, moved, out, ckpt, n_buckets=4)
+
+
+# ---------------------------------------------------------------------------
+# heavy mode: each commit group's heavy exchange is sized to its giants
+# ---------------------------------------------------------------------------
+
+# giants per commit group (buckets_per_commit=2 over 8 buckets): uneven,
+# one group with none, one with more giants than HEAVY_PARTITIONS
+GIANTS_PER_GROUP = {0: 5, 1: 0, 2: 1, 3: 2}
+HEAVY_PARTITIONS = 4
+
+
+@pytest.fixture(scope="module")
+def uneven_corpus(spark, tmp_path_factory):
+    """The light fixture corpus plus text-only giants, placed by bucket so
+    their count differs per commit group."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from docling_pdf_spark.conf import OVERSIZE_COST_BUCKET_BYTES
+    from docling_pdf_spark.fixtures import gen_documents
+    from docling_pdf_spark.schemas import DOCUMENTS_PA
+
+    ids = [f"giant-{i:04d}" for i in range(200)]
+    bucket = {
+        r["doc_id"]: r["b"]
+        for r in spark.createDataFrame([(d,) for d in ids], "doc_id string")
+        .select("doc_id", F.pmod(F.xxhash64("doc_id"), F.lit(N_BUCKETS)).alias("b"))
+        .collect()
+    }
+    giants = []
+    for group, want in GIANTS_PER_GROUP.items():
+        pick = [d for d in ids if bucket[d] // 2 == group][:want]
+        giants += [
+            {"doc_id": d, "spans": [{
+                "kind": "text", "media_ref": None, "offset": 0,
+                "text": f"{d} " + "lorem ipsum dolor " * (OVERSIZE_COST_BUCKET_BYTES // 18 + 1),
+            }]}
+            for d in pick
+        ]
+    light = gen_documents(N_DOCS).to_pylist()
+    # interleave the giants through the light docs (different row groups)
+    rows = []
+    step = len(light) // len(giants)
+    for i, g in enumerate(giants):
+        rows += light[i * step:(i + 1) * step] + [g]
+    rows += light[len(giants) * step:]
+    path = str(tmp_path_factory.mktemp("uneven-corpus") / "documents.parquet")
+    pq.write_table(pa.Table.from_pylist(rows, schema=DOCUMENTS_PA), path, row_group_size=16)
+    return path
+
+
+def test_heavy_exchange_sized_per_commit_group(spark, uneven_corpus, tmp_path, monkeypatch):
+    """Each group's heavy round-robin gets min(num_partitions, giants)
+    partitions; a group without giants plans no Union and no Exchange
+    (so no second input scan and no empty Python tasks)."""
+    import docling_pdf_spark.pipeline as pl
+    from docling_pdf_spark.plans import formatted_plan
+
+    real_extract = pl.extract
+    planned = []
+
+    def recording_extract(df, num_partitions=None, salt_mode="auto"):
+        out = real_extract(df, num_partitions=num_partitions, salt_mode=salt_mode)
+        planned.append((num_partitions, salt_mode, formatted_plan(out)))
+        return out
+
+    monkeypatch.setattr(pl, "extract", recording_extract)
+    run_extraction(
+        spark, uneven_corpus, str(tmp_path / "extracted"), str(tmp_path / "ckpt"),
+        n_buckets=N_BUCKETS, buckets_per_commit=2,
+        num_partitions=HEAVY_PARTITIONS, salt_mode="heavy",
+    )
+    assert len(planned) == len(GIANTS_PER_GROUP)
+    for (parts, mode, plan), g in zip(planned, GIANTS_PER_GROUP.values()):
+        if g == 0:
+            assert mode == "none"
+            assert "Union" not in plan and "Exchange" not in plan
+        else:
+            assert (parts, mode) == (min(HEAVY_PARTITIONS, g), "heavy")
+            assert "Union" in plan
+            # one giant: a single gather; more: gather, then round-robin
+            assert plan.count("Exchange") == (2 if parts == 1 else 4)
+            if parts > 1:
+                assert f"RoundRobinPartitioning({parts})" in plan
+
+
+def test_uneven_giants_kill_resume_equals_oracle(spark, uneven_corpus, tmp_path):
+    """Heavy mode on giants spread unevenly over buckets, killed after two
+    commit groups and resumed: every bucket is committed exactly once, and
+    the output and per-bucket manifests equal the serial oracle's."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from docling_pdf_spark.oracle import run_oracle
+    from docling_pdf_spark.schemas import EXTRACTED_PA
+
+    out = str(tmp_path / "extracted")
+    ckpt = str(tmp_path / "ckpt")
+    kw = dict(n_buckets=N_BUCKETS, buckets_per_commit=2,
+              num_partitions=HEAVY_PARTITIONS, salt_mode="heavy")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_extraction(spark, uneven_corpus, out, ckpt, fail_after_commits=2, **kw)
+    done_first = ProgressLog(ckpt).done_buckets()
+    assert done_first == {0, 1, 2, 3}
+    mtimes = {
+        b: os.path.getmtime(os.path.join(ckpt, f"bucket={b}", "manifest.json"))
+        for b in done_first
+    }
+    run_extraction(spark, uneven_corpus, out, ckpt, **kw)
+    for b, t in mtimes.items():
+        assert os.path.getmtime(os.path.join(ckpt, f"bucket={b}", "manifest.json")) == t
+
+    got = pq.read_table(out, partitioning="hive").to_pylist()
+    bucket_of = {r["doc_id"]: r.pop("bucket") for r in got}
+    expected = pa.Table.from_pandas(
+        run_oracle(pq.read_table(uneven_corpus)), schema=EXTRACTED_PA, preserve_index=False
+    ).to_pylist()
+    assert sorted(got, key=lambda r: r["doc_id"]) == expected
+
+    manifests = {m.partition_id: m for m in ProgressLog(ckpt).all_manifests()}
+    assert set(manifests) == set(range(N_BUCKETS))
+    for b, m in manifests.items():
+        rows = [r for r in expected if bucket_of[r["doc_id"]] == b]
+        assert m.status == "done"
+        assert m.n_docs == len(rows)
+        assert m.n_ok == sum(r["extraction_successful"] for r in rows)
+        assert m.metrics == {
+            "chars": sum(r["n_chars"] or 0 for r in rows),
+            "words": sum(r["n_words"] or 0 for r in rows),
+            "pages": sum(r["n_pages"] or 0 for r in rows),
+        }
