@@ -15,8 +15,8 @@ Spark-first notes:
     oversized cohort into the tasks that read their row groups. We
     repartition on a uniform salt derived from xxhash64(doc_id), with
     heavyweight docs (payload ≥ OVERSIZE_COST_BUCKET_BYTES) spread
-    round-robin so no two giants must share a task (run_extraction
-    sizes that spread to each commit group's giant count); Arrow batches are
+    round-robin (run_extraction sizes that spread to each commit group's
+    giant count, one task per giant up to num_partitions); Arrow batches are
     additionally re-chunked by cumulative payload bytes inside the UDF
     so one giant can't blow a batch (analog of the reference's 50 MB
     admission cap world, docling-pdf config.py:20).
@@ -228,7 +228,9 @@ def resolve_salt_mode(df: DataFrame, num_partitions: int) -> str:
     )
 
 
-def heavy_only_salting(df: DataFrame, num_partitions: int) -> DataFrame:
+def heavy_only_salting(
+    df: DataFrame, num_partitions: int, exact: bool = False
+) -> DataFrame:
     """Skew taming without shuffling the world (the 100 TB-correct
     variant): only the oversized cohort (~0.5% of docs, but the entire
     stage tail if they cluster in one input split) is scattered across
@@ -240,7 +242,14 @@ def heavy_only_salting(df: DataFrame, num_partitions: int) -> DataFrame:
     when empty (~0.3 s on a 4-core VM), so run_extraction passes
     num_partitions = min(cap, giants in the commit group) and skips this
     branch — and its second scan of the input — for groups with no
-    giants."""
+    giants.
+
+    exact: gather the cohort into one task before the round-robin, so
+    partition loads differ by at most 1. That task carries every giant's
+    bytes, so run_extraction asks for it only when it has counted at
+    most num_partitions giants (one per slot); a larger cohort gets the
+    plain round-robin, whose per-map-task offsets cost little next to
+    giants/num_partitions."""
     df = with_cost(df)
     is_heavy = F.col("_cost_bytes") >= OVERSIZE_COST_BUCKET_BYTES
     light = df.where(~is_heavy)
@@ -248,14 +257,13 @@ def heavy_only_salting(df: DataFrame, num_partitions: int) -> DataFrame:
     # birthday-collides several into one task (measured 25× max/median).
     # Round-robin is exact only within one map partition (each map task
     # starts at its own offset: 10 giants from 10 splits into 10 slots
-    # measured [1,2,2,2,3]), so the cohort is first gathered into one
-    # doc_id-sorted partition; the sort also keeps CollapseRepartition
-    # from folding the two repartitions into one. Loads then differ by
-    # at most 1.
-    heavy = df.where(is_heavy).repartition(1)
-    if num_partitions > 1:
-        heavy = heavy.sortWithinPartitions("doc_id").repartition(num_partitions)
-    return light.unionByName(heavy)
+    # measured [1,2,2,2,3]); the exact spread gathers the cohort into one
+    # doc_id-sorted partition first. The sort also keeps
+    # CollapseRepartition from folding the two repartitions into one.
+    heavy = df.where(is_heavy)
+    if exact and num_partitions > 1:
+        heavy = heavy.repartition(1).sortWithinPartitions("doc_id")
+    return light.unionByName(heavy.repartition(num_partitions))
 
 
 def extract(
@@ -367,9 +375,10 @@ def run_extraction(
 
     # completeness-guard input counts for ALL pending buckets in ONE
     # scan (a per-group recount would be an extra full input scan per
-    # commit group). Heavy mode also counts
-    # each bucket's giants here, so every group's heavy exchange is
-    # sized without another job.
+    # commit group). The row count alone reads only doc_id. Heavy mode
+    # also counts each bucket's giants here, so every group's heavy
+    # exchange is sized without another job — but that count reads
+    # spans.text, one more pass over the whole payload.
     heavy = salt_mode == "heavy" and bool(num_partitions)
     aggs = [F.count("*").alias("n")]
     if heavy:
@@ -388,13 +397,17 @@ def run_extraction(
     for gi, group in enumerate(groups):
         started = _utcnow_iso()
         sub = docs.where(F.col("bucket").isin([int(b) for b in group])).drop("bucket")
-        parts, mode = num_partitions, salt_mode
         if heavy:
             # one round-robin slot per giant, capped at num_partitions;
             # a group without giants plans no heavy branch at all
             g = sum(giants.get(b, 0) for b in group)
-            parts, mode = (min(num_partitions, g), "heavy") if g else (None, "none")
-        out = extract(sub, num_partitions=parts, salt_mode=mode)
+            if g:
+                sub = heavy_only_salting(
+                    sub, min(num_partitions, g), exact=g <= num_partitions
+                )
+            out = extract(sub)  # no num_partitions: keeps sub's partitioning
+        else:
+            out = extract(sub, num_partitions=num_partitions, salt_mode=salt_mode)
         out = out.withColumn(
             "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
         )
