@@ -212,13 +212,10 @@ def _corpus_shuffle(spark, sf_dir):
     # seeded training-order shuffle (round 6): dense global ranks via
     # range repartition + per-bucket offsets + bounded window — the
     # one-window naive form would single-task-sort the corpus.
-    # materialize=False: the input is a parquet scan, the documented
-    # fast-path case (no checkpoint pass; the offsets branch re-reads
-    # the pruned scan)
     from docling_pdf_spark.operators.shuffle import deterministic_shuffle
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return deterministic_shuffle(docs, 42, materialize=False)
+    return deterministic_shuffle(docs, 42)
 
 
 def _dsir_weights(spark, sf_dir):

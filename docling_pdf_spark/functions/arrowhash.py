@@ -29,6 +29,11 @@ Java-regex "\\s+" tokenizer is ASCII-whitespace [ \\t\\n\\x0b\\f\\r],
 NOT Python's Unicode \\s; substr counts code points — Python slicing
 matches because both count code points). Every kernel is pinned
 against its DuckDB twin by the existing oracle tests.
+
+All eight kernels share one scaffold, `_doc_kernel`: it owns the
+unsplittable-scan spread, the output schema, the NULL-text skip, the
+id `take`, the optional explode and the single `mapInArrow` call, so
+each public kernel is just its per-document function.
 """
 
 from __future__ import annotations
@@ -53,9 +58,58 @@ def md5_low60(data: bytes) -> int:
     return int.from_bytes(_md5(data).digest()[8:16], "big") & _MASK60
 
 
+_CHUNK = 65536  # rows per transient matrix in _bit_votes / _minhash_doc
+
+
+def _doc_kernel(docs, id_col, text_col, fields, fn, explode=False):
+    """(id, *fields) via ONE narrow mapInArrow stage over the pruned
+    (id, text) projection. `fn(text)` returns None (the doc emits no
+    row) or one value per field; NULL texts emit no row. With
+    `explode`, each value is a 1-D array of equal length and the doc
+    emits one row per element."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    sel = spread_unsplittable(docs.select(id_col, text_col))
+    schema = T.StructType([sel.schema.fields[0], *fields])
+    names = schema.names
+    types = [to_arrow_type(f.dataType) for f in fields]
+
+    def gen(batches):
+        import pyarrow as pa
+
+        for b in batches:
+            keep, rows = [], []
+            for j, t in enumerate(b.column(1).to_pylist()):
+                if t is not None and (r := fn(t)) is not None:
+                    keep.append(j)
+                    rows.append(r)
+            ids = np.asarray(keep, dtype=np.int64)
+            if not rows:
+                cols = [[]] * len(types)
+            elif explode:
+                ids = np.repeat(ids, [len(r[0]) for r in rows])
+                cols = [np.concatenate(c) for c in zip(*rows)]
+            else:
+                cols = list(zip(*rows))
+            arrays = [pa.array(c, type=t) for c, t in zip(cols, types)]
+            yield pa.RecordBatch.from_arrays(
+                [b.column(0).take(pa.array(ids)), *arrays], names=names
+            )
+
+    return sel.mapInArrow(gen, schema)
+
+
+def _long(name):
+    from pyspark.sql import types as T
+
+    return T.StructField(name, T.LongType(), False)
+
+
 def _winnow_doc(t: str, k: int, w: int):
-    """Distinct winnowed fingerprints of one document, or None when the
-    JVM plan would produce no rows (len < k, or fewer hashes than w)."""
+    """(distinct winnowed fingerprints,) of one document, or None when
+    the JVM plan would produce no rows (len < k, or fewer hashes than
+    w)."""
     n = len(t)
     m = n - k + 1
     if m < w:
@@ -75,45 +129,16 @@ def _winnow_doc(t: str, k: int, w: int):
             )
     # min over each length-w window of consecutive gram hashes
     wm = np.minimum.reduce([hs[i : m - w + 1 + i] for i in range(w)])
-    return np.unique(wm)
+    return (np.unique(wm),)
 
 
 def winnow_fingerprints_arrow(docs, k, w, id_col, text_col):
     """(id, fingerprint) — bit-identical to the JVM expression form of
     operators.winnow.winnow_fingerprints(hash_mode='portable')."""
-    from pyspark.sql import types as T
-
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    out_schema = T.StructType(
-        [
-            sel.schema.fields[0],
-            T.StructField("fingerprint", T.LongType(), False),
-        ]
+    return _doc_kernel(
+        docs, id_col, text_col, [_long("fingerprint")],
+        lambda t: _winnow_doc(t, k, w), explode=True,
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            counts = np.zeros(b.num_rows, dtype=np.int64)
-            parts = []
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                u = _winnow_doc(t, k, w)
-                if u is None:
-                    continue
-                counts[j] = len(u)
-                parts.append(u)
-            idx = np.repeat(np.arange(b.num_rows), counts)
-            fps = np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0).take(pa.array(idx)), pa.array(fps, type=pa.int64())],
-                names=[id_col, "fingerprint"],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
 
 
 def _doc_grams(t: str, n: int) -> list[str]:
@@ -131,43 +156,43 @@ def _doc_grams(t: str, n: int) -> list[str]:
 def bucketed_grams_arrow(docs, n, n_buckets, id_col, text_col):
     """(id, bucket) one row per gram occurrence — twin of operators.dsir
     ._bucketed_grams(hash_mode='portable')."""
-    from pyspark.sql import types as T
 
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    out_schema = T.StructType(
-        [sel.schema.fields[0], T.StructField("bucket", T.LongType(), False)]
+    def doc(t):
+        grams = _doc_grams(t, n)
+        if not grams:
+            return None
+        return (
+            np.fromiter(
+                (md5_low60(g.encode("utf-8")) % n_buckets for g in grams),
+                dtype=np.int64,
+                count=len(grams),
+            ),
+        )
+
+    return _doc_kernel(
+        docs, id_col, text_col, [_long("bucket")], doc, explode=True
     )
 
-    def gen(batches):
-        import pyarrow as pa
 
-        low60 = md5_low60
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            counts = np.zeros(b.num_rows, dtype=np.int64)
-            parts = []
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                grams = _doc_grams(t, n)
-                if not grams:
-                    continue
-                counts[j] = len(grams)
-                parts.append(
-                    np.fromiter(
-                        (low60(g.encode("utf-8")) % n_buckets for g in grams),
-                        dtype=np.int64,
-                        count=len(grams),
-                    )
-                )
-            idx = np.repeat(np.arange(b.num_rows), counts)
-            bk = np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0).take(pa.array(idx)), pa.array(bk, type=pa.int64())],
-                names=[id_col, "bucket"],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+def _minhash_doc(t: str, n: int, a, b, p: int):
+    """min((a_i*base+b_i) % p) over the doc's DISTINCT word-n-grams
+    (base = md5_low60(gram) % p), or None when it has no grams. The
+    hashes x grams matrix is built _CHUNK grams at a time: the whole
+    matrix is ~256 MB for a 1M-gram doc at 32 hashes."""
+    grams = set(_doc_grams(t, n))
+    if not grams:
+        return None
+    base = np.fromiter(
+        (md5_low60(g.encode("utf-8")) % p for g in grams),
+        dtype=np.int64,
+        count=len(grams),
+    )
+    sig = np.full(len(a), p, dtype=np.int64)
+    for s in range(0, len(base), _CHUNK):
+        # a*base < 2^31 * 2^31 = 2^62: no int64 overflow
+        chunk = (a * base[s : s + _CHUNK] + b) % p
+        np.minimum(sig, chunk.min(axis=1), out=sig)
+    return sig
 
 
 def minhash_signatures_portable_arrow(docs, params, n, id_col, text_col):
@@ -176,69 +201,35 @@ def minhash_signatures_portable_arrow(docs, params, n, id_col, text_col):
     md5_low60(gram) % M31 over DISTINCT word-n-grams, mh_i =
     min((a_i*base+b_i) % M31). Docs with no grams emit no row (the
     groupBy over zero exploded rows produced none)."""
-    from pyspark.sql import types as T
-
     from docling_pdf_spark.operators.dedup import MERSENNE31
 
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    k = len(params)
-    out_schema = T.StructType(
-        [sel.schema.fields[0]]
-        + [T.StructField(f"mh_{i}", T.LongType(), False) for i in range(k)]
+    a = np.array([p for p, _ in params], dtype=np.int64).reshape(-1, 1)
+    b = np.array([q for _, q in params], dtype=np.int64).reshape(-1, 1)
+    return _doc_kernel(
+        docs, id_col, text_col, [_long(f"mh_{i}") for i in range(len(params))],
+        lambda t: _minhash_doc(t, n, a, b, MERSENNE31),
     )
-    a_arr = np.array([a for a, _ in params], dtype=np.int64).reshape(-1, 1)
-    b_arr = np.array([b for _, b in params], dtype=np.int64).reshape(-1, 1)
-
-    def gen(batches):
-        import pyarrow as pa
-
-        low60 = md5_low60
-        m31 = MERSENNE31
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            keep = []
-            sigs = []
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                grams = set(_doc_grams(t, n))
-                if not grams:
-                    continue
-                base = np.fromiter(
-                    (low60(g.encode("utf-8")) % m31 for g in grams),
-                    dtype=np.int64,
-                    count=len(grams),
-                )
-                # a*base < 2^31 * 2^31 = 2^62: no int64 overflow
-                sigs.append(((a_arr * base + b_arr) % m31).min(axis=1))
-                keep.append(j)
-            ids = b.column(0).take(pa.array(np.asarray(keep, dtype=np.int64)))
-            mat = (
-                np.stack(sigs) if sigs else np.empty((0, k), dtype=np.int64)
-            )
-            yield pa.RecordBatch.from_arrays(
-                [ids] + [pa.array(mat[:, i], type=pa.int64()) for i in range(k)],
-                names=[id_col] + [f"mh_{i}" for i in range(k)],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
-
 
 
 def _bit_votes(hs, bit_idx):
     """Per-bit one-counts of a uint64 hash array, accumulated in
-    64k-hash chunks: the obvious `(hs[:, None] >> bits) & 1` expands to
-    a tokens x n_bits int64 matrix — ~0.5 GB transient for a single
+    _CHUNK-hash chunks: the obvious `(hs[:, None] >> bits) & 1` expands
+    to a tokens x n_bits int64 matrix — ~0.5 GB transient for a single
     1M-token document, times one per concurrent Arrow worker (review-
     found). Chunking caps the transient at ~32 MB while keeping the
     vectorized inner loop."""
     ones = np.zeros(len(bit_idx), dtype=np.int64)
-    for s in range(0, len(hs), 65536):
-        chunk = hs[s : s + 65536]
+    for s in range(0, len(hs), _CHUNK):
+        chunk = hs[s : s + _CHUNK]
         ones += ((chunk[:, None] >> bit_idx) & np.uint64(1)).sum(
             axis=0, dtype=np.int64
         )
     return ones
+
+
+def _tokens(t: str) -> list[str]:
+    """Non-empty tokens of F.split(text, "\\s+") (Java whitespace)."""
+    return [w for w in _JAVA_WS.split(t) if w != ""]
 
 
 def simhash_fingerprints_portable_arrow(docs, n_bits, id_col, text_col):
@@ -246,45 +237,21 @@ def simhash_fingerprints_portable_arrow(docs, n_bits, id_col, text_col):
     .simhash_fingerprints_portable: per-token md5_low60, each of the low
     n_bits votes ±1 (multiplicity kept), bit set iff vote sum > 0. Docs
     whose tokenization yields only empty strings emit no row."""
-    from pyspark.sql import types as T
-
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    out_schema = T.StructType(
-        [sel.schema.fields[0], T.StructField("simhash", T.LongType(), False)]
-    )
     bit_idx = np.arange(n_bits, dtype=np.uint64)
 
-    def gen(batches):
-        import pyarrow as pa
+    def doc(t):
+        toks = _tokens(t)
+        if not toks:
+            return None
+        hs = np.fromiter(
+            (md5_low60(w.encode("utf-8")) for w in toks),
+            dtype=np.uint64,
+            count=len(toks),
+        )
+        votes = 2 * _bit_votes(hs, bit_idx) - len(toks)
+        return (int(((votes > 0).astype(np.uint64) << bit_idx).sum()),)
 
-        low60 = md5_low60
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            keep = []
-            fps = []
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                toks = [w for w in _JAVA_WS.split(t) if w != ""]
-                if not toks:
-                    continue
-                hs = np.fromiter(
-                    (low60(w.encode("utf-8")) for w in toks),
-                    dtype=np.uint64,
-                    count=len(toks),
-                )
-                ones = _bit_votes(hs, bit_idx)
-                votes = 2 * ones - len(toks)
-                fp = int(((votes > 0).astype(np.uint64) << bit_idx).sum())
-                keep.append(j)
-                fps.append(fp)
-            ids = b.column(0).take(pa.array(np.asarray(keep, dtype=np.int64)))
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(np.asarray(fps, dtype=np.int64), type=pa.int64())],
-                names=[id_col, "simhash"],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+    return _doc_kernel(docs, id_col, text_col, [_long("simhash")], doc)
 
 
 # ---------------- repetition signals (operators/quality.py) ----------
@@ -335,52 +302,38 @@ def repetition_stats_arrow(docs, id_col, text_col, signals, gram_n):
     statistic, so no row ever needed to leave its partition (guide
     §2.4). Values are the raw unrounded doubles (integer counts and one
     IEEE division — bit-identical to the JVM aggregate); rounding and
-    the 0.0 coalesce stay in the caller's JVM projection."""
+    the 0.0 coalesce stay in the caller's JVM projection. One row per
+    input row: a NULL text is read as '', on which every signal is
+    None."""
+    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    out_schema = T.StructType(
-        [sel.schema.fields[0]]
-        + [T.StructField(s, T.DoubleType(), True) for s in signals]
+    units = {"dup_line_frac": _RE_LINE, "dup_para_frac": _RE_PARA}
+    want_toks = any(s in gram_n for s in signals)
+
+    def doc(t):
+        toks = _tokens(t.strip(" ")) if want_toks else None
+        return tuple(
+            _dup_frac_py(units[s].split(t)) if s in units
+            else _top_gram_frac_py(toks, gram_n[s])
+            for s in signals
+        )
+
+    return _doc_kernel(
+        docs.withColumn(text_col, F.coalesce(F.col(text_col), F.lit(""))),
+        id_col, text_col,
+        [T.StructField(s, T.DoubleType(), True) for s in signals],
+        doc,
     )
-    want_line = "dup_line_frac" in signals
-    want_para = "dup_para_frac" in signals
-    grams = [(s, gram_n[s]) for s in signals if s in gram_n]
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            cols: dict[str, list] = {s: [] for s in signals}
-            for t in texts:
-                if t is None:
-                    for s in signals:
-                        cols[s].append(None)
-                    continue
-                if want_line:
-                    cols["dup_line_frac"].append(_dup_frac_py(_RE_LINE.split(t)))
-                if want_para:
-                    cols["dup_para_frac"].append(_dup_frac_py(_RE_PARA.split(t)))
-                if grams:
-                    toks = [w for w in _JAVA_WS.split(t.strip(" ")) if w != ""]
-                    for s, n in grams:
-                        cols[s].append(_top_gram_frac_py(toks, n))
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0)]
-                + [pa.array(cols[s], type=pa.float64()) for s in signals],
-                names=[id_col] + list(signals),
-            )
-
-    return sel.mapInArrow(gen, out_schema)
 
 
 # ---------------- XXH64 (Spark F.xxhash64 twin, seed 42) -------------
 #
 # Public XXH64 spec (Collet; same algorithm Spark's XxHash64 expression
-# implements over the UTF-8 bytes with seed 42). Used by the winnow
-# fast-mode kernel: the fixed k-byte gram case vectorizes fully in
-# numpy uint64 (wrapping arithmetic == mod-2^64 by construction).
+# implements over the UTF-8 bytes with seed 42). Used by the fast-mode
+# winnow, SimHash and embedding kernels: every message is hashed in a
+# batch of equal-length messages, fully vectorized in numpy uint64
+# (wrapping arithmetic == mod-2^64 by construction).
 
 _XP1 = 0x9E3779B185EBCA87
 _XP2 = 0xC2B2AE3D27D4EB4F
@@ -388,62 +341,6 @@ _XP3 = 0x165667B19E3779F9
 _XP4 = 0x85EBCA77C2B2AE63
 _XP5 = 0x27D4EB2F165667C5
 _M64 = (1 << 64) - 1
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def xxh64_bytes(data: bytes, seed: int = 42) -> int:
-    """Scalar XXH64 (signed-long bit pattern, matching F.xxhash64)."""
-    n = len(data)
-    i = 0
-    if n >= 32:
-        v1 = (seed + _XP1 + _XP2) & _M64
-        v2 = (seed + _XP2) & _M64
-        v3 = seed
-        v4 = (seed - _XP1) & _M64
-        while i + 32 <= n:
-            for k, v in enumerate((v1, v2, v3, v4)):
-                lane = int.from_bytes(data[i + 8 * k : i + 8 * k + 8], "little")
-                v = (v + lane * _XP2) & _M64
-                v = (_rotl(v, 31) * _XP1) & _M64
-                if k == 0:
-                    v1 = v
-                elif k == 1:
-                    v2 = v
-                elif k == 2:
-                    v3 = v
-                else:
-                    v4 = v
-            i += 32
-        acc = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12) + _rotl(v4, 18)) & _M64
-        for v in (v1, v2, v3, v4):
-            acc ^= (_rotl((v * _XP2) & _M64, 31) * _XP1) & _M64
-            acc = ((acc * _XP1) + _XP4) & _M64
-    else:
-        acc = (seed + _XP5) & _M64
-    acc = (acc + n) & _M64
-    while i + 8 <= n:
-        lane = int.from_bytes(data[i : i + 8], "little")
-        acc ^= (_rotl((lane * _XP2) & _M64, 31) * _XP1) & _M64
-        acc = ((_rotl(acc, 27) * _XP1) + _XP4) & _M64
-        i += 8
-    if i + 4 <= n:
-        lane = int.from_bytes(data[i : i + 4], "little")
-        acc ^= (lane * _XP1) & _M64
-        acc = ((_rotl(acc, 23) * _XP2) + _XP3) & _M64
-        i += 4
-    while i < n:
-        acc ^= (data[i] * _XP5) & _M64
-        acc = (_rotl(acc, 11) * _XP1) & _M64
-        i += 1
-    acc ^= acc >> 33
-    acc = (acc * _XP2) & _M64
-    acc ^= acc >> 29
-    acc = (acc * _XP3) & _M64
-    acc ^= acc >> 32
-    return acc - (1 << 64) if acc >= (1 << 63) else acc
 
 
 def _xxh64_lanes8(lanes, seed: int = 42):
@@ -469,8 +366,8 @@ def _xxh64_lanes8(lanes, seed: int = 42):
 
 def _winnow_doc_fast(t: str, k: int, w: int):
     """Fast-mode (xxhash64, seed 42 — F.xxhash64's default) twin of
-    _winnow_doc. ASCII docs vectorize (k-byte grams -> uint64 lanes);
-    others fall back to the scalar spec implementation per gram."""
+    _winnow_doc. ASCII docs with k=8 vectorize (8-byte grams -> uint64
+    lanes); others hash through the length-classed xxh64_strings."""
     n = len(t)
     m = n - k + 1
     if m < w:
@@ -491,45 +388,16 @@ def _winnow_doc_fast(t: str, k: int, w: int):
         # Python at µs each)
         hs = xxh64_strings([t[i : i + k] for i in range(m)]).view(np.int64)
     wm = np.minimum.reduce([hs[i : m - w + 1 + i] for i in range(w)])
-    return np.unique(wm)
+    return (np.unique(wm),)
 
 
 def winnow_fingerprints_fast_arrow(docs, k, w, id_col, text_col):
     """(id, fingerprint) — bit-identical to the JVM expression form of
     operators.winnow.winnow_fingerprints(hash_mode='fast')."""
-    from pyspark.sql import types as T
-
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    out_schema = T.StructType(
-        [
-            sel.schema.fields[0],
-            T.StructField("fingerprint", T.LongType(), False),
-        ]
+    return _doc_kernel(
+        docs, id_col, text_col, [_long("fingerprint")],
+        lambda t: _winnow_doc_fast(t, k, w), explode=True,
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            counts = np.zeros(b.num_rows, dtype=np.int64)
-            parts = []
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                u = _winnow_doc_fast(t, k, w)
-                if u is None:
-                    continue
-                counts[j] = len(u)
-                parts.append(u)
-            idx = np.repeat(np.arange(b.num_rows), counts)
-            fps = np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0).take(pa.array(idx)), pa.array(fps, type=pa.int64())],
-                names=[id_col, "fingerprint"],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
 
 
 def _xxh64_fixed_len(mat, seed: int = 42):
@@ -600,9 +468,6 @@ def xxh64_strings(strs: list[str], seed: int = 42):
         cls[0].append(j)
         cls[1].append(b)
     for L, (idx, bs) in by_len.items():
-        if L == 0:
-            out[idx] = np.uint64(xxh64_bytes(b"", seed) & _M64)
-            continue
         mat = np.frombuffer(b"".join(bs), dtype=np.uint8).reshape(len(bs), L)
         out[idx] = _xxh64_fixed_len(mat, seed)
     return out
@@ -614,44 +479,17 @@ def simhash_fingerprints_fast_arrow(docs, id_col, text_col):
     (multiplicity kept), bit set iff vote sum > 0. One narrow Arrow
     stage instead of explode(tokens) → groupBy(id) with 64 sum()
     aggregates (64 aggregate-buffer updates per token row)."""
-    from pyspark.sql import types as T
-
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    out_schema = T.StructType(
-        [sel.schema.fields[0], T.StructField("simhash", T.LongType(), False)]
-    )
     bit_idx = np.arange(64, dtype=np.uint64)
 
-    def gen(batches):
-        import pyarrow as pa
+    def doc(t):
+        toks = _tokens(t)
+        if not toks:
+            return None
+        votes = 2 * _bit_votes(xxh64_strings(toks), bit_idx) - len(toks)
+        fp = ((votes > 0).astype(np.uint64) << bit_idx).sum(dtype=np.uint64)
+        return (int(fp.view(np.int64)),)
 
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            keep = []
-            fps = []
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                toks = [w for w in _JAVA_WS.split(t) if w != ""]
-                if not toks:
-                    continue
-                hs = xxh64_strings(toks)
-                ones = _bit_votes(hs, bit_idx)
-                votes = 2 * ones - len(toks)
-                fp = int(
-                    ((votes > 0).astype(np.uint64) << bit_idx).sum(
-                        dtype=np.uint64
-                    )
-                )
-                keep.append(j)
-                fps.append(fp - (1 << 64) if fp >= (1 << 63) else fp)
-            ids = b.column(0).take(pa.array(np.asarray(keep, dtype=np.int64)))
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(np.asarray(fps, dtype=np.int64), type=pa.int64())],
-                names=[id_col, "simhash"],
-            )
-
-    return sel.mapInArrow(gen, out_schema)
+    return _doc_kernel(docs, id_col, text_col, [_long("simhash")], doc)
 
 
 def _xxh64_int_lane(seeds, i: int):
@@ -685,42 +523,21 @@ def text_embedding_arrow(docs, dim, id_col, text_col):
     the element-wise division is the same IEEE operation."""
     from pyspark.sql import types as T
 
-    sel = spread_unsplittable(docs.select(id_col, text_col))
-    out_schema = T.StructType(
-        [
-            sel.schema.fields[0],
-            T.StructField("embedding", T.ArrayType(T.DoubleType(), False), False),
-        ]
+    def doc(t):
+        toks = _tokens(t)
+        if not toks:
+            return None
+        hs = xxh64_strings(toks)
+        buckets = hs.view(np.int64) % dim  # pmod: numpy % is nonneg
+        signs = (
+            (_xxh64_int_lane(hs, 1).view(np.int64) % 2) * 2 - 1
+        ).astype(np.float64)
+        v = np.bincount(buckets, weights=signs, minlength=dim)
+        norm = float(np.sqrt((v * v).sum()))
+        return None if norm == 0.0 else (v / norm,)
+
+    return _doc_kernel(
+        docs, id_col, text_col,
+        [T.StructField("embedding", T.ArrayType(T.DoubleType(), False), False)],
+        doc,
     )
-
-    def gen(batches):
-        import pyarrow as pa
-
-        for b in batches:
-            texts = b.column(1).to_pylist()
-            keep = []
-            embs = []
-            for j, t in enumerate(texts):
-                if t is None:
-                    continue
-                toks = [w for w in _JAVA_WS.split(t) if w != ""]
-                if not toks:
-                    continue
-                hs = xxh64_strings(toks)
-                buckets = hs.view(np.int64) % dim  # pmod: numpy % is nonneg
-                signs = (
-                    (_xxh64_int_lane(hs, 1).view(np.int64) % 2) * 2 - 1
-                ).astype(np.float64)
-                v = np.bincount(buckets, weights=signs, minlength=dim)
-                norm = float(np.sqrt((v * v).sum()))
-                if norm == 0.0:
-                    continue
-                keep.append(j)
-                embs.append(v / norm)
-            ids = b.column(0).take(pa.array(np.asarray(keep, dtype=np.int64)))
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(embs, type=pa.list_(pa.float64()))],
-                names=[id_col, "embedding"],
-            )
-
-    return sel.mapInArrow(gen, out_schema)

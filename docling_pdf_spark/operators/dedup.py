@@ -325,7 +325,11 @@ def minhash_lsh_dedup_portable(
     same plan family as the fast path — one shuffle for the K-min
     signatures (map-side combine), band buckets as collect_list with the
     mega-bucket cap, JVM array pair expansion, exact signature compare
-    for the Jaccard estimate."""
+    for the Jaccard estimate.
+
+    Precondition: `id_col` is unique. The signature kernel emits one
+    row per input row, so a duplicated id would land twice in its band
+    buckets and pair with itself."""
     from docling_pdf_spark.functions.arrowhash import (
         minhash_signatures_portable_arrow,
     )

@@ -61,8 +61,7 @@ removed the former materialize=False fast path: its "provably
 identical boundaries on re-computable input" claim was unsound — the
 RangePartitioner's sample seed derives from rdd.id, not content, and
 column pruning makes the two branches' exchanges non-identical plans
-(round-6 advice, medium; see operators/prefixsum.py). The parameter
-is accepted for API compatibility and ignored. The bucket-count
+(round-6 advice, medium; see operators/prefixsum.py). The bucket-count
 equivalence test (including n_buckets=4096 with mostly empty buckets)
 pins the boundary agreement.
 
@@ -311,7 +310,6 @@ def fill_to_allocation(
     id_col: str = "doc_id",
     order_by: Column | None = None,
     n_buckets: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Select, per stratum, the greedy prefix of documents (total
     order: `order_by` ascending NULLS LAST, `id_col` tiebreak) whose
@@ -329,9 +327,8 @@ def fill_to_allocation(
     assignment — without it the two branches would re-evaluate the
     range exchange independently and the two RangePartitioners could
     sample different boundaries, silently corrupting the prefix sums
-    (`materialize` is accepted for API compatibility and ignored since
-    round 7 — see operators/prefixsum.py for why the former fast path
-    was unsound).
+    (see operators/prefixsum.py for why the former fast path was
+    unsound).
     """
     from docling_pdf_spark.operators.prefixsum import (
         bucket_offsets,
@@ -343,9 +340,7 @@ def fill_to_allocation(
         if order_by is not None
         else [F.col(id_col).asc()]
     )
-    bucketed = bucketize_by_range(
-        docs, [F.col(stratum_col), *order], n_buckets, materialize
-    )
+    bucketed = bucketize_by_range(docs, [F.col(stratum_col), *order], n_buckets)
     offsets = bucket_offsets(
         bucketed, F.sum(tokens_col), partition_cols=[stratum_col]
     )

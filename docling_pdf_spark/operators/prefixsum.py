@@ -29,10 +29,9 @@ and column pruning makes the two branches' exchanges non-identical
 plans, so exchange reuse cannot dedupe them; with partial sampling
 at real scale the branches can pick different boundaries even over a
 byte-identical scan. Small corpora are fully sampled per partition,
-which is exactly why no pinned test could catch it. The parameter is
-retained for API compatibility but no longer disables the
-checkpoint. Any future change to this invariant applies to BOTH call
-sites by construction — that is why this module exists.
+which is exactly why no pinned test could catch it. Any future change
+to this invariant applies to BOTH call sites by construction — that is
+why this module exists.
 """
 
 from __future__ import annotations
@@ -47,15 +46,12 @@ def bucketize_by_range(
     df: DataFrame,
     keys: list[Column],
     n_buckets: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Range-repartition on `keys` (a deterministic TOTAL order) and
     tag rows with their range-partition id as `_bucket`. The bucket
     assignment is ALWAYS frozen with a lazy localCheckpoint — see the
     module docstring for why the former materialize=False fast path
-    was unsound (`materialize` is accepted for API compatibility and
-    ignored)."""
-    del materialize  # retained for API compatibility; see docstring
+    was unsound."""
     # freeze the bucket assignment once (blocks live on executors;
     # Spark's ContextCleaner reclaims them when unreferenced)
     return _ranged_bucketed(df, keys, n_buckets).localCheckpoint(eager=False)

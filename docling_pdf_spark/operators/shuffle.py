@@ -28,9 +28,8 @@ materialize invariant that freezes the bucket assignment against
 range-boundary divergence between the two consuming branches) is
 SHARED with the mixer — one kernel, `operators/prefixsum.py`; see its
 module docstring for the full contract. Since round 7 the bucket
-assignment is always checkpointed; the `materialize` parameter is
-accepted for API compatibility and ignored (the former fast path's
-soundness argument did not hold — round-6 advice).
+assignment is always checkpointed (the former fast path's soundness
+argument did not hold — round-6 advice).
 
 Output ROW order is not the product — the rank COLUMN is. A writer
 that wants the files physically in shuffled order should
@@ -56,7 +55,6 @@ def global_row_number(
     order: list[Column],
     out_col: str = "rank",
     n_buckets: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Dense 1-based global row numbers under `order` (which must be a
     deterministic TOTAL order — include a unique tiebreak column),
@@ -67,7 +65,7 @@ def global_row_number(
         bucketize_by_range,
     )
 
-    bucketed = bucketize_by_range(df, order, n_buckets, materialize)
+    bucketed = bucketize_by_range(df, order, n_buckets)
     # row counts are cumsums of 1; the offsets window is SinglePartition
     # but bounded by the bucket count (see prefixsum module docstring)
     offsets = bucket_offsets(bucketed, F.count("*"))
@@ -107,7 +105,6 @@ def deterministic_shuffle(
     id_col: str = "doc_id",
     out_col: str = "shuffle_rank",
     n_buckets: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Input schema + `out_col`: a dense 1-based rank assigning every
     document a position in the seeded pseudo-random total order
@@ -119,7 +116,6 @@ def deterministic_shuffle(
         [F.col("_skey").asc(), F.col(id_col).asc()],
         out_col=out_col,
         n_buckets=n_buckets,
-        materialize=materialize,
     )
     return ranked.drop("_skey")
 

@@ -10,16 +10,17 @@ at least one shared fingerprint — so shared-fingerprint bucketing finds
 partial-overlap near-dups (plagiarism/quotation/boilerplate reuse) that
 whole-document hashing misses.
 
-Everything is JVM-side higher-order array expressions (transform /
-slice / array_min) — no Python, no shuffle until the consumer buckets
-by fingerprint. The k-gram hash is the low 60 bits of md5 (hex chars
-18..32), chosen because DuckDB computes the identical value
+Fingerprints are one narrow mapInArrow stage (functions/arrowhash.py)
+— no shuffle until the consumer buckets by fingerprint. The default
+k-gram hash is the low 60 bits of md5 (hex chars 18..32), chosen
+because DuckDB computes the identical value
 (`CAST('0x' || substr(md5(s), 18, 15) AS BIGINT)`), making the operator
 exactly oracle-checkable.
 
-The hash array is projected as its own column BEFORE the window
-transform (same lesson as operators/dedup.shingles: an inlined array
-expression is re-evaluated per slice — O(n·w) recompute).
+In the JVM reference form (_winnow_fingerprints_jvm) the hash array is
+projected as its own column BEFORE the window transform (same lesson
+as operators/dedup.shingles: an inlined array expression is
+re-evaluated per slice — O(n·w) recompute).
 """
 
 from __future__ import annotations
@@ -34,17 +35,6 @@ WINNOW_K = 8  # k-gram length (chars)
 WINNOW_W = 4  # window length (hashes)
 
 
-from docling_pdf_spark.functions.hashing import portable_hash60
-
-# 'portable' (functions.hashing.portable_hash60, DuckDB-reproducible) is
-# ~35% slower end-to-end than xxhash64 (measured sf0.1)
-_HASHES = {
-    "portable": portable_hash60,
-    "fast": F.xxhash64,
-    "jvm-fast": F.xxhash64,  # reference JVM form of 'fast' (see below)
-}
-
-
 def winnow_fingerprints(
     docs: DataFrame,
     k: int = WINNOW_K,
@@ -57,28 +47,35 @@ def winnow_fingerprints(
 
     hash_mode 'portable' (default): md5-low-60 — DuckDB computes the
     identical value, so the driver query is exactly oracle-checked.
-    Since round 7 the portable mode executes as ONE mapInArrow stage
-    (functions/arrowhash.py): the JVM form evaluated the md5→hex→conv
-    chain inside an interpreted transform() lambda at ~3-5 µs/gram;
-    the Arrow kernel computes the identical fingerprints at ~0.5
-    µs/gram and keeps the zero-Exchange scan-speed shape (~10× at
-    sf1.0). 'fast': xxhash64 — same selection structure JVM-side, use
-    it when nothing external needs to reproduce the hashes."""
+    'fast': xxhash64, for when nothing external needs to reproduce the
+    hashes ('portable' measured ~35% slower end-to-end at sf0.1, JVM
+    forms). Anything else raises ValueError. Since round 7 both modes
+    execute as ONE mapInArrow stage (functions/arrowhash.py): the JVM
+    form evaluated the hash inside an interpreted transform() lambda
+    at ~3-5 µs/gram; the Arrow kernel computes the identical
+    fingerprints at ~0.5 µs/gram and keeps the zero-Exchange
+    scan-speed shape (~10× at sf1.0)."""
+    from docling_pdf_spark.functions import arrowhash
+
     if hash_mode == "portable":
-        from docling_pdf_spark.functions.arrowhash import winnow_fingerprints_arrow
+        kernel = arrowhash.winnow_fingerprints_arrow
+    elif hash_mode == "fast":
+        kernel = arrowhash.winnow_fingerprints_fast_arrow
+    else:
+        raise ValueError(f"hash_mode must be portable|fast, got {hash_mode!r}")
+    return kernel(docs, k, w, id_col, text_col)
 
-        return winnow_fingerprints_arrow(docs, k, w, id_col, text_col)
-    if hash_mode == "fast":
-        # fast mode (round 7): numpy-vectorized XXH64 twin of
-        # F.xxhash64 (validated bit-exact against the JVM expression,
-        # incl. non-ASCII via the scalar spec path) — same mapInArrow
-        # shape as portable; the JVM interpreted-transform form below
-        # is kept only for reference/debugging via hash_mode='jvm-fast'
-        from docling_pdf_spark.functions.arrowhash import (
-            winnow_fingerprints_fast_arrow,
-        )
 
-        return winnow_fingerprints_fast_arrow(docs, k, w, id_col, text_col)
+def _winnow_fingerprints_jvm(
+    docs: DataFrame,
+    k: int = WINNOW_K,
+    w: int = WINNOW_W,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """Reference JVM expression form of winnow_fingerprints(hash_mode=
+    'fast') (interpreted transform / slice / array_min over
+    F.xxhash64) — retained for the Arrow-vs-JVM parity test."""
     from docling_pdf_spark.functions.scanspread import spread_unsplittable
 
     docs = spread_unsplittable(docs.select(F.col(id_col), F.col(text_col)))
@@ -87,11 +84,10 @@ def winnow_fingerprints(
         F.length(text) >= k,
         F.sequence(F.lit(1), F.length(text) - (k - 1)),
     ).otherwise(F.array().cast("array<int>"))
-    gram_hash = _HASHES[hash_mode]
     hashed = docs.select(
         F.col(id_col),
         F.transform(
-            gram_starts, lambda i: gram_hash(text.substr(i, F.lit(k)))
+            gram_starts, lambda i: F.xxhash64(text.substr(i, F.lit(k)))
         ).alias("hs"),
     )
     hs = F.col("hs")

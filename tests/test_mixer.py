@@ -160,10 +160,10 @@ def test_weight_total_bound_rejected(spark):
 
 
 def test_selection_on_shuffle_rooted_input(spark):
-    """The materialize=True default freezes the bucket assignment, so
-    the offsets and cumsum branches agree even when the input lineage
-    is rooted in a shuffle (join/aggregate upstream) rather than a
-    deterministic scan. Equality vs the naive per-stratum window
+    """The checkpointed bucket assignment is frozen, so the offsets
+    and cumsum branches agree even when the input lineage is rooted in
+    a shuffle (join/aggregate upstream) rather than a deterministic
+    scan. Equality vs the naive per-stratum window
     cumsum computed on the SAME shuffle-rooted frame."""
     docs = _docs(spark)
     # shuffle-rooted: aggregate per lang, join back (two exchanges)
@@ -192,28 +192,6 @@ def test_selection_on_shuffle_rooted_input(spark):
         .collect()
     )
     assert got == expect
-
-    # the materialize=False fast path stays valid on deterministic
-    # scan-rooted input (both range exchanges sample identical bounds)
-    scan_plan = token_budget_mix(docs, WEIGHTS, 50_000)
-    a = sorted(
-        r.doc_id
-        for r in fill_to_allocation(
-            docs, scan_plan, order_by=-F.col("n_chars"), n_buckets=7,
-            materialize=False,
-        )
-        .select("doc_id")
-        .collect()
-    )
-    b = sorted(
-        r.doc_id
-        for r in fill_to_allocation(
-            docs, scan_plan, order_by=-F.col("n_chars"), n_buckets=7
-        )
-        .select("doc_id")
-        .collect()
-    )
-    assert a == b
 
 
 def test_selection_drops_unplanned_strata(spark):

@@ -76,6 +76,38 @@ def test_minhash_estimate_tracks_true_jaccard(dup_docs):
     assert abs(est - true_j) < 0.25  # 32 hashes → ±~2σ tolerance
 
 
+def test_minhash_portable_signature_chunking_is_exact():
+    """The portable MinHash kernel folds its hashes x grams matrix in
+    _CHUNK-gram chunks (bounded transient memory); on a doc with more
+    than two chunks of distinct grams the signature must equal the
+    unchunked min((a*base+b) % M31) formula."""
+    import numpy as np
+
+    from docling_pdf_spark.functions.arrowhash import _CHUNK, _minhash_doc, md5_low60
+    from docling_pdf_spark.operators.dedup import (
+        MERSENNE31,
+        SHINGLE_WORDS,
+        affine_params,
+    )
+
+    words = [f"w{i}" for i in range(2 * _CHUNK + 1000)]
+    text = " ".join(words)
+    grams = {
+        " ".join(words[i : i + SHINGLE_WORDS])
+        for i in range(len(words) - SHINGLE_WORDS + 1)
+    }
+    assert len(grams) > 2 * _CHUNK
+    params = affine_params(32)
+    a = np.array([p for p, _ in params], dtype=np.int64).reshape(-1, 1)
+    b = np.array([q for _, q in params], dtype=np.int64).reshape(-1, 1)
+    base = np.array(
+        [md5_low60(g.encode("utf-8")) % MERSENNE31 for g in grams], dtype=np.int64
+    )
+    want = ((a * base + b) % MERSENNE31).min(axis=1)
+    got = _minhash_doc(text, SHINGLE_WORDS, a, b, MERSENNE31)
+    assert got.tolist() == want.tolist()
+
+
 # ------------------------------------------------------------- simhash
 
 
@@ -726,8 +758,8 @@ def test_text_embedding_large_dim_path_consistent(spark):
 
 
 def test_xxh64_kernel_matches_spark(spark):
-    """Round 7: the winnow fast mode computes F.xxhash64 in numpy
-    (functions/arrowhash.py). The scalar spec implementation and the
+    """Round 7: the fast-mode kernels compute F.xxhash64 in numpy
+    (functions/arrowhash.py). The length-classed xxh64_strings and the
     vectorized 8-byte-lane path must be bit-identical to the JVM
     expression on ASCII, unicode, empty, and >32-byte inputs."""
     import random
@@ -736,7 +768,7 @@ def test_xxh64_kernel_matches_spark(spark):
 
     from docling_pdf_spark.functions.arrowhash import (
         _xxh64_lanes8,
-        xxh64_bytes,
+        xxh64_strings,
     )
 
     random.seed(20260822)
@@ -746,27 +778,34 @@ def test_xxh64_kernel_matches_spark(spark):
                 for _ in range(40)]
     df = spark.createDataFrame([(s,) for s in samples], "s string")
     jvm = [r[0] for r in df.select(F.xxhash64("s")).collect()]
-    assert jvm == [xxh64_bytes(s.encode("utf-8")) for s in samples]
-    eight = [s for s in samples if len(s) == 8 and len(s.encode()) == 8]
+    assert xxh64_strings(samples).view(np.int64).tolist() == jvm
+    eight = [(s, h) for s, h in zip(samples, jvm) if len(s.encode()) == 8]
     lanes = np.array(
-        [int.from_bytes(s.encode(), "little") for s in eight], dtype=np.uint64
+        [int.from_bytes(s.encode(), "little") for s, _ in eight], dtype=np.uint64
     )
-    assert list(_xxh64_lanes8(lanes)) == [xxh64_bytes(s.encode()) for s in eight]
+    assert len(eight) >= 2
+    assert _xxh64_lanes8(lanes).tolist() == [h for _, h in eight]
 
 
 def test_winnow_fast_arrow_matches_jvm_form(spark):
     """The fast-mode Arrow kernel must reproduce the JVM interpreted-
-    transform form ('jvm-fast') fingerprint-for-fingerprint, including
-    non-ASCII and sub-window-length documents."""
-    from docling_pdf_spark.operators.winnow import winnow_fingerprints
+    transform form (_winnow_fingerprints_jvm) fingerprint-for-
+    fingerprint, including non-ASCII and sub-window-length documents.
+    Any hash_mode other than 'portable' or 'fast' is rejected."""
+    from docling_pdf_spark.operators.winnow import (
+        _winnow_fingerprints_jvm,
+        winnow_fingerprints,
+    )
 
     rows = [(1, "héllo wörld ünïcode ça va très bien"), (2, ""), (3, "short"),
             (4, None), (5, "a  b   c    d     e      f"), (6, "12345678"),
             (7, "12345678901"), (8, "日本語のテキストです。これはテスト。")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    jvm = set(map(tuple, winnow_fingerprints(docs, hash_mode="jvm-fast").collect()))
+    jvm = set(map(tuple, _winnow_fingerprints_jvm(docs).collect()))
     arrow = set(map(tuple, winnow_fingerprints(docs, hash_mode="fast").collect()))
     assert jvm == arrow and len(arrow) > 0
+    with pytest.raises(ValueError, match="hash_mode"):
+        winnow_fingerprints(docs, hash_mode="jvm-fast")
 
 
 def test_simhash_fast_arrow_matches_jvm_form(spark):

@@ -40,14 +40,17 @@ def test_repetition_stats_hand_computed(spark):
             ("tiny", "hello"),
             # pathological boilerplate: same line 4x -> dup_line 1.0
             ("boiler", "buy now\nbuy now\nbuy now\nbuy now"),
+            # NULL text: still one row, every signal 0.0
+            ("null", None),
         ],
-        ["doc_id", "text"],
+        "doc_id string, text string",
     )
     got = _stats_map(repetition_stats(docs))
     assert got["rep"] == (pytest.approx(2 / 3), 0.0, pytest.approx(0.4))
     assert got["para"][1] == pytest.approx(2 / 3)
     assert got["para"][0] == pytest.approx(2 / 3)
     assert got["tiny"] == (0.0, 0.0, 0.0)
+    assert got["null"] == (0.0, 0.0, 0.0)
     assert got["boiler"][0] == 1.0
     # "buy now" x4 -> bigrams: within-line "buy now" x4... tokens are
     # [buy now buy now ...] flattened: 8 tokens, 7 bigrams, "buy now"

@@ -83,9 +83,9 @@ def test_seed_changes_order_same_seed_reproduces(spark):
 
 
 def test_shuffle_rooted_input(spark):
-    """materialize=True (default) freezes the bucket assignment, so
-    the counts and row_number branches agree even when the lineage is
-    rooted in a shuffle (join/aggregate upstream)."""
+    """The checkpointed bucket assignment is frozen, so the counts and
+    row_number branches agree even when the lineage is rooted in a
+    shuffle (join/aggregate upstream)."""
     docs = _docs(spark)
     lang_sizes = docs.groupBy("lang").agg(F.count("*").alias("_n"))
     shuffled = docs.join(lang_sizes, "lang").drop("_n")
