@@ -503,11 +503,13 @@ def _materialize(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
 
 def _minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """xxhash64 MinHash-LSH with a hash-materialization oracle: the
-    banded signature table is written to parquet and the generated SQL
-    (lsh_materialized_oracle_sql) replays the cap + bucket join + pair
-    dedupe + Jaccard estimate + threshold over it — the whole pipeline
-    downstream of the hash is now EXACTLY oracled (was rows-only in
-    rounds 1-3); the hash itself stays pytest-gated."""
+    banded signature table (one row per doc and exact band tuple) is
+    written to parquet and the generated SQL
+    (lsh_materialized_oracle_sql) replays the cap + band-tuple join +
+    pair dedupe + Jaccard estimate + threshold over it — the whole
+    pipeline downstream of the hash is EXACTLY oracled; the hash itself
+    stays pytest-gated. The portable entry below shares the same
+    banding body (operators/dedup._bucket_pairs)."""
     from docling_pdf_spark.operators.dedup import (
         lsh_melted,
         lsh_pairs_from_melted,
@@ -526,7 +528,7 @@ def _minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash-LSH pipeline with engine-portable hashing — the
     variant the driver can check EXACTLY against DuckDB (the xxhash64
-    fast path's hash stays pytest-gated; same plan family)."""
+    fast path's hash stays pytest-gated; same banding body)."""
     from docling_pdf_spark.operators.dedup import minhash_lsh_dedup_portable
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

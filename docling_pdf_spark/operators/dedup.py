@@ -8,8 +8,9 @@ Scale shape (100 TB story):
   * MinHash: one explode(shingles) → groupBy(doc_id) partial-agg for
     the K min-hashes (map-side combine keeps the shuffle at
     |docs|×K longs, NOT |shingles|); band self-join shuffles on the
-    band hash — exactly the LSH bucket join from the MinHash/LSH
-    literature (Broder 1997; Leskovec-Rajaraman-Ullman ch.3).
+    exact band tuple — the LSH bucket join from the MinHash/LSH
+    literature (Broder 1997; Leskovec-Rajaraman-Ullman ch.3), shared
+    with SimHash, IVF-embedding and winnow pairs (_bucket_pairs).
   * SimHash (Charikar 2002; Manku et al. WWW'07 for the Hamming-
     chunk trick): 64 bit-vote aggregates per doc, then candidate
     pairs via equality on any of four 16-bit chunks — the standard
@@ -28,17 +29,49 @@ from docling_pdf_spark.conf import MAX_LSH_BUCKET
 SHINGLE_WORDS = 5
 
 
-def _cap_buckets(melted: DataFrame, bucket_cols: list[str], max_bucket: int) -> DataFrame:
-    """Drop rows belonging to buckets with more than max_bucket members
-    (the mega-bucket guard: a feature shared by millions of docs emits
-    O(b²) pairs from one bucket — boilerplate, not similarity). The
-    window count shuffles on the same key as the downstream bucket
-    join, so the exchange is reused."""
+def _bucket_pairs(
+    melted: DataFrame,
+    bucket_cols: list[str],
+    id_col: str,
+    max_bucket: int,
+    carry: tuple[str, ...] | list[str] = (),
+) -> DataFrame:
+    """THE LSH bucket join every near-dup operator shares: (doc_a,
+    doc_b, n_shared, <c>_a, <c>_b for c in carry) — one row per id pair
+    with doc_a < doc_b that shares at least one bucket, n_shared = the
+    number of buckets it shares.
+
+    Buckets with more than max_bucket members are dropped first (the
+    mega-bucket guard: a feature shared by millions of docs emits O(b²)
+    pairs from one bucket — boilerplate, not similarity; measure the
+    dropped mass with bucket_cap_stats). The window count shuffles on
+    the same key as the self-join, so the exchange is reused, and the
+    (doc_a, doc_b) grouping is the plan dropDuplicates produces.
+
+    Preconditions: (id, bucket) rows are distinct (a repeated row
+    inflates the bucket's size and n_shared), and every carried column
+    is constant per id (first() picks one row's value per side)."""
     w = Window.partitionBy(*bucket_cols)
-    return (
+    capped = (
         melted.withColumn("_bsz", F.count("*").over(w))
         .where(F.col("_bsz") <= max_bucket)
         .drop("_bsz")
+    )
+    a, b = capped.alias("a"), capped.alias("b")
+    on = reduce(
+        lambda x, y: x & y,
+        [F.col(f"a.{c}") == F.col(f"b.{c}") for c in bucket_cols],
+        F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
+    )
+    return (
+        a.join(b, on)
+        .groupBy(
+            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
+        )
+        .agg(
+            F.count("*").alias("n_shared"),
+            *[F.first(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+        )
     )
 
 
@@ -144,24 +177,28 @@ def lsh_melted(
     bands: int = 8,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """(id, sig array<long>, bucket long) — one row per (doc, band):
-    the banded signature matrix BEFORE the mega-bucket cap. Split out
-    of lsh_candidate_pairs so the driver entry can materialize exactly
-    this table to parquet and oracle everything downstream of the
-    xxhash64 (cap, bucket join, pair dedupe, Jaccard estimate) in
-    DuckDB (lsh_materialized_oracle_sql)."""
+    """(id, sig array<long>, bk struct<band, v0..v{r-1}>) — one row per
+    (doc, band): the banded signature matrix BEFORE the mega-bucket cap,
+    keyed by the EXACT band tuple (no band hash, so two different bands
+    can never share a bucket). Split out of lsh_candidate_pairs so the
+    registry entry (__spark_entry__) can materialize exactly this table
+    to parquet and oracle everything downstream of the signatures (cap,
+    bucket join, pair dedupe, Jaccard estimate) in DuckDB
+    (lsh_materialized_oracle_sql)."""
     rows = num_hashes // bands
-    band_cols = [
-        F.xxhash64(F.lit(b), *[F.col(f"mh_{b * rows + r}") for r in range(rows)]).alias(
-            f"band_{b}"
-        )
-        for b in range(bands)
-    ]
-    banded = sigs.select(id_col, *[F.col(f"mh_{i}") for i in range(num_hashes)], *band_cols)
-    return banded.select(
+    band_keys = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                *[F.col(f"mh_{b * rows + r}").alias(f"v{r}") for r in range(rows)],
+            )
+            for b in range(bands)
+        ]
+    )
+    return sigs.select(
         id_col,
         F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias("sig"),
-        F.explode(F.array(*[F.col(f"band_{b}") for b in range(bands)])).alias("bucket"),
+        F.explode(band_keys).alias("bk"),
     )
 
 
@@ -171,25 +208,10 @@ def lsh_pairs_from_melted(
     id_col: str = "doc_id",
     max_bucket: int = MAX_LSH_BUCKET,
 ) -> DataFrame:
-    """Everything downstream of the hash: mega-bucket cap, bucket
-    self-join, pair dedupe, signature-match Jaccard estimate."""
-    melted = _cap_buckets(melted, ["bucket"], max_bucket)
-    a = melted.alias("a")
-    b = melted.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    """Everything downstream of the signatures: the shared bucket join
+    (cap, band self-join, pair dedupe) and the signature-match Jaccard
+    estimate."""
+    pairs = _bucket_pairs(melted, ["bk"], id_col, max_bucket, carry=["sig"])
     est = (
         F.size(
             F.filter(
@@ -209,8 +231,8 @@ def lsh_candidate_pairs(
     id_col: str = "doc_id",
     max_bucket: int = MAX_LSH_BUCKET,
 ) -> DataFrame:
-    """Band the signature matrix (bands × rows), bucket-join on band
-    hash, return candidate pairs with the minhash-estimated Jaccard.
+    """Band the signature matrix (bands × rows), bucket-join on the
+    band tuple, return candidate pairs with the minhash-estimated Jaccard.
 
     Buckets above max_bucket are excluded from the join (mega-bucket
     guard; measure dropped mass with bucket_cap_stats)."""
@@ -228,7 +250,7 @@ def lsh_materialized_oracle_sql(
     """DuckDB oracle for lsh_pairs_from_melted over a MATERIALIZED
     melted table (the hash-materialization pattern, r3 VERDICT #3):
     DuckDB cannot compute xxhash64, but it can READ the Spark-computed
-    (doc_id, sig, bucket) parquet, so the cap, the bucket join, the
+    (doc_id, sig, bk) parquet, so the cap, the band-tuple join, the
     pair dedupe, the signature-match estimate and the threshold are
     all exactly checked; only the hash itself stays pytest-gated.
     Generated so the cap and hash count are shared with the Spark plan
@@ -239,12 +261,12 @@ def lsh_materialized_oracle_sql(
     return f"""
 WITH capped AS (
   SELECT * FROM read_parquet('{melted_glob}')
-  QUALIFY count(*) OVER (PARTITION BY bucket) <= {max_bucket}
+  QUALIFY count(*) OVER (PARTITION BY bk) <= {max_bucket}
 ), pairs AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
          a.sig AS sig_a, b.sig AS sig_b
   FROM capped a JOIN capped b
-    ON a.bucket = b.bucket AND a.doc_id < b.doc_id
+    ON a.bk = b.bk AND a.doc_id < b.doc_id
 )
 SELECT doc_a, doc_b,
        round(({matches}) / {float(num_hashes)}, 4) AS est_jaccard
@@ -270,10 +292,12 @@ def minhash_lsh_dedup(
 # ------------------------------------------- portable (oracle-checkable)
 # MinHash variant: xxhash64 has no DuckDB equivalent, so the fast path's
 # HASH cannot be SQL-checked (its downstream pipeline is, via
-# lsh_materialized_oracle_sql). This variant derives every minhash
-# from ONE engine-portable base hash per shingle (low 60 bits of md5,
-# the same trick operators/winnow.py uses) via the textbook universal
-# affine family h_i(x) = (a_i·x + b_i) mod p over the Mersenne prime
+# lsh_materialized_oracle_sql). This variant swaps only the signature
+# source and shares the fast path's banding body (lsh_candidate_pairs)
+# outright. It derives every minhash from ONE engine-portable base
+# hash per shingle (low 60 bits of md5, the same trick
+# operators/winnow.py uses) via the textbook universal affine family
+# h_i(x) = (a_i·x + b_i) mod p over the Mersenne prime
 # 2^31−1 (Carter–Wegman) — every value fits in BIGINT on both engines
 # (a, x < 2^31 → a·x < 2^62), so DuckDB reproduces the signatures
 # bit-for-bit and the driver gets an exact oracle for the whole
@@ -322,76 +346,27 @@ def minhash_lsh_dedup_portable(
     max_bucket: int = MAX_LSH_BUCKET,
 ) -> DataFrame:
     """MinHash-LSH with engine-portable hashing (see module comment):
-    same plan family as the fast path — one shuffle for the K-min
-    signatures (map-side combine), band buckets as collect_list with the
-    mega-bucket cap, JVM array pair expansion, exact signature compare
-    for the Jaccard estimate.
+    the portable signatures feed the SAME banding body as the fast path
+    (lsh_candidate_pairs — band-tuple bucket join with the mega-bucket
+    cap, exact signature compare for the Jaccard estimate).
 
     Precondition: `id_col` is unique. The signature kernel emits one
     row per input row, so a duplicated id would land twice in its band
-    buckets and pair with itself."""
+    buckets and inflate their sizes against the cap."""
     from docling_pdf_spark.functions.arrowhash import (
         minhash_signatures_portable_arrow,
     )
 
-    rows = num_hashes // bands
-    params = affine_params(num_hashes)
     # round 7: the signature matrix is ONE narrow mapInArrow stage
     # (functions/arrowhash.py) instead of explode(distinct grams) →
     # md5-chain per gram → groupBy(id) K-min shuffle: identical values
     # (pinned by minhash_lsh_portable_oracle_sql), one less corpus
     # shuffle, ~10× cheaper hashing (guide §4.2)
     sigs = minhash_signatures_portable_arrow(
-        docs, params, SHINGLE_WORDS, id_col, text_col
+        docs, affine_params(num_hashes), SHINGLE_WORDS, id_col, text_col
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                *[F.col(f"mh_{bi * rows + r}").alias(f"v{r}") for r in range(rows)],
-            )
-            for bi in range(bands)
-        ]
-    )
-    melted = sigs.select(
-        F.col(id_col),
-        F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias("sig"),
-        F.explode(band_structs).alias("bk"),
-    )
-    bucket = melted.groupBy("bk").agg(F.sort_array(F.collect_list(id_col)).alias("ds"))
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    pairs = (
-        bucket.where((F.size("ds") >= 2) & (F.size("ds") <= max_bucket))
-        .select(F.explode(pair_structs).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .distinct()
-    )
-    sig_arr = F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)])
-    sa = sigs.select(F.col(id_col).alias("doc_a"), sig_arr.alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("doc_b"), sig_arr.alias("sig_b"))
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                lambda v: v == 1,
-            )
-        ).cast("double")
-        / F.lit(float(num_hashes))
-    )
-    return (
-        pairs.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select("doc_a", "doc_b", F.round(est, 4).alias("est_jaccard"))
-        .where(F.col("est_jaccard") >= threshold)
-    )
+    pairs = lsh_candidate_pairs(sigs, num_hashes, bands, id_col, max_bucket)
+    return pairs.where(F.col("est_jaccard") >= threshold)
 
 
 def minhash_lsh_portable_oracle_sql(
@@ -520,32 +495,25 @@ def embedding_pairs_from_assigned(
     vec_col: str = "embedding",
     max_bucket: int = MAX_LSH_BUCKET,
 ) -> DataFrame:
-    """Everything downstream of the centroid assignment: mega-bucket
-    cap, per-bucket quadratic join, exact float64 cosine, threshold,
-    cross-bucket pair dedupe. Split out so the driver entry can
-    materialize the (id, vector, bucket) assignment to parquet and
-    oracle this whole stage in DuckDB."""
+    """Everything downstream of the centroid assignment: the shared
+    bucket join (mega-bucket cap, per-bucket quadratic join,
+    cross-bucket pair dedupe), exact float64 cosine, threshold. Split
+    out so the registry entry (__spark_entry__) can materialize the
+    (id, vector, bucket) assignment to parquet and oracle this whole
+    stage in DuckDB."""
     from docling_pdf_spark.functions.vectors import cosine_similarity
 
     assigned = assigned.select(
         F.col(id_col), F.col(vec_col).cast("array<double>").alias("v"), "bucket"
     )
-    assigned = _cap_buckets(assigned, ["bucket"], max_bucket)
-    a, b = assigned.alias("a"), assigned.alias("b")
-    sim = cosine_similarity(F.col("a.v"), F.col("b.v"))
+    pairs = _bucket_pairs(assigned, ["bucket"], id_col, max_bucket, carry=["v"])
     return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.round(sim, 4).alias("cos_sim"),
+        pairs.select(
+            F.col("doc_a").alias("id_a"),
+            F.col("doc_b").alias("id_b"),
+            F.round(cosine_similarity(F.col("v_a"), F.col("v_b")), 4).alias("cos_sim"),
         )
         .where(F.col("cos_sim") >= threshold)
-        .dropDuplicates(["id_a", "id_b"])
     )
 
 
@@ -739,30 +707,14 @@ def simhash_pairs_from_melted(
     max_bucket: int = MAX_LSH_BUCKET,
 ) -> DataFrame:
     """Everything downstream of the hash: mega-bucket cap, chunk-bucket
-    self-join, pair dedupe, Hamming verify via bit_count(xor)."""
-    melted = _cap_buckets(melted, ["chunk_idx", "chunk"], max_bucket)
-    a = melted.alias("a")
-    b = melted.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("doc_a"),
-            F.col(f"b.{id_col}").alias("doc_b"),
-            F.col("a.simhash").alias("fp_a"),
-            F.col("b.simhash").alias("fp_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
+    self-join, pair dedupe (the shared bucket join), Hamming verify via
+    bit_count(xor)."""
+    pairs = _bucket_pairs(
+        melted, ["chunk_idx", "chunk"], id_col, max_bucket, carry=["simhash"]
     )
-    hamming = F.bit_count(F.col("fp_a").bitwiseXOR(F.col("fp_b")))
-    return (
-        pairs.withColumn("hamming", hamming)
-        .where(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
+    return pairs.select("doc_a", "doc_b", hamming.alias("hamming")).where(
+        F.col("hamming") <= max_hamming
     )
 
 

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from docling_pdf_spark.conf import MAX_LSH_BUCKET
-from docling_pdf_spark.operators.dedup import _cap_buckets
+from docling_pdf_spark.operators.dedup import _bucket_pairs
 
 WINNOW_K = 8  # k-gram length (chars)
 WINNOW_W = 4  # window length (hashes)
@@ -183,19 +183,8 @@ def winnow_near_dup_pairs(
     (e.g. 0.5) for dedup decisions; min_shared for passage search."""
     fp = winnow_fingerprints(docs, k, w, id_col, text_col, hash_mode)
     sizes = fp.groupBy(id_col).agg(F.count("*").alias("n_fp"))
-    capped = _cap_buckets(fp, ["fingerprint"], max_bucket)
-    a, b = capped.alias("a"), capped.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.fingerprint") == F.col("b.fingerprint"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"a.{id_col}").alias("doc_a"), F.col(f"b.{id_col}").alias("doc_b")
-        )
-        .agg(F.count("*").alias("n_shared"))
-        .where(F.col("n_shared") >= min_shared)
+    pairs = _bucket_pairs(fp, ["fingerprint"], id_col, max_bucket).where(
+        F.col("n_shared") >= min_shared
     )
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_fp").alias("_na"))
     sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_fp").alias("_nb"))

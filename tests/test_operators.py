@@ -606,11 +606,20 @@ def test_asof_join_matches_pandas_merge_asof_randomized(spark):
 # ------------------------------------------------- mega-bucket caps
 
 
-def test_lsh_mega_bucket_cap_bounds_pairs(spark):
+@pytest.mark.parametrize("sig_source", ["jvm", "portable"])
+def test_lsh_mega_bucket_cap_bounds_pairs(spark, sig_source):
     """An adversarial corpus where every doc shares one boilerplate
     passage: without the cap the shared band bucket emits O(n²) pairs;
-    with it the bucket is dropped and unique near-dup pairs survive."""
+    with it the bucket is dropped and unique near-dup pairs survive.
+    Run over both signature sources (the fast path's JVM xxhash64
+    signatures and minhash_lsh_dedup_portable's Arrow ones): they share
+    one banding body, and the sf0.01 oracle never makes the cap bind."""
+    from docling_pdf_spark.functions.arrowhash import (
+        minhash_signatures_portable_arrow,
+    )
     from docling_pdf_spark.operators.dedup import (
+        SHINGLE_WORDS,
+        affine_params,
         bucket_cap_stats,
         lsh_candidate_pairs,
         minhash_signatures,
@@ -622,7 +631,12 @@ def test_lsh_mega_bucket_cap_bounds_pairs(spark):
     rows.append((900, "a genuinely distinct document about mountain weather today"))
     rows.append((901, "a genuinely distinct document about mountain weather today"))
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    sigs = minhash_signatures(shingles(docs))
+    if sig_source == "jvm":
+        sigs = minhash_signatures(shingles(docs))
+    else:
+        sigs = minhash_signatures_portable_arrow(
+            docs, affine_params(32), SHINGLE_WORDS, "doc_id", "text"
+        )
 
     capped = lsh_candidate_pairs(sigs, max_bucket=50)
     n_capped = capped.count()

@@ -112,6 +112,21 @@ def test_winnow_is_one_narrow_arrow_stage(spark):
         assert marker not in plan
 
 
+def test_portable_minhash_runs_signatures_once_per_join_side(spark):
+    """minhash_lsh_dedup_portable feeds its Arrow signatures straight
+    into the shared band-tuple bucket join (operators/dedup
+    ._bucket_pairs), which carries each side's signature: one
+    MapInArrow per join side, 2 in all. Joining the signature table
+    back to the pairs for the Jaccard estimate ran the Python signature
+    stage a third time."""
+    from docling_pdf_spark.operators.dedup import minhash_lsh_dedup_portable
+    from docling_pdf_spark.plans import formatted_plan
+
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    plan = formatted_plan(minhash_lsh_dedup_portable(docs, threshold=0.3))
+    assert plan.count("MapInArrow (") < 3
+
+
 def test_regional_revenue_broadcasts_all_dims(spark):
     """TPC-H Q5-style star join: region filter pushed to the scan, every
     dim join broadcast, no sort-merge join anywhere."""
