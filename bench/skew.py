@@ -57,8 +57,10 @@ def run_mode(spark, docs, mode: str, num_partitions: int):
 
     resolved = mode
     if mode == "auto":
-        # the ONE production policy — the harness must measure exactly
-        # what extract()/run_extraction() would pick
+        # the ONE production policy, as extract() applies it: the
+        # sampled probe. run_extraction() judges the same function on
+        # unsampled per-split rows from its planning aggregate, so on a
+        # borderline layout the two can pick differently.
         resolved = resolve_salt_mode(docs, num_partitions)
     if resolved == "full":
         staged = salted_repartition(docs, num_partitions)

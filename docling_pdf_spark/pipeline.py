@@ -1,10 +1,17 @@
-"""The distributed extraction pipeline (SURVEY.md §4.4 physical sketch):
+"""The distributed extraction pipeline (SURVEY.md §4.4 physical sketch).
 
-    scan documents (pruned by resume bucket filter)
+run_extraction costs 1 + k Spark queries for k commit groups:
+
+    plan:  scan documents → ONE aggregate by (bucket, spark_partition_id)
+           → input counts (completeness guard), giant counts (heavy
+             sizing), per-split light-cohort cost moments ('auto' verdict)
+    each commit group, one query:
+           scan documents (filtered to the group's buckets)
       → salted repartition on (cost_bucket, salt)     # skew-taming shuffle
       → mapInArrow(_chunked_extract_arrow)            # ONLY Python stage
+      → observe per-bucket stats (same result stage as the write)
       → write documents_extracted partitioned by bucket (idempotent)
-      → per-bucket metrics agg → _progress manifest commit
+      → _progress manifest commit from the observed stats
 
 Spark-first notes:
   * All pre/post-UDF expressions are built-in pyspark.sql.functions
@@ -29,7 +36,7 @@ from __future__ import annotations
 from collections.abc import Iterable, Iterator
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from docling_pdf_spark.checkpoint import BucketManifest, ProgressLog
@@ -41,11 +48,13 @@ MAX_BATCH_PAYLOAD_BYTES = 8 * 1024 * 1024  # re-chunk bound inside the UDF
 
 def _cost_expr():
     """Payload bytes per doc, computed JVM-side over the spans array
-    (whole-stage codegen; no Python touches this)."""
-    return F.aggregate(
-        F.coalesce(F.col("spans"), F.array()),
-        F.lit(0).cast("long"),
-        lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)).cast("long"),
+    (whole-stage codegen; no Python touches this). One SQL string: the
+    same expression built from pyspark.sql.functions and a Python lambda
+    costs ~30 ms of py4j round trips, and run_extraction builds it once
+    per commit group and heavy branch."""
+    return F.expr(
+        "aggregate(coalesce(spans, array()), CAST(0 AS BIGINT),"
+        " (acc, s) -> acc + CAST(coalesce(length(s.text), 0) AS BIGINT))"
     )
 
 
@@ -102,6 +111,48 @@ def _chunked_extract_arrow(
 
 CLUSTER_CV_THRESHOLD = 0.25
 DETECT_SAMPLE_FRACTION = 0.01
+SALT_MODES = ("auto", "heavy", "full", "none")
+
+
+def _check_salt_mode(salt_mode: str) -> None:
+    if salt_mode not in SALT_MODES:
+        raise ValueError(f"unknown salt_mode: {salt_mode!r} (one of {SALT_MODES})")
+
+
+def _cost_clustered(
+    splits: Iterable[tuple[int, float, float]],
+    threshold: float = CLUSTER_CV_THRESHOLD,
+    min_effective_splits: int | None = None,
+) -> bool:
+    """The layout verdict from per-split light-cohort moments: one
+    (docs, Σcost, Σcost²) triple per scan split; splits without light
+    docs are ignored. Pure Python over ≤ #splits rows — both
+    detect_cost_sorted and run_extraction's planning aggregate feed it.
+
+    Sampling-noise-corrected CV of per-split means (random-effects
+    ANOVA): under a well-mixed layout the sampled split means still
+    scatter by ≈ doc_var/n_i pure sampling error — with few sampled docs
+    per split that alone can cross any fixed threshold (review-found).
+    Subtract the expected sampling variance E[Var(m_i)] = doc_var·k/N
+    from the observed between-split variance before taking the CV, so
+    only REAL cost clustering remains."""
+    splits = [(n, float(s1), float(s2)) for n, s1, s2 in splits if n]
+    n_tot = float(sum(n for n, _, _ in splits))
+    if not n_tot:
+        return False
+    eff = n_tot * n_tot / sum(n * n for n, _, _ in splits)  # inverse Simpson
+    if min_effective_splits is not None and eff < min_effective_splits:
+        return True  # light branch would serialize: full salt regardless
+    k = len(splits)
+    mean = sum(s1 for _, s1, _ in splits) / n_tot
+    if k < 2 or mean <= 0:
+        return False
+    doc_var = max(0.0, sum(s2 for _, _, s2 in splits) / n_tot - mean * mean)
+    # weighted between-split variance: Σ n_i (m_i − mean)² / N
+    wms = sum(s1 * s1 / n for n, s1, _ in splits)
+    var_between = max(0.0, wms / n_tot - mean * mean)
+    adjusted = max(0.0, var_between - doc_var * k / n_tot)
+    return (adjusted ** 0.5) / mean >= threshold
 
 
 def detect_cost_sorted(
@@ -138,9 +189,14 @@ def detect_cost_sorted(
     split there IS no between-split variance.) extract() passes
     num_partitions/4; None skips the check.
 
-    One narrow pass, no shuffle, tiny agg; at 100 TB this extra scan is
-    far cheaper than either mistake it prevents (a 100 TB full shuffle,
-    or the straggler tail)."""
+    Cost: one or two grouped aggregates by split id over a (sampled)
+    scan — the second only when the sample is too thin — each two Spark
+    jobs (a shuffle of one partial row per split per task, then a
+    result stage); the ≤ #splits rows are collected and judged by
+    _cost_clustered. At 100 TB this extra scan is far cheaper than
+    either mistake it prevents (a 100 TB full shuffle, or the straggler
+    tail). run_extraction skips it: its planning aggregate already
+    yields the unsampled per-split rows."""
     light = with_cost(df).where(
         F.col("_cost_bytes") < OVERSIZE_COST_BUCKET_BYTES
     )
@@ -149,43 +205,13 @@ def detect_cost_sorted(
         F.col("_cost_bytes").cast("double").alias("_c"),
     )
 
-    def _cv(p) -> tuple[int, int, float | None, float | None]:
-        """Sampling-noise-corrected CV of per-split means (random-effects
-        ANOVA): under a well-mixed layout the sampled split means still
-        scatter by ≈ doc_var/n_i pure sampling error — with few sampled
-        docs per split that alone can cross any fixed threshold
-        (review-found). Subtract the expected sampling variance
-        E[Var(m_i)] = doc_var·k/N from the observed between-split
-        variance before taking the CV, so only REAL cost clustering
-        remains."""
-        per = p.groupBy("_pid").agg(
+    def per_split(p) -> list[tuple[int, float, float]]:
+        rows = p.groupBy("_pid").agg(
             F.count("*").alias("n"),
             F.sum("_c").alias("s1"),
             F.sum(F.col("_c") * F.col("_c")).alias("s2"),
-        )
-        row = per.agg(
-            F.count("*").alias("k"),
-            F.sum("n").alias("rows"),
-            F.sum("s1").alias("t1"),
-            F.sum("s2").alias("t2"),
-            F.sum(F.col("s1") * F.col("s1") / F.col("n")).alias("wms"),
-            F.sum(F.col("n") * F.col("n")).alias("nsq"),
-        ).head()
-        if not row or not row["k"] or not row["rows"]:
-            return 0, 0, None, None
-        n_tot = float(row["rows"])
-        eff = n_tot * n_tot / float(row["nsq"])  # inverse Simpson
-        if row["k"] < 2 or not row["t1"]:
-            return int(row["rows"]), int(row["k"]), None, eff
-        k = float(row["k"])
-        mean = float(row["t1"]) / n_tot
-        if mean <= 0:
-            return int(row["rows"]), int(row["k"]), None, eff
-        doc_var = max(0.0, float(row["t2"]) / n_tot - mean * mean)
-        # weighted between-split variance: Σ n_i (m_i − mean)² / N
-        var_between = max(0.0, float(row["wms"]) / n_tot - mean * mean)
-        adjusted = max(0.0, var_between - doc_var * k / n_tot)
-        return int(row["rows"]), int(row["k"]), (adjusted ** 0.5) / mean, eff
+        ).collect()
+        return [(r["n"], r["s1"], r["s2"]) for r in rows]
 
     # per-split sample floor (second-review finding): at ~1 sampled doc
     # per split the between-split variance IS the doc variance and the
@@ -195,37 +221,42 @@ def detect_cost_sorted(
     # at a whole-probe pass).
     MIN_DOCS_PER_SPLIT = 8
     if sample_fraction < 1.0:
-        n, k, cv, eff = _cv(probe.sample(fraction=sample_fraction, seed=20250816))
+        splits = per_split(probe.sample(fraction=sample_fraction, seed=20250816))
+        n, k = sum(s[0] for s in splits), len(splits)
         if n < 100:  # tiny input: the sample is noise — probe it whole
-            n, k, cv, eff = _cv(probe)
+            splits = per_split(probe)
         elif k and n / k < MIN_DOCS_PER_SPLIT:
             boosted = min(1.0, sample_fraction * MIN_DOCS_PER_SPLIT * k / max(n, 1))
-            n, k, cv, eff = _cv(
+            splits = per_split(
                 probe if boosted >= 1.0
                 else probe.sample(fraction=boosted, seed=20250816)
             )
     else:
-        n, k, cv, eff = _cv(probe)
-    if (
-        min_effective_splits is not None
-        and eff is not None
-        and eff < min_effective_splits
-    ):
-        return True  # light branch would serialize: full salt regardless
-    return cv is not None and cv >= threshold
+        splits = per_split(probe)
+    return _cost_clustered(splits, threshold, min_effective_splits)
 
 
-def resolve_salt_mode(df: DataFrame, num_partitions: int) -> str:
+def resolve_salt_mode(
+    df: DataFrame,
+    num_partitions: int,
+    splits: Iterable[tuple[int, float, float]] | None = None,
+) -> str:
     """THE 'auto' policy, defined once (whole-round-review finding: the
     probe call + min_effective_splits formula were restated in three
     places, letting the skew harness drift from production): full salt
     when the layout is cost-clustered OR the light branch would have
-    fewer than num_partitions/4 effective splits; heavy otherwise."""
-    return (
-        "full"
-        if detect_cost_sorted(df, min_effective_splits=max(2, num_partitions // 4))
-        else "heavy"
-    )
+    fewer than num_partitions/4 effective splits; heavy otherwise.
+
+    splits: the light cohort's per-split (docs, Σcost, Σcost²), already
+    aggregated over the whole of df (run_extraction's planning pass);
+    judged as they are, without a Spark job. None probes df with
+    detect_cost_sorted's sample."""
+    min_eff = max(2, num_partitions // 4)
+    if splits is None:
+        clustered = detect_cost_sorted(df, min_effective_splits=min_eff)
+    else:
+        clustered = _cost_clustered(splits, min_effective_splits=min_eff)
+    return "full" if clustered else "heavy"
 
 
 def heavy_only_salting(
@@ -273,15 +304,18 @@ def extract(
 ) -> DataFrame:
     """documents → documents_extracted as a DataFrame transform.
 
-    Laziness caveat: with salt_mode='auto' (the default) THIS CALL runs
-    1–2 small eager probe jobs (the sampled layout scan) before
-    returning; every other mode is fully lazy. Callers composing plans
-    without wanting execution — or calling extract() repeatedly on the
-    same input — should pass an explicit mode ('heavy'/'full'/'none')
-    or resolve 'auto' once themselves via detect_cost_sorted (what
-    run_extraction does across its commit groups).
+    Laziness caveat: with salt_mode='auto' (the default) and a
+    num_partitions, THIS CALL runs the sampled layout probe
+    (detect_cost_sorted: one or two grouped aggregates, 2–4 small eager
+    jobs) before returning; every other call is fully lazy. Callers
+    composing plans without wanting execution — or calling extract()
+    repeatedly on the same input — should pass an explicit mode
+    ('heavy'/'full'/'none') or resolve 'auto' once themselves with
+    resolve_salt_mode. run_extraction does the latter from its planning
+    aggregate, so its commit groups never run the probe.
 
-    salt_mode:
+    salt_mode (anything else raises ValueError, with or without
+    num_partitions; without one, no mode shuffles):
       'auto' (default)  — probe the layout (detect_cost_sorted) and
                           pick 'full' for cost-sorted inputs, 'heavy'
                           otherwise; closes the documented heavy-only
@@ -290,6 +324,7 @@ def extract(
       'full'            — shuffle everything on the uniform salt (for
                           adversarially cost-sorted inputs);
       'none'            — trust the input partitioning."""
+    _check_salt_mode(salt_mode)
     if num_partitions:
         if salt_mode == "auto":
             salt_mode = resolve_salt_mode(df, num_partitions)
@@ -297,8 +332,6 @@ def extract(
             df = salted_repartition(df, num_partitions)
         elif salt_mode == "heavy":
             df = heavy_only_salting(df, num_partitions)
-        elif salt_mode != "none":
-            raise ValueError(f"unknown salt_mode: {salt_mode}")
     if "_cost_bytes" not in df.columns:  # the salting paths add it
         df = with_cost(df)
     return df.select("doc_id", "spans", "_cost_bytes").mapInArrow(
@@ -309,6 +342,68 @@ def extract(
 # --------------------------------------------------------------------------
 # checkpointed job (resume / lineage / metrics) — SURVEY.md §4.3.2
 # --------------------------------------------------------------------------
+
+# manifest stats observed per bucket: key → (aggregate, its argument)
+_BUCKET_STATS = {
+    "n_docs": ("count", "1"),
+    "n_ok": ("sum", "CAST(extraction_successful AS BIGINT)"),
+    "chars": ("sum", "n_chars"),
+    "words": ("sum", "n_words"),
+    "pages": ("sum", "CAST(n_pages AS BIGINT)"),
+}
+
+
+def _bucket_stats(group: list[int]) -> list:
+    """The _BUCKET_STATS aggregates for DataFrame.observe: per key, one
+    array with one element per bucket of the group, in group order, each
+    aggregating only that bucket's rows (a sum is NULL for a bucket
+    without rows). Each array is one SQL string: building the same
+    columns through pyspark.sql.functions costs a few py4j round trips
+    per call, ~0.2 s of driver time per commit group of four buckets."""
+    return [
+        F.expr(
+            "array("
+            + ", ".join(f"{agg}(IF(bucket = {b}, {arg}, NULL))" for b in group)
+            + f") AS {key}"
+        )
+        for key, (agg, arg) in _BUCKET_STATS.items()
+    ]
+
+
+def _planning_aggregate(
+    docs: DataFrame, with_cost_moments: bool
+) -> tuple[dict[int, int], dict[int, int], list[tuple[int, float, float]]]:
+    """run_extraction's one planning query: an unsampled aggregate over
+    (bucket, spark_partition_id) of the whole input. Returns input docs
+    per bucket (the completeness guard's count, taken on the input side)
+    and, with_cost_moments, giants per bucket and the light cohort's
+    per-split (docs, Σcost, Σcost²) for resolve_salt_mode. Without them
+    the scan reads only doc_id; with them it reads the payload once."""
+    cols = [F.col("bucket"), F.spark_partition_id().alias("_pid")]
+    aggs = [F.count("*").alias("n")]
+    if with_cost_moments:
+        cols.append(_cost_expr().cast("double").alias("_c"))
+        light = F.col("_c") < OVERSIZE_COST_BUCKET_BYTES
+        aggs += [
+            F.count(F.when(~light, 1)).alias("g"),
+            F.count(F.when(light, 1)).alias("nl"),
+            F.sum(F.when(light, F.col("_c"))).alias("s1"),
+            F.sum(F.when(light, F.col("_c") * F.col("_c"))).alias("s2"),
+        ]
+    in_counts: dict[int, int] = {}
+    giants: dict[int, int] = {}
+    splits: dict[int, list] = {}
+    for r in docs.select(*cols).groupBy("bucket", "_pid").agg(*aggs).collect():
+        b = r["bucket"]
+        in_counts[b] = in_counts.get(b, 0) + r["n"]
+        if with_cost_moments:
+            giants[b] = giants.get(b, 0) + r["g"]
+            if r["nl"]:
+                acc = splits.setdefault(r["_pid"], [0, 0.0, 0.0])
+                acc[0] += r["nl"]
+                acc[1] += r["s1"]
+                acc[2] += r["s2"]
+    return in_counts, giants, [tuple(s) for s in splits.values()]
 
 
 def run_extraction(
@@ -331,9 +426,13 @@ def run_extraction(
     atomically via dynamic partition overwrite, so a re-run after a
     mid-job kill is idempotent (no dup/missing doc_ids).
 
+    k commit groups cost 1 + k Spark queries: one planning aggregate
+    (_planning_aggregate), then one observed write per group.
+
     fail_after_commits: test hook — raise after N commit groups to
     simulate a mid-job crash (kill-and-resume test, SURVEY.md §5.2.4).
     """
+    _check_salt_mode(salt_mode)
     log = ProgressLog(checkpoint_dir)
     done = log.done_buckets()
 
@@ -361,10 +460,15 @@ def run_extraction(
     pending = [b for b in range(n_buckets) if b not in done]
     if not pending:
         return log
-    # resolve 'auto' ONCE for the whole job (the layout doesn't change
-    # between commit groups; per-group probes would be redundant jobs)
+
+    # ONE planning scan for the whole job, over every bucket (so the
+    # 'auto' verdict does not depend on what a resume left pending):
+    # completeness-guard counts, plus — when a salt mode needs them —
+    # giant counts and the per-split cost moments 'auto' is judged on
+    need_cost = bool(num_partitions) and salt_mode in ("auto", "heavy")
+    in_counts, giants, splits = _planning_aggregate(docs, need_cost)
     if salt_mode == "auto" and num_partitions:
-        salt_mode = resolve_salt_mode(docs, num_partitions)
+        salt_mode = resolve_salt_mode(docs, num_partitions, splits=splits)
 
     # real lineage token (Iceberg snapshot id in catalog mode; file
     # fingerprint in the parquet fallback) — resume detects when the
@@ -372,31 +476,11 @@ def run_extraction(
     snapshot = current_snapshot
     group_size = buckets_per_commit or len(pending)
     groups = [pending[i : i + group_size] for i in range(0, len(pending), group_size)]
-
-    # completeness-guard input counts for ALL pending buckets in ONE
-    # scan (a per-group recount would be an extra full input scan per
-    # commit group). The row count alone reads only doc_id. Heavy mode
-    # also counts each bucket's giants here, so every group's heavy
-    # exchange is sized without another job — but that count reads
-    # spans.text, one more pass over the whole payload.
     heavy = salt_mode == "heavy" and bool(num_partitions)
-    aggs = [F.count("*").alias("n")]
-    if heavy:
-        aggs.append(
-            F.sum((_cost_expr() >= OVERSIZE_COST_BUCKET_BYTES).cast("long")).alias("g")
-        )
-    in_rows = (
-        docs.where(F.col("bucket").isin([int(b) for b in pending]))
-        .groupBy("bucket")
-        .agg(*aggs)
-        .collect()
-    )
-    in_counts = {r["bucket"]: int(r["n"]) for r in in_rows}
-    giants = {r["bucket"]: int(r["g"]) for r in in_rows} if heavy else {}
 
     for gi, group in enumerate(groups):
         started = _utcnow_iso()
-        sub = docs.where(F.col("bucket").isin([int(b) for b in group])).drop("bucket")
+        sub = docs.where(F.col("bucket").isin(group)).drop("bucket")
         if heavy:
             # one round-robin slot per giant, capped at num_partitions;
             # a group without giants plans no heavy branch at all
@@ -411,42 +495,27 @@ def run_extraction(
         out = out.withColumn(
             "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))
         )
+        # the manifest stats ride on the write itself: observed right
+        # after the mapInArrow, inside the write's result stage (no
+        # Exchange in between), where a retried task's metrics count once
+        stats = Observation()
+        out = out.observe(stats, *_bucket_stats(group))
         # dynamic partition overwrite → only this group's bucket dirs
         # replaced (the shared overwrite-safe write pins the conf — a
         # default 'static' session would truncate the whole output path)
         from docling_pdf_spark.sources.io import idempotent_partition_overwrite
 
         idempotent_partition_overwrite(out, ["bucket"], output_path)
-
-        # metrics from the committed output (no recompute of the UDF
-        # stage). Explicit schema: an all-empty commit group leaves no
-        # parquet files to infer from, and the completeness guard below
-        # (not a schema-inference crash) must be what reports that.
-        stats = (
-            spark.read.schema(out.schema).parquet(output_path)
-            .where(F.col("bucket").isin([int(b) for b in group]))
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_docs"),
-                F.sum(F.col("extraction_successful").cast("long")).alias("n_ok"),
-                F.sum(F.col("n_chars")).alias("chars"),
-                F.sum(F.col("n_words")).alias("words"),
-                F.sum(F.col("n_pages").cast("long")).alias("pages"),
-            )
-            .collect()
-        )
+        observed = stats.get
         finished = _utcnow_iso()
-        by_bucket = {r["bucket"]: r for r in stats}
         # completeness guard (reference main.py:232-236 analog: a task
         # marked completed with no result is a 500, not a success): a
         # bucket whose input slice is non-empty must never be committed
         # 'done' with zero output rows — that would make resume skip it
-        # forever. Counts precomputed once for the whole job above.
-        for b in group:
-            r = by_bucket.get(b)
-            n_docs = int(r["n_docs"]) if r else 0
-            n_ok = int(r["n_ok"]) if r else 0
-            if n_docs == 0 and in_counts.get(b, 0) > 0:
+        # forever. Input counts come from the planning scan above.
+        for i, b in enumerate(group):
+            got = {key: int(observed[key][i] or 0) for key in _BUCKET_STATS}
+            if got["n_docs"] == 0 and in_counts.get(b, 0) > 0:
                 raise RuntimeError(
                     f"bucket {b}: output is empty but its input slice has "
                     f"{in_counts[b]} docs — refusing to commit 'done' "
@@ -454,16 +523,12 @@ def run_extraction(
                 )
             log.commit(
                 BucketManifest(
-                    partition_id=int(b),
+                    partition_id=b,
                     status="done",
-                    n_docs=n_docs,
-                    n_ok=n_ok,
-                    n_failed=n_docs - n_ok,
-                    metrics={
-                        "chars": int(r["chars"]) if r else 0,
-                        "words": int(r["words"]) if r else 0,
-                        "pages": int(r["pages"]) if r else 0,
-                    },
+                    n_docs=got["n_docs"],
+                    n_ok=got["n_ok"],
+                    n_failed=got["n_docs"] - got["n_ok"],
+                    metrics={key: got[key] for key in ("chars", "words", "pages")},
                     lineage={
                         "input_snapshot": snapshot,
                         "partition_key": f"bucket={b}",

@@ -203,6 +203,16 @@ def test_extraction_plan_shape(spark):
     assert "Union" in heavy  # light passthrough ∪ shuffled heavy cohort
 
 
+@pytest.mark.parametrize("num_partitions", [None, 8])
+def test_extract_rejects_unknown_salt_mode(spark, num_partitions):
+    from docling_pdf_spark.pipeline import extract
+    from docling_pdf_spark.schemas import DOCUMENTS_SCHEMA
+
+    docs = spark.createDataFrame([], DOCUMENTS_SCHEMA)
+    with pytest.raises(ValueError, match="unknown salt_mode"):
+        extract(docs, num_partitions=num_partitions, salt_mode="bogus")
+
+
 def test_auto_salt_mode_selection(spark):
     """salt_mode='auto' (the default) closes the documented heavy-only
     24× footgun: an unsorted layout keeps the heavy-only plan (light

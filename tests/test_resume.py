@@ -155,17 +155,12 @@ GIANTS_PER_GROUP = {0: 5, 1: 0, 2: 1, 3: 2}
 HEAVY_PARTITIONS = 4
 
 
-@pytest.fixture(scope="module")
-def uneven_corpus(spark, tmp_path_factory):
-    """The light fixture corpus plus text-only giants, placed by bucket so
-    their count differs per commit group."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+def _planted_giants(spark, per_group: dict[int, int], buckets_per_commit: int) -> list[dict]:
+    """Text-only giants, per_group[g] of them in commit group g (groups of
+    buckets_per_commit consecutive buckets out of N_BUCKETS)."""
     from pyspark.sql import functions as F
 
     from docling_pdf_spark.conf import OVERSIZE_COST_BUCKET_BYTES
-    from docling_pdf_spark.fixtures import gen_documents
-    from docling_pdf_spark.schemas import DOCUMENTS_PA
 
     ids = [f"giant-{i:04d}" for i in range(200)]
     bucket = {
@@ -175,8 +170,8 @@ def uneven_corpus(spark, tmp_path_factory):
         .collect()
     }
     giants = []
-    for group, want in GIANTS_PER_GROUP.items():
-        pick = [d for d in ids if bucket[d] // 2 == group][:want]
+    for group, want in per_group.items():
+        pick = [d for d in ids if bucket[d] // buckets_per_commit == group][:want]
         giants += [
             {"doc_id": d, "spans": [{
                 "kind": "text", "media_ref": None, "offset": 0,
@@ -184,13 +179,30 @@ def uneven_corpus(spark, tmp_path_factory):
             }]}
             for d in pick
         ]
-    light = gen_documents(N_DOCS).to_pylist()
-    # interleave the giants through the light docs (different row groups)
+    return giants
+
+
+def _interleave(light: list[dict], giants: list[dict]) -> list[dict]:
+    """The giants spread through the light docs (different row groups)."""
     rows = []
     step = len(light) // len(giants)
     for i, g in enumerate(giants):
         rows += light[i * step:(i + 1) * step] + [g]
-    rows += light[len(giants) * step:]
+    return rows + light[len(giants) * step:]
+
+
+@pytest.fixture(scope="module")
+def uneven_corpus(spark, tmp_path_factory):
+    """The light fixture corpus plus text-only giants, placed by bucket so
+    their count differs per commit group."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from docling_pdf_spark.fixtures import gen_documents
+    from docling_pdf_spark.schemas import DOCUMENTS_PA
+
+    giants = _planted_giants(spark, GIANTS_PER_GROUP, 2)
+    rows = _interleave(gen_documents(N_DOCS).to_pylist(), giants)
     path = str(tmp_path_factory.mktemp("uneven-corpus") / "documents.parquet")
     pq.write_table(pa.Table.from_pylist(rows, schema=DOCUMENTS_PA), path, row_group_size=16)
     return path
@@ -279,3 +291,154 @@ def test_uneven_giants_kill_resume_equals_oracle(spark, uneven_corpus, tmp_path)
             "words": sum(r["n_words"] or 0 for r in rows),
             "pages": sum(r["n_pages"] or 0 for r in rows),
         }
+
+
+# ---------------------------------------------------------------------------
+# 1 + k Spark queries: one planning aggregate, then one observed write per
+# commit group
+# ---------------------------------------------------------------------------
+
+
+def _last_execution_id(spark) -> int:
+    """Highest SQL execution id in the status store, once the listener bus
+    has delivered every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return max((execs.apply(i).executionId() for i in range(execs.size())), default=-1)
+
+
+@pytest.mark.parametrize("salt_mode", ["heavy", "auto"])
+def test_one_query_per_commit_group_plus_planning(spark, uneven_corpus, tmp_path, salt_mode):
+    before = _last_execution_id(spark)
+    run_extraction(
+        spark, uneven_corpus, str(tmp_path / "extracted"), str(tmp_path / "ckpt"),
+        n_buckets=N_BUCKETS, buckets_per_commit=2,
+        num_partitions=HEAVY_PARTITIONS, salt_mode=salt_mode,
+    )
+    assert _last_execution_id(spark) - before == 1 + len(GIANTS_PER_GROUP)
+
+
+def test_stats_observed_in_the_write_stage(spark, uneven_corpus, tmp_path, monkeypatch):
+    """The manifest stats are observed on the written frame right above
+    the extraction MapInArrow, with no Exchange between them: both run in
+    the write's result stage, where a retried task's metrics count once."""
+    import docling_pdf_spark.sources.io as sio
+    from docling_pdf_spark.plans import formatted_plan
+
+    real_write = sio.idempotent_partition_overwrite
+    trees = []
+
+    def recording_write(df, partition_cols, path):
+        # the formatted plan's tree, before the per-node details
+        trees.append(formatted_plan(df).split("\n\n")[0])
+        real_write(df, partition_cols, path)
+
+    monkeypatch.setattr(sio, "idempotent_partition_overwrite", recording_write)
+    run_extraction(
+        spark, uneven_corpus, str(tmp_path / "extracted"), str(tmp_path / "ckpt"),
+        n_buckets=N_BUCKETS, buckets_per_commit=2,
+        num_partitions=HEAVY_PARTITIONS, salt_mode="heavy",
+    )
+    assert len(trees) == len(GIANTS_PER_GROUP)
+    for tree, g in zip(trees, GIANTS_PER_GROUP.values()):
+        observed, udf = tree.index("CollectMetrics"), tree.index("MapInArrow")
+        assert observed < udf
+        assert "Exchange" not in tree[observed:udf]
+        # the heavy exchange, where there is one, sits below the UDF
+        assert ("Exchange" in tree[udf:]) == (g > 0)
+
+
+# 8 buckets in 2 commit groups; num_partitions 8 asks for >= 2 effective
+# light splits, which both layouts below have
+AUTO_BUCKETS_PER_COMMIT = 4
+AUTO_PARTITIONS = 8
+
+
+@pytest.fixture(scope="module")
+def layout_corpora(spark, tmp_path_factory):
+    """The same light docs in two multi-row-group files that scan as
+    several splits: sorted by payload cost (each split one cost band),
+    and in generation order (well mixed) with one planted giant per
+    commit group."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from docling_pdf_spark.fixtures import gen_documents
+    from docling_pdf_spark.schemas import DOCUMENTS_PA
+
+    def cost(doc):
+        return sum(len(s["text"] or "") for s in doc["spans"] or [])
+
+    light = gen_documents(400).to_pylist()
+    giants = _planted_giants(spark, {0: 1, 1: 1}, AUTO_BUCKETS_PER_COMMIT)
+    root = tmp_path_factory.mktemp("layouts")
+    paths = {}
+    for name, rows in (
+        ("sorted", sorted(light, key=cost)),
+        ("mixed", _interleave(light, giants)),
+    ):
+        paths[name] = str(root / f"{name}.parquet")
+        pq.write_table(
+            pa.Table.from_pylist(rows, schema=DOCUMENTS_PA), paths[name], row_group_size=32
+        )
+    return paths
+
+
+@pytest.mark.parametrize("layout,verdict", [("sorted", "full"), ("mixed", "heavy")])
+def test_auto_salt_mode_through_run_extraction(
+    spark, layout_corpora, tmp_path, monkeypatch, layout, verdict
+):
+    """salt_mode='auto' with a partition count (the production setting):
+    the planning aggregate's verdict equals the unsampled probe's on the
+    same file, and every commit group plans that mode — the full _salt
+    repartition with no Union on the cost-sorted file, the heavy Union
+    on the well-mixed one."""
+    import docling_pdf_spark.pipeline as pl
+    from docling_pdf_spark.plans import formatted_plan
+
+    real_resolve, real_extract = pl.resolve_salt_mode, pl.extract
+    modes, plans = [], []
+
+    def recording_resolve(*args, **kwargs):
+        modes.append(real_resolve(*args, **kwargs))
+        return modes[-1]
+
+    def recording_extract(df, num_partitions=None, salt_mode="auto"):
+        out = real_extract(df, num_partitions=num_partitions, salt_mode=salt_mode)
+        plans.append(formatted_plan(out))
+        return out
+
+    monkeypatch.setattr(pl, "resolve_salt_mode", recording_resolve)
+    monkeypatch.setattr(pl, "extract", recording_extract)
+    path = layout_corpora[layout]
+    ckpt = str(tmp_path / "ckpt")
+    run_extraction(
+        spark, path, str(tmp_path / "extracted"), ckpt,
+        n_buckets=N_BUCKETS, buckets_per_commit=AUTO_BUCKETS_PER_COMMIT,
+        num_partitions=AUTO_PARTITIONS, salt_mode="auto",
+    )
+    probed = pl.detect_cost_sorted(
+        spark.read.parquet(path), sample_fraction=1.0,
+        min_effective_splits=max(2, AUTO_PARTITIONS // 4),
+    )
+    assert modes == [verdict]
+    assert probed == (verdict == "full")
+    assert len(plans) == N_BUCKETS // AUTO_BUCKETS_PER_COMMIT
+    for plan in plans:
+        if verdict == "full":
+            assert "_salt" in plan and "Union" not in plan
+        else:
+            assert "Union" in plan and "_salt" not in plan
+    manifests = ProgressLog(ckpt).all_manifests()
+    assert sum(m.n_docs for m in manifests) == spark.read.parquet(path).count()
+
+
+@pytest.mark.parametrize("num_partitions", [None, HEAVY_PARTITIONS])
+def test_run_extraction_rejects_unknown_salt_mode(spark, corpus, tmp_path, num_partitions):
+    ckpt = str(tmp_path / "ckpt")
+    with pytest.raises(ValueError, match="unknown salt_mode"):
+        run_extraction(
+            spark, corpus, str(tmp_path / "extracted"), ckpt,
+            n_buckets=4, num_partitions=num_partitions, salt_mode="bogus",
+        )
+    assert ProgressLog(ckpt).done_buckets() == set()
