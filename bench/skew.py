@@ -5,8 +5,10 @@ Adversarial input: the fixture corpus SORTED BY DOCUMENT COST, so scan
 splits inherit the cost gradient. For each salt mode, the extraction
 UDF stage runs with a per-partition timing probe and the report is the
 task-time max/median ratio — the straggler-tail metric the round-1
-measurement used. `auto` must match `full` here (it probes the layout
-and picks full), and must match `heavy` on the unsorted layout.
+measurement used. `auto` must match `full` here (its per-split verdict
+picks full), and must match `heavy` on the unsorted layout. `none` is
+the unsalted baseline: the scan's own partitioning, as extract() keeps
+it without num_partitions.
 
     python bench/skew.py [--docs 40000] [--cores 16] [--modes auto full heavy none]
 
@@ -49,6 +51,7 @@ def timed_partition_probe(df):
 def run_mode(spark, docs, mode: str, num_partitions: int):
     """One (layout, mode) measurement; returns the report dict."""
     from docling_pdf_spark.pipeline import (
+        _planning_aggregate,
         heavy_only_salting,
         resolve_salt_mode,
         salted_repartition,
@@ -57,17 +60,14 @@ def run_mode(spark, docs, mode: str, num_partitions: int):
 
     resolved = mode
     if mode == "auto":
-        # the ONE production policy, as extract() applies it: the
-        # sampled probe. run_extraction() judges the same function on
-        # unsampled per-split rows from its planning aggregate, so on a
-        # borderline layout the two can pick differently.
-        resolved = resolve_salt_mode(docs, num_partitions)
+        splits = _planning_aggregate(docs, with_cost_moments=True)[2]
+        resolved = resolve_salt_mode(splits, num_partitions)
     if resolved == "full":
         staged = salted_repartition(docs, num_partitions)
     elif resolved == "heavy":
         staged = heavy_only_salting(docs, num_partitions)
     elif resolved == "none":
-        staged = with_cost(docs)  # the kernel re-chunks by _cost_bytes
+        staged = with_cost(docs)  # unsalted baseline; the kernel re-chunks by _cost_bytes
     else:
         raise ValueError(mode)
 

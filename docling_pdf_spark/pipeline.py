@@ -13,6 +13,10 @@ run_extraction costs 1 + k Spark queries for k commit groups:
       → write documents_extracted partitioned by bucket (idempotent)
       → _progress manifest commit from the observed stats
 
+extract(df, num_partitions=n) in 'auto' mode runs the same planning
+aggregate, by spark_partition_id alone, and judges its moments with the
+same resolve_salt_mode.
+
 Spark-first notes:
   * All pre/post-UDF expressions are built-in pyspark.sql.functions
     (JVM, whole-stage codegen): payload-cost estimation uses
@@ -110,8 +114,7 @@ def _chunked_extract_arrow(
 
 
 CLUSTER_CV_THRESHOLD = 0.25
-DETECT_SAMPLE_FRACTION = 0.01
-SALT_MODES = ("auto", "heavy", "full", "none")
+SALT_MODES = ("auto", "heavy", "full")
 
 
 def _check_salt_mode(salt_mode: str) -> None:
@@ -119,29 +122,83 @@ def _check_salt_mode(salt_mode: str) -> None:
         raise ValueError(f"unknown salt_mode: {salt_mode!r} (one of {SALT_MODES})")
 
 
-def _cost_clustered(
-    splits: Iterable[tuple[int, float, float]],
-    threshold: float = CLUSTER_CV_THRESHOLD,
-    min_effective_splits: int | None = None,
-) -> bool:
-    """The layout verdict from per-split light-cohort moments: one
-    (docs, Σcost, Σcost²) triple per scan split; splits without light
-    docs are ignored. Pure Python over ≤ #splits rows — both
-    detect_cost_sorted and run_extraction's planning aggregate feed it.
+def _planning_aggregate(
+    docs: DataFrame, with_cost_moments: bool
+) -> tuple[dict, dict, list[tuple[int, float, float]]]:
+    """The one planning query of both entry points: an unsampled
+    aggregate of the whole input over spark_partition_id() — and bucket,
+    when docs has that column (run_extraction) — grouped by the ACTUAL
+    split assignment the UDF stage will inherit. Returns input docs per
+    bucket (the completeness guard's count, taken on the input side)
+    and, with_cost_moments, giants per bucket and the light cohort's
+    per-split (docs, Σcost, Σcost²) for resolve_salt_mode. Without
+    bucket, the counts sit under the key None. Without cost moments the
+    scan reads only doc_id; with them it reads the payload once."""
+    keys = ["_pid", "bucket"] if "bucket" in docs.columns else ["_pid"]
+    cols = [F.spark_partition_id().alias("_pid"), *keys[1:]]
+    aggs = [F.count("*").alias("n")]
+    if with_cost_moments:
+        cols.append(_cost_expr().cast("double").alias("_c"))
+        light = F.col("_c") < OVERSIZE_COST_BUCKET_BYTES
+        aggs += [
+            F.count(F.when(~light, 1)).alias("g"),
+            F.count(F.when(light, 1)).alias("nl"),
+            F.sum(F.when(light, F.col("_c"))).alias("s1"),
+            F.sum(F.when(light, F.col("_c") * F.col("_c"))).alias("s2"),
+        ]
+    in_counts: dict = {}
+    giants: dict = {}
+    splits: dict[int, list] = {}
+    for r in docs.select(*cols).groupBy(*keys).agg(*aggs).collect():
+        b = r["bucket"] if len(keys) > 1 else None
+        in_counts[b] = in_counts.get(b, 0) + r["n"]
+        if with_cost_moments:
+            giants[b] = giants.get(b, 0) + r["g"]
+            if r["nl"]:
+                acc = splits.setdefault(r["_pid"], [0, 0.0, 0.0])
+                acc[0] += r["nl"]
+                acc[1] += r["s1"]
+                acc[2] += r["s2"]
+    return in_counts, giants, [tuple(s) for s in splits.values()]
 
-    Sampling-noise-corrected CV of per-split means (random-effects
-    ANOVA): under a well-mixed layout the sampled split means still
-    scatter by ≈ doc_var/n_i pure sampling error — with few sampled docs
-    per split that alone can cross any fixed threshold (review-found).
-    Subtract the expected sampling variance E[Var(m_i)] = doc_var·k/N
-    from the observed between-split variance before taking the CV, so
-    only REAL cost clustering remains."""
+
+def _cost_clustered(
+    splits: Iterable[tuple[int, float, float]], min_effective_splits: int
+) -> bool:
+    """Is per-doc cost CLUSTERED by scan split? Heavy-only salting
+    degrades to a 24× max/median straggler tail on cost-sorted layouts
+    (BENCH/BASELINE.md skew table): the giants spread fine, but scan
+    splits packed with just-below-threshold docs stay hot.
+
+    Judged from per-split light-cohort moments: one (docs, Σcost, Σcost²)
+    triple per scan split; splits without light docs are ignored. Pure
+    Python over ≤ #splits rows. Per split, not in global order: the
+    scan's size-descending file bin-packing reorders files while leaving
+    each split internally cost-homogeneous — the pathology is split
+    COMPOSITION. Light cohort only: the heavy cohort is
+    round-robin-scattered in every mode, so it can't cause this tail.
+
+    Verdict: CV of the per-split mean cost ≥ CLUSTER_CV_THRESHOLD, after
+    a random-effects ANOVA correction. Even under a well-mixed layout the
+    split means scatter by ≈ doc_var/n_i, and with few docs per split
+    that alone can cross any fixed threshold; subtracting the expected
+    E[Var(m_i)] = doc_var·k/N from the observed between-split variance
+    leaves only REAL cost clustering.
+
+    A second, independent trigger (min_effective_splits): the light
+    branch inherits the scan partitioning, so if the light cohort's rows
+    concentrate in too few splits — effective parallelism N²/Σn_i², the
+    inverse Simpson index — heavy-only serializes the whole light corpus
+    regardless of cost ORDER. (Found by the skew harness: a
+    single-row-group sorted file put >50% of the docs in one 42 s task
+    while the clustering CV was 0, because with one effective split
+    there IS no between-split variance.)"""
     splits = [(n, float(s1), float(s2)) for n, s1, s2 in splits if n]
     n_tot = float(sum(n for n, _, _ in splits))
     if not n_tot:
         return False
     eff = n_tot * n_tot / sum(n * n for n, _, _ in splits)  # inverse Simpson
-    if min_effective_splits is not None and eff < min_effective_splits:
+    if eff < min_effective_splits:
         return True  # light branch would serialize: full salt regardless
     k = len(splits)
     mean = sum(s1 for _, s1, _ in splits) / n_tot
@@ -152,110 +209,21 @@ def _cost_clustered(
     wms = sum(s1 * s1 / n for n, s1, _ in splits)
     var_between = max(0.0, wms / n_tot - mean * mean)
     adjusted = max(0.0, var_between - doc_var * k / n_tot)
-    return (adjusted ** 0.5) / mean >= threshold
-
-
-def detect_cost_sorted(
-    df: DataFrame,
-    sample_fraction: float = DETECT_SAMPLE_FRACTION,
-    threshold: float = CLUSTER_CV_THRESHOLD,
-    min_effective_splits: int | None = None,
-) -> bool:
-    """Is per-doc cost CLUSTERED by scan split? Heavy-only salting
-    degrades to a 24× max/median straggler tail on cost-sorted layouts
-    (BENCH/BASELINE.md skew table): the giants spread fine, but scan
-    splits packed with just-below-threshold docs stay hot. This probe
-    lets salt_mode='auto' pick 'full' exactly there.
-
-    Mechanism: group a sampled scan by spark_partition_id — the ACTUAL
-    split assignment the UDF stage will inherit (a global-order
-    correlation would be fooled by the scan's size-descending file
-    bin-packing, which reorders files while leaving each split
-    internally cost-homogeneous — the pathology is split COMPOSITION,
-    not split order). Verdict: coefficient of variation of the
-    per-split mean cost, over the LIGHT cohort only (the heavy cohort
-    is round-robin-scattered in every mode, so it can't cause this
-    tail). Well-mixed layouts have near-equal split means (CV ≈ 0);
-    sorted/clustered layouts spread the means across the whole cost
-    distribution (CV ≈ the cost CV, far above threshold).
-
-    A second, independent trigger (min_effective_splits): the light
-    branch inherits the scan partitioning, so if the light cohort's
-    rows concentrate in too few splits — effective parallelism
-    N²/Σn_i², the inverse Simpson index — heavy-only serializes the
-    whole light corpus regardless of cost ORDER. (Found by the skew
-    harness: a single-row-group sorted file put >50% of the docs in one
-    42 s task while the clustering CV was 0, because with one effective
-    split there IS no between-split variance.) extract() passes
-    num_partitions/4; None skips the check.
-
-    Cost: one or two grouped aggregates by split id over a (sampled)
-    scan — the second only when the sample is too thin — each two Spark
-    jobs (a shuffle of one partial row per split per task, then a
-    result stage); the ≤ #splits rows are collected and judged by
-    _cost_clustered. At 100 TB this extra scan is far cheaper than
-    either mistake it prevents (a 100 TB full shuffle, or the straggler
-    tail). run_extraction skips it: its planning aggregate already
-    yields the unsampled per-split rows."""
-    light = with_cost(df).where(
-        F.col("_cost_bytes") < OVERSIZE_COST_BUCKET_BYTES
-    )
-    probe = light.select(
-        F.spark_partition_id().alias("_pid"),
-        F.col("_cost_bytes").cast("double").alias("_c"),
-    )
-
-    def per_split(p) -> list[tuple[int, float, float]]:
-        rows = p.groupBy("_pid").agg(
-            F.count("*").alias("n"),
-            F.sum("_c").alias("s1"),
-            F.sum(F.col("_c") * F.col("_c")).alias("s2"),
-        ).collect()
-        return [(r["n"], r["s1"], r["s2"]) for r in rows]
-
-    # per-split sample floor (second-review finding): at ~1 sampled doc
-    # per split the between-split variance IS the doc variance and the
-    # ANOVA correction cancels it exactly, blinding the probe on
-    # many-small-file sorted layouts. Escalate the fraction until splits
-    # average >= MIN_DOCS_PER_SPLIT sampled docs (one escalation, capped
-    # at a whole-probe pass).
-    MIN_DOCS_PER_SPLIT = 8
-    if sample_fraction < 1.0:
-        splits = per_split(probe.sample(fraction=sample_fraction, seed=20250816))
-        n, k = sum(s[0] for s in splits), len(splits)
-        if n < 100:  # tiny input: the sample is noise — probe it whole
-            splits = per_split(probe)
-        elif k and n / k < MIN_DOCS_PER_SPLIT:
-            boosted = min(1.0, sample_fraction * MIN_DOCS_PER_SPLIT * k / max(n, 1))
-            splits = per_split(
-                probe if boosted >= 1.0
-                else probe.sample(fraction=boosted, seed=20250816)
-            )
-    else:
-        splits = per_split(probe)
-    return _cost_clustered(splits, threshold, min_effective_splits)
+    return (adjusted ** 0.5) / mean >= CLUSTER_CV_THRESHOLD
 
 
 def resolve_salt_mode(
-    df: DataFrame,
-    num_partitions: int,
-    splits: Iterable[tuple[int, float, float]] | None = None,
+    splits: Iterable[tuple[int, float, float]], num_partitions: int
 ) -> str:
-    """THE 'auto' policy, defined once (whole-round-review finding: the
-    probe call + min_effective_splits formula were restated in three
-    places, letting the skew harness drift from production): full salt
-    when the layout is cost-clustered OR the light branch would have
-    fewer than num_partitions/4 effective splits; heavy otherwise.
+    """THE 'auto' policy, defined once: full salt when the layout is
+    cost-clustered OR the light branch would have fewer than
+    num_partitions/4 effective splits; heavy otherwise.
 
-    splits: the light cohort's per-split (docs, Σcost, Σcost²), already
-    aggregated over the whole of df (run_extraction's planning pass);
-    judged as they are, without a Spark job. None probes df with
-    detect_cost_sorted's sample."""
-    min_eff = max(2, num_partitions // 4)
-    if splits is None:
-        clustered = detect_cost_sorted(df, min_effective_splits=min_eff)
-    else:
-        clustered = _cost_clustered(splits, min_effective_splits=min_eff)
+    splits: the light cohort's per-split (docs, Σcost, Σcost²) over the
+    whole input, from _planning_aggregate. extract() and run_extraction
+    both pass them, so the two entry points reach one verdict; judging
+    them runs no Spark job."""
+    clustered = _cost_clustered(splits, max(2, num_partitions // 4))
     return "full" if clustered else "heavy"
 
 
@@ -270,7 +238,7 @@ def heavy_only_salting(
     ser/deser cost stops competing with the Python workers for cores.
 
     Each heavy partition is one more Python task, with a fixed cost even
-    when empty (~0.3 s on a 4-core VM), so run_extraction passes
+    when empty (~0.09 s on a 4-core VM), so run_extraction passes
     num_partitions = min(cap, giants in the commit group) and skips this
     branch — and its second scan of the input — for groups with no
     giants.
@@ -304,30 +272,32 @@ def extract(
 ) -> DataFrame:
     """documents → documents_extracted as a DataFrame transform.
 
+    num_partitions=None trusts the input partitioning: no mode shuffles.
+
     Laziness caveat: with salt_mode='auto' (the default) and a
-    num_partitions, THIS CALL runs the sampled layout probe
-    (detect_cost_sorted: one or two grouped aggregates, 2–4 small eager
-    jobs) before returning; every other call is fully lazy. Callers
-    composing plans without wanting execution — or calling extract()
-    repeatedly on the same input — should pass an explicit mode
-    ('heavy'/'full'/'none') or resolve 'auto' once themselves with
-    resolve_salt_mode. run_extraction does the latter from its planning
-    aggregate, so its commit groups never run the probe.
+    num_partitions, THIS CALL runs one eager query before returning —
+    the unsampled per-split aggregate (_planning_aggregate) whose cost
+    moments resolve_salt_mode judges; every other call is fully lazy.
+    Callers composing plans without wanting execution — or calling
+    extract() repeatedly on the same input — should pass an explicit
+    mode. run_extraction resolves 'auto' once, from its own planning
+    aggregate, and passes the verdict to every commit group.
 
     salt_mode (anything else raises ValueError, with or without
-    num_partitions; without one, no mode shuffles):
-      'auto' (default)  — probe the layout (detect_cost_sorted) and
-                          pick 'full' for cost-sorted inputs, 'heavy'
-                          otherwise; closes the documented heavy-only
-                          24× footgun without manual mode selection;
+    num_partitions):
+      'auto' (default)  — pick 'full' for cost-clustered or
+                          under-parallel scan layouts, 'heavy'
+                          otherwise (_cost_clustered); closes the
+                          documented heavy-only 24× footgun without
+                          manual mode selection;
       'heavy'           — shuffle only the oversized cohort (above);
       'full'            — shuffle everything on the uniform salt (for
-                          adversarially cost-sorted inputs);
-      'none'            — trust the input partitioning."""
+                          adversarially cost-sorted inputs)."""
     _check_salt_mode(salt_mode)
     if num_partitions:
         if salt_mode == "auto":
-            salt_mode = resolve_salt_mode(df, num_partitions)
+            splits = _planning_aggregate(df, with_cost_moments=True)[2]
+            salt_mode = resolve_salt_mode(splits, num_partitions)
         if salt_mode == "full":
             df = salted_repartition(df, num_partitions)
         elif salt_mode == "heavy":
@@ -368,42 +338,6 @@ def _bucket_stats(group: list[int]) -> list:
         )
         for key, (agg, arg) in _BUCKET_STATS.items()
     ]
-
-
-def _planning_aggregate(
-    docs: DataFrame, with_cost_moments: bool
-) -> tuple[dict[int, int], dict[int, int], list[tuple[int, float, float]]]:
-    """run_extraction's one planning query: an unsampled aggregate over
-    (bucket, spark_partition_id) of the whole input. Returns input docs
-    per bucket (the completeness guard's count, taken on the input side)
-    and, with_cost_moments, giants per bucket and the light cohort's
-    per-split (docs, Σcost, Σcost²) for resolve_salt_mode. Without them
-    the scan reads only doc_id; with them it reads the payload once."""
-    cols = [F.col("bucket"), F.spark_partition_id().alias("_pid")]
-    aggs = [F.count("*").alias("n")]
-    if with_cost_moments:
-        cols.append(_cost_expr().cast("double").alias("_c"))
-        light = F.col("_c") < OVERSIZE_COST_BUCKET_BYTES
-        aggs += [
-            F.count(F.when(~light, 1)).alias("g"),
-            F.count(F.when(light, 1)).alias("nl"),
-            F.sum(F.when(light, F.col("_c"))).alias("s1"),
-            F.sum(F.when(light, F.col("_c") * F.col("_c"))).alias("s2"),
-        ]
-    in_counts: dict[int, int] = {}
-    giants: dict[int, int] = {}
-    splits: dict[int, list] = {}
-    for r in docs.select(*cols).groupBy("bucket", "_pid").agg(*aggs).collect():
-        b = r["bucket"]
-        in_counts[b] = in_counts.get(b, 0) + r["n"]
-        if with_cost_moments:
-            giants[b] = giants.get(b, 0) + r["g"]
-            if r["nl"]:
-                acc = splits.setdefault(r["_pid"], [0, 0.0, 0.0])
-                acc[0] += r["nl"]
-                acc[1] += r["s1"]
-                acc[2] += r["s2"]
-    return in_counts, giants, [tuple(s) for s in splits.values()]
 
 
 def run_extraction(
@@ -468,7 +402,7 @@ def run_extraction(
     need_cost = bool(num_partitions) and salt_mode in ("auto", "heavy")
     in_counts, giants, splits = _planning_aggregate(docs, need_cost)
     if salt_mode == "auto" and num_partitions:
-        salt_mode = resolve_salt_mode(docs, num_partitions, splits=splits)
+        salt_mode = resolve_salt_mode(splits, num_partitions)
 
     # real lineage token (Iceberg snapshot id in catalog mode; file
     # fingerprint in the parquet fallback) — resume detects when the

@@ -35,12 +35,13 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--buckets-per-commit", type=int, default=None)
     ap.add_argument("--local-cores", type=int, default=None,
                     help="force local[N] master (omit on a real cluster)")
-    ap.add_argument("--salt-mode", choices=("auto", "heavy", "full", "none"),
+    ap.add_argument("--salt-mode", choices=("auto", "heavy", "full"),
                     default="auto",
-                    help="skew taming: auto=probe the layout and pick full "
-                         "for cost-sorted inputs, heavy otherwise (default); "
-                         "heavy=shuffle only oversized docs; full=uniform "
-                         "salt shuffle; none=trust input partitioning")
+                    help="skew taming with --num-partitions: auto=pick full "
+                         "for cost-clustered inputs, heavy otherwise "
+                         "(default); heavy=shuffle only oversized docs; "
+                         "full=uniform salt shuffle. Without "
+                         "--num-partitions the input partitioning is kept")
     ap.add_argument("--gen-docs", type=int, default=None,
                     help="synthesize a deterministic corpus at --input first")
     args = ap.parse_args(argv)

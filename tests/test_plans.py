@@ -173,17 +173,13 @@ def test_top_tokens_preaggregates_before_python(spark):
     assert tree.find("FlatMapGroupsInPandas") < tree.find("HashAggregate")
 
 
-def test_extraction_plan_shape(spark):
-    """The extraction pipeline's physical plan: exactly one Python stage
-    (MapInArrow); salt_mode='none' adds no exchange at all, 'heavy' adds
-    exchanges only for the (tiny) heavy branch."""
-    from docling_pdf_spark.pipeline import extract
-    from docling_pdf_spark.plans import formatted_plan
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+def _sf0001_spans_docs(spark):
+    """sf0.001 documents (500 rows, one file, one row group) as the
+    extraction input: one text span per doc."""
     from pyspark.sql import functions as F
 
-    spans_docs = docs.select(
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    return docs.select(
         F.col("doc_id").cast("string").alias("doc_id"),
         F.array(
             F.struct(
@@ -193,8 +189,18 @@ def test_extraction_plan_shape(spark):
             )
         ).alias("spans"),
     )
+
+
+def test_extraction_plan_shape(spark):
+    """The extraction pipeline's physical plan: exactly one Python stage
+    (MapInArrow); without num_partitions there is no exchange at all,
+    'heavy' adds exchanges only for the (tiny) heavy branch."""
+    from docling_pdf_spark.pipeline import extract
+    from docling_pdf_spark.plans import formatted_plan
+
+    spans_docs = _sf0001_spans_docs(spark)
     # formatted explain names each node twice (tree + detail section)
-    narrow = formatted_plan(extract(spans_docs, num_partitions=None, salt_mode="none"))
+    narrow = formatted_plan(extract(spans_docs, num_partitions=None))
     assert narrow.count("MapInArrow") == 2  # exactly ONE Python stage
     assert "Exchange" not in narrow  # fully narrow: scan → UDF
 
@@ -209,8 +215,18 @@ def test_extract_rejects_unknown_salt_mode(spark, num_partitions):
     from docling_pdf_spark.schemas import DOCUMENTS_SCHEMA
 
     docs = spark.createDataFrame([], DOCUMENTS_SCHEMA)
-    with pytest.raises(ValueError, match="unknown salt_mode"):
-        extract(docs, num_partitions=num_partitions, salt_mode="bogus")
+    # 'none' is no mode: num_partitions=None already keeps the input's
+    for mode in ("bogus", "none"):
+        with pytest.raises(ValueError, match="unknown salt_mode"):
+            extract(docs, num_partitions=num_partitions, salt_mode=mode)
+
+
+def _auto_verdict(df, num_partitions: int) -> str:
+    """The 'auto' verdict both extraction entry points reach on df."""
+    from docling_pdf_spark.pipeline import _planning_aggregate, resolve_salt_mode
+
+    splits = _planning_aggregate(df, with_cost_moments=True)[2]
+    return resolve_salt_mode(splits, num_partitions)
 
 
 def test_auto_salt_mode_selection(spark):
@@ -220,20 +236,10 @@ def test_auto_salt_mode_selection(spark):
     full uniform salt."""
     from pyspark.sql import functions as F
 
-    from docling_pdf_spark.pipeline import detect_cost_sorted, extract
+    from docling_pdf_spark.pipeline import extract
     from docling_pdf_spark.plans import formatted_plan
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    spans_docs = docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.array(
-            F.struct(
-                F.lit("text").alias("kind"), F.col("text").alias("text"),
-                F.lit(None).cast("string").alias("media_ref"),
-                F.lit(0).alias("offset"),
-            )
-        ).alias("spans"),
-    )
+    spans_docs = _sf0001_spans_docs(spark)
     # explicit range partitioning (AQE would coalesce a tiny orderBy to
     # one partition, hiding the clustering from the per-split probe):
     # 8 partitions, each one cost band — the adversarial layout
@@ -245,12 +251,12 @@ def test_auto_salt_mode_selection(spark):
     # well-mixed layout with adequate parallelism (hash-spread splits)
     mixed_docs = spans_docs.repartition(8, "doc_id")
 
-    # the probe itself (full-probe fallback makes small inputs exact)
-    assert not detect_cost_sorted(mixed_docs)
-    assert detect_cost_sorted(sorted_docs)
+    # the verdict itself, on the unsampled per-split moments
+    assert _auto_verdict(mixed_docs, 8) == "heavy"
+    assert _auto_verdict(sorted_docs, 8) == "full"
     # parallelism guard: a single-split light branch must trigger full
     # salt even with zero cost clustering (the sorted1file 42s-task case)
-    assert detect_cost_sorted(spans_docs, min_effective_splits=2)
+    assert _auto_verdict(spans_docs, 8) == "full"
 
     # auto == heavy on the mixed layout: light branch shuffle-free
     auto_plan = formatted_plan(extract(mixed_docs, num_partitions=8))
@@ -264,6 +270,18 @@ def test_auto_salt_mode_selection(spark):
     auto_sorted = formatted_plan(extract(sorted_docs, num_partitions=8))
     assert "Union" not in auto_sorted  # no heavy/light split
     assert "_salt" in auto_sorted  # uniform salt repartition present
+
+
+def test_auto_extract_runs_one_query(spark):
+    """extract() in 'auto' mode runs exactly one eager query before it
+    returns: the unsampled per-split aggregate, whatever the input size."""
+    from docling_pdf_spark.pipeline import extract
+    from tests.test_resume import _last_execution_id
+
+    spans_docs = _sf0001_spans_docs(spark)
+    before = _last_execution_id(spark)
+    extract(spans_docs, num_partitions=8)
+    assert _last_execution_id(spark) - before == 1
 
 
 @pytest.mark.parametrize("g,num_partitions", [(8, 8), (11, 4)])
@@ -304,14 +322,11 @@ def test_heavy_cohort_spread_is_exact(spark, g, num_partitions):
 
 
 def test_detector_survives_sparse_per_split_samples(spark):
-    """Second-review finding: at ~1 sampled doc per split the ANOVA
-    correction cancels the between-split variance exactly, blinding the
-    probe on many-small-file sorted layouts. The per-split sample floor
-    escalates the fraction instead. 200 ordered splits × 100 docs,
-    1% sample → ~1/split without the floor."""
+    """Many small ordered splits: 200 splits × 100 docs, cost ascending
+    with the split. The ANOVA correction must not cancel the
+    between-split variance on this many-small-file sorted layout, and a
+    hash-mixed control over the same docs must stay heavy."""
     from pyspark.sql import functions as F
-
-    from docling_pdf_spark.pipeline import detect_cost_sorted
 
     def spans(df):
         return df.select(
@@ -327,10 +342,10 @@ def test_detector_survives_sparse_per_split_samples(spark):
         )
 
     base = spark.range(20000, numPartitions=200)  # cost ascending w/ id
-    assert detect_cost_sorted(spans(base), sample_fraction=0.01)
-    # hash-mixed control: same docs, same sparse sample — must stay False
+    assert _auto_verdict(spans(base), 8) == "full"
+    # hash-mixed control: same docs, same split count
     mixed = spark.range(20000, numPartitions=200).repartition(200, "id")
-    assert not detect_cost_sorted(spans(mixed), sample_fraction=0.01)
+    assert _auto_verdict(spans(mixed), 8) == "heavy"
 
 
 @pytest.mark.parametrize("dim", [32, 1024])

@@ -389,10 +389,10 @@ def test_auto_salt_mode_through_run_extraction(
     spark, layout_corpora, tmp_path, monkeypatch, layout, verdict
 ):
     """salt_mode='auto' with a partition count (the production setting):
-    the planning aggregate's verdict equals the unsampled probe's on the
-    same file, and every commit group plans that mode — the full _salt
-    repartition with no Union on the cost-sorted file, the heavy Union
-    on the well-mixed one."""
+    every commit group plans the verdict of run_extraction's planning
+    aggregate — the full _salt repartition with no Union on the
+    cost-sorted file, the heavy Union on the well-mixed one — and
+    extract() reaches the same verdict on the same file."""
     import docling_pdf_spark.pipeline as pl
     from docling_pdf_spark.plans import formatted_plan
 
@@ -417,14 +417,13 @@ def test_auto_salt_mode_through_run_extraction(
         n_buckets=N_BUCKETS, buckets_per_commit=AUTO_BUCKETS_PER_COMMIT,
         num_partitions=AUTO_PARTITIONS, salt_mode="auto",
     )
-    probed = pl.detect_cost_sorted(
-        spark.read.parquet(path), sample_fraction=1.0,
-        min_effective_splits=max(2, AUTO_PARTITIONS // 4),
-    )
     assert modes == [verdict]
-    assert probed == (verdict == "full")
     assert len(plans) == N_BUCKETS // AUTO_BUCKETS_PER_COMMIT
-    for plan in plans:
+    # the other entry point reaches the same verdict through the same
+    # module-level resolve_salt_mode, and plans the same mode
+    pl.extract(spark.read.parquet(path), num_partitions=AUTO_PARTITIONS)
+    assert modes == [verdict, verdict]
+    for plan in plans:  # every commit group's, then extract()'s
         if verdict == "full":
             assert "_salt" in plan and "Union" not in plan
         else:
@@ -436,9 +435,10 @@ def test_auto_salt_mode_through_run_extraction(
 @pytest.mark.parametrize("num_partitions", [None, HEAVY_PARTITIONS])
 def test_run_extraction_rejects_unknown_salt_mode(spark, corpus, tmp_path, num_partitions):
     ckpt = str(tmp_path / "ckpt")
-    with pytest.raises(ValueError, match="unknown salt_mode"):
-        run_extraction(
-            spark, corpus, str(tmp_path / "extracted"), ckpt,
-            n_buckets=4, num_partitions=num_partitions, salt_mode="bogus",
-        )
+    for mode in ("bogus", "none"):
+        with pytest.raises(ValueError, match="unknown salt_mode"):
+            run_extraction(
+                spark, corpus, str(tmp_path / "extracted"), ckpt,
+                n_buckets=4, num_partitions=num_partitions, salt_mode=mode,
+            )
     assert ProgressLog(ckpt).done_buckets() == set()
