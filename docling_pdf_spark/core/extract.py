@@ -119,9 +119,9 @@ def _extract_pdf_payload(
     """Run the admission gates + parse ladder on one pdf span.
 
     Returns the rung used; appends page texts / image descriptors /
-    producer sniffs in place. Raises _AdmissionError for gate rejections
-    (whole-doc error, mirroring the reference's pre-task HTTP 4xx
-    rejects)."""
+    /Info metadata dicts in place. Raises _AdmissionError for gate
+    rejections (whole-doc error, mirroring the reference's pre-task
+    HTTP 4xx rejects)."""
     try:
         data = base64.b64decode(payload_b64 or "", validate=True)
     except Exception as exc:

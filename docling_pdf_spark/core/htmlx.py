@@ -33,9 +33,6 @@ from docling_pdf_spark.conf import (
     MIN_BLOCK_TEXT,
 )
 
-_VOID_TAGS = frozenset({"br", "hr", "img", "input", "meta", "link", "area", "col", "embed", "source", "track", "wbr"})
-
-
 @dataclass
 class HtmlBlock:
     kind: str  # 'text' | 'table' | 'image'

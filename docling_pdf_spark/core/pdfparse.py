@@ -70,7 +70,6 @@ class ParsedPdf:
     pages: list[Page]
     encrypted: bool = False
     needs_password: bool = False  # reference pdf_extractor.py:591-612
-    producer: str | None = None  # reference pdf_extractor.py:139-148, :596
     metadata: dict[str, str] = field(default_factory=dict)  # full Info dict, :596
     pages_with_valid_dimensions: int = 0
 
@@ -91,8 +90,6 @@ _LITBODY = rb"(?:\\.|\(" + _LIT1 + rb"\)|[^\\()])*"
 # (review-found: '(a(b)c)' dropped the whole block) cannot terminate
 # the BT...ET scan early or stop the string match short
 _BT_RE = re.compile(rb"BT\b((?:\(" + _LITBODY + rb"\)|[^(])*?)\bET", re.S)
-_TD_RE = re.compile(rb"([-\d.]+)\s+([-\d.]+)\s+Td")
-_TJ_RE = re.compile(rb"\((" + _LITBODY + rb")\)\s*Tj")
 _DO_RE = re.compile(rb"/\w+\s+Do\b")
 _REF_RE = re.compile(rb"(\d+)\s+0\s+R")
 _MEDIABOX_RE = re.compile(rb"/MediaBox\s*\[([^\]]*)\]")
@@ -302,13 +299,6 @@ def info_dict(data: bytes) -> dict[str, str]:
     }
 
 
-def sniff_producer(data: bytes) -> str | None:
-    """Cosmetic producer sniff (reference X4, pdf_extractor.py:139-148:
-    a cheap metadata peek, never load-bearing for extraction) — now the
-    /Producer entry of the resolved Info dictionary only."""
-    return info_dict(data).get("Producer")
-
-
 _OP_RE = re.compile(
     rb"([-\d.]+)\s+([-\d.]+)\s+Td"           # position op
     rb"|\((" + _LITBODY + rb")\)\s*Tj"       # show-text op (nesting-aware)
@@ -503,7 +493,7 @@ def parse_ladder(data: bytes) -> ParsedPdf:
     """First-success-wins ladder (pdf_extractor.py:694-739 semantics:
     try each rung with a fresh parser, record which one produced the
     result; all-fail propagates). Validation census flags (encryption,
-    needs_password, producer sniff) are set here — the analog of the
+    needs_password, /Info metadata) are set here — the analog of the
     reference's separate _validate_pdf_file pass
     (pdf_extractor.py:591-612)."""
     parsed: ParsedPdf
@@ -517,8 +507,7 @@ def parse_ladder(data: bytes) -> ParsedPdf:
     enc, needs = encryption_flags(data)
     parsed.encrypted = parsed.encrypted or enc
     parsed.needs_password = needs
-    # one /Info resolution feeds both the full metadata map and the
-    # producer sniff (reference stores the whole map, pdf_extractor.py:596)
+    # the full /Info map (reference stores the whole map,
+    # pdf_extractor.py:596); the producer column reads its /Producer
     parsed.metadata = info_dict(data)
-    parsed.producer = parsed.metadata.get("Producer")
     return parsed

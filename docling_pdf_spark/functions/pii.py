@@ -3,7 +3,7 @@ training-data pipeline runs before releasing a corpus (C4 and most
 published web-corpus recipes strip emails/phones; see also the
 BigScience ROOTS PII pipeline for the pattern family).
 
-Pure JVM `regexp_replace`/`regexp_count` — no Python in the hot path.
+Pure JVM `regexp_replace` — no Python in the hot path.
 The patterns are deliberately written in the COMMON subset of Java
 regex (Spark) and RE2 (DuckDB): no backreferences, no lookbehind — so
 the DuckDB twin used by the pytest exactness check runs the very same
@@ -76,25 +76,25 @@ PHONE_BARE_RE = rf"{_LEAD}(1?\d{{10}}){_TRAIL}"
 # alphanumerics (15..34 total chars covers every IBAN registry entry)
 IBAN_RE = rf"{_LEAD}([A-Z]{{2}}\d{{2}}[A-Z0-9]{{11,30}}){_TRAIL}"
 
-# (name, pattern, replacement with $-refs, number of replace passes).
+# (pattern, replacement with $-refs, number of replace passes).
 # Email runs first (its local part can contain digit groups), IP last.
 _KINDS = (
-    ("email", EMAIL_RE, "[EMAIL]", 1),
-    ("phone", PHONE_RE, "$1[PHONE]$3", 2),
-    ("ssn", SSN_RE, "$1[SSN]$3", 2),
-    ("ip", IPV4_RE, "$1[IP]$3", 2),
+    (EMAIL_RE, "[EMAIL]", 1),
+    (PHONE_RE, "$1[PHONE]$3", 2),
+    (SSN_RE, "$1[SSN]$3", 2),
+    (IPV4_RE, "$1[IP]$3", 2),
 )
 # aggressive extras, interleaved: bare-phone right after the (more
-# specific) separator-grouped phone pass and SHARING its count name;
-# IBAN after SSN. Digit runs inside an IBAN are lead-guarded (always
-# preceded by a word char) so pass order phone-before-iban is safe.
+# specific) separator-grouped phone pass; IBAN after SSN. Digit runs
+# inside an IBAN are lead-guarded (always preceded by a word char) so
+# pass order phone-before-iban is safe.
 _KINDS_AGGRESSIVE = (
-    ("email", EMAIL_RE, "[EMAIL]", 1),
-    ("phone", PHONE_RE, "$1[PHONE]$3", 2),
-    ("phone", PHONE_BARE_RE, "$1[PHONE]$3", 2),
-    ("ssn", SSN_RE, "$1[SSN]$3", 2),
-    ("iban", IBAN_RE, "$1[IBAN]$3", 2),
-    ("ip", IPV4_RE, "$1[IP]$3", 2),
+    (EMAIL_RE, "[EMAIL]", 1),
+    (PHONE_RE, "$1[PHONE]$3", 2),
+    (PHONE_BARE_RE, "$1[PHONE]$3", 2),
+    (SSN_RE, "$1[SSN]$3", 2),
+    (IBAN_RE, "$1[IBAN]$3", 2),
+    (IPV4_RE, "$1[IP]$3", 2),
 )
 
 
@@ -110,32 +110,10 @@ def redact_pii(col: Column | str, aggressive: bool = False) -> Column:
     additionally scrubs bare 10/11-digit NANP runs and IBANs — see the
     module docstring for its documented false-positive classes."""
     out = _c(col)
-    for _, pattern, repl, passes in _kinds(aggressive):
+    for pattern, repl, passes in _kinds(aggressive):
         for _ in range(passes):
             out = F.regexp_replace(out, F.lit(pattern), F.lit(repl))
     return out
-
-
-def pii_counts(col: Column | str, aggressive: bool = False) -> Column:
-    """struct(email, phone, ssn[, iban], ip) occurrence counts — the
-    observability side: corpora report how much was scrubbed. Counted
-    on the same-order redaction chain so counts match what redact_pii
-    actually replaced (an email is never double-counted as a phone;
-    the aggressive bare-phone pass folds into the ``phone`` count).
-    Boundary-guarded kinds count across both replace passes (the
-    second pass picks up occurrences whose boundary char the first
-    pass consumed)."""
-    text = _c(col)
-    order: list[str] = []
-    acc: dict[str, Column] = {}
-    for name, pattern, repl, passes in _kinds(aggressive):
-        if name not in acc:
-            order.append(name)
-            acc[name] = F.lit(0)
-        for _ in range(passes):
-            acc[name] = acc[name] + F.regexp_count(text, F.lit(pattern))
-            text = F.regexp_replace(text, F.lit(pattern), F.lit(repl))
-    return F.struct(*(acc[n].alias(n) for n in order))
 
 
 def redact_pii_oracle_sql(
@@ -152,7 +130,7 @@ def redact_pii_oracle_sql(
     import re as _re
 
     expr = text_col
-    for _, pattern, repl, passes in _kinds(aggressive):
+    for pattern, repl, passes in _kinds(aggressive):
         p = pattern.replace("'", "''")
         d_repl = _re.sub(r"\$(\d)", r"\\\1", repl)
         for _ in range(passes):

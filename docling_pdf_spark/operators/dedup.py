@@ -97,9 +97,9 @@ def _gram_arrays(
     docs: DataFrame, id_col: str, text_col: str, n: int = SHINGLE_WORDS
 ) -> DataFrame:
     """(id, grams array<string>) — THE one word-n-gram kernel every
-    shingling consumer derives from (hash-distinct and string-distinct
-    variants below, and the decontamination/DSIR gram passes, must
-    never drift apart).
+    shingling consumer derives from (the hash-distinct shingles()
+    below and the decontamination/DSIR gram passes must never drift
+    apart).
 
     Built with slice + arrays_zip, NOT element_at(toks, i+k) lambdas:
     each slice references the token array exactly once per row, so
@@ -322,18 +322,6 @@ def affine_params(num_hashes: int = 32) -> list[tuple[int, int]]:
         (rng.randrange(1, MERSENNE31), rng.randrange(0, MERSENNE31))
         for _ in range(num_hashes)
     ]
-
-
-def shingle_strings(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(id, gram) — distinct word-5-gram STRINGS (the portable pipeline
-    hashes them with md5); derives from the same _gram_arrays kernel as
-    shingles()."""
-    return _gram_arrays(docs, id_col, text_col).select(
-        F.col(id_col),
-        F.explode(F.array_distinct(F.col("grams"))).alias("gram"),
-    )
 
 
 def minhash_lsh_dedup_portable(

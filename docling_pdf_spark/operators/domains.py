@@ -87,26 +87,6 @@ def per_source_cap(
     )
 
 
-def source_share_stats(
-    docs: DataFrame, key_col: str = "source", id_col: str = "doc_id"
-) -> DataFrame:
-    """(source, n_docs, corpus_share) — the observability companion:
-    which origins dominate, so `cap` is tuned from data rather than
-    folklore. One partial+final hash aggregate plus a scalar total
-    (window over empty partitioning is a single-row broadcast, not a
-    corpus-wide sort: the agg output is already tiny — one row per
-    source)."""
-    per = docs.groupBy(key_col).agg(F.count(id_col).alias("n_docs"))
-    total = Window.partitionBy()
-    return per.select(
-        key_col,
-        "n_docs",
-        F.round(F.col("n_docs") / F.sum("n_docs").over(total), 6).alias(
-            "corpus_share"
-        ),
-    )
-
-
 def per_source_cap_sql(
     table: str = "documents",
     key_col: str = "source",
@@ -125,14 +105,4 @@ SELECT * EXCLUDE (_rn) FROM (
   SELECT *, row_number() OVER (PARTITION BY {key_col} ORDER BY {order}) AS _rn
   FROM {table}
 ) WHERE _rn <= {cap}
-"""
-
-
-def source_share_stats_sql(
-    table: str = "documents", key_col: str = "source", id_col: str = "doc_id"
-) -> str:
-    return f"""
-SELECT {key_col}, count({id_col}) AS n_docs,
-       round(count({id_col}) * 1.0 / SUM(count({id_col})) OVER (), 6) AS corpus_share
-FROM {table} GROUP BY {key_col}
 """

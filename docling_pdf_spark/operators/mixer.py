@@ -25,8 +25,7 @@ overflow-free integer split  (rem DIV remw) * w + ((rem % remw) * w)
 DIV remw  == floor(rem * w / remw), so Spark and DuckDB agree
 bit-for-bit. The window runs over ONE ROW PER STRATUM (languages /
 sources — thousands at web scale, not billions), so the single
-unpartitioned window is a deliberate, bounded choice, exactly like
-`source_share_stats`.
+unpartitioned window is a deliberate, bounded choice.
 
 `fill_to_allocation` — the SELECTION. Keep, per stratum, the prefix
 of documents (in a caller-chosen total order: quality descending,

@@ -182,17 +182,3 @@ def video_frame_index(
 
     vids = assets.where(F.col("media_kind") == "video")
     return vids.select("media_ref", "data").mapInPandas(kernel, schema=FRAME_SCHEMA)
-
-
-def link_media_to_documents(extracted: DataFrame, features: DataFrame) -> DataFrame:
-    """Join extracted media/image spans to their asset features:
-    explode the span array (JVM-side), equi-join on media_ref. The
-    features side is the smaller at realistic ratios → broadcast."""
-    media_spans = extracted.select(
-        "doc_id",
-        F.explode(
-            F.filter(F.col("spans"), lambda s: s["media_ref"].isNotNull())
-        ).alias("span"),
-    ).select("doc_id", F.col("span.media_ref").alias("media_ref"),
-             F.col("span.kind").alias("span_kind"))
-    return media_spans.join(F.broadcast(features), "media_ref", "left")

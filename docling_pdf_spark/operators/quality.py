@@ -65,22 +65,6 @@ ALL_SIGNALS = (
 _TOP_GRAM_N = {"top_bigram_frac": 2, "top_3gram_frac": 3, "top_4gram_frac": 4}
 
 
-def _word_ngrams(a: F.Column, n: int) -> F.Column:
-    """Array of space-joined word n-grams from a token array (caller
-    guarantees size >= n). Built ARRAY-SIDE by folding zip_with over
-    the n shifted slices — one explode + one groupBy per doc id
-    downstream; a (doc,pos)=(doc,pos+k) self-join would shuffle the
-    exploded token stream n more times (the r5 review lesson,
-    generalized from the bigram kernel)."""
-    m = F.size(a) - (n - 1)  # number of grams; >= 1 by the size guard
-    out = F.slice(a, 1, m)
-    for k in range(2, n + 1):
-        out = F.zip_with(
-            out, F.slice(a, k, m), lambda x, y: F.concat_ws(" ", x, y)
-        )
-    return out
-
-
 def repetition_stats(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -136,13 +120,6 @@ def repetition_stats(
 
 BULLET_RE = r"^[-*•‣▪◦] "  # applied to the TRIMMED line
 ELLIPSIS_RE = r"(\.\.\.|…)$"  # trimmed line ends with an ellipsis
-
-LINE_SHAPE_SIGNALS = (
-    "symbol_word_ratio",
-    "bullet_line_frac",
-    "ellipsis_line_frac",
-)
-
 
 # shared str-or-Column coercion (single definition repo-wide)
 from docling_pdf_spark.functions.text import as_col as _col

@@ -1,7 +1,7 @@
 """Similarity search over an embedding column (array<float>).
 
-Baseline: exact brute-force cosine top-k (queries.q_ann_cosine_topk is
-the driver-checked variant). Scale path: IVF-style bucketing — assign
+Baseline: exact brute-force cosine top-k (queries.q_ann_cosine_topk,
+checked against its DuckDB oracle). Scale path: IVF-style bucketing — assign
 every vector to its nearest coarse centroid once (one shuffle), then
 answer queries by scanning only the nprobe closest buckets. At 100 TB
 the bucket assignment is the write-time partitioning of the vector
@@ -14,29 +14,11 @@ array<double>; no Python UDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from docling_pdf_spark.functions.vectors import dot as _dot
 from docling_pdf_spark.functions.vectors import l2_norm as _norm
-
-
-def cosine_topk(
-    vectors: DataFrame,
-    query_vec: list[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Exact brute-force top-k: one scan, one narrow top-k sort."""
-    v = F.col(vec_col).cast("array<double>")
-    q = F.lit(query_vec).cast("array<double>")
-    sim = _dot(v, q) / (_norm(v) * _norm(q))
-    return (
-        vectors.select(F.col(id_col), F.round(sim, 6).alias("sim"))
-        .orderBy(F.desc("sim"), F.asc(id_col))
-        .limit(k)
-    )
 
 
 def ivf_assign(
@@ -73,24 +55,6 @@ def ivf_assign(
     )
     return scored.select(
         id_col, vec_col, F.col("best.centroid_id").alias("bucket")
-    )
-
-
-def default_centroids(
-    vectors: DataFrame, n: int = 16, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Deterministic coarse seed centroids: n vectors chosen by hash
-    order (xxhash64 of the id — a deterministic pseudo-random spread,
-    unlike round-1's first-n-ids which clustered by insert order).
-    Use kmeans_centroids for trained centroids."""
-    w = Window.orderBy(F.xxhash64(F.col(id_col)), F.asc(id_col))
-    return (
-        vectors.orderBy(F.xxhash64(F.col(id_col)), F.asc(id_col))
-        .limit(n)
-        .select(
-            (F.row_number().over(w) - 1).alias("centroid_id"),
-            F.col(vec_col).alias("centroid"),
-        )
     )
 
 

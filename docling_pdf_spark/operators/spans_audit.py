@@ -13,8 +13,7 @@ exactly the BASELINE input_hint shape
 
 Everything is per-row JVM array-expression work (size / filter /
 transform / array_sort) — NO shuffle, NO Python: at 100 TB this runs
-as a narrow codegen stage over the parquet scan, and the corpus-level
-summary is one partial+final aggregate on top. The monotonicity test
+as a narrow codegen stage over the parquet scan. The monotonicity test
 is expressed as `array_sort(offs) == offs AND distinct-size == size`
 so the DuckDB twin can run the literally-equivalent list expressions.
 
@@ -54,7 +53,7 @@ def spans_audit(
     # A NULL offset is itself a monotonicity violation — and must be
     # tested explicitly: array_sort(offs) == offs is NULL (not false)
     # when offs contains a NULL element, which would make audit_ok NULL
-    # and the row invisible to both sides of audit_summary's census.
+    # and the row invisible to both `audit_ok` and `NOT audit_ok` filters.
     # FALSE & NULL = FALSE, so leading with the null-free conjunct
     # pins the verdict to a real boolean. The DuckDB twin leads with
     # the literally-equivalent list_filter(x IS NULL) conjunct
@@ -106,22 +105,6 @@ def spans_audit(
         & (F.col("n_orphan_media") == 0)
         & (F.col("n_empty_text") == 0)
         & F.col("text_offsets_monotonic"),
-    )
-
-
-def audit_summary(audit: DataFrame) -> DataFrame:
-    """Corpus-level census over spans_audit output: one row of totals —
-    partial+final hash aggregate, broadcastable everywhere."""
-    return audit.agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.col("audit_ok").cast("long")).alias("n_ok"),
-        F.sum("n_spans").alias("total_spans"),
-        F.sum("n_unknown_kind").alias("total_unknown_kind"),
-        F.sum("n_orphan_media").alias("total_orphan_media"),
-        F.sum("n_empty_text").alias("total_empty_text"),
-        F.sum((~F.col("text_offsets_monotonic")).cast("long")).alias(
-            "n_offset_violations"
-        ),
     )
 
 

@@ -62,33 +62,6 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
-# ---------------------------------------------------- progress manifest
-# Replaces the reference's per-task Redis state (redis_manager.py:51-61)
-# with per-PARTITION checkpoint rows (SURVEY.md §4.4 / FIXTURES.md §3).
-PROGRESS_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("n_docs", T.LongType(), True),
-        T.StructField("n_ok", T.LongType(), True),
-        T.StructField("n_failed", T.LongType(), True),
-        T.StructField("metrics", T.MapType(T.StringType(), T.LongType()), True),
-        T.StructField(
-            "lineage",
-            T.StructType(
-                [
-                    T.StructField("input_snapshot", T.StringType(), True),
-                    T.StructField("partition_key", T.StringType(), True),
-                    T.StructField("code_version", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-        T.StructField("started_at", T.TimestampType(), True),
-        T.StructField("finished_at", T.TimestampType(), True),
-    ]
-)
-
 # ------------------------------------------------------- arrow mirrors
 # pyarrow schemas for the no-Spark (oracle / fixture) side.
 SPAN_PA = pa.struct(

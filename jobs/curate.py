@@ -32,6 +32,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+NEAR_DUP_MODES = ("minhash", "winnow", "embedding")
+
 
 def _dsir_keep_count(n: int, frac: float) -> int:
     """Floor of the EXACT product (the +1e-9 absorbs float
@@ -114,8 +116,14 @@ def curate(
             delim,
         )
 
-    # fail fast on mix-stage argument mistakes BEFORE any Spark action
-    # runs — a bad flag must not cost the whole funnel (review-found)
+    # fail fast on argument mistakes BEFORE any Spark action runs — a
+    # bad flag must not cost the whole funnel (review-found)
+    if near_dup not in NEAR_DUP_MODES:
+        raise ValueError(f"unknown near_dup mode: {near_dup}")
+    if decon_eval and decon_gram_words < 2:
+        # 0 would make every position the empty gram '' on BOTH
+        # sides → the whole corpus flags contaminated (review-found)
+        raise ValueError(f"decon_gram_words must be >= 2, got {decon_gram_words}")
     if (mix_budget is None) != (mix_weights is None):
         raise ValueError("mix_budget and mix_weights must be set together")
     if mix_budget is not None:
@@ -195,515 +203,498 @@ def curate(
         )
         return out
 
-    docs = spark.read.parquet(input_path)
-    n_input = _stage("read_input", None, docs.count)
-    emb_cached = None
+    # every frame curate() persists, released on EVERY exit: a raising
+    # stage must not leave the extraction (or any later cache) pinned
+    # in the session
+    cached: list = []
 
-    extracted = extract(docs, num_partitions=num_partitions)
-    # full_text for the text operators: re-join the text spans (JVM)
-    with_text = extracted.withColumn("full_text", _join_text_spans("\n"))
-    # eager --mix-stratum validation (round-6 advice, low): a typo'd
-    # stratum column must fail HERE, before the whole funnel (extract,
-    # dedup, decon, classifier, dsir) has executed and been paid for —
-    # the withColumn inside the mix stage would only raise at the end.
-    if mix_budget is not None and mix_stratum not in with_text.columns:
-        raise ValueError(
-            f"--mix-stratum {mix_stratum!r} is not a column of the "
-            f"extracted frame; available: {sorted(with_text.columns)}"
-        )
-    # persist at the extraction boundary: every downstream count and the
-    # final write reuse ONE pass of the (dominant-cost) Python UDF stage
-    ok = with_text.where(F.col("extraction_successful")).persist()
-    n_ok = _stage("extract", n_input, ok.count)
-    # quality gates — pure codegen predicates on the extracted text
-    quality = ok.where(
-        (F.col("n_chars") >= min_chars)
-        & (token_count("full_text") >= min_tokens)
-        & (digit_ratio("full_text") <= max_digit_ratio)
-    )
-    # optional Gopher line-shape gates — pure per-row expressions over
-    # the '\n'-joined text (no shuffle; they fuse into the same
-    # codegen filter stage as the length gates above)
-    line_shape_thresholds = [
-        ("symbol_word_ratio", max_symbol_word_ratio),
-        ("bullet_line_frac", max_bullet_line_frac),
-        ("ellipsis_line_frac", max_ellipsis_line_frac),
-    ]
-    if any(v is not None for _, v in line_shape_thresholds):
-        from docling_pdf_spark.operators import quality as Q
+    def _persist(df):
+        cached.append(df.persist())
+        return df
 
-        for name, v in line_shape_thresholds:
-            if v is not None:
-                quality = quality.where(getattr(Q, name)(F.col("full_text")) <= v)
-    # optional Gopher-style repetition gates (dup-line / dup-paragraph /
-    # top-bigram fractions): a second quality sub-stage — the signals
-    # need an explode+agg per doc, so they only run when a threshold is
-    # actually set. Shuffles on doc_id; the semi-join back is
-    # co-partitioned on the same key.
-    rep_thresholds = [
-        ("dup_line_frac", max_dup_line_frac),
-        ("dup_para_frac", max_dup_para_frac),
-        ("top_bigram_frac", max_top_bigram_frac),
-        ("top_3gram_frac", max_top_3gram_frac),
-        ("top_4gram_frac", max_top_4gram_frac),
-    ]
-    if any(v is not None for _, v in rep_thresholds):
-        from docling_pdf_spark.operators.quality import repetition_stats
+    try:
+        docs = spark.read.parquet(input_path)
+        n_input = _stage("read_input", None, docs.count)
 
-        # join the text SPANS with '\n\n' for this pass: each extracted
-        # block is a paragraph, so the \n{2,} paragraph split sees real
-        # boundaries (full_text's single-'\n' join would make every doc
-        # one paragraph and the dup-para gate inert — review-found);
-        # line semantics are unchanged (split on '\n' drops the empty
-        # string between blocks). Only the thresholded signals are
-        # computed — the bigram pass is the expensive one.
-        rep_text = _join_text_spans("\n\n")
-        rep = repetition_stats(
-            quality.select("doc_id", rep_text.alias("text")),
-            signals=tuple(c for c, v in rep_thresholds if v is not None),
-        )
-        for col, v in rep_thresholds:
-            if v is not None:
-                rep = rep.where(F.col(col) <= v)
-        quality = quality.join(rep.select("doc_id"), "doc_id", "left_semi")
-    n_quality = _stage("quality_gates", n_ok, quality.count)
-
-    # optional corpus-frequency boilerplate strip (CCNet-style): lines
-    # shared by >= N distinct docs are removed from every TEXT SPAN,
-    # offsets rebuilt, media links remapped (operators/boilerplate.py).
-    # Runs BEFORE dedup on purpose: shared footers/banners inflate
-    # every downstream similarity (two unrelated pages sharing a 40-word
-    # cookie banner look near-dup), so dedup must see cleaned text.
-    # full_text and the char/word metrics are recomputed from the
-    # rebuilt spans so the gates' single source of truth stays true.
-    removed_boilerplate = 0
-    bp_cached = None
-    if strip_boilerplate is not None:
-        from docling_pdf_spark.operators.boilerplate import (
-            strip_boilerplate_spans,
-        )
-
-        def _strip_and_count():
-            nonlocal quality, removed_boilerplate, bp_cached
-            stripped = strip_boilerplate_spans(
-                quality, min_docs=strip_boilerplate
+        extracted = extract(docs, num_partitions=num_partitions)
+        # full_text for the text operators: re-join the text spans (JVM)
+        with_text = extracted.withColumn("full_text", _join_text_spans("\n"))
+        # eager --mix-stratum validation (round-6 advice, low): a typo'd
+        # stratum column must fail HERE, before the whole funnel (extract,
+        # dedup, decon, classifier, dsir) has executed and been paid for —
+        # the withColumn inside the mix stage would only raise at the end.
+        if mix_budget is not None and mix_stratum not in with_text.columns:
+            raise ValueError(
+                f"--mix-stratum {mix_stratum!r} is not a column of the "
+                f"extracted frame; available: {sorted(with_text.columns)}"
             )
-            quality = bp_cached = (
-                stripped.withColumn("full_text", _join_text_spans("\n"))
-                .withColumn("n_chars", F.length("full_text").cast("long"))
-                .withColumn("n_words", token_count("full_text").cast("long"))
-                .persist()
+        # persist at the extraction boundary: every downstream count and the
+        # final write reuse ONE pass of the (dominant-cost) Python UDF stage
+        ok = _persist(with_text.where(F.col("extraction_successful")))
+        n_ok = _stage("extract", n_input, ok.count)
+        # quality gates — pure codegen predicates on the extracted text
+        quality = ok.where(
+            (F.col("n_chars") >= min_chars)
+            & (token_count("full_text") >= min_tokens)
+            & (digit_ratio("full_text") <= max_digit_ratio)
+        )
+        # optional Gopher line-shape gates — pure per-row expressions over
+        # the '\n'-joined text (no shuffle; they fuse into the same
+        # codegen filter stage as the length gates above)
+        line_shape_thresholds = [
+            ("symbol_word_ratio", max_symbol_word_ratio),
+            ("bullet_line_frac", max_bullet_line_frac),
+            ("ellipsis_line_frac", max_ellipsis_line_frac),
+        ]
+        if any(v is not None for _, v in line_shape_thresholds):
+            from docling_pdf_spark.operators import quality as Q
+
+            for name, v in line_shape_thresholds:
+                if v is not None:
+                    quality = quality.where(getattr(Q, name)(F.col("full_text")) <= v)
+        # optional Gopher-style repetition gates (dup-line / dup-paragraph /
+        # top-bigram fractions): a second quality sub-stage — the signals
+        # need an explode+agg per doc, so they only run when a threshold is
+        # actually set. Shuffles on doc_id; the semi-join back is
+        # co-partitioned on the same key.
+        rep_thresholds = [
+            ("dup_line_frac", max_dup_line_frac),
+            ("dup_para_frac", max_dup_para_frac),
+            ("top_bigram_frac", max_top_bigram_frac),
+            ("top_3gram_frac", max_top_3gram_frac),
+            ("top_4gram_frac", max_top_4gram_frac),
+        ]
+        if any(v is not None for _, v in rep_thresholds):
+            from docling_pdf_spark.operators.quality import repetition_stats
+
+            # join the text SPANS with '\n\n' for this pass: each extracted
+            # block is a paragraph, so the \n{2,} paragraph split sees real
+            # boundaries (full_text's single-'\n' join would make every doc
+            # one paragraph and the dup-para gate inert — review-found);
+            # line semantics are unchanged (split on '\n' drops the empty
+            # string between blocks). Only the thresholded signals are
+            # computed — the bigram pass is the expensive one.
+            rep_text = _join_text_spans("\n\n")
+            rep = repetition_stats(
+                quality.select("doc_id", rep_text.alias("text")),
+                signals=tuple(c for c, v in rep_thresholds if v is not None),
             )
-            n = quality.count()
-            removed_boilerplate = (
-                quality.agg(F.sum("n_boilerplate_removed")).collect()[0][0]
-                or 0
+            for col, v in rep_thresholds:
+                if v is not None:
+                    rep = rep.where(F.col(col) <= v)
+            quality = quality.join(rep.select("doc_id"), "doc_id", "left_semi")
+        n_quality = _stage("quality_gates", n_ok, quality.count)
+
+        # optional corpus-frequency boilerplate strip (CCNet-style): lines
+        # shared by >= N distinct docs are removed from every TEXT SPAN,
+        # offsets rebuilt, media links remapped (operators/boilerplate.py).
+        # Runs BEFORE dedup on purpose: shared footers/banners inflate
+        # every downstream similarity (two unrelated pages sharing a 40-word
+        # cookie banner look near-dup), so dedup must see cleaned text.
+        # full_text and the char/word metrics are recomputed from the
+        # rebuilt spans so the gates' single source of truth stays true.
+        removed_boilerplate = 0
+        if strip_boilerplate is not None:
+            from docling_pdf_spark.operators.boilerplate import (
+                strip_boilerplate_spans,
             )
-            quality = quality.drop("n_boilerplate_removed")
+
+            def _strip_and_count():
+                nonlocal quality, removed_boilerplate
+                stripped = strip_boilerplate_spans(
+                    quality, min_docs=strip_boilerplate
+                )
+                quality = _persist(
+                    stripped.withColumn("full_text", _join_text_spans("\n"))
+                    .withColumn("n_chars", F.length("full_text").cast("long"))
+                    .withColumn("n_words", token_count("full_text").cast("long"))
+                )
+                n = quality.count()
+                removed_boilerplate = (
+                    quality.agg(F.sum("n_boilerplate_removed")).collect()[0][0]
+                    or 0
+                )
+                quality = quality.drop("n_boilerplate_removed")
+                return n
+
+            _stage("strip_boilerplate", n_quality, _strip_and_count)
+
+        # exact dedup: keep the lexicographically-first doc_id per text hash
+        # — one shuffle on the hash (a broadcast keeper list would be
+        # corpus-sized at realistic dup rates and OOM at 100 TB)
+        from pyspark.sql import Window
+
+        w = Window.partitionBy(F.md5("full_text")).orderBy("doc_id")
+        exact = (
+            quality.withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .drop("_rn")
+        )
+        n_exact = _stage("exact_dedup", n_quality, exact.count)
+
+        # near-dup drop: for every candidate pair, drop doc_b
+        # (deterministic: pairs are emitted with doc_a < doc_b)
+        texts = exact.select("doc_id", F.col("full_text").alias("text"))
+        if near_dup == "minhash":
+            pairs = minhash_lsh_dedup(texts, threshold=jaccard)
+        elif near_dup == "winnow":
+            # containment, not an absolute count: random same-vocabulary
+            # docs share incidental substrings (measured 99th percentile
+            # 0.88 on the synthetic corpus), while a true near-dup reuses
+            # ~all of the smaller doc's fingerprint set (planted one-word
+            # edit measures 0.94) — whole-doc dedup wants near-total reuse
+            pairs = winnow_near_dup_pairs(texts, min_shared=3, min_containment=0.9)
+        else:  # "embedding"
+            # embed → train coarse centroids (bounded hash-residue sample) →
+            # multi-probe IVF bucketing → per-bucket exact cosine. The only
+            # broadcast is the collected n×dim centroid list (bounded by
+            # construction); the pair/drop side stays un-broadcast for AQE.
+            from docling_pdf_spark.operators.dedup import embedding_near_dups_bucketed
+            from docling_pdf_spark.operators.similarity import (
+                kmeans_centroids,
+                text_embedding,
+            )
+
+            # persist: centroid training (sample count, seeds, Lloyd
+            # iterations), the multi-probe assignment and both sides of the
+            # per-bucket self-join would otherwise each recompute the full
+            # tokenize→explode→double-groupBy embedding DAG (review-found:
+            # ~6-8 passes of the funnel's most expensive derived stage)
+            emb = _persist(
+                text_embedding(texts, dim=32, id_col="doc_id", text_col="text")
+            )
+            cents = kmeans_centroids(emb, n=16, iters=3, id_col="doc_id")
+            pairs = embedding_near_dups_bucketed(
+                emb, cents, threshold=cosine, id_col="doc_id", nprobe=2
+            ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
+        # two drop semantics:
+        #   pairwise (default): drop doc_b of every pair — keeps every doc
+        #     that is never the larger of a pair. Two docs that are both
+        #     near-dups of a THIRD (but whose own pair fell under the LSH
+        #     threshold) BOTH survive.
+        #   cluster (--cluster-resolve): connected components over the
+        #     pairs, keep exactly one doc (the min id) per duplicate
+        #     cluster — the published-pipeline semantics (transitive
+        #     closure). A strict superset of the pairwise drop set: any
+        #     doc_b's component min is <= its doc_a < doc_b.
+        # The cluster path runs the iterative star-contraction EAGERLY
+        # (localCheckpoint per round), so it is built inside the timed
+        # stage action to keep the funnel's wall attribution honest.
+        curated = None
+
+        def _near_drop_and_count():
+            nonlocal curated
+            if cluster_resolve:
+                from docling_pdf_spark.operators.components import (
+                    connected_components,
+                )
+
+                cc = connected_components(pairs)
+                drop = cc.where(F.col("id") != F.col("component")).select(
+                    F.col("id").alias("doc_id")
+                )
+            else:
+                drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+            # no broadcast hint: on real crawl data near-dup rates hit
+            # 30-50%, so the drop list is O(duplicate docs) — TB-scale at
+            # 100 TB input — and a forced broadcast OOMs the Spark driver
+            # (round-2 ADVICE). AQE picks broadcast on its own when the
+            # built side is measured small.
+            # persist + count at the near-dup boundary (always, since r6):
+            # the count IS the near_dup stage's timing action, and the
+            # persisted set is reused by the decon subtree (both sides) and
+            # the final write instead of re-running the pair DAG
+            # (review-found in r4 for the decon path; unified here for
+            # stage observability)
+            curated = _persist(exact.join(drop, "doc_id", "left_anti"))
+            return curated.count()
+
+        n_after_near = _stage("near_dup_drop", n_exact, _near_drop_and_count)
+
+        # THE whitespace-normalization rule for every gram consumer (decon
+        # AND dsir): full_text joins spans with '\n' and exemplar dumps
+        # carry newlines — split-on-space would otherwise produce
+        # 'word8\nword9' tokens that never match across the boundary
+        # (review-found; one definition so the stages can't drift)
+        def ws_norm(c):
+            return F.regexp_replace(F.trim(c), r"\s+", " ")
+
+        def read_exemplars(path, label=False):
+            # THE exemplar parquet contract: a `text` column (+ `label`
+            # when asked) — one reader for decon, dsir AND the classifier
+            # so the normalization rule can't drift (review-found dup)
+            if not label:
+                return spark.read.parquet(path).select(
+                    F.lit(0).cast("long").alias("doc_id"),
+                    ws_norm(F.col("text")).alias("text"),
+                )
+            from pyspark.sql import Window as _W
+
+            # deterministic unique id: monotonically_increasing_id was
+            # review-found nondeterministic across the feature/label
+            # join's two scans (silent label misalignment). Exemplar sets
+            # are small by construction — the single-partition window is
+            # bounded by them, never by the corpus.
+            return spark.read.parquet(path).select(
+                ws_norm(F.col("text")).alias("text"), F.col("label")
+            ).withColumn(
+                "doc_id",
+                F.row_number().over(_W.orderBy("text", "label")).cast("long"),
+            )
+
+        if decon_eval:
+            from docling_pdf_spark.operators.dedup import _gram_arrays
+
+            ev = read_exemplars(decon_eval)
+            ev_grams = (
+                _gram_arrays(ev, "doc_id", "text", n=decon_gram_words)
+                .select(F.explode(F.array_distinct("grams")).alias("g"))
+                .distinct()
+            )
+            tr_grams = _gram_arrays(
+                curated.select("doc_id", ws_norm(F.col("full_text")).alias("text")),
+                "doc_id",
+                "text",
+                n=decon_gram_words,
+            ).select("doc_id", F.explode(F.array_distinct("grams")).alias("g"))
+            contaminated = (
+                tr_grams.join(F.broadcast(ev_grams), "g").select("doc_id").distinct()
+            )
+            curated = curated.join(contaminated, "doc_id", "left_anti")
+        decon_attributed = False
+
+        def _count_attributing_decon(df):
+            # the first post-decon counting stage materializes the decon
+            # anti-join — attribute its wall + row drop to a decon stage
+            # exactly once, whoever counts first (classifier/dsir/mix)
+            nonlocal decon_attributed
+            t0 = time.perf_counter()
+            n = df.count()
+            if decon_eval and not decon_attributed:
+                stages.append(
+                    {"stage": "decon",
+                     "wall_s": round(time.perf_counter() - t0, 3),
+                     "rows_in": n_after_near, "rows_out": n}
+                )
+                decon_attributed = True
             return n
 
-        _stage("strip_boilerplate", n_quality, _strip_and_count)
-
-    # exact dedup: keep the lexicographically-first doc_id per text hash
-    # — one shuffle on the hash (a broadcast keeper list would be
-    # corpus-sized at realistic dup rates and OOM at 100 TB)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(F.md5("full_text")).orderBy("doc_id")
-    exact = (
-        quality.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    n_exact = _stage("exact_dedup", n_quality, exact.count)
-
-    # near-dup drop: for every candidate pair, drop doc_b
-    # (deterministic: pairs are emitted with doc_a < doc_b)
-    texts = exact.select("doc_id", F.col("full_text").alias("text"))
-    if near_dup == "minhash":
-        pairs = minhash_lsh_dedup(texts, threshold=jaccard)
-    elif near_dup == "winnow":
-        # containment, not an absolute count: random same-vocabulary
-        # docs share incidental substrings (measured 99th percentile
-        # 0.88 on the synthetic corpus), while a true near-dup reuses
-        # ~all of the smaller doc's fingerprint set (planted one-word
-        # edit measures 0.94) — whole-doc dedup wants near-total reuse
-        pairs = winnow_near_dup_pairs(texts, min_shared=3, min_containment=0.9)
-    elif near_dup == "embedding":
-        # embed → train coarse centroids (bounded hash-residue sample) →
-        # multi-probe IVF bucketing → per-bucket exact cosine. The only
-        # broadcast is the collected n×dim centroid list (bounded by
-        # construction); the pair/drop side stays un-broadcast for AQE.
-        from docling_pdf_spark.operators.dedup import embedding_near_dups_bucketed
-        from docling_pdf_spark.operators.similarity import (
-            kmeans_centroids,
-            text_embedding,
-        )
-
-        # persist: centroid training (sample count, seeds, Lloyd
-        # iterations), the multi-probe assignment and both sides of the
-        # per-bucket self-join would otherwise each recompute the full
-        # tokenize→explode→double-groupBy embedding DAG (review-found:
-        # ~6-8 passes of the funnel's most expensive derived stage)
-        emb = emb_cached = text_embedding(
-            texts, dim=32, id_col="doc_id", text_col="text"
-        ).persist()
-        cents = kmeans_centroids(emb, n=16, iters=3, id_col="doc_id")
-        pairs = embedding_near_dups_bucketed(
-            emb, cents, threshold=cosine, id_col="doc_id", nprobe=2
-        ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
-    else:
-        raise ValueError(f"unknown near_dup mode: {near_dup}")
-    # two drop semantics:
-    #   pairwise (default): drop doc_b of every pair — keeps every doc
-    #     that is never the larger of a pair. Two docs that are both
-    #     near-dups of a THIRD (but whose own pair fell under the LSH
-    #     threshold) BOTH survive.
-    #   cluster (--cluster-resolve): connected components over the
-    #     pairs, keep exactly one doc (the min id) per duplicate
-    #     cluster — the published-pipeline semantics (transitive
-    #     closure). A strict superset of the pairwise drop set: any
-    #     doc_b's component min is <= its doc_a < doc_b.
-    # The cluster path runs the iterative star-contraction EAGERLY
-    # (localCheckpoint per round), so it is built inside the timed
-    # stage action to keep the funnel's wall attribution honest.
-    curated = cur_cached = None
-
-    def _near_drop_and_count():
-        nonlocal curated, cur_cached
-        if cluster_resolve:
-            from docling_pdf_spark.operators.components import (
-                connected_components,
+        n_pre_q = None
+        n_after_q = None
+        if quality_exemplars is not None:
+            # learned quality gate (CCNet-style): LR trained on labeled
+            # exemplars (parquet with text + label∈{0,1}), scored over the
+            # surviving corpus's full_text; keep P(quality) >= threshold
+            from docling_pdf_spark.operators.classifier import (
+                score_quality,
+                train_quality_classifier,
             )
 
-            cc = connected_components(pairs)
-            drop = cc.where(F.col("id") != F.col("component")).select(
-                F.col("id").alias("doc_id")
+            qc_cached = _persist(curated)
+            n_pre_q = _count_attributing_decon(qc_cached)
+            t_q = time.perf_counter()
+            model = train_quality_classifier(
+                read_exemplars(quality_exemplars, label=True)
             )
-        else:
-            drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-        # no broadcast hint: on real crawl data near-dup rates hit
-        # 30-50%, so the drop list is O(duplicate docs) — TB-scale at
-        # 100 TB input — and a forced broadcast OOMs the driver
-        # (round-2 ADVICE). AQE picks broadcast on its own when the
-        # built side is measured small.
-        # persist + count at the near-dup boundary (always, since r6):
-        # the count IS the near_dup stage's timing action, and the
-        # persisted set is reused by the decon subtree (both sides) and
-        # the final write instead of re-running the pair DAG
-        # (review-found in r4 for the decon path; unified here for
-        # stage observability)
-        curated = cur_cached = exact.join(drop, "doc_id", "left_anti").persist()
-        return curated.count()
-
-    n_after_near = _stage("near_dup_drop", n_exact, _near_drop_and_count)
-
-    # THE whitespace-normalization rule for every gram consumer (decon
-    # AND dsir): full_text joins spans with '\n' and exemplar dumps
-    # carry newlines — split-on-space would otherwise produce
-    # 'word8\nword9' tokens that never match across the boundary
-    # (review-found; one definition so the stages can't drift)
-    def ws_norm(c):
-        return F.regexp_replace(F.trim(c), r"\s+", " ")
-
-    def read_exemplars(path, label=False):
-        # THE exemplar parquet contract: a `text` column (+ `label`
-        # when asked) — one reader for decon, dsir AND the classifier
-        # so the normalization rule can't drift (review-found dup)
-        if not label:
-            return spark.read.parquet(path).select(
-                F.lit(0).cast("long").alias("doc_id"),
-                ws_norm(F.col("text")).alias("text"),
+            scored = score_quality(
+                qc_cached.select(
+                    "doc_id", ws_norm(F.col("full_text")).alias("text")
+                ),
+                model,
             )
-        from pyspark.sql import Window as _W
-
-        # deterministic unique id: monotonically_increasing_id was
-        # review-found nondeterministic across the feature/label
-        # join's two scans (silent label misalignment). Exemplar sets
-        # are small by construction — the single-partition window is
-        # bounded by them, never by the corpus.
-        return spark.read.parquet(path).select(
-            ws_norm(F.col("text")).alias("text"), F.col("label")
-        ).withColumn(
-            "doc_id",
-            F.row_number().over(_W.orderBy("text", "label")).cast("long"),
-        )
-
-    if decon_eval:
-        if decon_gram_words < 2:
-            # 0 would make every position the empty gram '' on BOTH
-            # sides → the whole corpus flags contaminated (review-found)
-            raise ValueError(f"decon_gram_words must be >= 2, got {decon_gram_words}")
-        from docling_pdf_spark.operators.dedup import _gram_arrays
-
-        ev = read_exemplars(decon_eval)
-        ev_grams = (
-            _gram_arrays(ev, "doc_id", "text", n=decon_gram_words)
-            .select(F.explode(F.array_distinct("grams")).alias("g"))
-            .distinct()
-        )
-        tr_grams = _gram_arrays(
-            curated.select("doc_id", ws_norm(F.col("full_text")).alias("text")),
-            "doc_id",
-            "text",
-            n=decon_gram_words,
-        ).select("doc_id", F.explode(F.array_distinct("grams")).alias("g"))
-        contaminated = (
-            tr_grams.join(F.broadcast(ev_grams), "g").select("doc_id").distinct()
-        )
-        curated = curated.join(contaminated, "doc_id", "left_anti")
-    decon_attributed = False
-
-    def _count_attributing_decon(df):
-        # the first post-decon counting stage materializes the decon
-        # anti-join — attribute its wall + row drop to a decon stage
-        # exactly once, whoever counts first (classifier/dsir/mix)
-        nonlocal decon_attributed
-        t0 = time.perf_counter()
-        n = df.count()
-        if decon_eval and not decon_attributed:
+            # persist the (narrow) keep list: without it the whole
+            # embed+score DAG re-executes at the next downstream action
+            # (review-found — the costliest new stage was running 2x)
+            qc_keep = _persist(
+                scored.where(F.col("quality_prob") >= quality_threshold)
+                .select("doc_id")
+            )
+            curated = qc_cached.join(qc_keep, "doc_id", "left_semi")
+            n_after_q = curated.count()
             stages.append(
-                {"stage": "decon",
-                 "wall_s": round(time.perf_counter() - t0, 3),
-                 "rows_in": n_after_near, "rows_out": n}
+                {"stage": "quality_classifier",
+                 "wall_s": round(time.perf_counter() - t_q, 3),
+                 "rows_in": n_pre_q, "rows_out": n_after_q}
             )
-            decon_attributed = True
-        return n
+        n_pre_dsir = None
+        n_after_dsir = None
+        if dsir_target is not None:
+            # DSIR data selection (Xie et al. 2023): score every surviving
+            # doc by the hashed-bigram target/raw log-likelihood ratio and
+            # keep the top dsir_keep_frac by weight — exact top-k via the
+            # distributed rank kernel, never a single-task sort
+            from docling_pdf_spark.operators.dsir import (
+                dsir_log_ratios,
+                dsir_weights,
+            )
+            from docling_pdf_spark.operators.shuffle import global_row_number
 
-    n_pre_q = None
-    n_after_q = None
-    qc_cached = None
-    qc_keep = None
-    if quality_exemplars is not None:
-        # learned quality gate (CCNet-style): LR trained on labeled
-        # exemplars (parquet with text + label∈{0,1}), scored over the
-        # surviving corpus's full_text; keep P(quality) >= threshold
-        from docling_pdf_spark.operators.classifier import (
-            score_quality,
-            train_quality_classifier,
-        )
-
-        qc_cached = curated.persist()
-        n_pre_q = _count_attributing_decon(qc_cached)
-        t_q = time.perf_counter()
-        model = train_quality_classifier(
-            read_exemplars(quality_exemplars, label=True)
-        )
-        scored = score_quality(
-            qc_cached.select(
+            dsir_cached = _persist(curated)
+            n_pre_dsir = _count_attributing_decon(dsir_cached)
+            t_ds = time.perf_counter()
+            raw_txt = dsir_cached.select(
                 "doc_id", ws_norm(F.col("full_text")).alias("text")
+            )
+            tgt = read_exemplars(dsir_target)
+            ratios = dsir_log_ratios(raw_txt, tgt, hash_mode=dsir_hash)
+            w = dsir_weights(raw_txt, ratios, hash_mode=dsir_hash)
+            k = _dsir_keep_count(n_pre_dsir, dsir_keep_frac)
+            ranked = global_row_number(
+                w,
+                [F.col("dsir_logweight").desc(), F.col("doc_id").asc()],
+                out_col="_dsir_rank",
+            )
+            # persist the narrow keep list so the gram+rank DAG doesn't
+            # re-execute at the next downstream action (same review-found
+            # double-execution class as the classifier stage)
+            dsir_keep = _persist(
+                ranked.where(F.col("_dsir_rank") <= k).select("doc_id")
+            )
+            curated = dsir_cached.join(dsir_keep, "doc_id", "left_semi")
+            n_after_dsir = curated.count()
+            stages.append(
+                {"stage": "dsir_select",
+                 "wall_s": round(time.perf_counter() - t_ds, 3),
+                 "rows_in": n_pre_dsir, "rows_out": n_after_dsir}
+            )
+        curated = curated.drop("full_text")
+        mix_plan_rows = None
+        n_pre_mix = None
+        if mix_budget is not None:
+            # final stage: token-budget mixture (water-filling over the
+            # stratum column; strata absent from the weight table are
+            # dropped — only the planned mixture enters the corpus). The
+            # fill order is deterministic: longest docs first, id tiebreak.
+            from docling_pdf_spark.operators.mixer import (
+                fill_to_allocation,
+                token_budget_mix,
+            )
+
+            # persist ONCE: the plan aggregate, the selection's offsets
+            # branch and its cumsum branch all re-read this cache instead
+            # of re-running the funnel lineage (review-found: with decon
+            # enabled the gram-explosion anti-join was executing ~5x)
+            based = _persist(curated.withColumn(
+                "_stratum",
+                F.coalesce(F.col(mix_stratum).cast("string"), F.lit("unknown")),
+            ))
+            n_pre_mix = _count_attributing_decon(based)
+            t_m = time.perf_counter()
+            plan = token_budget_mix(
+                based, mix_weights, mix_budget,
+                stratum_col="_stratum", tokens_col="n_words",
+            )
+            mix_plan_rows = [r.asDict() for r in plan.collect()]
+            # rebuild the (tiny, one-row-per-stratum) plan from the rows
+            # just collected so the two broadcast joins inside
+            # fill_to_allocation don't re-run the plan aggregation
+            plan = spark.createDataFrame(mix_plan_rows, schema=plan.schema)
+            curated = fill_to_allocation(
+                based, plan,
+                stratum_col="_stratum", tokens_col="n_words",
+                id_col="doc_id", order_by=-F.col("n_chars"),
+            ).drop("_stratum")
+            stages.append(
+                {"stage": "mix_plan",
+                 "wall_s": round(time.perf_counter() - t_m, 3),
+                 "rows_in": n_pre_mix, "rows_out": n_pre_mix}
+            )
+        if redact_pii or redact_pii_aggressive:
+            # scrub emails/phones/IPv4s from every span text — one JVM
+            # transform over the payload column, applied only to the
+            # surviving rows (scrubbing pre-funnel would pay the regex on
+            # docs that get dropped anyway)
+            from docling_pdf_spark.functions.pii import redact_spans
+
+            curated = curated.withColumn(
+                "spans", redact_spans("spans", aggressive=redact_pii_aggressive)
+            )
+        if shuffle_seed is not None:
+            # seeded training-order shuffle: every surviving doc gets a
+            # dense 1-based shuffle_rank (portable md5 key, distributed
+            # prefix-sum — no corpus-wide single-task sort), and the
+            # output files are physically range-ordered by rank: reading
+            # the part files in NAME order yields the shuffled order
+            # (spark.read orders splits by size — re-sort by rank there)
+            from docling_pdf_spark.operators.shuffle import deterministic_shuffle
+
+            nparts = num_partitions or spark.sparkContext.defaultParallelism
+            curated = (
+                deterministic_shuffle(curated, shuffle_seed)
+                .repartitionByRange(nparts, "shuffle_rank")
+                .sortWithinPartitions("shuffle_rank")
+            )
+        # the final stage covers whatever is still unmaterialized: with
+        # mix on, decon was already counted at the mix boundary so this is
+        # the mixture selection + PII redaction + parquet IO; without mix
+        # it is decon (when set) + redaction + IO
+        t_w = time.perf_counter()
+        curated.write.mode("overwrite").parquet(output_path)
+        n_curated = spark.read.parquet(output_path).count()
+        stages.append(
+            {"stage": ("mix_select_redact_write" if mix_budget is not None
+                       else "decon_redact_write"),
+             "wall_s": round(time.perf_counter() - t_w, 3),
+             "rows_in": (n_pre_mix if n_pre_mix is not None
+                         else n_after_dsir if n_after_dsir is not None
+                         else n_after_q if n_after_q is not None
+                         else n_after_near),
+             "rows_out": n_curated}
+        )
+        return {
+            "n_input": n_input,
+            "n_extracted_ok": n_ok,
+            "n_quality": n_quality,
+            "n_after_exact_dedup": n_exact,
+            "n_curated": n_curated,
+            # each funnel stage accounts only for ITS drops, so the numbers
+            # always sum: input = failed + quality-drops + exact + near
+            # (+ contaminated when decon_eval is set) + kept
+            "dropped_extraction_failed": n_input - n_ok,
+            "dropped_quality": n_ok - n_quality,
+            "dropped_exact_dups": n_quality - n_exact,
+            "dropped_near_dups": n_exact - n_after_near,
+            **(
+                {"removed_boilerplate_lines": int(removed_boilerplate)}
+                if strip_boilerplate is not None
+                else {}
             ),
-            model,
-        )
-        # persist the (narrow) keep list: without it the whole
-        # embed+score DAG re-executes at the next downstream action
-        # (review-found — the costliest new stage was running 2x)
-        qc_keep = scored.where(
-            F.col("quality_prob") >= quality_threshold
-        ).select("doc_id").persist()
-        curated = qc_cached.join(qc_keep, "doc_id", "left_semi")
-        n_after_q = curated.count()
-        stages.append(
-            {"stage": "quality_classifier",
-             "wall_s": round(time.perf_counter() - t_q, 3),
-             "rows_in": n_pre_q, "rows_out": n_after_q}
-        )
-    n_pre_dsir = None
-    n_after_dsir = None
-    dsir_cached = None
-    dsir_keep = None
-    if dsir_target is not None:
-        # DSIR data selection (Xie et al. 2023): score every surviving
-        # doc by the hashed-bigram target/raw log-likelihood ratio and
-        # keep the top dsir_keep_frac by weight — exact top-k via the
-        # distributed rank kernel, never a single-task sort
-        from docling_pdf_spark.operators.dsir import (
-            dsir_log_ratios,
-            dsir_weights,
-        )
-        from docling_pdf_spark.operators.shuffle import global_row_number
-
-        dsir_cached = curated.persist()
-        n_pre_dsir = _count_attributing_decon(dsir_cached)
-        t_ds = time.perf_counter()
-        raw_txt = dsir_cached.select(
-            "doc_id", ws_norm(F.col("full_text")).alias("text")
-        )
-        tgt = read_exemplars(dsir_target)
-        ratios = dsir_log_ratios(raw_txt, tgt, hash_mode=dsir_hash)
-        w = dsir_weights(raw_txt, ratios, hash_mode=dsir_hash)
-        k = _dsir_keep_count(n_pre_dsir, dsir_keep_frac)
-        ranked = global_row_number(
-            w,
-            [F.col("dsir_logweight").desc(), F.col("doc_id").asc()],
-            out_col="_dsir_rank",
-        )
-        # persist the narrow keep list so the gram+rank DAG doesn't
-        # re-execute at the next downstream action (same review-found
-        # double-execution class as the classifier stage)
-        dsir_keep = ranked.where(
-            F.col("_dsir_rank") <= k
-        ).select("doc_id").persist()
-        curated = dsir_cached.join(dsir_keep, "doc_id", "left_semi")
-        n_after_dsir = curated.count()
-        stages.append(
-            {"stage": "dsir_select",
-             "wall_s": round(time.perf_counter() - t_ds, 3),
-             "rows_in": n_pre_dsir, "rows_out": n_after_dsir}
-        )
-    curated = curated.drop("full_text")
-    mix_plan_rows = None
-    n_pre_mix = None
-    based = None
-    if mix_budget is not None:
-        # final stage: token-budget mixture (water-filling over the
-        # stratum column; strata absent from the weight table are
-        # dropped — only the planned mixture enters the corpus). The
-        # fill order is deterministic: longest docs first, id tiebreak.
-        from docling_pdf_spark.operators.mixer import (
-            fill_to_allocation,
-            token_budget_mix,
-        )
-
-        # persist ONCE: the plan aggregate, the selection's offsets
-        # branch and its cumsum branch all re-read this cache instead
-        # of re-running the funnel lineage (review-found: with decon
-        # enabled the gram-explosion anti-join was executing ~5x)
-        based = curated.withColumn(
-            "_stratum",
-            F.coalesce(F.col(mix_stratum).cast("string"), F.lit("unknown")),
-        ).persist()
-        n_pre_mix = _count_attributing_decon(based)
-        t_m = time.perf_counter()
-        plan = token_budget_mix(
-            based, mix_weights, mix_budget,
-            stratum_col="_stratum", tokens_col="n_words",
-        )
-        mix_plan_rows = [r.asDict() for r in plan.collect()]
-        # rebuild the (tiny, one-row-per-stratum) plan from the rows
-        # just collected so the two broadcast joins inside
-        # fill_to_allocation don't re-run the plan aggregation
-        plan = spark.createDataFrame(mix_plan_rows, schema=plan.schema)
-        curated = fill_to_allocation(
-            based, plan,
-            stratum_col="_stratum", tokens_col="n_words",
-            id_col="doc_id", order_by=-F.col("n_chars"),
-        ).drop("_stratum")
-        stages.append(
-            {"stage": "mix_plan",
-             "wall_s": round(time.perf_counter() - t_m, 3),
-             "rows_in": n_pre_mix, "rows_out": n_pre_mix}
-        )
-    if redact_pii or redact_pii_aggressive:
-        # scrub emails/phones/IPv4s from every span text — one JVM
-        # transform over the payload column, applied only to the
-        # surviving rows (scrubbing pre-funnel would pay the regex on
-        # docs that get dropped anyway)
-        from docling_pdf_spark.functions.pii import redact_spans
-
-        curated = curated.withColumn(
-            "spans", redact_spans("spans", aggressive=redact_pii_aggressive)
-        )
-    if shuffle_seed is not None:
-        # seeded training-order shuffle: every surviving doc gets a
-        # dense 1-based shuffle_rank (portable md5 key, distributed
-        # prefix-sum — no corpus-wide single-task sort), and the
-        # output files are physically range-ordered by rank: reading
-        # the part files in NAME order yields the shuffled order
-        # (spark.read orders splits by size — re-sort by rank there)
-        from docling_pdf_spark.operators.shuffle import deterministic_shuffle
-
-        nparts = num_partitions or spark.sparkContext.defaultParallelism
-        curated = (
-            deterministic_shuffle(curated, shuffle_seed)
-            .repartitionByRange(nparts, "shuffle_rank")
-            .sortWithinPartitions("shuffle_rank")
-        )
-    # the final stage covers whatever is still unmaterialized: with
-    # mix on, decon was already counted at the mix boundary so this is
-    # the mixture selection + PII redaction + parquet IO; without mix
-    # it is decon (when set) + redaction + IO
-    t_w = time.perf_counter()
-    curated.write.mode("overwrite").parquet(output_path)
-    n_curated = spark.read.parquet(output_path).count()
-    stages.append(
-        {"stage": ("mix_select_redact_write" if mix_budget is not None
-                   else "decon_redact_write"),
-         "wall_s": round(time.perf_counter() - t_w, 3),
-         "rows_in": (n_pre_mix if n_pre_mix is not None
-                     else n_after_dsir if n_after_dsir is not None
-                     else n_after_q if n_after_q is not None
-                     else n_after_near),
-         "rows_out": n_curated}
-    )
-    if based is not None:
-        based.unpersist()
-    if dsir_cached is not None:
-        dsir_cached.unpersist()
-    if dsir_keep is not None:
-        dsir_keep.unpersist()
-    if qc_cached is not None:
-        qc_cached.unpersist()
-    if qc_keep is not None:
-        qc_keep.unpersist()
-    ok.unpersist()
-    if bp_cached is not None:
-        bp_cached.unpersist()
-    if emb_cached is not None:
-        emb_cached.unpersist()
-    cur_cached.unpersist()
-
-    return {
-        "n_input": n_input,
-        "n_extracted_ok": n_ok,
-        "n_quality": n_quality,
-        "n_after_exact_dedup": n_exact,
-        "n_curated": n_curated,
-        # each funnel stage accounts only for ITS drops, so the numbers
-        # always sum: input = failed + quality-drops + exact + near
-        # (+ contaminated when decon_eval is set) + kept
-        "dropped_extraction_failed": n_input - n_ok,
-        "dropped_quality": n_ok - n_quality,
-        "dropped_exact_dups": n_quality - n_exact,
-        "dropped_near_dups": n_exact - n_after_near,
-        **(
-            {"removed_boilerplate_lines": int(removed_boilerplate)}
-            if strip_boilerplate is not None
-            else {}
-        ),
-        **(
-            # the post-decon count is the first one materialized by a
-            # downstream stage (classifier, dsir, mix, else the final
-            # write), so decon's drop splits cleanly from selections
-            {"dropped_contaminated": n_after_near - (
-                n_pre_q if n_pre_q is not None
-                else n_pre_dsir if n_pre_dsir is not None
-                else n_pre_mix if n_pre_mix is not None
-                else n_curated
-            )}
-            if decon_eval
-            else {}
-        ),
-        **(
-            {"dropped_quality_model": n_pre_q - n_after_q}
-            if quality_exemplars is not None
-            else {}
-        ),
-        **(
-            {"dropped_dsir": n_pre_dsir - n_after_dsir}
-            if dsir_target is not None
-            else {}
-        ),
-        **(
-            {
-                "dropped_mix_budget": n_pre_mix - n_curated,
-                "mix_plan": mix_plan_rows,
-            }
-            if mix_budget is not None
-            else {}
-        ),
-        "stages": stages,
-    }
+            **(
+                # the post-decon count is the first one materialized by a
+                # downstream stage (classifier, dsir, mix, else the final
+                # write), so decon's drop splits cleanly from selections
+                {"dropped_contaminated": n_after_near - (
+                    n_pre_q if n_pre_q is not None
+                    else n_pre_dsir if n_pre_dsir is not None
+                    else n_pre_mix if n_pre_mix is not None
+                    else n_curated
+                )}
+                if decon_eval
+                else {}
+            ),
+            **(
+                {"dropped_quality_model": n_pre_q - n_after_q}
+                if quality_exemplars is not None
+                else {}
+            ),
+            **(
+                {"dropped_dsir": n_pre_dsir - n_after_dsir}
+                if dsir_target is not None
+                else {}
+            ),
+            **(
+                {
+                    "dropped_mix_budget": n_pre_mix - n_curated,
+                    "mix_plan": mix_plan_rows,
+                }
+                if mix_budget is not None
+                else {}
+            ),
+            "stages": stages,
+        }
+    finally:
+        for df in cached:
+            df.unpersist()
 
 
 def _parse_mix_weights(s: str) -> dict[str, int]:
@@ -745,7 +736,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--jaccard", type=float, default=0.8)
     ap.add_argument("--cosine", type=float, default=0.9,
                     help="cosine threshold for --near-dup embedding")
-    ap.add_argument("--near-dup", choices=("minhash", "winnow", "embedding"),
+    ap.add_argument("--near-dup", choices=NEAR_DUP_MODES,
                     default="minhash",
                     help="near-dup detector: whole-doc Jaccard estimate "
                          "(minhash), shared rolling-hash fingerprints "

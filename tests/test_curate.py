@@ -408,6 +408,40 @@ def test_curate_fails_fast_on_bad_mix_args(spark, tmp_path):
         curate(spark, missing, out, mix_budget=-1, mix_weights={"en": 1})
 
 
+def test_curate_fails_fast_on_bad_near_dup_and_decon_args(spark, tmp_path):
+    """An unknown near_dup mode and decon_gram_words < 2 must raise
+    before any Spark action — same nonexistent-path probe as above (the
+    eval path is missing too, so its schema read would also raise
+    AnalysisException)."""
+    from jobs.curate import curate
+
+    missing = str(tmp_path / "nope.parquet")
+    out = str(tmp_path / "o")
+    with pytest.raises(ValueError, match="unknown near_dup mode"):
+        curate(spark, missing, out, near_dup="simhash")
+    with pytest.raises(ValueError, match="decon_gram_words must be >= 2"):
+        curate(spark, missing, out, decon_eval=missing, decon_gram_words=1)
+
+
+def test_curate_releases_caches_when_a_stage_raises(spark, tmp_path, monkeypatch):
+    """A stage that raises after the extraction (and the boilerplate
+    strip) were persisted must leave no cached frame in the session."""
+    import docling_pdf_spark.operators.dedup as dedup
+    from jobs.curate import curate
+
+    def failing_near_dup(*args, **kwargs):
+        raise RuntimeError("near-dup stage failed")
+
+    src = str(tmp_path / "docs.parquet")
+    rows = [_doc("a", BASE), _doc("b", BASE + " plus a distinct tail")]
+    pq.write_table(pa.Table.from_pylist(rows, schema=DOCUMENTS_PA), src)
+    monkeypatch.setattr(dedup, "minhash_lsh_dedup", failing_near_dup)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="near-dup stage failed"):
+        curate(spark, src, str(tmp_path / "o"), strip_boilerplate=2)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_curate_decon_plus_mix_stage_attribution(spark, tmp_path):
     """Review-found inversion: with decon AND mix enabled, the decon
     drop must land in a 'decon' stage and the mix-selection drop in

@@ -12,8 +12,6 @@ from pyspark.sql import functions as F
 from docling_pdf_spark.operators.domains import (
     per_source_cap,
     per_source_cap_sql,
-    source_share_stats,
-    source_share_stats_sql,
 )
 from tests.test_queries_vs_duckdb import SF_DIR, _assert_matches
 
@@ -111,15 +109,6 @@ def test_cap_rejects_bad_cap(spark):
     df = spark.range(1).select(F.col("id").alias("doc_id"), F.lit("a").alias("source"))
     with pytest.raises(ValueError):
         per_source_cap(df, cap=0)
-
-
-def test_source_share_stats_matches_sql(spark):
-    _assert_matches(
-        spark,
-        "source_share_stats",
-        lambda s, d: source_share_stats(s.read.parquet(f"{d}/documents.parquet")),
-        source_share_stats_sql(),
-    )
 
 
 def test_cap_plan_no_python(spark):

@@ -149,6 +149,12 @@ def test_producer_metadata_column():
                               producer="fixture-writer 1.4"))]
     )
     assert row["producer"] == "fixture-writer 1.4"
+    # escaped parens/backslash in the /Producer literal round-trip exactly
+    escaped = extract_document(
+        "d", [sp("pdf", pdf64([PageSpec(texts=[(0, 700.0, "hello world")])],
+                              producer="writer (v2) \\ test"))]
+    )
+    assert escaped["producer"] == "writer (v2) \\ test"
     bare = extract_document(
         "d", [sp("pdf", pdf64([PageSpec(texts=[(0, 700.0, "hello world")])]))]
     )

@@ -100,16 +100,6 @@ def test_encrypt_mention_in_content_is_not_flagged():
     assert not p.encrypted and not p.needs_password
 
 
-def test_producer_sniff():
-    from docling_pdf_spark.core.pdfparse import parse_ladder, sniff_producer
-
-    pdf = make_pdf([_page((72, 700, "x"))], producer="writer (v2) \\ test")
-    # escaped parens/backslash in the literal round-trip exactly
-    assert sniff_producer(pdf) == "writer (v2) \\ test"
-    assert parse_ladder(pdf).producer == "writer (v2) \\ test"
-    assert parse_ladder(make_pdf([_page((72, 700, "x"))])).producer is None
-
-
 def test_images_counted_per_page():
     pdf = make_pdf([_page((72, 700, "x"), n_images=2), _page((72, 700, "y"))])
     parsed = parse_strict(pdf)

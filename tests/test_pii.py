@@ -36,6 +36,9 @@ CASES = [
     ("peers 1.1.1.1 2.2.2.2 up", "peers [IP] [IP] up"),
     # grouped 3-3-4 phone
     ("fax 555-123-4567.", "fax [PHONE]."),
+    # several kinds in one string: two emails, one phone, one IP
+    ("a@b.io and c@d.org, call 555-123-4567, host 1.2.3.4",
+     "[EMAIL] and [EMAIL], call [PHONE], host [IP]"),
 ]
 
 
@@ -48,16 +51,6 @@ def test_redact_pii_hand_cases(spark):
            df.select("i", redact_pii("t").alias("r")).collect()}
     for i, (_, want) in enumerate(CASES):
         assert got[i] == want, f"case {i}"
-
-
-def test_pii_counts(spark):
-    from docling_pdf_spark.functions.pii import pii_counts
-
-    df = spark.createDataFrame(
-        [("a@b.io and c@d.org, call 555-123-4567, host 1.2.3.4",)], ["t"]
-    )
-    row = df.select(pii_counts("t").alias("p")).collect()[0]["p"]
-    assert (row["email"], row["phone"], row["ip"]) == (2, 1, 1)
 
 
 def test_redaction_matches_duckdb_on_corpus(spark):
@@ -132,6 +125,10 @@ SSN_CASES = [
     ("code 123.45.6789 ok", "code 123.45.6789 ok"),
     # back-to-back, single-space separated: pass two picks up #2
     ("pair 123-45-6789 321-54-9876 ok", "pair [SSN] [SSN] ok"),
+    # default mode leaves the aggressive-only kinds (bare NANP run,
+    # IBAN) untouched; AGGRESSIVE_CASES scrubs the same string
+    ("ssn 123-45-6789, call 5551234567, acct DE89370400440532013000",
+     "ssn [SSN], call 5551234567, acct DE89370400440532013000"),
 ]
 
 
@@ -169,6 +166,8 @@ AGGRESSIVE_CASES = [
     ("xDE89370400440532013000 ok", "xDE89370400440532013000 ok"),
     # conservative kinds still work in aggressive mode
     ("mail a@b.io or 1.2.3.4", "mail [EMAIL] or [IP]"),
+    ("ssn 123-45-6789, call 5551234567, acct DE89370400440532013000",
+     "ssn [SSN], call [PHONE], acct [IBAN]"),
 ]
 
 
@@ -229,21 +228,6 @@ def test_aggressive_matches_duckdb_on_corpus(spark):
     ).df().reset_index(drop=True)
     assert len(sdf) == len(ddf) == 500
     assert (sdf["r"] == ddf["r"]).all()
-
-
-def test_pii_counts_new_kinds(spark):
-    from docling_pdf_spark.functions.pii import pii_counts
-
-    df = spark.createDataFrame(
-        [("ssn 123-45-6789, call 5551234567, acct DE89370400440532013000",)],
-        ["t"],
-    )
-    row = df.select(pii_counts("t", aggressive=True).alias("p")).collect()[0]["p"]
-    assert row["ssn"] == 1 and row["phone"] == 1 and row["iban"] == 1
-    # default mode: no phone (bare run), no iban field at all
-    row0 = df.select(pii_counts("t").alias("p")).collect()[0]["p"]
-    assert row0["ssn"] == 1 and row0["phone"] == 0
-    assert "iban" not in row0.asDict()
 
 
 def test_curate_redact_pii_aggressive_end_to_end(spark, tmp_path):

@@ -8,7 +8,6 @@ from __future__ import annotations
 import duckdb
 
 from docling_pdf_spark.operators.spans_audit import (
-    audit_summary,
     spans_audit,
     spans_audit_sql,
 )
@@ -70,20 +69,6 @@ def test_audit_hand_cases(spark):
             r["n_orphan_media"], r["n_empty_text"],
             r["text_offsets_monotonic"], r["audit_ok"],
         ) == exp, doc_id
-
-
-def test_audit_summary(spark):
-    df = spark.createDataFrame(HAND_DOCS, DOCUMENTS_SCHEMA)
-    row = audit_summary(spans_audit(df)).collect()[0]
-    assert row["n_docs"] == 8
-    assert row["n_ok"] == 2
-    assert row["total_unknown_kind"] == 2
-    assert row["total_orphan_media"] == 1
-    assert row["total_empty_text"] == 1
-    assert row["n_offset_violations"] == 3
-    # not-ok count is exact: a NULL-offset row must census as a
-    # violation, not vanish as a NULL verdict (the pre-fix behavior)
-    assert row["n_docs"] - row["n_ok"] == 6
 
 
 def test_audit_matches_duckdb_on_planted_corpus(spark, tmp_path):
