@@ -100,6 +100,15 @@ def test_encrypt_mention_in_content_is_not_flagged():
     assert not p.encrypted and not p.needs_password
 
 
+def test_producer_sniff():
+    pdf = make_pdf([_page((72, 700, "x"))], producer="writer (v2) \\ test")
+    # escaped parens/backslash in the literal round-trip exactly, in the
+    # /Info map the producer column reads
+    assert parse_ladder(pdf).metadata["Producer"] == "writer (v2) \\ test"
+    bare = parse_ladder(make_pdf([_page((72, 700, "x"))]))
+    assert "Producer" not in bare.metadata
+
+
 def test_images_counted_per_page():
     pdf = make_pdf([_page((72, 700, "x"), n_images=2), _page((72, 700, "y"))])
     parsed = parse_strict(pdf)

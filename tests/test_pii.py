@@ -36,9 +36,6 @@ CASES = [
     ("peers 1.1.1.1 2.2.2.2 up", "peers [IP] [IP] up"),
     # grouped 3-3-4 phone
     ("fax 555-123-4567.", "fax [PHONE]."),
-    # several kinds in one string: two emails, one phone, one IP
-    ("a@b.io and c@d.org, call 555-123-4567, host 1.2.3.4",
-     "[EMAIL] and [EMAIL], call [PHONE], host [IP]"),
 ]
 
 
@@ -51,6 +48,19 @@ def test_redact_pii_hand_cases(spark):
            df.select("i", redact_pii("t").alias("r")).collect()}
     for i, (_, want) in enumerate(CASES):
         assert got[i] == want, f"case {i}"
+
+
+def test_pii_counts(spark):
+    """Several kinds in one string: each match becomes one typed token."""
+    from docling_pdf_spark.functions.pii import redact_pii
+
+    df = spark.createDataFrame(
+        [("a@b.io and c@d.org, call 555-123-4567, host 1.2.3.4",)], ["t"]
+    )
+    got = df.select(redact_pii("t").alias("r")).collect()[0]["r"]
+    assert got == "[EMAIL] and [EMAIL], call [PHONE], host [IP]"
+    assert (got.count("[EMAIL]"), got.count("[PHONE]"),
+            got.count("[IP]")) == (2, 1, 1)
 
 
 def test_redaction_matches_duckdb_on_corpus(spark):
@@ -125,10 +135,6 @@ SSN_CASES = [
     ("code 123.45.6789 ok", "code 123.45.6789 ok"),
     # back-to-back, single-space separated: pass two picks up #2
     ("pair 123-45-6789 321-54-9876 ok", "pair [SSN] [SSN] ok"),
-    # default mode leaves the aggressive-only kinds (bare NANP run,
-    # IBAN) untouched; AGGRESSIVE_CASES scrubs the same string
-    ("ssn 123-45-6789, call 5551234567, acct DE89370400440532013000",
-     "ssn [SSN], call 5551234567, acct DE89370400440532013000"),
 ]
 
 
@@ -166,8 +172,6 @@ AGGRESSIVE_CASES = [
     ("xDE89370400440532013000 ok", "xDE89370400440532013000 ok"),
     # conservative kinds still work in aggressive mode
     ("mail a@b.io or 1.2.3.4", "mail [EMAIL] or [IP]"),
-    ("ssn 123-45-6789, call 5551234567, acct DE89370400440532013000",
-     "ssn [SSN], call [PHONE], acct [IBAN]"),
 ]
 
 
@@ -228,6 +232,24 @@ def test_aggressive_matches_duckdb_on_corpus(spark):
     ).df().reset_index(drop=True)
     assert len(sdf) == len(ddf) == 500
     assert (sdf["r"] == ddf["r"]).all()
+
+
+def test_pii_counts_new_kinds(spark):
+    """Aggressive mode scrubs SSN, bare NANP run and IBAN, one token
+    each; default mode scrubs only the SSN and leaves the other two."""
+    from docling_pdf_spark.functions.pii import redact_pii
+
+    df = spark.createDataFrame(
+        [("ssn 123-45-6789, call 5551234567, acct DE89370400440532013000",)],
+        ["t"],
+    )
+    row = df.select(redact_pii("t", aggressive=True).alias("a"),
+                    redact_pii("t").alias("d")).collect()[0]
+    assert row["a"] == "ssn [SSN], call [PHONE], acct [IBAN]"
+    assert [row["a"].count(k) for k in ("[SSN]", "[PHONE]", "[IBAN]")] \
+        == [1, 1, 1]
+    assert row["d"] == "ssn [SSN], call 5551234567, acct DE89370400440532013000"
+    assert "[PHONE]" not in row["d"] and "[IBAN]" not in row["d"]
 
 
 def test_curate_redact_pii_aggressive_end_to_end(spark, tmp_path):
