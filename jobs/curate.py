@@ -1,12 +1,25 @@
 """spark-submit entrypoint for the training-data CURATION pipeline —
-the 100 TB use case the operators exist for, chained end to end:
+the 100 TB use case the operators exist for, chained end to end. The
+stages in the order the funnel's stage ledger records them ([] =
+optional), each timed by the Spark action that materializes it:
 
-    extract (interleaved docs → span table, mapInArrow)
-      → quality gates   (JVM expressions: length / token / digit ratio)
-      → exact dedup     (keep lowest doc_id per md5(full_text))
-      → near-dup drop   (MinHash-LSH pairs; drop the higher doc_id of
-                         every pair above the Jaccard-estimate cutoff)
-      → curated parquet + ONE JSON line of funnel counts
+    read_input            the documents parquet
+    extract               interleaved docs → span table (mapInArrow)
+    quality_gates         length / token / digit-ratio (+ Gopher) gates
+    [strip_boilerplate]   CCNet-style corpus-frequent line removal
+    exact_dedup           keep the lowest doc_id per md5(full_text)
+    near_dup_drop         drop the higher doc_id of every near-dup pair
+                          (--cluster-resolve: all but each cluster's min)
+    [decon]               eval-set n-gram anti-join, when a stage below
+                          counts it first
+    [quality_classifier]  learned logistic-regression quality filter
+    [dsir_select]         DSIR top fraction by importance weight
+    [mix_plan]            token-budget mixture plan
+    decon_redact_write    parquet write + whatever is still lazy (decon,
+                          PII redaction, shuffle); mix_select_redact_write
+                          when it also runs the mixture selection
+
+→ curated parquet + ONE JSON line of funnel counts read off the ledger.
 
 Every stage is one of the tested library operators; this job is the
 composition, not new logic. Scale notes: the only Python stage is the
@@ -33,6 +46,21 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 NEAR_DUP_MODES = ("minhash", "winnow", "embedding")
+
+# ledger stage → the funnel key its rows_in − rows_out counts toward;
+# unlisted stages drop no rows. Decon's drop lands in whichever of its two
+# stages ran it; without decon the final write drops nothing, has no key.
+DROP_KEYS = {
+    "extract": "dropped_extraction_failed",
+    "quality_gates": "dropped_quality",
+    "exact_dedup": "dropped_exact_dups",
+    "near_dup_drop": "dropped_near_dups",
+    "decon": "dropped_contaminated",
+    "quality_classifier": "dropped_quality_model",
+    "dsir_select": "dropped_dsir",
+    "decon_redact_write": "dropped_contaminated",
+    "mix_select_redact_write": "dropped_mix_budget",
+}
 
 
 def _dsir_keep_count(n: int, frac: float) -> int:
@@ -77,7 +105,6 @@ def curate(
     shuffle_seed: int | None = None,
     dsir_target: str | None = None,
     dsir_keep_frac: float = 0.5,
-    dsir_hash: str = "fast",
     quality_exemplars: str | None = None,
     quality_threshold: float = 0.5,
 ):
@@ -99,6 +126,7 @@ def curate(
     from pyspark.sql import functions as F
 
     from docling_pdf_spark.functions.text import digit_ratio, token_count
+    from docling_pdf_spark.operators.components import resolve_duplicates
     from docling_pdf_spark.operators.dedup import minhash_lsh_dedup
     from docling_pdf_spark.operators.winnow import winnow_near_dup_pairs
     from docling_pdf_spark.pipeline import extract
@@ -132,15 +160,10 @@ def curate(
         _check_weights(mix_weights)
         if mix_budget < 0:
             raise ValueError(f"mix_budget must be >= 0, got {mix_budget}")
-    if dsir_target is not None:
-        if not (0.0 < dsir_keep_frac <= 1.0):
-            raise ValueError(
-                f"dsir_keep_frac must be in (0, 1], got {dsir_keep_frac}"
-            )
-        if dsir_hash not in ("portable", "fast"):
-            raise ValueError(
-                f"dsir_hash must be portable|fast, got {dsir_hash!r}"
-            )
+    if dsir_target is not None and not (0.0 < dsir_keep_frac <= 1.0):
+        raise ValueError(
+            f"dsir_keep_frac must be in (0, 1], got {dsir_keep_frac}"
+        )
     if quality_exemplars is not None and not (
         0.0 <= quality_threshold <= 1.0
     ):
@@ -189,12 +212,14 @@ def curate(
 
     # per-stage observability (r5 VERDICT #6): Spark is lazy, so each
     # stage's wall time is attributed to the ACTION that materializes
-    # it (the counts the funnel needs anyway). The stages list rides
-    # in the funnel JSON so a 100 TB operator can see which stage
-    # moved without a bench harness.
+    # it (the counts the funnel needs anyway). The stages list is THE
+    # ledger: it rides in the funnel JSON so a 100 TB operator can see
+    # which stage moved without a bench harness, and every funnel count
+    # below is read from it.
     stages: list[dict] = []
 
-    def _stage(name: str, rows_in, action):
+    def _stage(name: str, action):
+        rows_in = stages[-1]["rows_out"] if stages else None
         t = time.perf_counter()
         out = action()
         stages.append(
@@ -214,7 +239,7 @@ def curate(
 
     try:
         docs = spark.read.parquet(input_path)
-        n_input = _stage("read_input", None, docs.count)
+        _stage("read_input", docs.count)
 
         extracted = extract(docs, num_partitions=num_partitions)
         # full_text for the text operators: re-join the text spans (JVM)
@@ -231,7 +256,7 @@ def curate(
         # persist at the extraction boundary: every downstream count and the
         # final write reuse ONE pass of the (dominant-cost) Python UDF stage
         ok = _persist(with_text.where(F.col("extraction_successful")))
-        n_ok = _stage("extract", n_input, ok.count)
+        _stage("extract", ok.count)
         # quality gates — pure codegen predicates on the extracted text
         quality = ok.where(
             (F.col("n_chars") >= min_chars)
@@ -283,7 +308,7 @@ def curate(
                 if v is not None:
                     rep = rep.where(F.col(col) <= v)
             quality = quality.join(rep.select("doc_id"), "doc_id", "left_semi")
-        n_quality = _stage("quality_gates", n_ok, quality.count)
+        _stage("quality_gates", quality.count)
 
         # optional corpus-frequency boilerplate strip (CCNet-style): lines
         # shared by >= N distinct docs are removed from every TEXT SPAN,
@@ -293,14 +318,14 @@ def curate(
         # cookie banner look near-dup), so dedup must see cleaned text.
         # full_text and the char/word metrics are recomputed from the
         # rebuilt spans so the gates' single source of truth stays true.
-        removed_boilerplate = 0
+        extra: dict = {}  # funnel keys that are not row counts
         if strip_boilerplate is not None:
             from docling_pdf_spark.operators.boilerplate import (
                 strip_boilerplate_spans,
             )
 
             def _strip_and_count():
-                nonlocal quality, removed_boilerplate
+                nonlocal quality
                 stripped = strip_boilerplate_spans(
                     quality, min_docs=strip_boilerplate
                 )
@@ -309,15 +334,14 @@ def curate(
                     .withColumn("n_chars", F.length("full_text").cast("long"))
                     .withColumn("n_words", token_count("full_text").cast("long"))
                 )
-                n = quality.count()
-                removed_boilerplate = (
-                    quality.agg(F.sum("n_boilerplate_removed")).collect()[0][0]
-                    or 0
-                )
+                n, removed = quality.agg(
+                    F.count(F.lit(1)), F.sum("n_boilerplate_removed")
+                ).first()
+                extra["removed_boilerplate_lines"] = int(removed or 0)
                 quality = quality.drop("n_boilerplate_removed")
                 return n
 
-            _stage("strip_boilerplate", n_quality, _strip_and_count)
+            _stage("strip_boilerplate", _strip_and_count)
 
         # exact dedup: keep the lexicographically-first doc_id per text hash
         # — one shuffle on the hash (a broadcast keeper list would be
@@ -330,7 +354,7 @@ def curate(
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
-        n_exact = _stage("exact_dedup", n_quality, exact.count)
+        _stage("exact_dedup", exact.count)
 
         # near-dup drop: for every candidate pair, drop doc_b
         # (deterministic: pairs are emitted with doc_a < doc_b)
@@ -385,31 +409,25 @@ def curate(
         def _near_drop_and_count():
             nonlocal curated
             if cluster_resolve:
-                from docling_pdf_spark.operators.components import (
-                    connected_components,
-                )
-
-                cc = connected_components(pairs)
-                drop = cc.where(F.col("id") != F.col("component")).select(
-                    F.col("id").alias("doc_id")
-                )
+                curated = resolve_duplicates(exact, pairs)
             else:
+                # no broadcast hint: on real crawl data near-dup rates hit
+                # 30-50%, so the drop list is O(duplicate docs) — TB-scale
+                # at 100 TB input — and a forced broadcast OOMs the Spark
+                # driver (round-2 ADVICE). AQE picks broadcast on its own
+                # when the built side is measured small.
                 drop = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-            # no broadcast hint: on real crawl data near-dup rates hit
-            # 30-50%, so the drop list is O(duplicate docs) — TB-scale at
-            # 100 TB input — and a forced broadcast OOMs the Spark driver
-            # (round-2 ADVICE). AQE picks broadcast on its own when the
-            # built side is measured small.
+                curated = exact.join(drop, "doc_id", "left_anti")
             # persist + count at the near-dup boundary (always, since r6):
             # the count IS the near_dup stage's timing action, and the
             # persisted set is reused by the decon subtree (both sides) and
             # the final write instead of re-running the pair DAG
             # (review-found in r4 for the decon path; unified here for
             # stage observability)
-            curated = _persist(exact.join(drop, "doc_id", "left_anti"))
+            curated = _persist(curated)
             return curated.count()
 
-        n_after_near = _stage("near_dup_drop", n_exact, _near_drop_and_count)
+        _stage("near_dup_drop", _near_drop_and_count)
 
         # THE whitespace-normalization rule for every gram consumer (decon
         # AND dsir): full_text joins spans with '\n' and exemplar dumps
@@ -428,8 +446,6 @@ def curate(
                     F.lit(0).cast("long").alias("doc_id"),
                     ws_norm(F.col("text")).alias("text"),
                 )
-            from pyspark.sql import Window as _W
-
             # deterministic unique id: monotonically_increasing_id was
             # review-found nondeterministic across the feature/label
             # join's two scans (silent label misalignment). Exemplar sets
@@ -439,7 +455,7 @@ def curate(
                 ws_norm(F.col("text")).alias("text"), F.col("label")
             ).withColumn(
                 "doc_id",
-                F.row_number().over(_W.orderBy("text", "label")).cast("long"),
+                F.row_number().over(Window.orderBy("text", "label")).cast("long"),
             )
 
         if decon_eval:
@@ -461,26 +477,32 @@ def curate(
                 tr_grams.join(F.broadcast(ev_grams), "g").select("doc_id").distinct()
             )
             curated = curated.join(contaminated, "doc_id", "left_anti")
-        decon_attributed = False
 
-        def _count_attributing_decon(df):
-            # the first post-decon counting stage materializes the decon
-            # anti-join — attribute its wall + row drop to a decon stage
-            # exactly once, whoever counts first (classifier/dsir/mix)
-            nonlocal decon_attributed
-            t0 = time.perf_counter()
-            n = df.count()
-            if decon_eval and not decon_attributed:
-                stages.append(
-                    {"stage": "decon",
-                     "wall_s": round(time.perf_counter() - t0, 3),
-                     "rows_in": n_after_near, "rows_out": n}
-                )
-                decon_attributed = True
-            return n
+        def _materialize(df):
+            # persist + count at a selection boundary (classifier, dsir,
+            # mix); the first one after the near-dup stage runs the lazy
+            # decon anti-join, so it closes the `decon` stage
+            df = _persist(df)
+            if decon_eval and stages[-1]["stage"] == "near_dup_drop":
+                _stage("decon", df.count)
+            else:
+                df.count()
+            return df
 
-        n_pre_q = None
-        n_after_q = None
+        def _select(name, keep_ids):
+            # keep the doc_ids keep_ids(survivors, n_survivors) returns;
+            # the narrow keep list is persisted, else the whole scoring DAG
+            # re-executes at the next action (review-found: it ran 2x)
+            base = _materialize(curated)
+
+            def _keep_and_count():
+                nonlocal curated
+                keep = _persist(keep_ids(base, stages[-1]["rows_out"]))
+                curated = base.join(keep, "doc_id", "left_semi")
+                return curated.count()
+
+            _stage(name, _keep_and_count)
+
         if quality_exemplars is not None:
             # learned quality gate (CCNet-style): LR trained on labeled
             # exemplars (parquet with text + label∈{0,1}), scored over the
@@ -490,34 +512,19 @@ def curate(
                 train_quality_classifier,
             )
 
-            qc_cached = _persist(curated)
-            n_pre_q = _count_attributing_decon(qc_cached)
-            t_q = time.perf_counter()
-            model = train_quality_classifier(
-                read_exemplars(quality_exemplars, label=True)
-            )
-            scored = score_quality(
-                qc_cached.select(
-                    "doc_id", ws_norm(F.col("full_text")).alias("text")
-                ),
-                model,
-            )
-            # persist the (narrow) keep list: without it the whole
-            # embed+score DAG re-executes at the next downstream action
-            # (review-found — the costliest new stage was running 2x)
-            qc_keep = _persist(
-                scored.where(F.col("quality_prob") >= quality_threshold)
-                .select("doc_id")
-            )
-            curated = qc_cached.join(qc_keep, "doc_id", "left_semi")
-            n_after_q = curated.count()
-            stages.append(
-                {"stage": "quality_classifier",
-                 "wall_s": round(time.perf_counter() - t_q, 3),
-                 "rows_in": n_pre_q, "rows_out": n_after_q}
-            )
-        n_pre_dsir = None
-        n_after_dsir = None
+            def _quality_keep(base, n):
+                model = train_quality_classifier(
+                    read_exemplars(quality_exemplars, label=True)
+                )
+                scored = score_quality(
+                    base.select("doc_id", ws_norm(F.col("full_text")).alias("text")),
+                    model,
+                )
+                return scored.where(
+                    F.col("quality_prob") >= quality_threshold
+                ).select("doc_id")
+
+            _select("quality_classifier", _quality_keep)
         if dsir_target is not None:
             # DSIR data selection (Xie et al. 2023): score every surviving
             # doc by the hashed-bigram target/raw log-likelihood ratio and
@@ -529,37 +536,23 @@ def curate(
             )
             from docling_pdf_spark.operators.shuffle import global_row_number
 
-            dsir_cached = _persist(curated)
-            n_pre_dsir = _count_attributing_decon(dsir_cached)
-            t_ds = time.perf_counter()
-            raw_txt = dsir_cached.select(
-                "doc_id", ws_norm(F.col("full_text")).alias("text")
-            )
-            tgt = read_exemplars(dsir_target)
-            ratios = dsir_log_ratios(raw_txt, tgt, hash_mode=dsir_hash)
-            w = dsir_weights(raw_txt, ratios, hash_mode=dsir_hash)
-            k = _dsir_keep_count(n_pre_dsir, dsir_keep_frac)
-            ranked = global_row_number(
-                w,
-                [F.col("dsir_logweight").desc(), F.col("doc_id").asc()],
-                out_col="_dsir_rank",
-            )
-            # persist the narrow keep list so the gram+rank DAG doesn't
-            # re-execute at the next downstream action (same review-found
-            # double-execution class as the classifier stage)
-            dsir_keep = _persist(
-                ranked.where(F.col("_dsir_rank") <= k).select("doc_id")
-            )
-            curated = dsir_cached.join(dsir_keep, "doc_id", "left_semi")
-            n_after_dsir = curated.count()
-            stages.append(
-                {"stage": "dsir_select",
-                 "wall_s": round(time.perf_counter() - t_ds, 3),
-                 "rows_in": n_pre_dsir, "rows_out": n_after_dsir}
-            )
+            def _dsir_keep(base, n):
+                raw_txt = base.select(
+                    "doc_id", ws_norm(F.col("full_text")).alias("text")
+                )
+                tgt = read_exemplars(dsir_target)
+                ratios = dsir_log_ratios(raw_txt, tgt, hash_mode="fast")
+                w = dsir_weights(raw_txt, ratios, hash_mode="fast")
+                ranked = global_row_number(
+                    w,
+                    [F.col("dsir_logweight").desc(), F.col("doc_id").asc()],
+                    out_col="_dsir_rank",
+                )
+                k = _dsir_keep_count(n, dsir_keep_frac)
+                return ranked.where(F.col("_dsir_rank") <= k).select("doc_id")
+
+            _select("dsir_select", _dsir_keep)
         curated = curated.drop("full_text")
-        mix_plan_rows = None
-        n_pre_mix = None
         if mix_budget is not None:
             # final stage: token-budget mixture (water-filling over the
             # stratum column; strata absent from the weight table are
@@ -574,31 +567,31 @@ def curate(
             # branch and its cumsum branch all re-read this cache instead
             # of re-running the funnel lineage (review-found: with decon
             # enabled the gram-explosion anti-join was executing ~5x)
-            based = _persist(curated.withColumn(
+            based = _materialize(curated.withColumn(
                 "_stratum",
                 F.coalesce(F.col(mix_stratum).cast("string"), F.lit("unknown")),
             ))
-            n_pre_mix = _count_attributing_decon(based)
-            t_m = time.perf_counter()
-            plan = token_budget_mix(
-                based, mix_weights, mix_budget,
-                stratum_col="_stratum", tokens_col="n_words",
-            )
-            mix_plan_rows = [r.asDict() for r in plan.collect()]
-            # rebuild the (tiny, one-row-per-stratum) plan from the rows
-            # just collected so the two broadcast joins inside
-            # fill_to_allocation don't re-run the plan aggregation
-            plan = spark.createDataFrame(mix_plan_rows, schema=plan.schema)
-            curated = fill_to_allocation(
-                based, plan,
-                stratum_col="_stratum", tokens_col="n_words",
-                id_col="doc_id", order_by=-F.col("n_chars"),
-            ).drop("_stratum")
-            stages.append(
-                {"stage": "mix_plan",
-                 "wall_s": round(time.perf_counter() - t_m, 3),
-                 "rows_in": n_pre_mix, "rows_out": n_pre_mix}
-            )
+
+            def _plan():
+                nonlocal curated
+                plan = token_budget_mix(
+                    based, mix_weights, mix_budget,
+                    stratum_col="_stratum", tokens_col="n_words",
+                )
+                extra["mix_plan"] = [r.asDict() for r in plan.collect()]
+                # rebuild the (tiny, one-row-per-stratum) plan from the rows
+                # just collected so the two broadcast joins inside
+                # fill_to_allocation don't re-run the plan aggregation
+                plan = spark.createDataFrame(extra["mix_plan"], schema=plan.schema)
+                curated = fill_to_allocation(
+                    based, plan,
+                    stratum_col="_stratum", tokens_col="n_words",
+                    id_col="doc_id", order_by=-F.col("n_chars"),
+                ).drop("_stratum")
+                # planning drops nothing; the selection runs at the write
+                return stages[-1]["rows_out"]
+
+            _stage("mix_plan", _plan)
         if redact_pii or redact_pii_aggressive:
             # scrub emails/phones/IPv4s from every span text — one JVM
             # transform over the payload column, applied only to the
@@ -628,68 +621,32 @@ def curate(
         # mix on, decon was already counted at the mix boundary so this is
         # the mixture selection + PII redaction + parquet IO; without mix
         # it is decon (when set) + redaction + IO
-        t_w = time.perf_counter()
-        curated.write.mode("overwrite").parquet(output_path)
-        n_curated = spark.read.parquet(output_path).count()
-        stages.append(
-            {"stage": ("mix_select_redact_write" if mix_budget is not None
-                       else "decon_redact_write"),
-             "wall_s": round(time.perf_counter() - t_w, 3),
-             "rows_in": (n_pre_mix if n_pre_mix is not None
-                         else n_after_dsir if n_after_dsir is not None
-                         else n_after_q if n_after_q is not None
-                         else n_after_near),
-             "rows_out": n_curated}
+        def _write_and_count():
+            curated.write.mode("overwrite").parquet(output_path)
+            return spark.read.parquet(output_path).count()
+
+        _stage(
+            "mix_select_redact_write" if mix_budget is not None
+            else "decon_redact_write",
+            _write_and_count,
         )
+
+        # the funnel counts are read off the ledger, so they always sum:
+        # input = every dropped_* + kept
+        rows_out = {s["stage"]: s["rows_out"] for s in stages}
+        drops: dict[str, int] = {}
+        for s in stages:
+            key = DROP_KEYS.get(s["stage"])
+            if key and (decon_eval or key != "dropped_contaminated"):
+                drops[key] = drops.get(key, 0) + s["rows_in"] - s["rows_out"]
         return {
-            "n_input": n_input,
-            "n_extracted_ok": n_ok,
-            "n_quality": n_quality,
-            "n_after_exact_dedup": n_exact,
-            "n_curated": n_curated,
-            # each funnel stage accounts only for ITS drops, so the numbers
-            # always sum: input = failed + quality-drops + exact + near
-            # (+ contaminated when decon_eval is set) + kept
-            "dropped_extraction_failed": n_input - n_ok,
-            "dropped_quality": n_ok - n_quality,
-            "dropped_exact_dups": n_quality - n_exact,
-            "dropped_near_dups": n_exact - n_after_near,
-            **(
-                {"removed_boilerplate_lines": int(removed_boilerplate)}
-                if strip_boilerplate is not None
-                else {}
-            ),
-            **(
-                # the post-decon count is the first one materialized by a
-                # downstream stage (classifier, dsir, mix, else the final
-                # write), so decon's drop splits cleanly from selections
-                {"dropped_contaminated": n_after_near - (
-                    n_pre_q if n_pre_q is not None
-                    else n_pre_dsir if n_pre_dsir is not None
-                    else n_pre_mix if n_pre_mix is not None
-                    else n_curated
-                )}
-                if decon_eval
-                else {}
-            ),
-            **(
-                {"dropped_quality_model": n_pre_q - n_after_q}
-                if quality_exemplars is not None
-                else {}
-            ),
-            **(
-                {"dropped_dsir": n_pre_dsir - n_after_dsir}
-                if dsir_target is not None
-                else {}
-            ),
-            **(
-                {
-                    "dropped_mix_budget": n_pre_mix - n_curated,
-                    "mix_plan": mix_plan_rows,
-                }
-                if mix_budget is not None
-                else {}
-            ),
+            "n_input": rows_out["read_input"],
+            "n_extracted_ok": rows_out["extract"],
+            "n_quality": rows_out["quality_gates"],
+            "n_after_exact_dedup": rows_out["exact_dedup"],
+            "n_curated": stages[-1]["rows_out"],
+            **drops,
+            **extra,
             "stages": stages,
         }
     finally:
@@ -728,8 +685,8 @@ def _parse_mix_weights(s: str) -> dict[str, int]:
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
+    ap.add_argument("--input", dest="input_path", required=True)
+    ap.add_argument("--output", dest="output_path", required=True)
     ap.add_argument("--min-chars", type=int, default=80)
     ap.add_argument("--min-tokens", type=int, default=10)
     ap.add_argument("--max-digit-ratio", type=float, default=0.3)
@@ -805,10 +762,6 @@ def main(argv: list[str] | None = None) -> int:
                          "log-likelihood ratio (Xie et al. 2023)")
     ap.add_argument("--dsir-keep-frac", type=float, default=0.5,
                     help="fraction of docs the DSIR stage keeps (0,1]")
-    ap.add_argument("--dsir-hash", choices=("portable", "fast"),
-                    default="fast",
-                    help="bucket hash: xxhash64 (fast, production) or "
-                         "md5-low-60 (portable, DuckDB-checkable)")
     ap.add_argument("--quality-exemplars", default=None,
                     help="parquet of labeled exemplars (columns `text`, "
                          "`label` in {0,1}): train a logistic-regression "
@@ -824,61 +777,27 @@ def main(argv: list[str] | None = None) -> int:
     # a dsir tuning flag without --dsir-target would silently run the
     # whole funnel with no DSIR stage — same fail-fast class as the
     # mix_budget/mix_weights pairing (review-found)
-    if args.dsir_target is None and (
-        args.dsir_keep_frac != 0.5 or args.dsir_hash != "fast"
-    ):
-        ap.error("--dsir-keep-frac/--dsir-hash require --dsir-target")
+    if args.dsir_target is None and args.dsir_keep_frac != 0.5:
+        ap.error("--dsir-keep-frac requires --dsir-target")
     if args.quality_exemplars is None and args.quality_threshold != 0.5:
         ap.error("--quality-threshold requires --quality-exemplars")
 
     from docling_pdf_spark.fixtures import write_corpus
     from docling_pdf_spark.session import get_spark
 
-    if args.gen_docs:
-        os.makedirs(os.path.dirname(args.input) or ".", exist_ok=True)
-        write_corpus(args.input, args.gen_docs)
+    # every other flag is one of curate()'s keywords under its own name
+    kwargs = vars(args)
+    if gen_docs := kwargs.pop("gen_docs"):
+        os.makedirs(os.path.dirname(args.input_path) or ".", exist_ok=True)
+        write_corpus(args.input_path, gen_docs)
 
-    spark = get_spark("curate", local_cores=args.local_cores)
+    spark = get_spark("curate", local_cores=kwargs.pop("local_cores"))
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.perf_counter()
-    funnel = curate(
-        spark,
-        args.input,
-        args.output,
-        min_chars=args.min_chars,
-        min_tokens=args.min_tokens,
-        max_digit_ratio=args.max_digit_ratio,
-        jaccard=args.jaccard,
-        num_partitions=args.num_partitions,
-        near_dup=args.near_dup,
-        cluster_resolve=args.cluster_resolve,
-        strip_boilerplate=args.strip_boilerplate,
-        cosine=args.cosine,
-        decon_eval=args.decon_eval,
-        decon_gram_words=args.decon_gram_words,
-        max_dup_line_frac=args.max_dup_line_frac,
-        max_dup_para_frac=args.max_dup_para_frac,
-        max_top_bigram_frac=args.max_top_bigram_frac,
-        max_top_3gram_frac=args.max_top_3gram_frac,
-        max_top_4gram_frac=args.max_top_4gram_frac,
-        max_symbol_word_ratio=args.max_symbol_word_ratio,
-        max_bullet_line_frac=args.max_bullet_line_frac,
-        max_ellipsis_line_frac=args.max_ellipsis_line_frac,
-        redact_pii=args.redact_pii,
-        redact_pii_aggressive=args.redact_pii_aggressive,
-        mix_budget=args.mix_budget,
-        mix_weights=args.mix_weights,
-        mix_stratum=args.mix_stratum,
-        shuffle_seed=args.shuffle_seed,
-        dsir_target=args.dsir_target,
-        dsir_keep_frac=args.dsir_keep_frac,
-        dsir_hash=args.dsir_hash,
-        quality_exemplars=args.quality_exemplars,
-        quality_threshold=args.quality_threshold,
-    )
+    funnel = curate(spark, **kwargs)
     funnel["elapsed_sec"] = round(time.perf_counter() - t0, 3)
     funnel["status"] = "done"
-    funnel["output"] = args.output
+    funnel["output"] = args.output_path
     print(json.dumps(funnel))
     spark.stop()
     return 0

@@ -24,6 +24,22 @@ def _doc(doc_id: str, text: str) -> dict:
     }
 
 
+def _assert_ledger(funnel: dict) -> None:
+    """The stage ledger closes: each stage starts from the previous
+    stage's rows, each dropped_* key is the summed drop of the stages
+    mapped to it, and input minus every drop is the curated count."""
+    from jobs.curate import DROP_KEYS
+
+    stages = funnel["stages"]
+    for prev, s in zip(stages, stages[1:]):
+        assert s["rows_in"] == prev["rows_out"], s
+    dropped = {k: v for k, v in funnel.items() if k.startswith("dropped_")}
+    for key, n in dropped.items():
+        assert n == sum(s["rows_in"] - s["rows_out"] for s in stages
+                        if DROP_KEYS.get(s["stage"]) == key), key
+    assert funnel["n_input"] - sum(dropped.values()) == funnel["n_curated"]
+
+
 def test_curate_funnel_drops_each_planted_offender(spark, tmp_path):
     from jobs.curate import curate
 
@@ -87,16 +103,18 @@ def test_curate_high_dup_corpus_no_forced_broadcast(spark, tmp_path):
     assert funnel["dropped_near_dups"] == 20  # every planted pair collapsed
     assert funnel["n_curated"] == 30
 
-    # no broadcast HINT anywhere in jobs/curate.py's near-dup drop path
-    # (the repo-wide invariant: no unconditional F.broadcast of an
-    # unbounded-cardinality side; grep the source, not the plan — AQE
-    # may legitimately CHOOSE broadcast for this small test corpus)
+    # no broadcast HINT anywhere in the near-dup drop path — jobs/curate.py
+    # and the cluster resolver it calls (the repo-wide invariant: no
+    # unconditional F.broadcast of an unbounded-cardinality side; grep
+    # the source, not the plan — AQE may legitimately CHOOSE broadcast
+    # for this small test corpus)
     import inspect
 
     import jobs.curate as jc
+    from docling_pdf_spark.operators.components import resolve_duplicates
 
-    src_text = inspect.getsource(jc.curate)
-    assert not re.search(r"F\.broadcast\(\s*drop", src_text)
+    src_text = inspect.getsource(jc.curate) + inspect.getsource(resolve_duplicates)
+    assert not re.search(r"F\.broadcast\(\s*(drop|losers)", src_text)
 
 
 def test_curate_winnow_mode_catches_the_near_dup(spark, tmp_path):
@@ -390,6 +408,38 @@ def test_parse_mix_weights_errors():
         _parse_mix_weights("en=5,en=7")
 
 
+def test_cli_forwards_every_flag_to_curate(monkeypatch):
+    """main() passes curate() exactly its keyword parameters, each flag
+    under its own name; the CLI-only --local-cores/--gen-docs stay out.
+    Spark-free: the session factory and curate() are stubbed."""
+    import inspect
+    from types import SimpleNamespace
+
+    import docling_pdf_spark.session as session
+    import jobs.curate as jc
+
+    params = set(list(inspect.signature(jc.curate).parameters)[1:])
+    captured: dict = {}
+
+    def fake_curate(spark, **kwargs):
+        captured.update(kwargs)
+        return {}
+
+    fake_spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(setLogLevel=lambda level: None),
+        stop=lambda: None,
+    )
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: fake_spark)
+    monkeypatch.setattr(jc, "curate", fake_curate)
+    assert jc.main(["--input", "in.parquet", "--output", "out",
+                    "--local-cores", "2", "--mix-budget", "100",
+                    "--mix-weights", "en=1"]) == 0
+    assert set(captured) == params
+    assert captured["input_path"] == "in.parquet"
+    assert captured["output_path"] == "out"
+    assert captured["mix_weights"] == {"en": 1}
+
+
 def test_curate_fails_fast_on_bad_mix_args(spark, tmp_path):
     """Review-found: a bad mix flag must raise BEFORE the funnel runs —
     probe with a nonexistent input path: reaching any Spark action
@@ -483,6 +533,7 @@ def test_curate_decon_plus_mix_stage_attribution(spark, tmp_path):
     w = stages["mix_select_redact_write"]
     assert w["rows_in"] - w["rows_out"] == 1
     assert funnel["n_curated"] == 1
+    _assert_ledger(funnel)
 
 
 def test_curate_shuffle_seed_orders_output(spark, tmp_path):
@@ -584,8 +635,6 @@ def test_curate_dsir_fails_fast_on_bad_args(spark, tmp_path):
     out = str(tmp_path / "o")
     with _pytest.raises(ValueError, match="dsir_keep_frac"):
         curate(spark, missing, out, dsir_target="t", dsir_keep_frac=0.0)
-    with _pytest.raises(ValueError, match="dsir_hash"):
-        curate(spark, missing, out, dsir_target="t", dsir_hash="md5")
 
 
 def test_curate_decon_plus_dsir_attribution(spark, tmp_path):
@@ -628,6 +677,7 @@ def test_curate_decon_plus_dsir_attribution(spark, tmp_path):
     assert stages["dsir_select"]["rows_out"] == 2
     # exactly ONE decon stage despite two downstream counting stages
     assert sum(1 for s in funnel["stages"] if s["stage"] == "decon") == 1
+    _assert_ledger(funnel)
 
 
 def test_curate_kitchen_sink_every_stage_drops_its_offender(spark, tmp_path):
@@ -729,6 +779,7 @@ def test_curate_kitchen_sink_every_stage_drops_its_offender(spark, tmp_path):
     for stage in ("decon", "dsir_select", "mix_plan",
                   "mix_select_redact_write"):
         assert names.count(stage) == 1, stage
+    _assert_ledger(funnel)
 
     kept = spark.read.parquet(out)
     ids = {r.doc_id for r in kept.select("doc_id").collect()}
@@ -783,6 +834,7 @@ def test_curate_quality_classifier_gate(spark, tmp_path):
             + funnel["dropped_quality"] + funnel["dropped_exact_dups"]
             + funnel["dropped_near_dups"] + funnel["dropped_quality_model"]
             + funnel["n_curated"])
+    _assert_ledger(funnel)
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="quality_threshold"):
