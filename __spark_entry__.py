@@ -11,6 +11,8 @@ oracle_sql()  — DuckDB-equivalent SQL for EVERY entry (50/50 —
                 (xxhash64 LSH/SimHash, IVF) via hash materialization —
                 the entry writes its Spark-computed hash artifacts to
                 parquet and generated SQL replays everything downstream.
+Both are projections of one table, _registry(), which also keeps the
+retired entries and their oracles.
 """
 
 from __future__ import annotations
@@ -451,7 +453,7 @@ def _winnow_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     `repetition_stats` (r5 VERDICT next-round #1): it is strictly
     downstream of the still-oracled `winnow_fingerprints`, and the
     identical Spark-vs-DuckDB comparison is pytest-pinned
-    (tests/test_queries_vs_duckdb.py::test_retired_winnow_pairs_portable)."""
+    (tests/test_queries_vs_duckdb.py::test_query_matches_duckdb[winnow_pairs_portable])."""
     from docling_pdf_spark.operators.winnow import winnow_near_dup_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -483,9 +485,16 @@ def _mat_path(sf_dir: str, name: str) -> str:
     reads them back, making everything DOWNSTREAM of the unportable
     hash exactly DuckDB-checkable. Keyed by the sf basename so a bench
     run at sf0.1 cannot clobber the sf0.01 artifacts mid-compare.
-    oracle_sql() derives its read paths through this same helper and
-    _ORACLE_SF."""
+    The oracles derive their read paths through this same helper and
+    _ORACLE_SF (_oracle_glob)."""
     return f"{_MAT_ROOT}/{os.path.basename(os.path.normpath(sf_dir))}/{name}"
+
+
+def _oracle_glob(name: str) -> str:
+    """read_parquet glob of the artifact `name` written at the oracle
+    sf. Each entry writes its artifacts before returning, so the
+    parquet exists by the time its oracle SQL runs."""
+    return f"{_mat_path(_ORACLE_SF, name)}/*.parquet"
 
 
 def _materialize(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
@@ -580,7 +589,7 @@ def _ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ivf_ann_topk_exhaustive` stays registered and proves the same
     assignment/bucket-join machinery PLUS exactness; this approximate
     path's materialized-oracle property is pytest-pinned
-    (tests/test_queries_vs_duckdb.py::test_retired_ivf_ann_topk)."""
+    (tests/test_queries_vs_duckdb.py::test_query_matches_duckdb[ivf_ann_topk])."""
     from pyspark.sql import functions as F
 
     from docling_pdf_spark.operators.similarity import (
@@ -605,6 +614,20 @@ def _ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ivf_cosine_topk(
         assigned, cents, qv, k=10, nprobe=4, sim_round=4, probe_ids=probes,
     )
+
+
+def _ivf_ann_topk_oracle_sql() -> str:
+    """Replays pruned scan + exact cosine + top-k over the Spark-written
+    assignment/probe parquet of _ivf_ann_topk."""
+    return f"""
+WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
+SELECT a.vec_id,
+       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), (SELECT qv FROM q)), 4) AS sim
+FROM read_parquet('{_oracle_glob("ivf_assign")}') a
+WHERE a.bucket IN (SELECT centroid_id FROM read_parquet('{_oracle_glob("ivf_probes")}'))
+ORDER BY sim DESC, vec_id ASC
+LIMIT 10
+"""
 
 
 def _ivf_ann_topk_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -659,6 +682,27 @@ def _embedding_near_dups_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
         sf_dir, "nd_assign_multi",
     )
     return embedding_pairs_from_assigned(assigned, threshold=0.3)
+
+
+def _embedding_near_dups_bucketed_oracle_sql() -> str:
+    """Replays cap + per-bucket join + exact cosine + threshold +
+    cross-bucket pair dedupe over the Spark-written multi-probe
+    assignment of _embedding_near_dups_bucketed."""
+    from docling_pdf_spark.conf import MAX_LSH_BUCKET
+
+    sim = (
+        "round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), "
+        "CAST(b.embedding AS DOUBLE[])), 4)"
+    )
+    return f"""
+WITH capped AS (
+  SELECT * FROM read_parquet('{_oracle_glob("nd_assign_multi")}')
+  QUALIFY count(*) OVER (PARTITION BY bucket) <= {MAX_LSH_BUCKET}
+)
+SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b, {sim} AS cos_sim
+FROM capped a JOIN capped b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+WHERE {sim} >= 0.3
+"""
 
 
 def _multimodal_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -841,194 +885,98 @@ def _token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from docling_pdf_spark.queries import spark_queries
 
-    q = spark_queries()
-    # flagship: full extraction pipeline, exploded to scalars + oracled
-    q["extract_interleaved"] = _extract_interleaved
-    q["extract_page_stats"] = _extract_page_stats
-    q["streaming_windowed_counts"] = _streaming_windowed_counts
-    q["streaming_sessionization"] = _streaming_sessionization
-    # oracled portable variant (generated SQL shares constants/caps
-    # with the Spark plan by construction). simhash_portable retired
-    # round 6 2nd wave (slot freed for spans_audit): the simhash family
-    # stays driver-oracled via the materialized simhash_near_dups below,
-    # and the portable twin's identical Spark-vs-DuckDB comparison is
-    # pytest-pinned (test_retired_simhash_portable).
-    q["minhash_lsh_portable"] = _minhash_lsh_portable
-    # xxhash64/centroid fast paths — exactly oracled since round 4 via
-    # hash materialization (the entry writes the Spark-computed hash
-    # artifacts to parquet; generated SQL replays everything downstream
-    # of the hash). The hash/training itself stays pytest-gated
-    # (LSH recall, IVF recall, subset invariants) and each family is
-    # additionally anchored by its portable oracled twin above.
-    # minhash_lsh_dedup (the xxhash64 fast twin) retired round 6 3rd
-    # wave: the family stays scoreboard-proven by minhash_lsh_portable;
-    # the materialized-hash compare is pytest-pinned
-    # (test_retired_minhash_lsh_dedup).
-    q["simhash_near_dups"] = _simhash_near_dups
-    q["embedding_near_dups_bucketed"] = _embedding_near_dups_bucketed
-    # round-6 3rd-wave promotions: boilerplate strip and the mix
-    # planner take the slots freed by retiring `minhash_lsh_dedup`
-    # (above) and `embedding_near_dups` — the O(n^2)-by-contract exact
-    # all-pairs baseline whose bucketed scale path stays oracled above
-    # and whose plain SQL twin is pytest-pinned
-    # (test_retired_embedding_near_dups).
-    q.pop("embedding_near_dups")
-    q["strip_boilerplate"] = _strip_boilerplate
-    q["token_budget_mix"] = _token_budget_mix
-    # round-6 promotions (r5 VERDICT next-round #1): the two round-5
-    # curation operators take the slots freed by retiring the redundant
-    # `ivf_ann_topk` (exhaustive sibling still registered, approximate
-    # path pytest-pinned) and `winnow_pairs_portable` (downstream of
-    # the still-oracled winnow_fingerprints, pytest-pinned).
-    q["repetition_stats"] = _repetition_stats
-    q["pii_redact"] = _pii_redact
-    # round-6 2nd-wave promotions: the per-source quota cap and the
-    # span-integrity audit take slots freed by retiring `top_orders`
-    # (joins stay proven by resume_anti_join / regional_revenue /
-    # asof_last_purchase, top-k by ann_cosine_topk and the quota cap
-    # itself; pytest-pinned) and `simhash_portable` (above).
-    del q["top_orders"]
-    q["per_source_cap"] = _per_source_cap
-    q["spans_audit"] = _spans_audit
-    # multimodal plumbing through the real mapInPandas kernels, oracled.
-    # Registered BEFORE the exhaustive-probe entry: CORRECTNESS_r04
-    # recorded exactly the first 50 of 51 registered entries (the
-    # last-inserted one was silently absent), so the driver harness
-    # evidently caps at 50 — keep the registry at exactly 50 and put
-    # the least-redundant entries first (r4 VERDICT next-round #1).
-    q["multimodal_byte_histogram"] = _multimodal_byte_histogram
-    # multimodal_thumbnails retired round 6 4th wave (slot freed for
-    # dsir_weights): the mapInPandas plumbing family stays
-    # scoreboard-proven by byte_histogram + frame_index; the
-    # thumbnails compare is pytest-pinned (test_retired_multimodal_
-    # thumbnails).
-    q["multimodal_frame_index"] = _multimodal_frame_index
-    q["dsir_weights"] = _dsir_weights
-    # exhaustive-probe variant: nprobe = n_centroids collapses IVF to
-    # the exact result, so this gets a REAL DuckDB oracle (r2 VERDICT
-    # #2). Its sibling embedding_near_dups_exhaustive was consolidated
-    # out of the driver registry in round 5 to fit the 50-entry cap —
-    # the identical collapse-to-exact machinery is still pytest-gated
-    # (tests/test_operators.py::test_exhaustive_near_dups_is_exact)
-    # and the bucketed variant remains exactly oracled above.
-    q["ivf_ann_topk_exhaustive"] = _ivf_ann_topk_exhaustive
-    assert len(q) <= 50, f"driver caps at 50 correctness entries, got {len(q)}"
-    return q
+
+def _registry() -> dict[str, tuple[Callable[[SparkSession, str], DataFrame], str, bool]]:
+    """Every entry in registration order: name → (query fn,
+    DuckDB oracle SQL, on the scoreboard?). queries() and oracle_sql()
+    project the scoreboard rows, so their keys agree by construction.
+
+    The correctness harness records only the first 50 registered entries
+    (CORRECTNESS_r04 lost the 51st), so the last seven rows are retired
+    from the scoreboard; each one's family stays on it through a
+    sibling row. tests/test_queries_vs_duckdb.py compares every row,
+    retired ones included, against its oracle."""
+    from docling_pdf_spark.functions.pii import redact_pii_oracle_sql
+    from docling_pdf_spark.operators.boilerplate import strip_boilerplate_sql
+    from docling_pdf_spark.operators.dedup import (
+        lsh_materialized_oracle_sql,
+        minhash_lsh_portable_oracle_sql,
+        simhash_materialized_oracle_sql,
+        simhash_portable_oracle_sql,
+    )
+    from docling_pdf_spark.operators.domains import per_source_cap_sql
+    from docling_pdf_spark.operators.dsir import dsir_oracle_sql
+    from docling_pdf_spark.operators.mixer import fill_to_allocation_sql, token_budget_mix_sql
+    from docling_pdf_spark.operators.quality import repetition_stats_sql
+    from docling_pdf_spark.operators.winnow import winnow_pairs_oracle_sql
+    from docling_pdf_spark.queries import CATALOG, SQL_ANN_COSINE_TOPK, SQL_SESSIONIZATION
+
+    retired_catalog_rows = ("top_orders", "embedding_near_dups")
+    scoreboard = {n: row for n, row in CATALOG.items() if n not in retired_catalog_rows}
+    scoreboard.update({
+        "extract_interleaved": (_extract_interleaved, SQL_EXTRACT_INTERLEAVED),
+        "extract_page_stats": (_extract_page_stats, SQL_EXTRACT_PAGE_STATS),
+        "streaming_windowed_counts": (_streaming_windowed_counts, SQL_STREAMING_WINDOWED),
+        # the stateful stream's drained totals equal the batch window
+        # sessionization, so its SQL is the exact oracle
+        "streaming_sessionization": (_streaming_sessionization, SQL_SESSIONIZATION),
+        "minhash_lsh_portable": (
+            _minhash_lsh_portable, minhash_lsh_portable_oracle_sql(threshold=0.3)
+        ),
+        "simhash_near_dups": (
+            _simhash_near_dups,
+            simhash_materialized_oracle_sql(_oracle_glob("simhash_melted"), max_hamming=8),
+        ),
+        "embedding_near_dups_bucketed": (
+            _embedding_near_dups_bucketed, _embedding_near_dups_bucketed_oracle_sql()
+        ),
+        "strip_boilerplate": (_strip_boilerplate, strip_boilerplate_sql(min_docs=3)),
+        "token_budget_mix": (_token_budget_mix, fill_to_allocation_sql(
+            token_budget_mix_sql(_MIX_WEIGHTS, 50_000), order_sql="n_chars DESC"
+        )),
+        "repetition_stats": (_repetition_stats, repetition_stats_sql("documents")),
+        "pii_redact": (_pii_redact, redact_pii_oracle_sql("documents")),
+        "per_source_cap": (_per_source_cap, per_source_cap_sql(cap=7, order_sql="n_chars DESC")),
+        "spans_audit": (_spans_audit, _spans_audit_oracle_sql()),
+        "multimodal_byte_histogram": (_multimodal_byte_histogram, SQL_MULTIMODAL_BYTE_HISTOGRAM),
+        "multimodal_frame_index": (_multimodal_frame_index, SQL_MULTIMODAL_FRAMES),
+        "dsir_weights": (_dsir_weights, dsir_oracle_sql(_DSIR_TARGET_MOD)),
+        # nprobe = n_centroids collapses IVF to brute force, so the
+        # brute-force SQL is the exact oracle
+        "ivf_ann_topk_exhaustive": (_ivf_ann_topk_exhaustive, SQL_ANN_COSINE_TOPK),
+    })
+    retired = {
+        # joins stay on the scoreboard through resume_anti_join,
+        # regional_revenue and asof_last_purchase
+        "top_orders": CATALOG["top_orders"],
+        # O(n^2) by contract; the bucketed scale path stays on it
+        "embedding_near_dups": CATALOG["embedding_near_dups"],
+        # downstream of winnow_fingerprints
+        "winnow_pairs_portable": (
+            _winnow_pairs_portable, winnow_pairs_oracle_sql(min_shared=3, min_containment=0.5)
+        ),
+        # the exhaustive sibling proves the same machinery exactly
+        "ivf_ann_topk": (_ivf_ann_topk, _ivf_ann_topk_oracle_sql()),
+        # the simhash family stays on it through simhash_near_dups
+        "simhash_portable": (_simhash_portable, simhash_portable_oracle_sql(max_hamming=8)),
+        # the fast MinHash twin of minhash_lsh_portable
+        "minhash_lsh_dedup": (
+            _minhash_lsh,
+            lsh_materialized_oracle_sql(_oracle_glob("minhash_melted"), threshold=0.3),
+        ),
+        # the mapInPandas family keeps byte_histogram and frame_index
+        "multimodal_thumbnails": (_multimodal_thumbnails, SQL_MULTIMODAL_THUMBNAILS),
+    }
+    return {
+        **{name: (fn, sql, True) for name, (fn, sql) in scoreboard.items()},
+        **{name: (fn, sql, False) for name, (fn, sql) in retired.items()},
+    }
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {name: fn for name, (fn, _sql, live) in _registry().items() if live}
 
 
 def oracle_sql() -> dict[str, str]:
-    from docling_pdf_spark.queries import duckdb_oracles
-
-    o = duckdb_oracles()
-    from docling_pdf_spark.operators.dedup import minhash_lsh_portable_oracle_sql
-
-    o["extract_interleaved"] = SQL_EXTRACT_INTERLEAVED
-    o["extract_page_stats"] = SQL_EXTRACT_PAGE_STATS
-    o["streaming_windowed_counts"] = SQL_STREAMING_WINDOWED
-    # the stateful stream's drained totals equal the batch window
-    # sessionization, so its existing SQL is the exact oracle
-    from docling_pdf_spark.queries import SQL_SESSIONIZATION
-
-    o["streaming_sessionization"] = SQL_SESSIONIZATION
-    o["minhash_lsh_portable"] = minhash_lsh_portable_oracle_sql(threshold=0.3)
-    # winnow_pairs_portable (r6 1st wave), simhash_portable and
-    # top_orders (r6 2nd wave) retired from the driver registry; their
-    # twin SQLs still gate them in pytest (test_retired_*)
-    o.pop("top_orders")
-    # exhaustive-probe IVF == brute force, so the existing brute-force
-    # SQL is the exact oracle for both entries
-    from docling_pdf_spark.queries import SQL_ANN_COSINE_TOPK
-
-    o["ivf_ann_topk_exhaustive"] = SQL_ANN_COSINE_TOPK
-    # embedding_near_dups_exhaustive consolidated out (50-entry cap);
-    # its SQL twin SQL_EMBEDDING_NEAR_DUPS still oracles the base entry
-    # hash-materialization oracles (r3 VERDICT #3): DuckDB reads the
-    # Spark-written hash artifacts under _MAT_ROOT and replays the
-    # pipeline downstream of the hash. The driver oracles at sf0.01,
-    # and each entry writes its artifacts eagerly before returning, so
-    # the parquet exists by the time the SQL runs.
-    from docling_pdf_spark.operators.dedup import (
-        simhash_materialized_oracle_sql,
-    )
-
-    mat = os.path.dirname(_mat_path(_ORACLE_SF, "x"))
-    # minhash_lsh_dedup retired round 6 3rd wave; its materialized
-    # oracle (lsh_materialized_oracle_sql) still gates it in pytest
-    o["simhash_near_dups"] = simhash_materialized_oracle_sql(
-        f"{mat}/simhash_melted/*.parquet", max_hamming=8
-    )
-    # round-6 3rd-wave promotions (embedding_near_dups retired — its
-    # SQL twin is pytest-pinned; bucketed variant stays oracled)
-    o.pop("embedding_near_dups")
-    from docling_pdf_spark.operators.boilerplate import strip_boilerplate_sql
-    from docling_pdf_spark.operators.mixer import (
-        fill_to_allocation_sql,
-        token_budget_mix_sql,
-    )
-
-    o["strip_boilerplate"] = strip_boilerplate_sql(min_docs=3)
-    o["token_budget_mix"] = fill_to_allocation_sql(
-        token_budget_mix_sql(_MIX_WEIGHTS, 50_000), order_sql="n_chars DESC"
-    )
-    # round-6 4th wave (multimodal_thumbnails retired — its SQL twin
-    # is pytest-pinned; the mapInPandas family keeps 2 driver rows)
-    from docling_pdf_spark.operators.dsir import dsir_oracle_sql
-
-    o["dsir_weights"] = dsir_oracle_sql(_DSIR_TARGET_MOD)
-    # ivf_ann_topk retired round 6; its materialized-oracle SQL lives
-    # in _ivf_ann_topk_oracle_sql() and still gates the approximate
-    # path in pytest (test_retired_ivf_ann_topk)
-    from docling_pdf_spark.conf import MAX_LSH_BUCKET
-
-    _nd_sim = (
-        "round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), "
-        "CAST(b.embedding AS DOUBLE[])), 4)"
-    )
-    o["embedding_near_dups_bucketed"] = f"""
-WITH capped AS (
-  SELECT * FROM read_parquet('{mat}/nd_assign_multi/*.parquet')
-  QUALIFY count(*) OVER (PARTITION BY bucket) <= {MAX_LSH_BUCKET}
-)
-SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b, {_nd_sim} AS cos_sim
-FROM capped a JOIN capped b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-WHERE {_nd_sim} >= 0.3
-"""
-    o["multimodal_byte_histogram"] = SQL_MULTIMODAL_BYTE_HISTOGRAM
-    # multimodal_thumbnails retired round 6 4th wave; its twin
-    # (SQL_MULTIMODAL_THUMBNAILS) gates it in pytest
-    o["multimodal_frame_index"] = SQL_MULTIMODAL_FRAMES
-    # round-6 promotions: both oracles are GENERATED twins sharing
-    # their pattern strings / split regexes with the Spark plans by
-    # construction (operators/quality.py, functions/pii.py)
-    from docling_pdf_spark.operators.quality import repetition_stats_sql
-
-    o["repetition_stats"] = repetition_stats_sql("documents")
-    from docling_pdf_spark.functions.pii import redact_pii_oracle_sql
-
-    o["pii_redact"] = redact_pii_oracle_sql("documents")
-    # round-6 2nd-wave promotions
-    from docling_pdf_spark.operators.domains import per_source_cap_sql
-
-    o["per_source_cap"] = per_source_cap_sql(cap=7, order_sql="n_chars DESC")
-    o["spans_audit"] = _spans_audit_oracle_sql()
-    return o
-
-
-def _ivf_ann_topk_oracle_sql() -> str:
-    """Materialized-artifact oracle SQL for the RETIRED approximate
-    `ivf_ann_topk` entry (round 6): replays pruned scan + exact cosine
-    + top-k over the Spark-written assignment/probe parquet. Used by
-    tests/test_queries_vs_duckdb.py::test_retired_ivf_ann_topk."""
-    mat = os.path.dirname(_mat_path(_ORACLE_SF, "x"))
-    return f"""
-WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0)
-SELECT a.vec_id,
-       round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), (SELECT qv FROM q)), 4) AS sim
-FROM read_parquet('{mat}/ivf_assign/*.parquet') a
-WHERE a.bucket IN (SELECT centroid_id FROM read_parquet('{mat}/ivf_probes/*.parquet'))
-ORDER BY sim DESC, vec_id ASC
-LIMIT 10
-"""
+    return {name: sql for name, (_fn, sql, live) in _registry().items() if live}

@@ -118,10 +118,9 @@ def _simhash_portable(spark, sf_dir):
 # as the winnow pair already did in round 3; the production plan a
 # 100 TB run would use is the *_fast member of each pair.
 def _text_embedding_d1024(spark, sf_dir):
-    # the >64-dim map-rebuild branch (two exchanges, O(1)/token) — the
-    # branch a real model-dim (768–4096) pipeline would exercise; the
-    # ≤64 hashing-trick branch is timed implicitly inside the curate
-    # funnel (r4 VERDICT next-round #4)
+    # the embedder at a model-like dim (real models use 768–4096); the
+    # same single Arrow kernel serves every dim
+    # (functions/arrowhash.text_embedding_arrow)
     from docling_pdf_spark.operators.similarity import text_embedding
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -129,9 +128,9 @@ def _text_embedding_d1024(spark, sf_dir):
 
 
 def _repetition_stats(spark, sf_dir):
-    # Gopher-style repetition signals — round 6 widened the default
-    # set to dup-line/dup-para/top-{2,3,4}-gram (two more explode+agg
-    # passes than the r5 three-signal row; still JVM-only)
+    # Gopher-style repetition signals — dup-line/dup-para/top-{2,3,4}-gram,
+    # all five in one narrow Arrow kernel
+    # (functions/arrowhash.repetition_stats_arrow)
     from docling_pdf_spark.operators.quality import repetition_stats
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")

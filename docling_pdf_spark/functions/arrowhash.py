@@ -30,7 +30,7 @@ NOT Python's Unicode \\s; substr counts code points — Python slicing
 matches because both count code points). Every kernel is pinned
 against its DuckDB twin by the existing oracle tests.
 
-All eight kernels share one scaffold, `_doc_kernel`: it owns the
+All seven kernels share one scaffold, `_doc_kernel`: it owns the
 unsplittable-scan spread, the output schema, the NULL-text skip, the
 id `take`, the optional explode and the single `mapInArrow` call, so
 each public kernel is just its per-document function.
@@ -56,6 +56,13 @@ def md5_low60(data: bytes) -> int:
     """Exact Python twin of functions.hashing.portable_hash60 (and the
     DuckDB PORTABLE_HASH60_SQL expression) over raw bytes."""
     return int.from_bytes(_md5(data).digest()[8:16], "big") & _MASK60
+
+
+def md5_low60_strings(strs: list[str]):
+    """uint64 md5_low60 of each string's UTF-8 bytes."""
+    return np.fromiter(
+        (md5_low60(s.encode("utf-8")) for s in strs), dtype=np.uint64, count=len(strs)
+    )
 
 
 _CHUNK = 65536  # rows per transient matrix in _bit_votes / _minhash_doc
@@ -232,24 +239,24 @@ def _tokens(t: str) -> list[str]:
     return [w for w in _JAVA_WS.split(t) if w != ""]
 
 
-def simhash_fingerprints_portable_arrow(docs, n_bits, id_col, text_col):
-    """(id, simhash) — twin of operators.dedup
-    .simhash_fingerprints_portable: per-token md5_low60, each of the low
-    n_bits votes ±1 (multiplicity kept), bit set iff vote sum > 0. Docs
-    whose tokenization yields only empty strings emit no row."""
+def simhash_fingerprints_arrow(docs, token_hashes, n_bits, id_col, text_col):
+    """(id, simhash) — one narrow Arrow stage for both SimHash forms in
+    operators.dedup: `token_hashes` maps a doc's tokens to uint64
+    hashes (md5_low60_strings for the portable 60-bit form,
+    xxh64_strings for the fast 64-bit one); each of the low n_bits
+    votes ±1 (multiplicity kept), bit set iff vote sum > 0, and the
+    fingerprint is read as a signed long. Docs whose tokenization yields
+    only empty strings emit no row. Replaces explode(tokens) →
+    groupBy(id) with n_bits sum() aggregates per token row."""
     bit_idx = np.arange(n_bits, dtype=np.uint64)
 
     def doc(t):
         toks = _tokens(t)
         if not toks:
             return None
-        hs = np.fromiter(
-            (md5_low60(w.encode("utf-8")) for w in toks),
-            dtype=np.uint64,
-            count=len(toks),
-        )
-        votes = 2 * _bit_votes(hs, bit_idx) - len(toks)
-        return (int(((votes > 0).astype(np.uint64) << bit_idx).sum()),)
+        votes = 2 * _bit_votes(token_hashes(toks), bit_idx) - len(toks)
+        fp = ((votes > 0).astype(np.uint64) << bit_idx).sum(dtype=np.uint64)
+        return (int(fp.view(np.int64)),)
 
     return _doc_kernel(docs, id_col, text_col, [_long("simhash")], doc)
 
@@ -261,10 +268,11 @@ _RE_PARA = re.compile(r"\n{2,}")
 
 
 def _dup_frac_py(units):
-    """Python twin of quality._dup_fraction's per-doc aggregate: share
-    of non-blank units (Spark trim == strip of 0x20 only) whose value
-    occurs 2+ times; None when no unit qualifies (the JVM groupBy
-    emitted no row → LEFT JOIN null → coalesce downstream)."""
+    """Python twin of the per-doc dup-line/dup-para aggregate in
+    quality.repetition_stats_sql: share of non-blank units (Spark trim
+    == strip of 0x20 only) whose value occurs 2+ times; None when no
+    unit qualifies (the SQL groupBy emits no row → LEFT JOIN null →
+    coalesce downstream)."""
     counts: dict[str, int] = {}
     for u in units:
         if u.strip(" ") != "":
@@ -471,25 +479,6 @@ def xxh64_strings(strs: list[str], seed: int = 42):
         mat = np.frombuffer(b"".join(bs), dtype=np.uint8).reshape(len(bs), L)
         out[idx] = _xxh64_fixed_len(mat, seed)
     return out
-
-
-def simhash_fingerprints_fast_arrow(docs, id_col, text_col):
-    """(id, simhash) — twin of the JVM simhash_fingerprints (fast
-    xxhash64 mode): per-token 64-bit hash, each bit votes ±1
-    (multiplicity kept), bit set iff vote sum > 0. One narrow Arrow
-    stage instead of explode(tokens) → groupBy(id) with 64 sum()
-    aggregates (64 aggregate-buffer updates per token row)."""
-    bit_idx = np.arange(64, dtype=np.uint64)
-
-    def doc(t):
-        toks = _tokens(t)
-        if not toks:
-            return None
-        votes = 2 * _bit_votes(xxh64_strings(toks), bit_idx) - len(toks)
-        fp = ((votes > 0).astype(np.uint64) << bit_idx).sum(dtype=np.uint64)
-        return (int(fp.view(np.int64)),)
-
-    return _doc_kernel(docs, id_col, text_col, [_long("simhash")], doc)
 
 
 def _xxh64_int_lane(seeds, i: int):

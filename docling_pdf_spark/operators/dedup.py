@@ -532,10 +532,11 @@ def simhash_fingerprints(
     64 aggregate-buffer updates per token row through an
     explode → groupBy shuffle."""
     from docling_pdf_spark.functions.arrowhash import (
-        simhash_fingerprints_fast_arrow,
+        simhash_fingerprints_arrow,
+        xxh64_strings,
     )
 
-    return simhash_fingerprints_fast_arrow(docs, id_col, text_col)
+    return simhash_fingerprints_arrow(docs, xxh64_strings, 64, id_col, text_col)
 
 
 def _simhash_fingerprints_jvm(
@@ -583,11 +584,12 @@ def simhash_fingerprints_portable(
     per-token shuffle and the 60-aggregate state are gone entirely
     (guide §4.2)."""
     from docling_pdf_spark.functions.arrowhash import (
-        simhash_fingerprints_portable_arrow,
+        md5_low60_strings,
+        simhash_fingerprints_arrow,
     )
 
-    return simhash_fingerprints_portable_arrow(
-        docs, SIMHASH_PORTABLE_BITS, id_col, text_col
+    return simhash_fingerprints_arrow(
+        docs, md5_low60_strings, SIMHASH_PORTABLE_BITS, id_col, text_col
     )
 
 

@@ -10,11 +10,9 @@ self-repetition:
                                    by the single most frequent n-gram
                                    (3/4-gram widths added round 6)
 
-All are pure JVM DataFrame ops: explode → two-level hash
-aggregation (partial+final, map-side combine) → one shuffle on the
-doc id per signal family. No Python, no UDFs — at 100 TB the cost is
-the same explode/agg shape as the n-gram dedup pass, and the final
-join of the signal tables is co-partitioned on the id hash.
+All are within-document statistics, computed in one narrow Arrow
+stage (functions/arrowhash.repetition_stats_arrow) with no shuffle;
+repetition_stats_sql is their DuckDB twin.
 
 Round 6 adds the LINE-SHAPE family (also MassiveText appendix A):
 symbol-to-word ratio and bullet/ellipsis line fractions — pure
@@ -31,24 +29,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _dup_fraction(
-    docs: DataFrame, id_col: str, unit: F.Column, out: str
-) -> DataFrame:
-    """fraction of unit-instances (lines / paragraphs) that belong to a
-    unit-value occurring 2+ times within the doc. Empty/whitespace
-    units are not counted on either side."""
-    units = docs.select(
-        F.col(id_col), F.explode(unit).alias("u")
-    ).where(F.trim(F.col("u")) != "")
-    per_value = units.groupBy(id_col, "u").agg(F.count("*").alias("c"))
-    return per_value.groupBy(id_col).agg(
-        (
-            F.sum(F.when(F.col("c") >= 2, F.col("c")).otherwise(F.lit(0)))
-            / F.sum("c")
-        ).alias(out)
-    )
 
 
 ALL_SIGNALS = (

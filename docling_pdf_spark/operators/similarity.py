@@ -17,8 +17,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from docling_pdf_spark.functions.vectors import dot as _dot
-from docling_pdf_spark.functions.vectors import l2_norm as _norm
+from docling_pdf_spark.functions.vectors import cosine_similarity
+
+
+def _centroid_array(centroids: DataFrame) -> DataFrame:
+    """One row, `cents`: every (centroid_id, c array<double>) struct —
+    broadcast-crossJoined onto the vectors by the assigners."""
+    return centroids.select(
+        F.array_agg(
+            F.struct(
+                F.col("centroid_id"), F.col("centroid").cast("array<double>").alias("c")
+            )
+        ).alias("cents")
+    )
 
 
 def ivf_assign(
@@ -32,22 +43,15 @@ def ivf_assign(
     centroids: (centroid_id, centroid) — small, broadcast. The argmax
     is a JVM-side array_max over a transformed centroid array after a
     broadcast crossJoin with the collected centroid list."""
-    cent = centroids.select(
-        F.array_agg(
-            F.struct(
-                F.col("centroid_id"), F.col("centroid").cast("array<double>").alias("c")
-            )
-        ).alias("cents")
-    )
     v = F.col(vec_col).cast("array<double>")
-    scored = vectors.crossJoin(F.broadcast(cent)).select(
+    scored = vectors.crossJoin(F.broadcast(_centroid_array(centroids))).select(
         F.col(id_col),
         F.col(vec_col),
         F.array_max(
             F.transform(
                 F.col("cents"),
                 lambda s: F.struct(
-                    (_dot(v, s["c"]) / (_norm(v) * _norm(s["c"]))).alias("sim"),
+                    cosine_similarity(v, s["c"]).alias("sim"),
                     s["centroid_id"].alias("centroid_id"),
                 ),
             )
@@ -273,13 +277,6 @@ def ivf_assign_multi(
     buckets (one output row per (vector, bucket)). Raises near-dup
     recall for pairs that straddle a bucket boundary at the cost of an
     nprobe× row expansion — the standard IVF multi-probe trade."""
-    cent = centroids.select(
-        F.array_agg(
-            F.struct(
-                F.col("centroid_id"), F.col("centroid").cast("array<double>").alias("c")
-            )
-        ).alias("cents")
-    )
     v = F.col(vec_col).cast("array<double>")
     # sort ascending on -sim → top-nprobe by similarity; ties by id
     ranked = F.slice(
@@ -287,7 +284,7 @@ def ivf_assign_multi(
             F.transform(
                 F.col("cents"),
                 lambda s: F.struct(
-                    (-(_dot(v, s["c"]) / (_norm(v) * _norm(s["c"])))).alias("neg_sim"),
+                    (-cosine_similarity(v, s["c"])).alias("neg_sim"),
                     s["centroid_id"].alias("centroid_id"),
                 ),
             )
@@ -296,7 +293,7 @@ def ivf_assign_multi(
         nprobe,
     )
     return (
-        vectors.crossJoin(F.broadcast(cent))
+        vectors.crossJoin(F.broadcast(_centroid_array(centroids)))
         .select(F.col(id_col), F.col(vec_col), F.explode(ranked).alias("p"))
         .select(id_col, vec_col, F.col("p.centroid_id").alias("bucket"))
     )
@@ -314,7 +311,7 @@ def rank_probes(
     return [
         r["centroid_id"]
         for r in centroids.select(
-            "centroid_id", (_dot(c, q) / (_norm(c) * _norm(q))).alias("sim")
+            "centroid_id", cosine_similarity(c, q).alias("sim")
         )
         .orderBy(F.desc("sim"), F.asc("centroid_id"))
         .limit(nprobe)
@@ -349,7 +346,7 @@ def ivf_cosine_topk(
         probe_ids = rank_probes(centroids, query_vec, nprobe)
     q = F.lit(query_vec).cast("array<double>")
     v = F.col(vec_col).cast("array<double>")
-    sim = _dot(v, q) / (_norm(v) * _norm(q))
+    sim = cosine_similarity(v, q)
     return (
         assigned.where(F.col("bucket").isin(probe_ids))
         .select(F.col(id_col), F.round(sim, sim_round).alias("sim"))

@@ -349,7 +349,6 @@ def run_extraction(
     num_partitions: int | None = None,
     buckets_per_commit: int | None = None,
     input_snapshot: str | None = None,
-    fail_after_commits: int | None = None,
     salt_mode: str = "auto",
 ) -> ProgressLog:
     """Checkpointed batch extraction with per-bucket resume.
@@ -362,9 +361,6 @@ def run_extraction(
 
     k commit groups cost 1 + k Spark queries: one planning aggregate
     (_planning_aggregate), then one observed write per group.
-
-    fail_after_commits: test hook — raise after N commit groups to
-    simulate a mid-job crash (kill-and-resume test, SURVEY.md §5.2.4).
     """
     _check_salt_mode(salt_mode)
     log = ProgressLog(checkpoint_dir)
@@ -412,7 +408,7 @@ def run_extraction(
     groups = [pending[i : i + group_size] for i in range(0, len(pending), group_size)]
     heavy = salt_mode == "heavy" and bool(num_partitions)
 
-    for gi, group in enumerate(groups):
+    for group in groups:
         started = _utcnow_iso()
         sub = docs.where(F.col("bucket").isin(group)).drop("bucket")
         if heavy:
@@ -471,8 +467,6 @@ def run_extraction(
                     finished_at=finished,
                 )
             )
-        if fail_after_commits is not None and gi + 1 >= fail_after_commits:
-            raise RuntimeError(f"injected failure after {gi + 1} commit group(s)")
     return log
 
 

@@ -2,7 +2,6 @@
 'explain until it's the plan you'd want' discipline)."""
 
 from docling_pdf_spark.plans.inspect import (  # noqa: F401
-    executed_plan,
     formatted_plan,
     plan_report,
 )

@@ -13,13 +13,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def executed_plan(df: DataFrame) -> str:
-    """The post-AQE executed plan; triggers execution if needed.
-    '*(n)' prefixes mark whole-stage-codegen spans."""
-    df.collect()
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def plan_report(df: DataFrame) -> dict[str, bool | int | list[str]]:
     """Quick scorecard of the properties that matter at scale."""
     plan = formatted_plan(df)

@@ -1220,8 +1220,8 @@ GROUP BY gr.doc_id
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# name → (spark_fn, duckdb_oracle_sql | None for rows-only ops)
-CATALOG: dict[str, tuple[QueryFn, str | None]] = {
+# name → (spark_fn, duckdb_oracle_sql)
+CATALOG: dict[str, tuple[QueryFn, str]] = {
     "admission_filter": (q_admission_filter, SQL_ADMISSION),
     "doc_aggregates": (q_doc_aggregates, SQL_DOC_AGGREGATES),
     "pagination_50": (q_pagination_50, SQL_PAGINATION_50),
@@ -1262,7 +1262,3 @@ CATALOG: dict[str, tuple[QueryFn, str | None]] = {
 
 def spark_queries() -> dict[str, QueryFn]:
     return {name: fn for name, (fn, _sql) in CATALOG.items()}
-
-
-def duckdb_oracles() -> dict[str, str]:
-    return {name: sql for name, (_fn, sql) in CATALOG.items() if sql is not None}

@@ -13,16 +13,11 @@ sandbox has no network, so the Iceberg runtime jar cannot be fetched
     partitioned parquet + dynamic partition overwrite + the atomic-
     rename manifest protocol (docling_pdf_spark.checkpoint).
 
-Same interface either way; the pipeline never branches on the mode.
-
-Cluster bootstrap for iceberg mode (documented, not runnable here):
-
-    spark-submit --py-files dist/docling_pdf_spark.zip \
-      --packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver> \
-      --conf spark.sql.catalog.lake=org.apache.iceberg.spark.SparkCatalog \
-      --conf spark.sql.catalog.lake.type=hadoop \
-      --conf spark.sql.catalog.lake.warehouse=<warehouse-uri> \
-      jobs/extract.py --io-mode iceberg ...
+No job reads or writes through TableIO yet: the jobs write
+partitioned parquet through idempotent_partition_overwrite, which the
+parquet mode also uses. The iceberg mode waits for an Iceberg runtime
+jar in the repository; until one is on the classpath,
+tests/test_iceberg_integration.py skips.
 """
 
 from __future__ import annotations
@@ -52,15 +47,15 @@ def file_fingerprint(path: str) -> str:
 def idempotent_partition_overwrite(
     df: "DataFrame", partition_cols: list[str], path: str
 ) -> None:
-    """THE overwrite-safe write both the batch job and the streaming
-    foreachBatch sink use: pins partitionOverwriteMode=dynamic on this
-    WRITE ONLY via the DataFrameWriter option (a default 'static' write
-    would truncate the whole output path and delete committed
-    partitions — round-1 ADVICE), then replaces exactly the partitions
-    present in df. Round-2 ADVICE: setting the session conf here leaked
-    dynamic semantics into every later mode('overwrite') write on the
-    shared session; the writer-scoped option leaves session state
-    untouched."""
+    """THE overwrite-safe write the batch job, the streaming
+    foreachBatch sink and TableIO's parquet mode use: pins
+    partitionOverwriteMode=dynamic on this WRITE ONLY via the
+    DataFrameWriter option (a default 'static' write would truncate the
+    whole output path and delete committed partitions — round-1
+    ADVICE), then replaces exactly the partitions present in df.
+    Round-2 ADVICE: setting the session conf here leaked dynamic
+    semantics into every later mode('overwrite') write on the shared
+    session; the writer-scoped option leaves session state untouched."""
     (
         df.write.option("partitionOverwriteMode", "dynamic")
         .partitionBy(*partition_cols)
@@ -122,14 +117,7 @@ class TableIO:
                 return
             df.writeTo(full).overwritePartitions()
             return
-        # dynamic overwrite scoped to this write (writer option, not
-        # session conf) so only the partitions present in df are replaced
-        (
-            df.write.option("partitionOverwriteMode", "dynamic")
-            .partitionBy(partition_col)
-            .mode("overwrite")
-            .parquet(self._path(table))
-        )
+        idempotent_partition_overwrite(df, [partition_col], self._path(table))
 
     def merge_progress(self, updates: DataFrame, table: str = "_progress") -> None:
         """Checkpoint upsert. Iceberg: a real MERGE INTO on partition_id

@@ -74,11 +74,11 @@ def _canon_frame(df: pd.DataFrame) -> list[tuple[str, ...]]:
 
 
 def _all_pairs():
+    """Every registry row, the seven retired from the scoreboard
+    included: the same compare the correctness harness runs."""
     import __spark_entry__ as se
 
-    q = se.queries()
-    o = se.oracle_sql()
-    return [(name, q[name], o[name]) for name in sorted(o)]
+    return [(name, fn, sql) for name, (fn, sql, _live) in sorted(se._registry().items())]
 
 
 def _assert_matches(spark, name, fn, sql):
@@ -98,109 +98,6 @@ def _assert_matches(spark, name, fn, sql):
 @pytest.mark.parametrize("name,fn,sql", _all_pairs(), ids=lambda p: p if isinstance(p, str) else "")
 def test_query_matches_duckdb(spark, name, fn, sql):
     _assert_matches(spark, name, fn, sql)
-
-
-def test_retired_winnow_pairs_portable(spark):
-    """Pin for the entry RETIRED from the driver registry in round 6
-    (slot freed for repetition_stats): the whole pair pipeline —
-    bucket cap, shared-count join, Broder containment — stays exactly
-    DuckDB-checked here, same compare the driver runs."""
-    import __spark_entry__ as se
-    from docling_pdf_spark.operators.winnow import winnow_pairs_oracle_sql
-
-    _assert_matches(
-        spark, "winnow_pairs_portable", se._winnow_pairs_portable,
-        winnow_pairs_oracle_sql(min_shared=3, min_containment=0.5),
-    )
-
-
-def test_retired_ivf_ann_topk(spark):
-    """Pin for the approximate-IVF entry RETIRED from the driver
-    registry in round 6 (slot freed for pii_redact): the entry still
-    writes its assignment/probe artifacts at the oracle sf and the
-    materialized SQL replays pruned scan + exact cosine + top-k —
-    exactly as the driver checked it in rounds 4-5."""
-    import __spark_entry__ as se
-
-    _assert_matches(
-        spark, "ivf_ann_topk", se._ivf_ann_topk, se._ivf_ann_topk_oracle_sql()
-    )
-
-
-def test_retired_simhash_portable(spark):
-    """Pin for the portable-simhash entry RETIRED in round 6 2nd wave
-    (slot freed for spans_audit): the end-to-end portable hash +
-    pigeonhole chunk + hamming filter stays exactly DuckDB-checked
-    here; the family's fast path stays ON the scoreboard via the
-    materialized simhash_near_dups entry."""
-    import __spark_entry__ as se
-    from docling_pdf_spark.operators.dedup import simhash_portable_oracle_sql
-
-    _assert_matches(
-        spark, "simhash_portable", se._simhash_portable,
-        simhash_portable_oracle_sql(max_hamming=8),
-    )
-
-
-def test_retired_top_orders(spark):
-    """Pin for the TPC-H-ish join entry RETIRED in round 6 2nd wave
-    (slot freed for per_source_cap): joins stay scoreboard-proven by
-    resume_anti_join / regional_revenue / asof_last_purchase."""
-    from docling_pdf_spark.queries import CATALOG
-
-    fn, sql = CATALOG["top_orders"]
-    _assert_matches(spark, "top_orders", fn, sql)
-
-
-def test_retired_minhash_lsh_dedup(spark):
-    """Pin for the xxhash64 fast MinHash-LSH entry RETIRED in round 6
-    3rd wave (slot freed for strip_boilerplate): the entry still writes
-    its banded-signature artifacts and the materialized SQL replays cap
-    + bucket join + pair dedupe + Jaccard threshold — the identical
-    compare the driver ran in rounds 4-6. The family stays ON the
-    scoreboard via minhash_lsh_portable."""
-    import os
-
-    import __spark_entry__ as se
-    from docling_pdf_spark.operators.dedup import lsh_materialized_oracle_sql
-
-    mat = os.path.dirname(se._mat_path(se._ORACLE_SF, "x"))
-    _assert_matches(
-        spark, "minhash_lsh_dedup", se._minhash_lsh,
-        lsh_materialized_oracle_sql(
-            f"{mat}/minhash_melted/*.parquet", threshold=0.3
-        ),
-    )
-
-
-def test_retired_embedding_near_dups(spark):
-    """Pin for the exact all-pairs cosine baseline RETIRED in round 6
-    3rd wave (slot freed for token_budget_mix): O(n^2) by contract, so
-    it was excluded from the scale sweep anyway; the bucketed scale
-    path stays driver-oracled and exhaustive==exact stays pinned in
-    test_operators."""
-    from docling_pdf_spark.queries import (
-        SQL_EMBEDDING_NEAR_DUPS,
-        q_embedding_near_dups,
-    )
-
-    _assert_matches(
-        spark, "embedding_near_dups", q_embedding_near_dups,
-        SQL_EMBEDDING_NEAR_DUPS,
-    )
-
-
-def test_retired_multimodal_thumbnails(spark):
-    """Pin for the thumbnail entry RETIRED in round 6 4th wave (slot
-    freed for dsir_weights): the mapInPandas resize kernel stays
-    exactly DuckDB-checked here; the family keeps byte_histogram +
-    frame_index on the scoreboard."""
-    import __spark_entry__ as se
-
-    _assert_matches(
-        spark, "multimodal_thumbnails", se._multimodal_thumbnails,
-        se.SQL_MULTIMODAL_THUMBNAILS,
-    )
 
 
 def test_entry_smoke(spark):
@@ -235,12 +132,3 @@ def test_registry_fits_driver_cap():
     assert "per_source_cap" in o and "spans_audit" in o
     assert "simhash_portable" not in q and "top_orders" not in q
 
-
-def test_rows_only_queries_run(spark):
-    import __spark_entry__ as se
-
-    q = se.queries()
-    o = se.oracle_sql()
-    for name in set(q) - set(o):
-        n = q[name](spark, SF_DIR).count()
-        assert n >= 0, name

@@ -26,15 +26,32 @@ def corpus(tmp_path_factory):
     return path
 
 
-def test_kill_and_resume_idempotent(spark, corpus, tmp_path):
+def _fail_third_group_write(monkeypatch):
+    """Crash run_extraction mid-job: the third commit group's write
+    raises, so two groups are committed and the third is not written."""
+    import docling_pdf_spark.sources.io as sio
+
+    real_write = sio.idempotent_partition_overwrite
+    paths = []
+
+    def failing_write(df, partition_cols, path):
+        paths.append(path)
+        if len(paths) == 3:
+            raise RuntimeError("injected failure")
+        real_write(df, partition_cols, path)
+
+    monkeypatch.setattr(sio, "idempotent_partition_overwrite", failing_write)
+
+
+def test_kill_and_resume_idempotent(spark, corpus, tmp_path, monkeypatch):
     out = str(tmp_path / "extracted")
     ckpt = str(tmp_path / "ckpt")
 
     # first run dies after 2 commit groups (4 of 8 buckets done)
-    with pytest.raises(RuntimeError, match="injected failure"):
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="injected failure"):
+        _fail_third_group_write(m)
         run_extraction(
-            spark, corpus, out, ckpt,
-            n_buckets=N_BUCKETS, buckets_per_commit=2, fail_after_commits=2,
+            spark, corpus, out, ckpt, n_buckets=N_BUCKETS, buckets_per_commit=2,
         )
     log = ProgressLog(ckpt)
     done_first = log.done_buckets()
@@ -246,7 +263,9 @@ def test_heavy_exchange_sized_per_commit_group(spark, uneven_corpus, tmp_path, m
         assert ("SinglePartition" in plan) == (gathered or g == 1)
 
 
-def test_uneven_giants_kill_resume_equals_oracle(spark, uneven_corpus, tmp_path):
+def test_uneven_giants_kill_resume_equals_oracle(
+    spark, uneven_corpus, tmp_path, monkeypatch
+):
     """Heavy mode on giants spread unevenly over buckets, killed after two
     commit groups and resumed: every bucket is committed exactly once, and
     the output and per-bucket manifests equal the serial oracle's."""
@@ -260,8 +279,9 @@ def test_uneven_giants_kill_resume_equals_oracle(spark, uneven_corpus, tmp_path)
     ckpt = str(tmp_path / "ckpt")
     kw = dict(n_buckets=N_BUCKETS, buckets_per_commit=2,
               num_partitions=HEAVY_PARTITIONS, salt_mode="heavy")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_extraction(spark, uneven_corpus, out, ckpt, fail_after_commits=2, **kw)
+    with monkeypatch.context() as m, pytest.raises(RuntimeError, match="injected failure"):
+        _fail_third_group_write(m)
+        run_extraction(spark, uneven_corpus, out, ckpt, **kw)
     done_first = ProgressLog(ckpt).done_buckets()
     assert done_first == {0, 1, 2, 3}
     mtimes = {
