@@ -11,9 +11,11 @@ Spark-first shape:
   - Training: `pyspark.ml` LogisticRegression — distributed L-BFGS
     over the (small) labeled set; the fitted model is a coefficient
     vector that ships to executors as a broadcast.
-  - Scoring: `model.transform` is a single JVM projection (dot
-    product + sigmoid) — at 100 TB this runs at scan speed after the
-    embedding aggregation; no Python stage anywhere.
+  - Scoring: sigmoid(intercept + w·x) as one JVM projection built
+    from the fitted coefficients — at 100 TB this runs at scan speed
+    after the embedding kernel. The model object itself never ships:
+    its training summary holds the SparkSession, which stops
+    serializing once the session has run an observed action.
 
 Correctness posture: training is an iterative optimization — not
 SQL-expressible, so (like IVF k-means) it is pytest-gated on planted
@@ -43,7 +45,7 @@ def _featurize(
 ) -> DataFrame:
     """(id, features ml-vector) via the deterministic hashing-trick
     embedder. Docs whose text has no tokens (zero norm) are excluded —
-    callers decide their fate (train: skip; score: default prob)."""
+    training skips them (score_quality gives them the model's prior)."""
     from pyspark.ml.functions import array_to_vector
 
     from docling_pdf_spark.operators.similarity import text_embedding
@@ -113,17 +115,19 @@ def score_quality(
     silent hard-reject (review-found)."""
     import math
 
-    from pyspark.ml.functions import vector_to_array
+    from docling_pdf_spark.operators.similarity import text_embedding
 
-    prior = 1.0 / (1.0 + math.exp(-float(model.intercept)))
-    feats = _featurize(docs, dim, id_col, text_col)
-    scored = (
-        model.transform(feats)
-        .select(
-            F.col(id_col),
-            vector_to_array("probability").getItem(1).alias(out_col),
-        )
-    )
+    weights = [float(w) for w in model.coefficients.toArray()]
+    intercept = float(model.intercept)
+    prior = 1.0 / (1.0 + math.exp(-intercept))
+    margin = F.aggregate(
+        F.zip_with("embedding", F.lit(weights), lambda x, w: x * w),
+        F.lit(0.0),
+        lambda acc, y: acc + y,
+    ) + F.lit(intercept)
+    scored = text_embedding(
+        docs, dim=dim, id_col=id_col, text_col=text_col
+    ).select(F.col(id_col), (1.0 / (1.0 + F.exp(-margin))).alias(out_col))
     return (
         docs.select(id_col)
         .join(scored, id_col, "left")

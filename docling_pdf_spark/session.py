@@ -70,6 +70,10 @@ def get_spark(
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.coalescePartitions.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
+        # ...inside persisted plans too: without it a cached frame keeps
+        # every post-shuffle partition (32 by default, near-empty on a
+        # small corpus), and every job that reads it pays one task each
+        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
         # Arrow-batched Python boundary (the only Python stage)
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": str(
@@ -101,6 +105,10 @@ def get_spark(
             "/dev/shm/spark-local" if os.path.isdir("/dev/shm") else "/tmp",
         ),
         "spark.sql.session.timeZone": "UTC",
+        # on (the default), every Column/DataFrame call records its Python
+        # call site in extra py4j round trips: ~half the driver's commands.
+        # Cost: analysis errors no longer name the Python file and line
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
         # keep driver logs usable in CI
         "spark.ui.showConsoleProgress": "false",
     }

@@ -1,7 +1,7 @@
 """spark-submit entrypoint for the training-data CURATION pipeline —
 the 100 TB use case the operators exist for, chained end to end. The
 stages in the order the funnel's stage ledger records them ([] =
-optional), each timed by the Spark action that materializes it:
+optional):
 
     read_input            the documents parquet
     extract               interleaved docs → span table (mapInArrow)
@@ -20,6 +20,17 @@ optional), each timed by the Spark action that materializes it:
                           when it also runs the mixture selection
 
 → curated parquet + ONE JSON line of funnel counts read off the ledger.
+
+Each stage's row count rides on a Spark action the funnel runs anyway.
+Most stages run their own action and are timed by it. read_input,
+extract and quality_gates are counted by a DataFrame.observe on their
+frame instead, read after the next stage's action runs that frame:
+exact_dedup's persist+count (strip_boilerplate's, when set) closes them
+all. A stage closed by another stage's action records wall_s 0.0; the
+action's time goes to the last stage it closes. The extracted frame is
+cached only when a repetition gate is set, because that gate's semi-join
+reads it twice; its persist+count then closes read_input and extract.
+The final write's row count is observed on the written frame too.
 
 Every stage is one of the tested library operators; this job is the
 composition, not new logic. Scale notes: the only Python stage is the
@@ -123,6 +134,7 @@ def curate(
     eval gram set is distinct + broadcast — benchmarks stay
     broadcastable at any corpus scale, so the training side pays one
     narrow gram pass and no corpus-scale shuffle."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from docling_pdf_spark.functions.text import digit_ratio, token_count
@@ -212,20 +224,32 @@ def curate(
 
     # per-stage observability (r5 VERDICT #6): Spark is lazy, so each
     # stage's wall time is attributed to the ACTION that materializes
-    # it (the counts the funnel needs anyway). The stages list is THE
-    # ledger: it rides in the funnel JSON so a 100 TB operator can see
-    # which stage moved without a bench harness, and every funnel count
-    # below is read from it.
+    # it. The stages list is THE ledger: it rides in the funnel JSON so a
+    # 100 TB operator can see which stage moved without a bench harness,
+    # and every funnel count below is read from it.
     stages: list[dict] = []
+    # stages whose row count is observed on their frame, waiting for the
+    # next _stage action to run that frame
+    observed: list[tuple[str, Observation]] = []
+
+    def _record(name: str, wall_s: float, rows_out: int):
+        rows_in = stages[-1]["rows_out"] if stages else None
+        stages.append({"stage": name, "wall_s": wall_s,
+                       "rows_in": rows_in, "rows_out": rows_out})
+
+    def _observe(name: str, df):
+        seen = Observation()
+        observed.append((name, seen))
+        return df.observe(seen, F.count(F.lit(1)).alias("n"))
 
     def _stage(name: str, action):
-        rows_in = stages[-1]["rows_out"] if stages else None
         t = time.perf_counter()
         out = action()
-        stages.append(
-            {"stage": name, "wall_s": round(time.perf_counter() - t, 3),
-             "rows_in": rows_in, "rows_out": out}
-        )
+        wall_s = round(time.perf_counter() - t, 3)
+        for pending, seen in observed:
+            _record(pending, 0.0, seen.get["n"])
+        observed.clear()
+        _record(name, wall_s, out)
         return out
 
     # every frame curate() persists, released on EVERY exit: a raising
@@ -238,8 +262,7 @@ def curate(
         return df
 
     try:
-        docs = spark.read.parquet(input_path)
-        _stage("read_input", docs.count)
+        docs = _observe("read_input", spark.read.parquet(input_path))
 
         extracted = extract(docs, num_partitions=num_partitions)
         # full_text for the text operators: re-join the text spans (JVM)
@@ -253,10 +276,23 @@ def curate(
                 f"--mix-stratum {mix_stratum!r} is not a column of the "
                 f"extracted frame; available: {sorted(with_text.columns)}"
             )
-        # persist at the extraction boundary: every downstream count and the
-        # final write reuse ONE pass of the (dominant-cost) Python UDF stage
-        ok = _persist(with_text.where(F.col("extraction_successful")))
-        _stage("extract", ok.count)
+        # the optional repetition gates' thresholds (applied below)
+        rep_thresholds = [
+            ("dup_line_frac", max_dup_line_frac),
+            ("dup_para_frac", max_dup_para_frac),
+            ("top_bigram_frac", max_top_bigram_frac),
+            ("top_3gram_frac", max_top_3gram_frac),
+            ("top_4gram_frac", max_top_4gram_frac),
+        ]
+        rep_gated = any(v is not None for _, v in rep_thresholds)
+        ok = with_text.where(F.col("extraction_successful"))
+        if rep_gated:
+            # the repetition gate's semi-join reads ok on both sides:
+            # persist it, so the (dominant-cost) extraction UDF runs once
+            ok = _persist(ok)
+            _stage("extract", ok.count)
+        else:
+            ok = _observe("extract", ok)
         # quality gates — pure codegen predicates on the extracted text
         quality = ok.where(
             (F.col("n_chars") >= min_chars)
@@ -282,14 +318,7 @@ def curate(
         # need an explode+agg per doc, so they only run when a threshold is
         # actually set. Shuffles on doc_id; the semi-join back is
         # co-partitioned on the same key.
-        rep_thresholds = [
-            ("dup_line_frac", max_dup_line_frac),
-            ("dup_para_frac", max_dup_para_frac),
-            ("top_bigram_frac", max_top_bigram_frac),
-            ("top_3gram_frac", max_top_3gram_frac),
-            ("top_4gram_frac", max_top_4gram_frac),
-        ]
-        if any(v is not None for _, v in rep_thresholds):
+        if rep_gated:
             from docling_pdf_spark.operators.quality import repetition_stats
 
             # join the text SPANS with '\n\n' for this pass: each extracted
@@ -308,7 +337,7 @@ def curate(
                 if v is not None:
                     rep = rep.where(F.col(col) <= v)
             quality = quality.join(rep.select("doc_id"), "doc_id", "left_semi")
-        _stage("quality_gates", quality.count)
+        quality = _observe("quality_gates", quality)
 
         # optional corpus-frequency boilerplate strip (CCNet-style): lines
         # shared by >= N distinct docs are removed from every TEXT SPAN,
@@ -349,12 +378,18 @@ def curate(
         from pyspark.sql import Window
 
         w = Window.partitionBy(F.md5("full_text")).orderBy("doc_id")
-        exact = (
+        # persisted: MinHash, the cluster input and the drop side all read
+        # it, so extraction and the quality gates (the repetition kernel)
+        # run once
+        exact = _persist(
             quality.withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
         _stage("exact_dedup", exact.count)
+        # everything downstream reads exact: release the caches above it
+        for df in cached[:-1]:
+            df.unpersist()
 
         # near-dup drop: for every candidate pair, drop doc_b
         # (deterministic: pairs are emitted with doc_a < doc_b)
@@ -479,14 +514,12 @@ def curate(
             curated = curated.join(contaminated, "doc_id", "left_anti")
 
         def _materialize(df):
-            # persist + count at a selection boundary (classifier, dsir,
-            # mix); the first one after the near-dup stage runs the lazy
-            # decon anti-join, so it closes the `decon` stage
+            # persist at a selection boundary (classifier, dsir, mix); the
+            # first one after the near-dup stage counts the lazy decon
+            # anti-join, so it closes the `decon` stage
             df = _persist(df)
             if decon_eval and stages[-1]["stage"] == "near_dup_drop":
                 _stage("decon", df.count)
-            else:
-                df.count()
             return df
 
         def _select(name, keep_ids):
@@ -620,10 +653,14 @@ def curate(
         # the final stage covers whatever is still unmaterialized: with
         # mix on, decon was already counted at the mix boundary so this is
         # the mixture selection + PII redaction + parquet IO; without mix
-        # it is decon (when set) + redaction + IO
+        # it is decon (when set) + redaction + IO. Its row count is
+        # observed on the written frame.
         def _write_and_count():
-            curated.write.mode("overwrite").parquet(output_path)
-            return spark.read.parquet(output_path).count()
+            written = Observation()
+            curated.observe(written, F.count(F.lit(1)).alias("n")).write.mode(
+                "overwrite"
+            ).parquet(output_path)
+            return written.get["n"]
 
         _stage(
             "mix_select_redact_write" if mix_budget is not None

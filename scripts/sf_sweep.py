@@ -161,9 +161,7 @@ def main(argv: list[str] | None = None) -> int:
                     help="sweep the ENTIRE driver registry (all 50 "
                          "queries incl. extraction, streaming, dedup "
                          "families, multimodal) instead of the 22 "
-                         "headline bench queries; excludes only the "
-                         "documented O(n^2)-by-design brute-force pair "
-                         "baseline")
+                         "headline bench queries")
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument("--out", default=None)
     args = ap.parse_args(argv)
@@ -189,19 +187,10 @@ def main(argv: list[str] | None = None) -> int:
     spec.loader.exec_module(bench_root)
     BENCH_QUERIES = bench_root.BENCH_QUERIES
 
-    excluded = {}
     if args.full:
         import __spark_entry__ as se
 
-        q_all = se.queries()
-        # the one documented exclusion: the exact all-pairs cosine
-        # baseline is O(n^2) BY DESIGN (it exists as the correctness
-        # anchor for the bucketed variant, which IS swept) — flagging
-        # it superlinear would only restate its contract. Retired from
-        # the driver registry in round 6 3rd wave, so this is a no-op
-        # on the current registry; kept for sweeps of older registries.
-        excluded = {"embedding_near_dups": "O(n^2) brute-force baseline by design"}
-        BENCH_QUERIES = [n for n in q_all if n not in excluded]
+        BENCH_QUERIES = list(se.queries())
     from docling_pdf_spark.queries import spark_queries
     from docling_pdf_spark.session import get_spark
 
@@ -292,7 +281,7 @@ def main(argv: list[str] | None = None) -> int:
         "trials_endpoint": args.trials + 2,
         "trials_retry": 5,
         "mode": "full_registry" if args.full else "headline_bench",
-        "excluded": excluded,
+        "excluded": {},
         "retried_after_flag": retried,
         "cpus": args.cpus,
         "criterion": "t(sf1) <= 2 * max(10*t(sf0.1), 1s)",

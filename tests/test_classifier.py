@@ -90,3 +90,21 @@ def test_scoring_plan_shape(spark):
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
                    "FlatMapGroupsInPandas"):
         assert marker not in p, marker
+
+
+def test_scoring_after_an_observed_action(spark):
+    """The first observed action gives the session an ObservationManager,
+    which does not serialize. Scoring must still run after it: it ships
+    the fitted coefficients, not the model object, whose training summary
+    holds the session."""
+    from pyspark.sql import Observation
+
+    seen = Observation()
+    spark.range(3).observe(seen, F.count(F.lit(1)).alias("n")).count()
+    assert seen.get["n"] == 3
+    docs = _corpus(spark, n_per=10)
+    model = train_quality_classifier(docs)
+    scores = {r.doc_id: r.quality_prob
+              for r in score_quality(docs, model).collect()}
+    assert len(scores) == 20
+    assert min(v for k, v in scores.items() if k < 10) > 0.5

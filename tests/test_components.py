@@ -136,3 +136,24 @@ def test_cc_plan_no_python_no_cartesian(spark):
         "BroadcastNestedLoopJoin",
     ):
         assert marker not in plan, marker
+
+
+def test_one_query_per_round(spark):
+    """The path 0-1-2-3 takes three rounds, the last of which changes
+    nothing: that is the edge list's checkpoint plus one localCheckpoint
+    per round, four SQL queries. Each convergence signature is observed
+    inside its checkpoint, with no query of its own."""
+    from tests.test_resume import _last_execution_id
+
+    edges = _edges_df(spark, [(0, 1), (1, 2), (2, 3)])
+    before = _last_execution_id(spark)
+    cc = connected_components(edges)
+    after = _last_execution_id(spark)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    actions = [
+        execs.apply(i).description().split(" ")[0]
+        for i in range(execs.size())
+        if before < execs.apply(i).executionId() <= after
+    ]
+    assert actions == ["localCheckpoint"] * 4
+    assert _cc_dict(cc) == {i: 0 for i in range(4)}
