@@ -14,11 +14,8 @@ shared-nothing CC algorithm:
   min(N(u) ∪ {u})
 * small-star(u): connect u and its smaller neighbors to their minimum
 
-Each half-round is one hash-partitioned groupBy that collects the
-neighborhood, and the new edges are exploded from it with no join back
-and no distinct: a round is two shuffles, no driver-side graph state, no
-collect(). Duplicate edges between rounds are harmless (the next round's
-groupBy sees sets), and the fixpoint star graph has none. The paper
+Each half-round is one hash-partitioned groupBy (neighborhood min) +
+one shuffle join — no driver-side graph state, no collect(); the paper
 proves convergence in O(log² n) rounds (O(log n) in practice; near-dup
 clusters are LSH quasi-cliques with tiny diameter, which converge in
 2-3 rounds — the path-graph worst case is exercised in tests). At the
@@ -75,27 +72,36 @@ def _canonical(edges: DataFrame) -> DataFrame:
     )
 
 
-def _star_round(edges: DataFrame) -> DataFrame:
-    """One alternating round, large-star then small-star, on edges with
-    u > v (duplicates allowed); the result has u > v too."""
+def _large_star(edges: DataFrame) -> DataFrame:
+    """Connect every strictly-larger neighbor of u to min(N(u) ∪ {u}).
+    One symmetric explode + neighborhood-min groupBy + join."""
     sym = edges.union(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    # large-star(u): every strictly-larger neighbor → min(N(u) ∪ {u})
-    large = sym.groupBy("u").agg(F.collect_list("v").alias("n")).select(
-        F.explode(F.filter("n", lambda x: x > F.col("u"))).alias("u"),
-        F.least(F.array_min("n"), F.col("u")).alias("v"),
+    mins = sym.groupBy("u").agg(
+        F.least(F.min("v"), F.first("u")).alias("m")
     )
-    # small-star(u): u and its smaller neighbors → their minimum; every
-    # large-star edge points down, so grouping on u sees them all
-    small = large.groupBy("u").agg(F.collect_set("v").alias("n"))
-    root = F.array_min("n")
-    return small.select(
-        F.explode(
-            F.array_remove(F.concat("n", F.array("u")), root)
-        ).alias("u"),
-        root.alias("v"),
+    return (
+        sym.join(mins, "u")
+        .where(F.col("v") > F.col("u"))
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .where(F.col("u") != F.col("v"))
+        .distinct()
     )
+
+
+def _small_star(edges: DataFrame) -> DataFrame:
+    """Connect u and its smaller neighbors to their minimum. Input may
+    have either orientation; processed on the (larger, smaller) key."""
+    g = _canonical(edges)  # u > v on every row
+    mins = g.groupBy("u").agg(F.min("v").alias("m"))
+    to_small = (
+        g.join(mins, "u")
+        .select(F.col("v").alias("u"), F.col("m").alias("v"))
+        .where(F.col("u") != F.col("v"))
+    )
+    to_self = mins.select("u", F.col("m").alias("v"))
+    return to_small.union(to_self).distinct()
 
 
 def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple]:
@@ -126,7 +132,7 @@ def connected_components(
         _canonical(pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")))
     )
     for _ in range(max_iter):
-        nxt, nsig = _checkpoint(_star_round(edges))
+        nxt, nsig = _checkpoint(_small_star(_large_star(edges)))
         edges.unpersist()
         edges = nxt
         if nsig == sig:

@@ -22,15 +22,14 @@ optional):
 → curated parquet + ONE JSON line of funnel counts read off the ledger.
 
 Each stage's row count rides on a Spark action the funnel runs anyway.
-Most stages run their own action and are timed by it. read_input,
-extract and quality_gates are counted by a DataFrame.observe on their
-frame instead, read after the next stage's action runs that frame:
-exact_dedup's persist+count (strip_boilerplate's, when set) closes them
-all. A stage closed by another stage's action records wall_s 0.0; the
-action's time goes to the last stage it closes. The extracted frame is
-cached only when a repetition gate is set, because that gate's semi-join
-reads it twice; its persist+count then closes read_input and extract.
-The final write's row count is observed on the written frame too.
+Most stages run their own action and are timed by it. read_input and
+quality_gates are counted by a DataFrame.observe on their frame
+instead, read after the next stage's action runs that frame: extract's
+persist+count closes read_input, and exact_dedup's persist+count
+(strip_boilerplate's, when set) closes quality_gates. A stage closed by
+another stage's action records wall_s 0.0; the action's time goes to
+the last stage it closes. The final write's row count is observed on
+the written frame too.
 
 Every stage is one of the tested library operators; this job is the
 composition, not new logic. Scale notes: the only Python stage is the
@@ -276,23 +275,11 @@ def curate(
                 f"--mix-stratum {mix_stratum!r} is not a column of the "
                 f"extracted frame; available: {sorted(with_text.columns)}"
             )
-        # the optional repetition gates' thresholds (applied below)
-        rep_thresholds = [
-            ("dup_line_frac", max_dup_line_frac),
-            ("dup_para_frac", max_dup_para_frac),
-            ("top_bigram_frac", max_top_bigram_frac),
-            ("top_3gram_frac", max_top_3gram_frac),
-            ("top_4gram_frac", max_top_4gram_frac),
-        ]
-        rep_gated = any(v is not None for _, v in rep_thresholds)
-        ok = with_text.where(F.col("extraction_successful"))
-        if rep_gated:
-            # the repetition gate's semi-join reads ok on both sides:
-            # persist it, so the (dominant-cost) extraction UDF runs once
-            ok = _persist(ok)
-            _stage("extract", ok.count)
-        else:
-            ok = _observe("extract", ok)
+        # persist at the extraction boundary: every downstream read until
+        # the exact-dedup cache reuses ONE pass of the (dominant-cost)
+        # Python UDF stage
+        ok = _persist(with_text.where(F.col("extraction_successful")))
+        _stage("extract", ok.count)
         # quality gates — pure codegen predicates on the extracted text
         quality = ok.where(
             (F.col("n_chars") >= min_chars)
@@ -318,7 +305,14 @@ def curate(
         # need an explode+agg per doc, so they only run when a threshold is
         # actually set. Shuffles on doc_id; the semi-join back is
         # co-partitioned on the same key.
-        if rep_gated:
+        rep_thresholds = [
+            ("dup_line_frac", max_dup_line_frac),
+            ("dup_para_frac", max_dup_para_frac),
+            ("top_bigram_frac", max_top_bigram_frac),
+            ("top_3gram_frac", max_top_3gram_frac),
+            ("top_4gram_frac", max_top_4gram_frac),
+        ]
+        if any(v is not None for _, v in rep_thresholds):
             from docling_pdf_spark.operators.quality import repetition_stats
 
             # join the text SPANS with '\n\n' for this pass: each extracted
