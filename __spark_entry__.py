@@ -771,8 +771,8 @@ def _multimodal_assets(spark: SparkSession, sf_dir: str, kind: str, repeat: int 
 def _multimodal_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
     """decode → resize → pixels through the REAL mapInPandas kernel with
     the deterministic fake codec (driver mandate: codec libs absent, so
-    decode_image(engine='fake') tiles bytes into 32×32). The fake is
-    arithmetic — pixel(pos) = byte[(128·(pos÷8) + 4·(pos mod 8)) mod n]
+    decode_image tiles bytes into 32×32). The fake is arithmetic —
+    pixel(pos) = byte[(128·(pos÷8) + 4·(pos mod 8)) mod n]
     for the 8×8 nearest-neighbour thumb — so DuckDB reproduces every
     pixel and the decode/resize plumbing is exactly oracled. pixels
     posexploded to scalar rows (nested arrays don't canonicalize)."""
@@ -782,7 +782,7 @@ def _multimodal_thumbnails(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _ship_package(spark)
     thumbs = image_thumbnails(
-        _multimodal_assets(spark, sf_dir, "image"), out_h=8, out_w=8, engine="fake"
+        _multimodal_assets(spark, sf_dir, "image"), out_h=8, out_w=8
     )
     return thumbs.select(
         "media_ref", "thumb_h", "thumb_w", F.posexplode("pixels").alias("pos", "pixel")
@@ -804,7 +804,7 @@ FROM docs, (SELECT unnest(range(0, 64)) AS pos) p
 
 def _multimodal_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling (one row in → many frames out) through the real
-    kernel: the fake engine treats the byte stream as 1 KiB-per-100 ms
+    kernel: the fake sampler treats the byte stream as 1 KiB-per-100 ms
     chunks; text repeated ×20 (~5-11 KiB) gives a real multi-frame
     stream, every_ms=200 keeps every 2nd chunk. Pure chunk arithmetic —
     frame i has min(1024, n − 2048·i) bytes — so DuckDB reproduces the
@@ -813,8 +813,7 @@ def _multimodal_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _ship_package(spark)
     return video_frame_index(
-        _multimodal_assets(spark, sf_dir, "video", repeat=20), every_ms=200,
-        engine="fake",
+        _multimodal_assets(spark, sf_dir, "video", repeat=20), every_ms=200
     )
 
 

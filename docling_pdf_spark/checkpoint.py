@@ -10,9 +10,10 @@ buckets (anti-join semantics via partition pruning), and output is
 re-written per-bucket with dynamic partition overwrite so retries are
 idempotent.
 
-Rename atomicity holds on local/HDFS-like filesystems; on S3 use the
-Iceberg catalog mode (docling_pdf_spark.io) where the manifest becomes
-a MERGE INTO on the `_progress` table instead.
+Rename atomicity holds on local/HDFS-like filesystems. Object stores
+such as S3 have no atomic rename; there the manifest wants a table
+upsert (MERGE INTO a `_progress` table in an Iceberg catalog), which
+waits until an Iceberg runtime jar is in the repository.
 """
 
 from __future__ import annotations

@@ -103,8 +103,13 @@ _ESCAPES = {
 
 def _unescape(raw: bytes) -> str:
     """Decode a PDF literal string body (escapes + octal) to text."""
+    return _unescape_bytes(raw).decode("utf-8", errors="replace")
+
+
+def _unescape_bytes(raw: bytes) -> bytes:
+    """Decode a PDF literal string body to raw bytes (no text decode)."""
     if b"\\" not in raw:  # fast path: nothing escaped
-        return raw.decode("utf-8", errors="replace")
+        return raw
     out = bytearray()
     i, n = 0, len(raw)
     while i < n:
@@ -123,34 +128,6 @@ def _unescape(raw: bytes) -> str:
                 i = j
                 continue
             i += 1  # lone backslash: drop (PDF spec)
-            continue
-        out += c
-        i += 1
-    return out.decode("utf-8", errors="replace")
-
-
-def _unescape_bytes(raw: bytes) -> bytes:
-    """Decode a PDF literal string body to raw bytes (no text decode)."""
-    if b"\\" not in raw:
-        return raw
-    out = bytearray()
-    i, n = 0, len(raw)
-    while i < n:
-        c = raw[i : i + 1]
-        if c == b"\\" and i + 1 < n:
-            nxt = raw[i + 1 : i + 2]
-            if nxt in _ESCAPES:
-                out += _ESCAPES[nxt]
-                i += 2
-                continue
-            if nxt.isdigit():
-                j = i + 1
-                while j < min(i + 4, n) and raw[j : j + 1].isdigit():
-                    j += 1
-                out.append(int(raw[i + 1 : j], 8) & 0xFF)
-                i = j
-                continue
-            i += 1
             continue
         out += c
         i += 1

@@ -80,11 +80,11 @@ def scan_row_groups(df: DataFrame, cap: int) -> int | None:
         return None
 
 
-def spread_unsplittable(df: DataFrame, factor: int = 1) -> DataFrame:
-    """Round-robin repartition df to factor×defaultParallelism iff its
-    scan cannot reach defaultParallelism concurrent tasks on its own."""
+def spread_unsplittable(df: DataFrame) -> DataFrame:
+    """Round-robin repartition df to defaultParallelism iff its scan
+    cannot reach defaultParallelism concurrent tasks on its own."""
     target = df.sparkSession.sparkContext.defaultParallelism
     n = scan_row_groups(df, cap=target)
     if n is not None and n < target:
-        return df.repartition(target * factor)
+        return df.repartition(target)
     return df

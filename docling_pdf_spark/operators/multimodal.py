@@ -2,9 +2,9 @@
 columns with typed metadata (driver mandate).
 
 The decode/resize/frame-sample kernels need codec libraries that are
-NOT in this container, so the codec step is stubbed behind
-``NotImplementedError`` — but everything Spark-side is real and
-tested: the asset schema, the Arrow-batched UDF signature and batch
+NOT in this container, so the codec step is a deterministic stand-in
+(decode_image, sample_video_frames) — but everything Spark-side is real
+and tested: the asset schema, the Arrow-batched UDF signature and batch
 shape, the deterministic byte-level feature extractor (a 16-bin byte
 histogram — genuinely computable on opaque bytes), and the
 partitioning of assets by size class.
@@ -49,17 +49,14 @@ FEATURE_SCHEMA = T.StructType(
 HIST_BINS = 16
 
 
-def decode_image(data: bytes, engine: str = "real") -> "np.ndarray":
-    """Pixel decode. engine='real' is a STUB (needs an image codec —
-    PIL/libjpeg — not installed in this container). engine='fake' is a
-    DETERMINISTIC FAKE per the driver mandate: bytes are tiled into a
-    fixed 32×32 grayscale array — not real pixels, but a stable,
+def decode_image(data: bytes) -> "np.ndarray":
+    """Pixel decode STAND-IN (a real decode needs an image codec —
+    PIL/libjpeg — not installed in this container): bytes are tiled
+    into a fixed 32×32 grayscale array — not real pixels, but a stable,
     shape-correct stand-in that drives the full downstream plumbing
-    (resize, feature UDFs) in tests."""
-    if engine == "fake":
-        arr = np.frombuffer(data or b"\x00", dtype=np.uint8)
-        return np.resize(arr, (32, 32))
-    raise NotImplementedError("image codec not available in this environment")
+    (resize, feature UDFs)."""
+    arr = np.frombuffer(data or b"\x00", dtype=np.uint8)
+    return np.resize(arr, (32, 32))
 
 
 def resize_image(img: "np.ndarray", out_h: int, out_w: int) -> "np.ndarray":
@@ -71,19 +68,15 @@ def resize_image(img: "np.ndarray", out_h: int, out_w: int) -> "np.ndarray":
     return img[np.ix_(ys, xs)]
 
 
-def sample_video_frames(
-    data: bytes, every_ms: int = 1000, engine: str = "real"
-) -> list[bytes]:
-    """Frame sampling. engine='real' is a STUB (needs ffmpeg/pyav).
-    engine='fake': the byte stream is treated as 1 KiB-per-100ms fake
-    'frames'; every_ms selects every k-th chunk — deterministic, and
-    exercises the one-row-in/many-frames-out UDF shape."""
-    if engine == "fake":
-        chunk, ms_per_chunk = 1024, 100
-        step = max(1, every_ms // ms_per_chunk)
-        chunks = [data[i : i + chunk] for i in range(0, len(data or b""), chunk)]
-        return chunks[::step]
-    raise NotImplementedError("video codec not available in this environment")
+def sample_video_frames(data: bytes, every_ms: int = 1000) -> list[bytes]:
+    """Frame sampling STAND-IN (a real sampler needs ffmpeg/pyav): the
+    byte stream is treated as 1 KiB-per-100ms fake 'frames'; every_ms
+    selects every k-th chunk — deterministic, and exercises the
+    one-row-in/many-frames-out UDF shape."""
+    chunk, ms_per_chunk = 1024, 100
+    step = max(1, every_ms // ms_per_chunk)
+    chunks = [data[i : i + chunk] for i in range(0, len(data or b""), chunk)]
+    return chunks[::step]
 
 
 def _feature_batches(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -136,19 +129,17 @@ THUMBNAIL_SCHEMA = T.StructType(
 )
 
 
-def image_thumbnails(
-    assets: DataFrame, out_h: int = 8, out_w: int = 8, engine: str = "fake"
-) -> DataFrame:
-    """decode → resize → flat pixel array, Arrow-batched. With
-    engine='fake' the decode is the deterministic stand-in (real codecs
-    absent here); the Spark plumbing — batch iteration, schema, output
-    shape — is exactly what a real decoder plugs into."""
+def image_thumbnails(assets: DataFrame, out_h: int = 8, out_w: int = 8) -> DataFrame:
+    """decode → resize → flat pixel array, Arrow-batched. The decode is
+    the deterministic stand-in (real codecs absent here); the Spark
+    plumbing — batch iteration, schema, output shape — is exactly what
+    a real decoder plugs into."""
 
     def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             out = []
             for ref, data in zip(b["media_ref"], b["data"]):
-                img = decode_image(bytes(data or b""), engine=engine)
+                img = decode_image(bytes(data or b""))
                 thumb = resize_image(img, out_h, out_w)
                 out.append((ref, out_h, out_w, [int(x) for x in thumb.ravel()]))
             yield pd.DataFrame(out, columns=["media_ref", "thumb_h", "thumb_w", "pixels"])
@@ -166,17 +157,16 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def video_frame_index(
-    assets: DataFrame, every_ms: int = 1000, engine: str = "fake"
-) -> DataFrame:
+def video_frame_index(assets: DataFrame, every_ms: int = 1000) -> DataFrame:
     """One row in → many frames out (the frame-sampling UDF shape):
-    each sampled frame becomes a row with its byte size."""
+    each sampled frame becomes a row with its byte size. The sampler is
+    the deterministic stand-in (real codecs absent here)."""
 
     def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
             out = []
             for ref, data in zip(b["media_ref"], b["data"]):
-                frames = sample_video_frames(bytes(data or b""), every_ms, engine=engine)
+                frames = sample_video_frames(bytes(data or b""), every_ms)
                 out.extend((ref, i, len(f)) for i, f in enumerate(frames))
             yield pd.DataFrame(out, columns=["media_ref", "frame_idx", "frame_bytes"])
 

@@ -400,9 +400,9 @@ def run_extraction(
     if salt_mode == "auto" and num_partitions:
         salt_mode = resolve_salt_mode(splits, num_partitions)
 
-    # real lineage token (Iceberg snapshot id in catalog mode; file
-    # fingerprint in the parquet fallback) — resume detects when the
-    # input changed underneath a completed bucket (guard above)
+    # lineage token (file fingerprint of the input, or the caller's
+    # snapshot id) — resume detects when the input changed underneath a
+    # completed bucket (guard above)
     snapshot = current_snapshot
     group_size = buckets_per_commit or len(pending)
     groups = [pending[i : i + group_size] for i in range(0, len(pending), group_size)]

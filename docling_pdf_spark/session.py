@@ -42,7 +42,6 @@ def get_spark(
     app_name: str = "docling-pdf-spark",
     local_cores: int | None = None,
     shuffle_partitions: int | None = None,
-    extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     _export_package_to_workers()
     b = SparkSession.builder.appName(app_name)
@@ -50,10 +49,13 @@ def get_spark(
         b = b.master(f"local[{local_cores}]")
         # local mode defaults to a 1g driver heap — at 32 concurrent
         # tasks the shuffle buffers alone would thrash GC/spill and
-        # wreck scaling; on a real cluster executor memory comes from
-        # the site config instead.
+        # wreck scaling — but a heap larger than the host lets G1 grow
+        # the JVM until the machine runs out instead of collecting: a
+        # third of physical memory bounds both. On a real cluster
+        # executor memory comes from the site config instead.
+        heap_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 3 >> 20
         b = b.config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g")
+            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", f"{heap_mb}m")
         )
         # MB-sized document payloads become humongous objects under
         # G1's default region size and GC time explodes at high task
@@ -112,6 +114,6 @@ def get_spark(
         # keep driver logs usable in CI
         "spark.ui.showConsoleProgress": "false",
     }
-    for k, v in {**confs, **(extra_conf or {})}.items():
+    for k, v in confs.items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -1,3 +1,2 @@
-"""Table IO layer: Iceberg catalog mode + partitioned-parquet fallback."""
-
-from docling_pdf_spark.sources.io import TableIO  # noqa: F401
+"""Storage: the overwrite-safe partitioned parquet write and the input
+lineage token (docling_pdf_spark.sources.io)."""

@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
@@ -55,7 +55,9 @@ def extract_stream_exactly_once(
     dynamic partition overwrite replaces exactly those directories.
     The per-batch manifest (checkpoint.ProgressLog, keyed by batch id)
     carries counts + lineage for ops — the streaming analog of
-    run_extraction's per-bucket manifests."""
+    run_extraction's per-bucket manifests, and like them observed on
+    the write itself: one SQL execution per micro-batch, nothing read
+    back."""
     import hashlib
 
     from docling_pdf_spark.checkpoint import BucketManifest, ProgressLog
@@ -78,24 +80,29 @@ def extract_stream_exactly_once(
             )
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
+        # the manifest stats ride on the write itself (as in
+        # run_extraction): observed after extract() and the bucket
+        # columns, with no Exchange before the write, so a retried
+        # task's rows count once
+        stats = Observation()
         out = (
             extract(batch_df)
             .withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets)))
             .withColumn("ingest_batch", F.lit(int(batch_id)))
+            .observe(
+                stats,
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("extraction_successful").cast("long")).alias("ok"),
+                F.min("doc_id").alias("lo"),
+                F.max("doc_id").alias("hi"),
+                # order-insensitive doc-id set hash in bounded memory (as
+                # components._checkpoint); decimal: a sum of raw xxhash64
+                # longs overflows int64
+                F.sum(F.xxhash64("doc_id").cast("decimal(28,0)")).alias("ids"),
+            )
         )
         idempotent_partition_overwrite(out, ["ingest_batch", "bucket"], output_path)
-        # metrics from the COMMITTED slice (validates the write, like
-        # run_extraction) — scoped scan via partition pruning
-        written = batch_df.sparkSession.read.parquet(output_path).where(
-            F.col("ingest_batch") == int(batch_id)
-        )
-        row = written.agg(
-            F.count("*").alias("n"),
-            F.sum(F.col("extraction_successful").cast("long")).alias("ok"),
-            F.min("doc_id").alias("lo"),
-            F.max("doc_id").alias("hi"),
-            F.xxhash64(F.sort_array(F.collect_list("doc_id")).cast("string")).alias("ids"),
-        ).collect()[0]
+        row = stats.get
         # per-BATCH content signature (this batch's doc-id set): the
         # source df's inputFiles() is empty inside foreachBatch, and a
         # dir-wide fingerprint would not identify the batch's own input

@@ -185,14 +185,19 @@ def curate(
     # cost the whole funnel (review-found — the exemplar read used to
     # happen only after the corpus had already been processed). Schema
     # reads are footer-only; the label-domain probe is one job over
-    # the SMALL exemplar file, never the corpus.
+    # the SMALL exemplar file, never the corpus. Each path is read once
+    # (each read infers the schema in its own Spark job); the checks and
+    # read_exemplars reuse the frame.
+    exemplars = {}  # path → its DataFrame
     for _path, _need in (
         (decon_eval, {"text"}),
         (dsir_target, {"text"}),
         (quality_exemplars, {"text", "label"}),
     ):
         if _path:
-            _cols = set(spark.read.parquet(_path).columns)
+            if _path not in exemplars:
+                exemplars[_path] = spark.read.parquet(_path)
+            _cols = set(exemplars[_path].columns)
             if not _need <= _cols:
                 raise ValueError(
                     f"exemplar parquet {_path!r} must have columns "
@@ -201,7 +206,7 @@ def curate(
     if quality_exemplars is not None:
         _label = F.col("label").try_cast("double")
         _bad = (
-            spark.read.parquet(quality_exemplars)
+            exemplars[quality_exemplars]
             .where(
                 # validate WITHOUT truncation: cast-to-int would floor
                 # a fractional label like 0.9 to 0 and let it pass,
@@ -471,7 +476,7 @@ def curate(
             # when asked) — one reader for decon, dsir AND the classifier
             # so the normalization rule can't drift (review-found dup)
             if not label:
-                return spark.read.parquet(path).select(
+                return exemplars[path].select(
                     F.lit(0).cast("long").alias("doc_id"),
                     ws_norm(F.col("text")).alias("text"),
                 )
@@ -480,7 +485,7 @@ def curate(
             # join's two scans (silent label misalignment). Exemplar sets
             # are small by construction — the single-partition window is
             # bounded by them, never by the corpus.
-            return spark.read.parquet(path).select(
+            return exemplars[path].select(
                 ws_norm(F.col("text")).alias("text"), F.col("label")
             ).withColumn(
                 "doc_id",

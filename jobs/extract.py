@@ -3,7 +3,7 @@
 Cluster launch (SURVEY.md §4.4):
 
     spark-submit --py-files dist/docling_pdf_spark.zip jobs/extract.py \
-        --input  <documents parquet/iceberg path> \
+        --input  <documents parquet path> \
         --output <documents_extracted path> \
         --checkpoint <progress-manifest dir> \
         [--n-buckets 256] [--num-partitions <cores*2>] \

@@ -5,8 +5,6 @@ Cluster launch recipe (SURVEY.md §4.4):
 
     python scripts/package.py
     spark-submit --py-files dist/docling_pdf_spark.zip \
-        [--packages org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<ver> \
-         --conf spark.sql.catalog.lake=org.apache.iceberg.spark.SparkCatalog ...] \
         jobs/extract.py --input ... --output ... --checkpoint ...
 """
 

@@ -842,6 +842,44 @@ def test_curate_quality_classifier_gate(spark, tmp_path):
                quality_exemplars=ex, quality_threshold=1.5)
 
 
+def test_curate_reads_each_exemplar_parquet_once(spark, tmp_path, monkeypatch):
+    """Each exemplar parquet is read once per curate() run: the column
+    check, the label probe and the stage that uses the exemplars share
+    one frame (every read infers the schema in a Spark job of its own)."""
+    from collections import Counter
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from jobs.curate import curate
+
+    rows = [_doc(f"a-{i}", f"{BASE} variant{i} " * 2) for i in range(4)]
+    src = str(tmp_path / "docs.parquet")
+    pq.write_table(pa.Table.from_pylist(rows, schema=DOCUMENTS_PA), src)
+    ev = str(tmp_path / "eval.parquet")
+    pq.write_table(pa.table({"text": ["an unrelated held out evaluation text"]}), ev)
+    ex = str(tmp_path / "exemplars.parquet")
+    pq.write_table(pa.table({
+        "text": [f"{BASE} good{i}" for i in range(4)]
+        + [f"spam junk zzz{i} " * 5 for i in range(4)],
+        "label": [1] * 4 + [0] * 4,
+    }), ex)
+
+    reads: Counter = Counter()
+    parquet = DataFrameReader.parquet
+
+    def counting_parquet(self, *paths, **options):
+        reads.update(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting_parquet)
+    funnel = curate(spark, src, str(tmp_path / "curated"), min_chars=10,
+                    min_tokens=5, jaccard=0.99, decon_eval=ev,
+                    quality_exemplars=ex)
+    assert reads[ev] == 1, reads
+    assert reads[ex] == 1, reads
+    _assert_ledger(funnel)
+
+
 def test_curate_exemplar_contracts_fail_fast(spark, tmp_path):
     """Review-found: a bad side-input path/schema/label domain must
     raise BEFORE the funnel runs — probed with a nonexistent corpus

@@ -1,43 +1,58 @@
-"""TableIO: parquet-warehouse mode round-trips; snapshot fingerprints
-track input changes (lineage); iceberg mode guards are explicit."""
+"""The storage path: the overwrite-safe partitioned write round-trips
+and replaces only the partitions it writes; the input fingerprint
+tracks changes (lineage)."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from docling_pdf_spark.sources.io import TableIO, file_fingerprint
+from docling_pdf_spark.sources.io import (
+    file_fingerprint,
+    idempotent_partition_overwrite,
+)
 
 
 def test_parquet_roundtrip_partitioned(spark, tmp_path):
-    io = TableIO(spark, mode="parquet", warehouse=str(tmp_path))
+    path = str(tmp_path / "t")
     df = spark.range(100).withColumn("bucket", F.pmod("id", F.lit(4)))
-    io.write_partitioned(df, "t", "bucket")
-    back = io.read("t")
+    idempotent_partition_overwrite(df, ["bucket"], path)
+    back = spark.read.parquet(path)
     assert back.count() == 100
     assert set(back.columns) == {"id", "bucket"}
 
 
 def test_dynamic_overwrite_only_touches_written_buckets(spark, tmp_path):
-    io = TableIO(spark, mode="parquet", warehouse=str(tmp_path))
+    """The write pins dynamic overwrite itself: under a session left at
+    'static', rewriting bucket 0 still keeps the other buckets."""
+    path = str(tmp_path / "t")
     df = spark.range(100).withColumn("bucket", F.pmod("id", F.lit(4)))
-    io.write_partitioned(df, "t", "bucket")
-    # rewrite only bucket 0 with fewer rows
-    io.write_partitioned(df.where("bucket = 0 and id < 8"), "t", "bucket")
-    back = io.read("t")
-    assert back.where("bucket = 0").count() == 2  # 0,4 → wait: id<8, id%4==0 → {0,4}
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        idempotent_partition_overwrite(df, ["bucket"], path)
+        # rewrite only bucket 0 with fewer rows: id < 8, id % 4 == 0 → {0, 4}
+        idempotent_partition_overwrite(
+            df.where("bucket = 0 and id < 8"), ["bucket"], path
+        )
+    finally:
+        spark.conf.set(key, prev)
+    back = spark.read.parquet(path)
+    assert back.where("bucket = 0").count() == 2
     assert back.where("bucket != 0").count() == 75  # untouched
 
 
 def test_snapshot_fingerprint_tracks_changes(spark, tmp_path):
-    io = TableIO(spark, mode="parquet", warehouse=str(tmp_path))
+    path = str(tmp_path / "t")
     df = spark.range(10).withColumn("bucket", F.lit(0))
-    io.write_partitioned(df, "t", "bucket")
-    f1 = io.snapshot_id("t")
-    io.write_partitioned(spark.range(20).withColumn("bucket", F.lit(0)), "t", "bucket")
-    f2 = io.snapshot_id("t")
+    idempotent_partition_overwrite(df, ["bucket"], path)
+    f1 = file_fingerprint(path)
+    idempotent_partition_overwrite(
+        spark.range(20).withColumn("bucket", F.lit(0)), ["bucket"], path
+    )
+    f2 = file_fingerprint(path)
     assert f1 != f2
-    assert io.snapshot_id("t") == f2  # stable when nothing changed
+    assert file_fingerprint(path) == f2  # stable when nothing changed
 
 
 def test_file_fingerprint_deterministic(tmp_path):
@@ -46,17 +61,6 @@ def test_file_fingerprint_deterministic(tmp_path):
     assert file_fingerprint(str(p)) == file_fingerprint(str(p))
     p.write_bytes(b"abcd")
     assert file_fingerprint(str(p)) != file_fingerprint(str(tmp_path / "nope"))
-
-
-def test_mode_guards():
-    with pytest.raises(ValueError, match="unknown io mode"):
-        TableIO(None, mode="delta")
-
-
-def test_parquet_mode_rejects_merge(spark, tmp_path):
-    io = TableIO(spark, mode="parquet", warehouse=str(tmp_path))
-    with pytest.raises(RuntimeError, match="iceberg-mode"):
-        io.merge_progress(spark.range(1))
 
 
 def test_scan_row_groups_reads_suffixless_parquet(spark, tmp_path):

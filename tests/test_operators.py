@@ -244,15 +244,6 @@ def test_media_features_plumbing(spark, tmp_path):
             assert abs(p - c / r["n_bytes"]) < 1e-6
 
 
-def test_decode_stubs_are_marked(spark):
-    from docling_pdf_spark.operators.multimodal import decode_image, sample_video_frames
-
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG")
-    with pytest.raises(NotImplementedError):
-        sample_video_frames(b"\x00")
-
-
 def test_fake_decode_thumbnails_and_frames(spark, tmp_path):
     """The deterministic fake codec drives the FULL Spark plumbing:
     decode→resize thumbnails (fixed shape, deterministic pixels) and

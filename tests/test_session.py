@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
@@ -14,3 +16,16 @@ def test_analysis_errors_still_name_the_column(spark):
     assert conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
     with pytest.raises(AnalysisException, match="`nope`"):
         spark.range(3).select(F.col("nope")).collect()
+
+
+def test_default_driver_heap_fits_the_host(spark):
+    """The suite's session passes no heap of its own, so it runs on
+    get_spark's default: no larger than the host's physical memory, in
+    the conf and in the JVM that started from it."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    value = spark.sparkContext.getConf().get("spark.driver.memory")
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    unit = value[-1].lower()
+    conf_bytes = int(value[:-1]) * units[unit] if unit in units else int(value)
+    assert conf_bytes <= phys, (value, phys)
+    assert spark._jvm.java.lang.Runtime.getRuntime().maxMemory() <= phys

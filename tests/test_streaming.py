@@ -307,6 +307,55 @@ def test_foreachbatch_exactly_once_with_manifests(spark, stream_corpus, tmp_path
                                     n_buckets=4)
 
 
+def test_foreachbatch_sink_observes_its_manifest_stats(spark, tmp_path, monkeypatch):
+    """The sink takes each manifest's counts from an observation on its
+    own write and never reads the output back; the counts still equal
+    the batch's slice of the output, failures included, and each batch
+    carries its own input snapshot."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from docling_pdf_spark.checkpoint import ProgressLog
+    from docling_pdf_spark.streaming import extract_stream_exactly_once
+
+    src = tmp_path / "in"
+    src.mkdir()
+    t = gen_documents(30, adversarial=True)  # the adversarial docs include a failure
+    pq.write_table(t.slice(0, 20), str(src / "part-0.parquet"))
+    pq.write_table(t.slice(20), str(src / "part-1.parquet"))
+    out = str(tmp_path / "out")
+    mans = str(tmp_path / "manifests")
+
+    read_paths: list[str] = []
+    parquet = DataFrameReader.parquet
+
+    def recording_parquet(self, *paths, **options):
+        read_paths.extend(paths)
+        return parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", recording_parquet)
+    _drain(extract_stream_exactly_once(
+        spark, str(src), out, str(tmp_path / "stream-ckpt"), mans))
+    monkeypatch.undo()
+    assert read_paths == []
+
+    got = {
+        r["ingest_batch"]: (r["n"], r["ok"])
+        for r in spark.read.parquet(out)
+        .groupBy("ingest_batch")
+        .agg(F.count("*").alias("n"),
+             F.sum(F.col("extraction_successful").cast("long")).alias("ok"))
+        .collect()
+    }
+    manifests = ProgressLog(mans, key="ingest_batch").all_manifests()
+    assert len(manifests) == 2
+    assert {m.partition_id: (m.n_docs, m.n_ok) for m in manifests} == got
+    assert sum(m.n_failed for m in manifests) >= 1
+    assert all(m.n_failed == m.n_docs - m.n_ok for m in manifests)
+    snapshots = {m.lineage["input_snapshot"] for m in manifests}
+    assert len(snapshots) == 2
+
+
 def test_stateful_dedup_on_rocksdb_state_store(spark, tmp_path):
     """The stateful operators run unchanged on the RocksDB state-store
     provider — the store that pages state to disk at corpus scale,
