@@ -1,7 +1,7 @@
 """Arrow-batch execution of the portable-hash gram kernels.
 
 The engine-portable 60-bit hash (functions/hashing.py: low 15 hex chars
-of md5 as BIGINT) is the oracle contract for winnowing, portable
+of md5 as BIGINT) is the oracle contract for winnowing,
 MinHash/SimHash, and DSIR bucketing — DuckDB computes the identical
 value, so those operators are exactly SQL-checkable. The JVM evaluation
 of that contract is expensive in exactly the places it is needed most:
@@ -202,12 +202,11 @@ def _minhash_doc(t: str, n: int, a, b, p: int):
     return sig
 
 
-def minhash_signatures_portable_arrow(docs, params, n, id_col, text_col):
-    """(id, mh_0..mh_{K-1}) — twin of the portable MinHash signature
-    aggregation in operators.dedup.minhash_lsh_dedup_portable: base =
-    md5_low60(gram) % M31 over DISTINCT word-n-grams, mh_i =
-    min((a_i*base+b_i) % M31). Docs with no grams emit no row (the
-    groupBy over zero exploded rows produced none)."""
+def minhash_arrow(docs, params, n, id_col, text_col):
+    """(id, mh_0..mh_{K-1}) — the MinHash signature matrix of
+    operators.dedup.minhash_lsh_dedup: base = md5_low60(gram) % M31 over
+    DISTINCT word-n-grams, mh_i = min((a_i*base+b_i) % M31). Docs with
+    no grams emit no row (as the oracle's GROUP BY over zero grams)."""
     from docling_pdf_spark.operators.dedup import MERSENNE31
 
     a = np.array([p for p, _ in params], dtype=np.int64).reshape(-1, 1)
@@ -239,22 +238,21 @@ def _tokens(t: str) -> list[str]:
     return [w for w in _JAVA_WS.split(t) if w != ""]
 
 
-def simhash_fingerprints_arrow(docs, token_hashes, n_bits, id_col, text_col):
-    """(id, simhash) — one narrow Arrow stage for both SimHash forms in
-    operators.dedup: `token_hashes` maps a doc's tokens to uint64
-    hashes (md5_low60_strings for the portable 60-bit form,
-    xxh64_strings for the fast 64-bit one); each of the low n_bits
-    votes ±1 (multiplicity kept), bit set iff vote sum > 0, and the
-    fingerprint is read as a signed long. Docs whose tokenization yields
-    only empty strings emit no row. Replaces explode(tokens) →
-    groupBy(id) with n_bits sum() aggregates per token row."""
-    bit_idx = np.arange(n_bits, dtype=np.uint64)
+def simhash_fingerprints_arrow(docs, id_col, text_col):
+    """(id, simhash) — one narrow Arrow stage for
+    operators.dedup.simhash_fingerprints: each token's md5_low60 hash
+    votes ±1 on each of its SIMHASH_BITS bits (multiplicity kept), bit
+    set iff vote sum > 0. Docs whose tokenization yields only empty
+    strings emit no row."""
+    from docling_pdf_spark.operators.dedup import SIMHASH_BITS
+
+    bit_idx = np.arange(SIMHASH_BITS, dtype=np.uint64)
 
     def doc(t):
         toks = _tokens(t)
         if not toks:
             return None
-        votes = 2 * _bit_votes(token_hashes(toks), bit_idx) - len(toks)
+        votes = 2 * _bit_votes(md5_low60_strings(toks), bit_idx) - len(toks)
         fp = ((votes > 0).astype(np.uint64) << bit_idx).sum(dtype=np.uint64)
         return (int(fp.view(np.int64)),)
 
@@ -339,7 +337,7 @@ def repetition_stats_arrow(docs, id_col, text_col, signals, gram_n):
 #
 # Public XXH64 spec (Collet; same algorithm Spark's XxHash64 expression
 # implements over the UTF-8 bytes with seed 42). Used by the fast-mode
-# winnow, SimHash and embedding kernels: every message is hashed in a
+# winnow and embedding kernels: every message is hashed in a
 # batch of equal-length messages, fully vectorized in numpy uint64
 # (wrapping arithmetic == mod-2^64 by construction).
 

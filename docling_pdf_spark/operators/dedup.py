@@ -1,20 +1,22 @@
 """Near-duplicate detection at scale: MinHash+LSH and SimHash.
 
-Both operators are pure DataFrame expressions (xxhash64, bit ops,
-aggregates) — no Python in the hot path, so they stay in whole-stage
-codegen and scale with the shuffle, not the GIL.
+Both operators hash with the engine-portable md5-low-60 base hash
+(functions/hashing.py), which DuckDB reproduces bit for bit, so each
+has one exact generated SQL oracle (minhash_lsh_portable_oracle_sql,
+simhash_portable_oracle_sql). Signatures and fingerprints are one
+narrow mapInArrow stage per document batch (functions/arrowhash.py);
+everything after them is DataFrame expressions.
 
 Scale shape (100 TB story):
-  * MinHash: one explode(shingles) → groupBy(doc_id) partial-agg for
-    the K min-hashes (map-side combine keeps the shuffle at
-    |docs|×K longs, NOT |shingles|); band self-join shuffles on the
-    exact band tuple — the LSH bucket join from the MinHash/LSH
-    literature (Broder 1997; Leskovec-Rajaraman-Ullman ch.3), shared
-    with SimHash, IVF-embedding and winnow pairs (_bucket_pairs).
+  * MinHash: K signature values per doc computed in Python with no
+    shuffle, then a band self-join that shuffles on the exact band
+    tuple — the LSH bucket join from the MinHash/LSH literature
+    (Broder 1997; Leskovec-Rajaraman-Ullman ch.3), shared with
+    SimHash, IVF-embedding and winnow pairs (_bucket_pairs).
   * SimHash (Charikar 2002; Manku et al. WWW'07 for the Hamming-
-    chunk trick): 64 bit-vote aggregates per doc, then candidate
-    pairs via equality on any of four 16-bit chunks — the standard
-    way to make Hamming-distance search joinable.
+    chunk trick): per-doc bit votes, then candidate pairs via
+    equality on any of max_hamming+1 fingerprint chunks — the
+    standard way to make Hamming-distance search joinable.
 """
 
 from __future__ import annotations
@@ -146,9 +148,7 @@ def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     interpreted lambda (~35% slower end-to-end). String-distinct and
     hash-distinct only diverge if two distinct grams of one doc collide
     in xxhash64 (2^-64-scale; in that regime the Spark and DuckDB hash
-    functions already disagree with each other), and the MinHash
-    consumer is invariant either way: min(h_i(s)) over a multiset
-    equals the min over its set."""
+    functions already disagree with each other)."""
     return (
         _gram_arrays(docs, id_col, text_col)
         .select(
@@ -159,149 +159,14 @@ def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") ->
     )
 
 
-def minhash_signatures(
-    sh: DataFrame, num_hashes: int = 32, id_col: str = "doc_id"
-) -> DataFrame:
-    """K permutation-free min-hashes: h_i(s) = xxhash64(s, i); one
-    groupBy with K min() aggregates (partial+final, map-side combine)."""
-    aggs = [
-        F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"mh_{i}")
-        for i in range(num_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
-
-
-def lsh_melted(
-    sigs: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 8,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, sig array<long>, bk struct<band, v0..v{r-1}>) — one row per
-    (doc, band): the banded signature matrix BEFORE the mega-bucket cap,
-    keyed by the EXACT band tuple (no band hash, so two different bands
-    can never share a bucket). Split out of lsh_candidate_pairs so the
-    registry entry (__spark_entry__) can materialize exactly this table
-    to parquet and oracle everything downstream of the signatures (cap,
-    bucket join, pair dedupe, Jaccard estimate) in DuckDB
-    (lsh_materialized_oracle_sql)."""
-    rows = num_hashes // bands
-    band_keys = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                *[F.col(f"mh_{b * rows + r}").alias(f"v{r}") for r in range(rows)],
-            )
-            for b in range(bands)
-        ]
-    )
-    return sigs.select(
-        id_col,
-        F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias("sig"),
-        F.explode(band_keys).alias("bk"),
-    )
-
-
-def lsh_pairs_from_melted(
-    melted: DataFrame,
-    num_hashes: int = 32,
-    id_col: str = "doc_id",
-    max_bucket: int = MAX_LSH_BUCKET,
-) -> DataFrame:
-    """Everything downstream of the signatures: the shared bucket join
-    (cap, band self-join, pair dedupe) and the signature-match Jaccard
-    estimate."""
-    pairs = _bucket_pairs(melted, ["bk"], id_col, max_bucket, carry=["sig"])
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                lambda v: v == 1,
-            )
-        ).cast("double")
-        / F.lit(float(num_hashes))
-    )
-    return pairs.select("doc_a", "doc_b", F.round(est, 4).alias("est_jaccard"))
-
-
-def lsh_candidate_pairs(
-    sigs: DataFrame,
-    num_hashes: int = 32,
-    bands: int = 8,
-    id_col: str = "doc_id",
-    max_bucket: int = MAX_LSH_BUCKET,
-) -> DataFrame:
-    """Band the signature matrix (bands × rows), bucket-join on the
-    band tuple, return candidate pairs with the minhash-estimated Jaccard.
-
-    Buckets above max_bucket are excluded from the join (mega-bucket
-    guard; measure dropped mass with bucket_cap_stats)."""
-    return lsh_pairs_from_melted(
-        lsh_melted(sigs, num_hashes, bands, id_col), num_hashes, id_col, max_bucket
-    )
-
-
-def lsh_materialized_oracle_sql(
-    melted_glob: str,
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    max_bucket: int = MAX_LSH_BUCKET,
-) -> str:
-    """DuckDB oracle for lsh_pairs_from_melted over a MATERIALIZED
-    melted table (the hash-materialization pattern, r3 VERDICT #3):
-    DuckDB cannot compute xxhash64, but it can READ the Spark-computed
-    (doc_id, sig, bk) parquet, so the cap, the band-tuple join, the
-    pair dedupe, the signature-match estimate and the threshold are
-    all exactly checked; only the hash itself stays pytest-gated.
-    Generated so the cap and hash count are shared with the Spark plan
-    by construction."""
-    matches = " + ".join(
-        f"CAST(sig_a[{i + 1}] = sig_b[{i + 1}] AS INT)" for i in range(num_hashes)
-    )
-    return f"""
-WITH capped AS (
-  SELECT * FROM read_parquet('{melted_glob}')
-  QUALIFY count(*) OVER (PARTITION BY bk) <= {max_bucket}
-), pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         a.sig AS sig_a, b.sig AS sig_b
-  FROM capped a JOIN capped b
-    ON a.bk = b.bk AND a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b,
-       round(({matches}) / {float(num_hashes)}, 4) AS est_jaccard
-FROM pairs
-WHERE round(({matches}) / {float(num_hashes)}, 4) >= {threshold}
-"""
-
-
-def minhash_lsh_dedup(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """End-to-end MinHash-LSH near-dup pairs above a Jaccard estimate."""
-    sigs = minhash_signatures(shingles(docs, id_col, text_col), num_hashes, id_col)
-    pairs = lsh_candidate_pairs(sigs, num_hashes, bands, id_col)
-    return pairs.where(F.col("est_jaccard") >= threshold)
-
-
-# ------------------------------------------- portable (oracle-checkable)
-# MinHash variant: xxhash64 has no DuckDB equivalent, so the fast path's
-# HASH cannot be SQL-checked (its downstream pipeline is, via
-# lsh_materialized_oracle_sql). This variant swaps only the signature
-# source and shares the fast path's banding body (lsh_candidate_pairs)
-# outright. It derives every minhash from ONE engine-portable base
-# hash per shingle (low 60 bits of md5, the same trick
-# operators/winnow.py uses) via the textbook universal affine family
-# h_i(x) = (a_i·x + b_i) mod p over the Mersenne prime
-# 2^31−1 (Carter–Wegman) — every value fits in BIGINT on both engines
-# (a, x < 2^31 → a·x < 2^62), so DuckDB reproduces the signatures
-# bit-for-bit and the driver gets an exact oracle for the whole
-# LSH pipeline.
+# ---------------------------------------------------------------- minhash
+# Every minhash derives from ONE engine-portable base hash per shingle
+# (low 60 bits of md5, the same base operators/winnow.py uses) via the
+# textbook universal affine family h_i(x) = (a_i·x + b_i) mod p over
+# the Mersenne prime 2^31−1 (Carter–Wegman) — every value fits in
+# BIGINT on both engines (a, x < 2^31 → a·x < 2^62), so DuckDB
+# reproduces the signatures bit-for-bit and the whole LSH pipeline has
+# an exact oracle (minhash_lsh_portable_oracle_sql).
 
 MERSENNE31 = (1 << 31) - 1
 
@@ -324,36 +189,70 @@ def affine_params(num_hashes: int = 32) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_lsh_dedup_portable(
+def lsh_candidate_pairs(
+    sigs: DataFrame,
+    num_hashes: int = 32,
+    bands: int = 8,
+    id_col: str = "doc_id",
+    max_bucket: int = MAX_LSH_BUCKET,
+) -> DataFrame:
+    """Band the signature matrix (bands × rows), bucket-join on the
+    band tuple, return candidate pairs with the minhash-estimated Jaccard.
+
+    Each (doc, band) row is keyed by the EXACT band tuple (no band
+    hash, so two different bands can never share a bucket). Buckets
+    above max_bucket are excluded from the join (mega-bucket guard;
+    measure dropped mass with bucket_cap_stats)."""
+    rows = num_hashes // bands
+    band_keys = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                *[F.col(f"mh_{b * rows + r}").alias(f"v{r}") for r in range(rows)],
+            )
+            for b in range(bands)
+        ]
+    )
+    melted = sigs.select(
+        id_col,
+        F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias("sig"),
+        F.explode(band_keys).alias("bk"),
+    )
+    pairs = _bucket_pairs(melted, ["bk"], id_col, max_bucket, carry=["sig"])
+    est = (
+        F.size(
+            F.filter(
+                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
+                lambda v: v == 1,
+            )
+        ).cast("double")
+        / F.lit(float(num_hashes))
+    )
+    return pairs.select("doc_a", "doc_b", F.round(est, 4).alias("est_jaccard"))
+
+
+def minhash_lsh_dedup(
     docs: DataFrame,
     threshold: float = 0.5,
     num_hashes: int = 32,
     bands: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_bucket: int = MAX_LSH_BUCKET,
 ) -> DataFrame:
-    """MinHash-LSH with engine-portable hashing (see module comment):
-    the portable signatures feed the SAME banding body as the fast path
-    (lsh_candidate_pairs — band-tuple bucket join with the mega-bucket
-    cap, exact signature compare for the Jaccard estimate).
+    """End-to-end MinHash-LSH near-dup pairs above a Jaccard estimate:
+    the signature matrix is ONE narrow mapInArrow stage
+    (functions/arrowhash.minhash_arrow) feeding the band-tuple bucket
+    join with the mega-bucket cap.
 
     Precondition: `id_col` is unique. The signature kernel emits one
     row per input row, so a duplicated id would land twice in its band
     buckets and inflate their sizes against the cap."""
-    from docling_pdf_spark.functions.arrowhash import (
-        minhash_signatures_portable_arrow,
-    )
+    from docling_pdf_spark.functions.arrowhash import minhash_arrow
 
-    # round 7: the signature matrix is ONE narrow mapInArrow stage
-    # (functions/arrowhash.py) instead of explode(distinct grams) →
-    # md5-chain per gram → groupBy(id) K-min shuffle: identical values
-    # (pinned by minhash_lsh_portable_oracle_sql), one less corpus
-    # shuffle, ~10× cheaper hashing (guide §4.2)
-    sigs = minhash_signatures_portable_arrow(
+    sigs = minhash_arrow(
         docs, affine_params(num_hashes), SHINGLE_WORDS, id_col, text_col
     )
-    pairs = lsh_candidate_pairs(sigs, num_hashes, bands, id_col, max_bucket)
+    pairs = lsh_candidate_pairs(sigs, num_hashes, bands, id_col)
     return pairs.where(F.col("est_jaccard") >= threshold)
 
 
@@ -363,7 +262,7 @@ def minhash_lsh_portable_oracle_sql(
     bands: int = 8,
     max_bucket: int = MAX_LSH_BUCKET,
 ) -> str:
-    """The DuckDB oracle for minhash_lsh_dedup_portable — generated so
+    """The DuckDB oracle for minhash_lsh_dedup — generated so
     the affine constants AND the mega-bucket cap are shared with the
     Spark plan by construction (an uncapped oracle would diverge on any
     corpus where a band bucket exceeds the cap)."""
@@ -506,104 +405,40 @@ def embedding_pairs_from_assigned(
 
 
 # ---------------------------------------------------------------- simhash
-# Two fingerprint variants share one candidate-pair engine
-# (simhash_near_dups):
-#   * simhash_fingerprints — xxhash64 per token (fast path; hash
-#     pytest-gated, downstream pipeline oracled via
-#     simhash_materialized_oracle_sql, recall gated in tests);
-#   * simhash_fingerprints_portable — 60-bit md5-low hash per token
-#     (functions/hashing.py, the same base the portable MinHash uses),
-#     which DuckDB reproduces bit-for-bit, so the whole
-#     fingerprint→chunk→bucket→hamming pipeline gets an EXACT oracle
-#     (simhash_portable_oracle_sql). A 60-bit fingerprint in the 64-bit
-#     chunker is sound: the top 4 bits are 0 for every doc, so chunk
-#     equality and bit_count(xor) are unaffected and the pigeonhole
-#     recall guarantee still holds.
+# Fingerprints hash each token with the 60-bit md5-low base hash
+# (functions/hashing.py, the same base MinHash uses), which DuckDB
+# reproduces bit-for-bit, so the whole fingerprint→chunk→bucket→hamming
+# pipeline has an EXACT oracle (simhash_portable_oracle_sql). A 60-bit
+# fingerprint in the 64-bit chunker is sound: the top 4 bits are 0 for
+# every doc, so chunk equality and bit_count(xor) are unaffected and
+# the pigeonhole recall guarantee still holds.
+
+SIMHASH_BITS = 60
 
 
 def simhash_fingerprints(
     docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
-    """64-bit SimHash per doc: per-token xxhash64, each bit votes ±1,
-    fingerprint bit b = 1 iff the vote sum is positive. Round 7:
-    computed as ONE narrow Arrow stage (functions/arrowhash.py) with a
-    vectorized bit-exact XXH64 twin of F.xxhash64 — the JVM form
-    (kept below as _simhash_fingerprints_jvm for the parity pin) paid
-    64 aggregate-buffer updates per token row through an
-    explode → groupBy shuffle."""
-    from docling_pdf_spark.functions.arrowhash import (
-        simhash_fingerprints_arrow,
-        xxh64_strings,
-    )
+    """60-bit SimHash per doc: per-token md5-low-60 hash, each bit votes
+    ±1, fingerprint bit b = 1 iff the vote sum is positive. ONE narrow
+    mapInArrow stage (functions/arrowhash.simhash_fingerprints_arrow),
+    so no row leaves its partition (guide §4.2)."""
+    from docling_pdf_spark.functions.arrowhash import simhash_fingerprints_arrow
 
-    return simhash_fingerprints_arrow(docs, xxh64_strings, 64, id_col, text_col)
-
-
-def _simhash_fingerprints_jvm(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Reference JVM expression form of simhash_fingerprints (explode +
-    64 sum() bit votes) — retained for the Arrow-vs-JVM parity test."""
-    from docling_pdf_spark.functions.scanspread import spread_unsplittable
-
-    docs = spread_unsplittable(docs.select(F.col(id_col), F.col(text_col)))
-    tok = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("w"),
-    ).where(F.col("w") != "")
-    h = F.xxhash64("w")
-    votes = [
-        F.sum(
-            (F.shiftright(h, b).bitwiseAND(F.lit(1)) * 2 - 1).cast("long")
-        ).alias(f"v_{b}")
-        for b in range(64)
-    ]
-    agg = tok.groupBy(id_col).agg(*votes)
-    fp = reduce(
-        lambda acc, b: acc.bitwiseOR(
-            F.when(F.col(f"v_{b}") > 0, F.lit(1).cast("long") * (1 << b) if b < 63
-                   else F.lit(-(1 << 63)).cast("long")).otherwise(F.lit(0).cast("long"))
-        ),
-        range(64),
-        F.lit(0).cast("long"),
-    )
-    return agg.select(F.col(id_col), fp.alias("simhash"))
-
-
-SIMHASH_PORTABLE_BITS = 60
-
-
-def simhash_fingerprints_portable(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """60-bit SimHash from the engine-portable md5-low-60 token hash,
-    exactly reproducible in DuckDB (simhash_portable_oracle_sql pins
-    it). Round 7: computed as ONE narrow mapInArrow stage
-    (functions/arrowhash.py) instead of explode(tokens) → md5 chain →
-    groupBy(id) with 60 sum() votes — identical fingerprints, the
-    per-token shuffle and the 60-aggregate state are gone entirely
-    (guide §4.2)."""
-    from docling_pdf_spark.functions.arrowhash import (
-        md5_low60_strings,
-        simhash_fingerprints_arrow,
-    )
-
-    return simhash_fingerprints_arrow(
-        docs, md5_low60_strings, SIMHASH_PORTABLE_BITS, id_col, text_col
-    )
+    return simhash_fingerprints_arrow(docs, id_col, text_col)
 
 
 def simhash_portable_oracle_sql(
     max_hamming: int = 8,
     max_bucket: int = MAX_LSH_BUCKET,
 ) -> str:
-    """DuckDB oracle for simhash_near_dups(simhash_fingerprints_portable)
-    — generated so the bit width, chunk layout and the mega-bucket cap
+    """DuckDB oracle for simhash_near_dups(simhash_fingerprints) —
+    generated so the bit width, chunk layout and the mega-bucket cap
     are shared with the Spark plan by construction (mirror of
     minhash_lsh_portable_oracle_sql)."""
     from docling_pdf_spark.functions.hashing import PORTABLE_HASH60_SQL
 
-    nb = SIMHASH_PORTABLE_BITS
+    nb = SIMHASH_BITS
     b = max_hamming + 1  # simhash_near_dups default chunk count
     width = 64 // b
     mask = (1 << width) - 1
@@ -648,17 +483,27 @@ WHERE bit_count(xor(fa, fb)) <= {max_hamming}
 """
 
 
-def simhash_melted(
+def simhash_near_dups(
     fps: DataFrame,
     max_hamming: int = 3,
     id_col: str = "doc_id",
+    max_bucket: int = MAX_LSH_BUCKET,
     n_chunks: int | None = None,
 ) -> DataFrame:
-    """(id, simhash, chunk_idx, chunk) — the fingerprint chunk table
-    BEFORE the mega-bucket cap (one row per (doc, chunk)). Split out of
-    simhash_near_dups so the driver entry can materialize exactly this
-    table and oracle everything downstream of the hash in DuckDB
-    (simhash_materialized_oracle_sql)."""
+    """Candidate pairs via equality on any bit-chunk of the fingerprint
+    (Manku et al. WWW'07), verified with bit_count(xor) ≤ max_hamming.
+
+    Pigeonhole guarantee: with n_chunks = max_hamming + 1 (the default),
+    ≤ max_hamming differing bits cannot touch every chunk, so every
+    true near-dup pair shares at least one chunk bucket — round 1 used
+    a fixed 4 chunks, which silently broke the guarantee for
+    max_hamming > 3. More chunks = shorter chunks = fuller buckets (the
+    recall/candidate-volume dial Manku's multi-table split turns).
+
+    Chunk buckets above max_bucket are excluded (a w-bit chunk space has
+    only 2^w values, so at corpus scale every bucket is b²-quadratic
+    without the cap; dropped mass via bucket_cap_stats on the
+    (chunk_idx, chunk) table)."""
     if n_chunks is None:
         if max_hamming > 20:  # 64 bits / 21 chunks = 3-bit chunks, the floor
             raise ValueError(
@@ -685,20 +530,9 @@ def simhash_melted(
         return F.shiftrightunsigned(F.col("simhash"), width * c).bitwiseAND(F.lit(m))
 
     chunks = F.array(*[chunk(c).alias(f"c{c}") for c in range(b)])
-    return fps.select(
+    melted = fps.select(
         id_col, "simhash", F.posexplode(chunks).alias("chunk_idx", "chunk")
     )
-
-
-def simhash_pairs_from_melted(
-    melted: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    max_bucket: int = MAX_LSH_BUCKET,
-) -> DataFrame:
-    """Everything downstream of the hash: mega-bucket cap, chunk-bucket
-    self-join, pair dedupe (the shared bucket join), Hamming verify via
-    bit_count(xor)."""
     pairs = _bucket_pairs(
         melted, ["chunk_idx", "chunk"], id_col, max_bucket, carry=["simhash"]
     )
@@ -706,59 +540,3 @@ def simhash_pairs_from_melted(
     return pairs.select("doc_a", "doc_b", hamming.alias("hamming")).where(
         F.col("hamming") <= max_hamming
     )
-
-
-def simhash_near_dups(
-    fps: DataFrame,
-    max_hamming: int = 3,
-    id_col: str = "doc_id",
-    max_bucket: int = MAX_LSH_BUCKET,
-    n_chunks: int | None = None,
-) -> DataFrame:
-    """Candidate pairs via equality on any bit-chunk of the fingerprint
-    (Manku et al. WWW'07), verified with bit_count(xor) ≤ max_hamming.
-
-    Pigeonhole guarantee: with n_chunks = max_hamming + 1 (the default),
-    ≤ max_hamming differing bits cannot touch every chunk, so every
-    true near-dup pair shares at least one chunk bucket — round 1 used
-    a fixed 4 chunks, which silently broke the guarantee for
-    max_hamming > 3. More chunks = shorter chunks = fuller buckets (the
-    recall/candidate-volume dial Manku's multi-table split turns).
-
-    Chunk buckets above max_bucket are excluded (a w-bit chunk space has
-    only 2^w values, so at corpus scale every bucket is b²-quadratic
-    without the cap; dropped mass via bucket_cap_stats on the melted
-    (chunk_idx, chunk) table)."""
-    return simhash_pairs_from_melted(
-        simhash_melted(fps, max_hamming, id_col, n_chunks),
-        max_hamming,
-        id_col,
-        max_bucket,
-    )
-
-
-def simhash_materialized_oracle_sql(
-    melted_glob: str,
-    max_hamming: int = 8,
-    max_bucket: int = MAX_LSH_BUCKET,
-) -> str:
-    """DuckDB oracle for simhash_pairs_from_melted over a MATERIALIZED
-    chunk table (hash-materialization pattern, r3 VERDICT #3): the
-    xxhash64 fingerprints are read back from Spark-written parquet, so
-    the cap, the chunk-bucket join, the pair dedupe and the
-    bit_count(xor) Hamming verify are exactly checked; the hash itself
-    stays pytest-gated."""
-    return f"""
-WITH capped AS (
-  SELECT * FROM read_parquet('{melted_glob}')
-  QUALIFY count(*) OVER (PARTITION BY chunk_idx, chunk) <= {max_bucket}
-), pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         a.simhash AS fa, b.simhash AS fb
-  FROM capped a JOIN capped b
-    ON a.chunk_idx = b.chunk_idx AND a.chunk = b.chunk AND a.doc_id < b.doc_id
-)
-SELECT doc_a, doc_b, bit_count(xor(fa, fb)) AS hamming
-FROM pairs
-WHERE bit_count(xor(fa, fb)) <= {max_hamming}
-"""

@@ -48,8 +48,7 @@ def winnow_fingerprints(
     hash_mode 'portable' (default): md5-low-60 — DuckDB computes the
     identical value, so the driver query is exactly oracle-checked.
     'fast': xxhash64, for when nothing external needs to reproduce the
-    hashes ('portable' measured ~35% slower end-to-end at sf0.1, JVM
-    forms). Anything else raises ValueError. Since round 7 both modes
+    hashes. Anything else raises ValueError. Since round 7 both modes
     execute as ONE mapInArrow stage (functions/arrowhash.py): the JVM
     form evaluated the hash inside an interpreted transform() lambda
     at ~3-5 µs/gram; the Arrow kernel computes the identical
@@ -180,7 +179,15 @@ def winnow_near_dup_pairs(
     absolute count triggers on incidental substring overlaps in
     vocabulary-poor corpora, while a high containment means most of the
     smaller document's fingerprint set is reused. Set min_containment
-    (e.g. 0.5) for dedup decisions; min_shared for passage search."""
+    (e.g. 0.5) for dedup decisions; min_shared for passage search.
+
+    Measured recall (tests/test_planted_near_dups.py, curate's settings
+    min_shared=3, min_containment=0.9): 59 of 59 planted one-word-edit
+    pairs among same-vocabulary fixture documents, 0 other pairs. The
+    containment's smaller-set denominator is also its weak side: a
+    document 100x the usual length over the same small vocabulary
+    contains almost every other document's fingerprints (55 false pairs
+    with one such document in the fixture's seed-102 draw)."""
     fp = winnow_fingerprints(docs, k, w, id_col, text_col, hash_mode)
     sizes = fp.groupBy(id_col).agg(F.count("*").alias("n_fp"))
     pairs = _bucket_pairs(fp, ["fingerprint"], id_col, max_bucket).where(

@@ -577,23 +577,17 @@ def test_asof_join_matches_pandas_merge_asof_randomized(spark):
 # ------------------------------------------------- mega-bucket caps
 
 
-@pytest.mark.parametrize("sig_source", ["jvm", "portable"])
-def test_lsh_mega_bucket_cap_bounds_pairs(spark, sig_source):
+def test_lsh_mega_bucket_cap_bounds_pairs(spark):
     """An adversarial corpus where every doc shares one boilerplate
     passage: without the cap the shared band bucket emits O(n²) pairs;
     with it the bucket is dropped and unique near-dup pairs survive.
-    Run over both signature sources (the fast path's JVM xxhash64
-    signatures and minhash_lsh_dedup_portable's Arrow ones): they share
-    one banding body, and the sf0.01 oracle never makes the cap bind."""
-    from docling_pdf_spark.functions.arrowhash import (
-        minhash_signatures_portable_arrow,
-    )
+    The sf0.01 oracle never makes the cap bind, so this is its test."""
+    from docling_pdf_spark.functions.arrowhash import minhash_arrow
     from docling_pdf_spark.operators.dedup import (
         SHINGLE_WORDS,
         affine_params,
         bucket_cap_stats,
         lsh_candidate_pairs,
-        minhash_signatures,
         shingles,
     )
 
@@ -602,12 +596,7 @@ def test_lsh_mega_bucket_cap_bounds_pairs(spark, sig_source):
     rows.append((900, "a genuinely distinct document about mountain weather today"))
     rows.append((901, "a genuinely distinct document about mountain weather today"))
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    if sig_source == "jvm":
-        sigs = minhash_signatures(shingles(docs))
-    else:
-        sigs = minhash_signatures_portable_arrow(
-            docs, affine_params(32), SHINGLE_WORDS, "doc_id", "text"
-        )
+    sigs = minhash_arrow(docs, affine_params(32), SHINGLE_WORDS, "doc_id", "text")
 
     capped = lsh_candidate_pairs(sigs, max_bucket=50)
     n_capped = capped.count()
@@ -648,6 +637,19 @@ def test_simhash_pigeonhole_guarantee(spark):
     found = {(r["doc_a"], r["doc_b"]): r["hamming"]
              for r in simhash_near_dups(fps, max_hamming=8).collect()}
     assert found == {(1, 2): 8}
+
+
+def test_simhash_rejects_chunkings_that_break_the_search(spark):
+    """More than 21 default chunks leaves chunks under 3 bits, and
+    n_chunks outside [1, 64] makes zero-bit chunks that put every
+    fingerprint in one bucket: both are refused before any Spark job."""
+    fps = spark.createDataFrame([(1, 0), (2, 1)], ["doc_id", "simhash"])
+    with pytest.raises(ValueError, match="pigeonhole"):
+        simhash_near_dups(fps, max_hamming=21)
+    for n in (0, 65):
+        with pytest.raises(ValueError, match="n_chunks must be in"):
+            simhash_near_dups(fps, max_hamming=3, n_chunks=n)
+    assert simhash_near_dups(fps, max_hamming=20).columns == ["doc_a", "doc_b", "hamming"]
 
 
 def test_simhash_chunk_cap(spark):
@@ -791,27 +793,6 @@ def test_winnow_fast_arrow_matches_jvm_form(spark):
     assert jvm == arrow and len(arrow) > 0
     with pytest.raises(ValueError, match="hash_mode"):
         winnow_fingerprints(docs, hash_mode="jvm-fast")
-
-
-def test_simhash_fast_arrow_matches_jvm_form(spark):
-    """Round 7: the fast SimHash fingerprints run through the
-    vectorized XXH64 Arrow kernel; they must be bit-identical to the
-    JVM explode + 64-bit-vote aggregate form, including the sign bit
-    (bit 63), unicode tokens, and tokens >= 32 bytes."""
-    from docling_pdf_spark.operators.dedup import (
-        _simhash_fingerprints_jvm,
-        simhash_fingerprints,
-    )
-
-    rows = [(1, "the quick brown fox jumps over the lazy dog " * 3),
-            (2, ""), (3, None), (4, "   \t  "),
-            (5, "ünïcode tökens münchen 日本語 mixed ascii words"),
-            (6, "supercalifragilisticexpialidocious-" * 2 + " short toks"),
-            (7, "a b c d e f g h i j k l m n o p")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    jvm = dict(_simhash_fingerprints_jvm(docs).collect())
-    arrow = dict(simhash_fingerprints(docs).collect())
-    assert jvm == arrow and len(arrow) > 0
 
 
 def test_text_embedding_arrow_matches_jvm_form(spark):

@@ -113,17 +113,17 @@ def test_winnow_is_one_narrow_arrow_stage(spark):
 
 
 def test_portable_minhash_runs_signatures_once_per_join_side(spark):
-    """minhash_lsh_dedup_portable feeds its Arrow signatures straight
+    """minhash_lsh_dedup feeds its Arrow signatures straight
     into the shared band-tuple bucket join (operators/dedup
     ._bucket_pairs), which carries each side's signature: one
     MapInArrow per join side, 2 in all. Joining the signature table
     back to the pairs for the Jaccard estimate ran the Python signature
     stage a third time."""
-    from docling_pdf_spark.operators.dedup import minhash_lsh_dedup_portable
+    from docling_pdf_spark.operators.dedup import minhash_lsh_dedup
     from docling_pdf_spark.plans import formatted_plan
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = formatted_plan(minhash_lsh_dedup_portable(docs, threshold=0.3))
+    plan = formatted_plan(minhash_lsh_dedup(docs, threshold=0.3))
     assert plan.count("MapInArrow (") < 3
 
 

@@ -74,7 +74,7 @@ def _canon_frame(df: pd.DataFrame) -> list[tuple[str, ...]]:
 
 
 def _all_pairs():
-    """Every registry row, the seven retired from the scoreboard
+    """Every registry row, the five retired from the scoreboard
     included: the same compare the correctness harness runs."""
     import __spark_entry__ as se
 
@@ -130,5 +130,12 @@ def test_registry_fits_driver_cap():
     assert "ivf_ann_topk" not in q and "winnow_pairs_portable" not in q
     # 2nd wave
     assert "per_source_cap" in o and "spans_audit" in o
-    assert "simhash_portable" not in q and "top_orders" not in q
+    assert "top_orders" not in q
+    # MinHash and SimHash have one signature path each, which the
+    # scoreboard rows check against the full generated oracles
+    rows = se._registry()
+    assert len(rows) == 55
+    assert "minhash_lsh_dedup" not in rows and "simhash_portable" not in rows
+    assert o["minhash_lsh_portable"].lstrip().startswith("WITH toks AS")
+    assert o["simhash_near_dups"].lstrip().startswith("WITH toks AS")
 
