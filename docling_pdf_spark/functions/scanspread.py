@@ -24,6 +24,12 @@ repartition immediately after the read", made scale-adaptive:
 
 The probe reads only parquet FOOTERS of inputs (a metadata fact, not
 data) and never caches results.
+
+A persisted frame reports no input files, so the probe leaves it alone:
+its width is whatever the shuffle under the cache coalesced to, which
+session.get_spark's coalescing floor (minPartitionSize 64k) keeps at
+the core count for a shuffle of a few hundred KiB. Spread the scan
+itself before persisting (jobs/curate.py does, ahead of extraction).
 """
 
 from __future__ import annotations

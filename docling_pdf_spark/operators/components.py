@@ -34,14 +34,16 @@ set grows quadratically before it collapses (a 1,001-node path peaks at
 316,928 edges against the alternating rounds' 1,000, and needs one more
 round).
 
-Driver-side per-round state is TWO scalars (edge count + an order- and
-content-insensitive checksum for the convergence test), observed inside
-the round's own localCheckpoint job, so a round is ONE query. Each
-round's edge set is localCheckpoint()-ed to truncate lineage — an iterative
-algorithm that keeps its full lineage re-executes every prior round on
-any recompute and overflows the planner at scale. On a real cluster
-prefer reliable checkpoints (spark.sparkContext.setCheckpointDir on
-durable storage) for executor-loss tolerance; localCheckpoint is the
+The loop ends on the fixpoint itself: the canonical edges (u > v) form
+a star forest — no node has two out-edges and no node is both a u and
+a v. One aggregate over (u, out) ∪ (v, in) per node tests it before
+each round, so no round is spent confirming the last one, and a graph
+that is already a star forest (LSH clusters usually are) runs none.
+Each round's edge set is localCheckpoint()-ed to truncate lineage — an
+iterative algorithm that keeps its full lineage re-executes every prior
+round on any recompute and overflows the planner at scale. On a real
+cluster prefer reliable checkpoints (spark.sparkContext.setCheckpointDir
+on durable storage) for executor-loss tolerance; localCheckpoint is the
 single-JVM sandbox equivalent.
 
 The DuckDB twin (test scale only) computes min-reachable-id by
@@ -55,7 +57,7 @@ the §2-beyond curation family (dedup endgame) the graft adds.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -104,18 +106,15 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return to_small.union(to_self).distinct()
 
 
-def _checkpoint(edges: DataFrame) -> tuple[DataFrame, tuple]:
-    """edges, localCheckpoint-ed, and its (count, additive hash): an
-    order-insensitive fingerprint observed in the checkpoint's own job.
-    The hash accumulates in decimal(38,0): summing raw xxhash64 longs
-    overflows int64, which ANSI mode (correctly) refuses."""
-    seen = Observation()
-    edges = edges.observe(
-        seen,
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64("u", "v").cast("decimal(28,0)")).alias("h"),
-    ).localCheckpoint()
-    return edges, (seen.get["n"], seen.get["h"])
+def _is_star_forest(edges: DataFrame) -> bool:
+    """True iff the canonical edges (u > v) are the fixpoint: no node
+    has two out-edges and no node is both a u and a v — i.e. a node
+    with an out-edge has no other edge."""
+    ends = edges.select(F.col("u").alias("n"), F.lit(1).alias("out")).union(
+        edges.select(F.col("v").alias("n"), F.lit(0).alias("out"))
+    )
+    per = ends.groupBy("n").agg(F.sum("out").alias("o"), F.count("*").alias("d"))
+    return per.where((F.col("o") > 0) & (F.col("d") > 1)).isEmpty()
 
 
 def connected_components(
@@ -128,20 +127,18 @@ def connected_components(
     node id in the connected component (deterministic canonical label).
     Isolated docs never appear in `pairs` and so not here — callers
     treat absence as "own component" (see resolve_duplicates)."""
-    edges, sig = _checkpoint(
-        _canonical(pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")))
-    )
-    for _ in range(max_iter):
-        nxt, nsig = _checkpoint(_small_star(_large_star(edges)))
+    edges = _canonical(
+        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    ).localCheckpoint()
+    rounds = 0
+    while not _is_star_forest(edges):
+        if rounds == max_iter:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds"
+            )
+        nxt = _small_star(_large_star(edges)).localCheckpoint()
         edges.unpersist()
-        edges = nxt
-        if nsig == sig:
-            break
-        sig = nsig
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
-        )
+        edges, rounds = nxt, rounds + 1
     # fixpoint edge set is the star graph: (node, root) for every
     # non-root node; add the roots' self-assignments
     assign = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))

@@ -204,31 +204,30 @@ def lsh_candidate_pairs(
     above max_bucket are excluded from the join (mega-bucket guard;
     measure dropped mass with bucket_cap_stats)."""
     rows = num_hashes // bands
-    band_keys = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                *[F.col(f"mh_{b * rows + r}").alias(f"v{r}") for r in range(rows)],
-            )
-            for b in range(bands)
-        ]
+    # SQL strings, not Column builders: one py4j call per expression
+    # instead of one per struct field and lambda
+    bands_sql = ", ".join(
+        "named_struct('band', {b}, {vs})".format(
+            b=b,
+            vs=", ".join(f"'v{r}', mh_{b * rows + r}" for r in range(rows)),
+        )
+        for b in range(bands)
     )
+    sig_sql = ", ".join(f"mh_{i}" for i in range(num_hashes))
     melted = sigs.select(
         id_col,
-        F.array(*[F.col(f"mh_{i}") for i in range(num_hashes)]).alias("sig"),
-        F.explode(band_keys).alias("bk"),
+        F.expr(f"array({sig_sql}) AS sig"),
+        F.expr(f"explode(array({bands_sql})) AS bk"),
     )
     pairs = _bucket_pairs(melted, ["bk"], id_col, max_bucket, carry=["sig"])
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                lambda v: v == 1,
-            )
-        ).cast("double")
-        / F.lit(float(num_hashes))
+    return pairs.select(
+        "doc_a",
+        "doc_b",
+        F.expr(
+            "round(CAST(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y),"
+            f" e -> e)) AS DOUBLE) / {float(num_hashes)}D, 4) AS est_jaccard"
+        ),
     )
-    return pairs.select("doc_a", "doc_b", F.round(est, 4).alias("est_jaccard"))
 
 
 def minhash_lsh_dedup(

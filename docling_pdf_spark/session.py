@@ -76,6 +76,14 @@ def get_spark(
         # every post-shuffle partition (32 by default, near-empty on a
         # small corpus), and every job that reads it pays one task each
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+        # coalescing floor: AQE packs a shuffle into partitions of
+        # max(minPartitionSize, min(advisory, total / defaultParallelism)),
+        # so the 1m default turns a shuffle small in bytes but heavy in
+        # CPU (a few MB of documents feeding Python kernels and gram
+        # explodes) into ONE task. 64k lets it spread to the core count;
+        # at scale total / defaultParallelism is far above either floor,
+        # so large shuffles coalesce as before
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
         # Arrow-batched Python boundary (the only Python stage)
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": str(

@@ -3,7 +3,8 @@ the 100 TB use case the operators exist for, chained end to end. The
 stages in the order the funnel's stage ledger records them ([] =
 optional):
 
-    read_input            the documents parquet
+    read_input            the documents parquet (spread over the cores
+                          when its scan cannot split)
     extract               interleaved docs → span table (mapInArrow)
     quality_gates         length / token / digit-ratio (+ Gopher) gates
     [strip_boilerplate]   CCNet-style corpus-frequent line removal
@@ -136,6 +137,7 @@ def curate(
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    from docling_pdf_spark.functions.scanspread import spread_unsplittable
     from docling_pdf_spark.functions.text import digit_ratio, token_count
     from docling_pdf_spark.operators.components import resolve_duplicates
     from docling_pdf_spark.operators.dedup import minhash_lsh_dedup
@@ -266,7 +268,11 @@ def curate(
         return df
 
     try:
-        docs = _observe("read_input", spark.read.parquet(input_path))
+        # a one-row-group input would run the extraction kernel, and
+        # every narrow stage up to the first shuffle, as ONE task
+        docs = _observe(
+            "read_input", spread_unsplittable(spark.read.parquet(input_path))
+        )
 
         extracted = extract(docs, num_partitions=num_partitions)
         # full_text for the text operators: re-join the text spans (JVM)

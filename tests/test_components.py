@@ -138,16 +138,13 @@ def test_cc_plan_no_python_no_cartesian(spark):
         assert marker not in plan, marker
 
 
-def test_one_query_per_round(spark):
-    """The path 0-1-2-3 takes three rounds, the last of which changes
-    nothing: that is the edge list's checkpoint plus one localCheckpoint
-    per round, four SQL queries. Each convergence signature is observed
-    inside its checkpoint, with no query of its own."""
+def _actions(spark, edges):
+    """(the SQL actions connected_components runs on `edges`, its
+    components), read from the status store."""
     from tests.test_resume import _last_execution_id
 
-    edges = _edges_df(spark, [(0, 1), (1, 2), (2, 3)])
     before = _last_execution_id(spark)
-    cc = connected_components(edges)
+    cc = connected_components(_edges_df(spark, edges))
     after = _last_execution_id(spark)
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
     actions = [
@@ -155,5 +152,22 @@ def test_one_query_per_round(spark):
         for i in range(execs.size())
         if before < execs.apply(i).executionId() <= after
     ]
-    assert actions == ["localCheckpoint"] * 4
-    assert _cc_dict(cc) == {i: 0 for i in range(4)}
+    return actions, _cc_dict(cc)
+
+
+def test_one_query_per_round(spark):
+    """The path 0-1-2-3 is a star forest after two rounds: that is the
+    edge list's checkpoint plus one localCheckpoint per round, each
+    followed by the star-forest test (one isEmpty query). No third
+    round runs to confirm the fixpoint."""
+    actions, got = _actions(spark, [(0, 1), (1, 2), (2, 3)])
+    assert actions == ["localCheckpoint", "isEmpty"] * 3
+    assert got == {i: 0 for i in range(4)}
+
+
+def test_star_forest_input_runs_no_round(spark):
+    """Edges that already form a star forest rooted at each component's
+    minimum are the fixpoint: one checkpoint, one test, no round."""
+    actions, got = _actions(spark, [(1, 0), (2, 0), (5, 3)])
+    assert actions == ["localCheckpoint", "isEmpty"]
+    assert got == {0: 0, 1: 0, 2: 0, 3: 3, 5: 3}

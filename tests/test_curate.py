@@ -965,3 +965,67 @@ def test_curate_mix_stratum_typo_fails_fast(spark, tmp_path):
     with _pytest.raises(ValueError, match="mix-stratum"):
         curate(spark, src, out, mix_budget=100,
                mix_weights={"en": 1}, mix_stratum="prodcuer")
+
+
+def _python_task_sizes(spark, after: int, marker: str) -> list[str]:
+    """The 'data sent to Python workers' value of every MapInArrow node
+    whose description contains `marker`, in the SQL executions after
+    `after`. Spark formats it as 'total (min, med, max ...)\\n<total>
+    (<min>, <med>, <max> ...)' when more than one task reported it."""
+    from tests.test_resume import _last_execution_id
+
+    _last_execution_id(spark)  # drain the listener bus
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    out = []
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        if eid <= after:
+            continue
+        values = store.executionMetrics(eid)
+        nodes = store.planGraph(eid).allNodes()
+        for j in range(nodes.size()):
+            node = nodes.apply(j)
+            if node.name().strip() != "MapInArrow" or marker not in node.desc():
+                continue
+            metrics = node.metrics()
+            for k in range(metrics.size()):
+                m = metrics.apply(k)
+                v = values.get(m.accumulatorId())
+                if m.name() == "data sent to Python workers" and v.isDefined():
+                    out.append(v.get())
+    return out
+
+
+def test_curate_one_row_group_input_runs_python_stages_on_every_core(spark, tmp_path):
+    """A one-row-group input is spread before extraction, and the
+    exact-dedup shuffle (a few hundred KiB) is not coalesced into one
+    partition: the extraction kernel and the MinHash signature kernel
+    each run on more than one task, every one of them fed documents.
+    Near-dups are planted so the pair side is not empty: AQE would
+    replace an empty one, MinHash nodes and all, in the final plan."""
+    from docling_pdf_spark.fixtures import gen_documents
+    from jobs.curate import curate
+    from tests.test_resume import _last_execution_id
+
+    docs = gen_documents(120).to_pylist()
+    for d in docs[20:30]:
+        spans = [dict(s) for s in d["spans"]]
+        text = next((s for s in spans if s["kind"] == "text"), None)
+        if text is not None and text["text"]:
+            text["text"] += " nonce"
+            docs.append({"doc_id": "dup-" + d["doc_id"], "spans": spans})
+    src = str(tmp_path / "docs.parquet")
+    pq.write_table(pa.Table.from_pylist(docs, schema=DOCUMENTS_PA), src)
+    assert pq.ParquetFile(src).num_row_groups == 1
+    before = _last_execution_id(spark)
+    funnel = curate(spark, src, str(tmp_path / "curated"))
+    assert funnel["dropped_near_dups"] > 0
+    for marker in ("_chunked_extract_arrow", "mh_0"):
+        sizes = _python_task_sizes(spark, before, marker)
+        spread = [
+            v for v in sizes
+            if v.startswith("total (min, med, max")
+            and not v.split("\n")[1].split("(")[1].startswith("0.0 B")
+        ]
+        assert spread, (marker, sizes)

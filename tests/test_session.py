@@ -29,3 +29,16 @@ def test_default_driver_heap_fits_the_host(spark):
     conf_bytes = int(value[:-1]) * units[unit] if unit in units else int(value)
     assert conf_bytes <= phys, (value, phys)
     assert spark._jvm.java.lang.Runtime.getRuntime().maxMemory() <= phys
+
+
+def test_small_shuffle_keeps_core_parallelism(spark):
+    """A shuffle of about 1 MiB (0.93 MiB written) keeps at least two
+    partitions after AQE coalescing: at the 1 MiB default floor it
+    becomes one task, however much CPU the rows downstream of it cost."""
+    df = spark.range(7500).select(
+        (F.col("id") % 997).alias("k"),
+        F.sha2(F.col("id").cast("string"), 512).alias("h"),
+    ).repartition("k")
+    sizes = df.rdd.glom().map(len).collect()
+    assert sum(sizes) == 7500
+    assert sum(1 for n in sizes if n) >= 2, sizes

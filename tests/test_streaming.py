@@ -4,6 +4,7 @@ watermarked window agg is streaming-safe (SURVEY.md §2b streaming row)."""
 from __future__ import annotations
 
 import os
+import time
 
 import pyarrow.parquet as pq
 import pytest
@@ -162,6 +163,11 @@ def test_streaming_sessionization_equals_batch(spark, tmp_path):
     half = t.num_rows // 2
     pq.write_table(t.slice(0, half), str(d / "f0.parquet"))
     pq.write_table(t.slice(half), str(d / "f1.parquet"))
+    # the file source takes files in modification-time order (ms); two
+    # files written back to back can tie, so set them 10 s apart
+    now = time.time()
+    os.utime(d / "f0.parquet", (now - 10, now - 10))
+    os.utime(d / "f1.parquet", (now, now))
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     stream = (
