@@ -161,8 +161,9 @@ def _doc_grams(t: str, n: int) -> list[str]:
 
 
 def bucketed_grams_arrow(docs, n, n_buckets, id_col, text_col):
-    """(id, bucket) one row per gram occurrence — twin of operators.dsir
-    ._bucketed_grams(hash_mode='portable')."""
+    """(id, bucket) one row per gram occurrence, WITH multiplicity (the
+    DSIR bag of n-grams, operators/dsir.py); md5-low-60 mod n_buckets,
+    the bucket dsir_oracle_sql computes in DuckDB."""
 
     def doc(t):
         grams = _doc_grams(t, n)

@@ -139,6 +139,39 @@ def _gram_arrays(
     return docs.select(F.col(id_col), F.coalesce(gram, empty).alias("grams"))
 
 
+def decontamination_hits(
+    train: DataFrame,
+    eval: DataFrame,
+    n: int,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+) -> DataFrame:
+    """(id, n_shared_grams) for every training document sharing at
+    least one word-n-gram with the eval (benchmark) set — THE n-gram
+    decontamination definition (the `decontaminate` registry row and
+    curate's decon stage both call it; text normalisation stays with
+    the caller).
+
+    Plan: distinct grams per training doc, distinct grams on the eval
+    side; the eval side is tiny by construction (benchmarks are ~10^6
+    grams at any corpus scale) → broadcast hash join on the gram, then
+    a per-doc count. One narrow gram pass over the training data, no
+    corpus-scale shuffle."""
+    tr = _gram_arrays(train, id_col, text_col, n=n).select(
+        id_col, F.explode(F.array_distinct("grams")).alias("g")
+    )
+    ev = (
+        _gram_arrays(eval, id_col, text_col, n=n)
+        .select(F.explode(F.array_distinct("grams")).alias("g"))
+        .distinct()
+    )
+    return (
+        tr.join(F.broadcast(ev), "g")
+        .groupBy(id_col)
+        .agg(F.count("*").alias("n_shared_grams"))
+    )
+
+
 def shingles(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """(id, shingle_hash) — distinct word-5-gram xxhash64 shingles per
     doc (matching the ngram oracle's `SELECT DISTINCT doc_id,

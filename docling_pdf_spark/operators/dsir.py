@@ -13,13 +13,16 @@ model) and add-one smoothing on both distributions. Selection then
 keeps the top slice / samples proportionally — composable with the
 existing `token_budget_mix` / `stratified_sample` / top-k operators.
 
-Spark-first shape (all JVM, no Python):
-  - ONE pass per distribution: explode word-n-grams → portable-hash
-    bucket → groupBy(bucket) count. The bucket table is ≤ B rows
-    (10,000 default) — totals come from a window over that bounded
-    table, and the log-ratio table BROADCASTS to the scoring join.
-  - Scoring: explode raw grams → broadcast-join the ratio table →
-    one groupBy(doc_id) sum. One corpus shuffle, map-side combined.
+Spark-first shape (one Arrow kernel, the rest JVM):
+  - ONE pass per distribution: the `bucketed_grams_arrow` mapInArrow
+    kernel (functions/arrowhash.py) emits one (id, bucket) row per
+    word-n-gram occurrence → groupBy(bucket) count. The bucket table
+    is ≤ B rows (10,000 default) — totals come from a window over that
+    bounded table, and the log-ratio table BROADCASTS to the scoring
+    join.
+  - Scoring: the same kernel over the raw docs → broadcast-join the
+    ratio table → one groupBy(doc_id) sum. One corpus shuffle,
+    map-side combined.
 At 100 TB the target corpus is small by construction (it is the
 curated exemplar set) and everything corpus-sized moves through
 exactly one hash aggregation per pass.
@@ -45,48 +48,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from docling_pdf_spark.functions.hashing import (
-    PORTABLE_HASH60_SQL,
-    portable_hash60,
-)
+from docling_pdf_spark.functions.arrowhash import bucketed_grams_arrow
+from docling_pdf_spark.functions.hashing import PORTABLE_HASH60_SQL
 
 DSIR_GRAM_WORDS = 2
 DSIR_BUCKETS = 10_000
-
-
-def _bucketed_grams(
-    docs: DataFrame,
-    n: int,
-    n_buckets: int,
-    id_col: str,
-    text_col: str,
-    hash_mode: str = "portable",
-) -> DataFrame:
-    """(id, bucket) — one row per gram occurrence (multiplicity kept:
-    the DSIR generative model is a bag of n-grams). hash_mode
-    'portable' (md5-low-60, DuckDB-reproducible — the oracle contract)
-    or 'fast' (xxhash64 — the production path; same bucketing quality,
-    no cross-engine twin). Ratios and weights must use the SAME mode."""
-    from docling_pdf_spark.operators.dedup import _gram_arrays
-
-    if hash_mode == "portable":
-        # ONE mapInArrow stage (functions/arrowhash.py) computing the
-        # identical md5-low-60 buckets: the JVM form paid the
-        # interpreted-transform gram build plus the md5→hex→conv chain
-        # per gram occurrence (guide §4.2; same round-7 rewrite as
-        # winnow_fingerprints). Exactness pinned by the dsir DuckDB twin.
-        from docling_pdf_spark.functions.arrowhash import bucketed_grams_arrow
-
-        return bucketed_grams_arrow(docs, n, n_buckets, id_col, text_col)
-    elif hash_mode == "fast":
-        bucket = F.pmod(F.xxhash64(F.col("_g")), F.lit(n_buckets))
-    else:
-        raise ValueError(f"hash_mode must be portable|fast, got {hash_mode!r}")
-    return (
-        _gram_arrays(docs, id_col, text_col, n=n)
-        .select(F.col(id_col), F.explode("grams").alias("_g"))
-        .select(F.col(id_col), bucket.alias("bucket"))
-    )
 
 
 def dsir_log_ratios(
@@ -96,19 +62,18 @@ def dsir_log_ratios(
     n_buckets: int = DSIR_BUCKETS,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_mode: str = "portable",
 ) -> DataFrame:
     """(bucket, log_ratio) for every bucket OCCUPIED IN RAW —
     log_ratio = ln p_target(b) − ln p_raw(b) with add-one smoothing
     over the full B-bucket space. Tiny output (≤ n_buckets rows):
     broadcast it into the scoring join."""
     rd = (
-        _bucketed_grams(raw_docs, n, n_buckets, id_col, text_col, hash_mode)
+        bucketed_grams_arrow(raw_docs, n, n_buckets, id_col, text_col)
         .groupBy("bucket")
         .agg(F.count("*").alias("_rc"))
     )
     td = (
-        _bucketed_grams(target_docs, n, n_buckets, id_col, text_col, hash_mode)
+        bucketed_grams_arrow(target_docs, n, n_buckets, id_col, text_col)
         .groupBy("bucket")
         .agg(F.count("*").alias("_tc"))
     )
@@ -145,13 +110,12 @@ def dsir_weights(
     n_buckets: int = DSIR_BUCKETS,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_mode: str = "portable",
 ) -> DataFrame:
     """(id, n_grams, dsir_logweight) for EVERY input doc — docs too
     short for an n-gram get (0, 0.0). The weight is the paper's log
     importance weight, rounded to 4 decimals (float-compare
     contract)."""
-    grams = _bucketed_grams(docs, n, n_buckets, id_col, text_col, hash_mode)
+    grams = bucketed_grams_arrow(docs, n, n_buckets, id_col, text_col)
     scored = (
         grams.join(F.broadcast(log_ratios), "bucket")
         .groupBy(id_col)

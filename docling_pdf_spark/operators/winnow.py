@@ -187,7 +187,14 @@ def winnow_near_dup_pairs(
     containment's smaller-set denominator is also its weak side: a
     document 100x the usual length over the same small vocabulary
     contains almost every other document's fingerprints (55 false pairs
-    with one such document in the fixture's seed-102 draw)."""
+    with one such document in the fixture's seed-102 draw).
+
+    Measured in curate (`--near-dup winnow`, pairwise drop) on the
+    `curate_funnel` benchmark input (seed 111, 711 docs, 200 planted
+    one-word-edit pairs, 4 vCPUs): 138 of 200 planted pairs caught
+    against MinHash's 183, both dropping 0 other documents; 23 Spark
+    jobs against MinHash's 20, at about 3.7× MinHash's warm wall time
+    (9.7 s against 2.7 s)."""
     fp = winnow_fingerprints(docs, k, w, id_col, text_col, hash_mode)
     sizes = fp.groupBy(id_col).agg(F.count("*").alias("n_fp"))
     pairs = _bucket_pairs(fp, ["fingerprint"], id_col, max_bucket).where(

@@ -1169,29 +1169,15 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Eval-set decontamination — flag training documents that share
     any word-n-gram with the held-out benchmark set (the n-gram-overlap
     decontamination used for LLM training corpora). The stand-in eval
-    set is doc_id % 97 == 0.
-
-    Plan: distinct (doc, gram) on the training side, distinct grams on
-    the eval side; the eval side is tiny by construction (benchmarks
-    are ~10^6 grams at any corpus scale) → broadcast hash join on the
-    gram, then a per-doc count. At 100 TB the same plan holds: one
-    narrow gram pass over training data joined against a broadcast
-    eval-gram set — no corpus-scale shuffle."""
-    from docling_pdf_spark.operators.dedup import _gram_arrays
+    set is doc_id % 97 == 0. The plan is the operator's
+    (operators/dedup.decontamination_hits), which curate's decon stage
+    runs too."""
+    from docling_pdf_spark.operators.dedup import decontamination_hits
 
     docs = _t(spark, sf_dir, "documents")
-    # derives from THE shared word-n-gram kernel (review-found: an
-    # inline copy would silently miss future fixes to it)
-    grams = _gram_arrays(docs, "doc_id", "text", n=DECON_GRAM_WORDS).select(
-        "doc_id", F.explode(F.array_distinct(F.col("grams"))).alias("g")
-    )
     is_eval = F.pmod(F.col("doc_id"), F.lit(DECON_EVAL_MOD)) == 0
-    eval_grams = grams.where(is_eval).select("g").distinct()
-    return (
-        grams.where(~is_eval)
-        .join(F.broadcast(eval_grams), "g")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_shared_grams"))
+    return decontamination_hits(
+        docs.where(~is_eval), docs.where(is_eval), DECON_GRAM_WORDS
     )
 
 

@@ -10,6 +10,7 @@ optional):
     [strip_boilerplate]   CCNet-style corpus-frequent line removal
     exact_dedup           keep the lowest doc_id per md5(full_text)
     near_dup_drop         drop the higher doc_id of every near-dup pair
+                          found by MinHash LSH or winnowing (--near-dup)
                           (--cluster-resolve: all but each cluster's min)
     [decon]               eval-set n-gram anti-join, when a stage below
                           counts it first
@@ -42,7 +43,8 @@ would OOM at crawl-scale dup rates).
 
     spark-submit --py-files dist/docling_pdf_spark.zip jobs/curate.py \
         --input <documents parquet> --output <curated path> \
-        [--min-chars 80] [--max-digit-ratio 0.3] [--jaccard 0.8]
+        [--min-chars 80] [--max-digit-ratio 0.3] [--jaccard 0.8] \
+        [--near-dup minhash|winnow]
 """
 
 from __future__ import annotations
@@ -56,7 +58,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-NEAR_DUP_MODES = ("minhash", "winnow", "embedding")
+NEAR_DUP_MODES = ("minhash", "winnow")
 
 # ledger stage → the funnel key its rows_in − rows_out counts toward;
 # unlisted stages drop no rows. Decon's drop lands in whichever of its two
@@ -97,7 +99,6 @@ def curate(
     near_dup: str = "minhash",
     cluster_resolve: bool = False,
     strip_boilerplate: int | None = None,
-    cosine: float = 0.9,
     decon_eval: str | None = None,
     decon_gram_words: int = 8,
     max_dup_line_frac: float | None = None,
@@ -121,19 +122,17 @@ def curate(
 ):
     """documents → curated extracted corpus; returns the funnel dict.
 
-    near_dup: 'minhash' (word-level Jaccard estimate ≥ `jaccard`),
+    near_dup: 'minhash' (word-level Jaccard estimate ≥ `jaccard`) or
     'winnow' (shared winnowed rolling-hash fingerprints — catches
-    partial-passage reuse a whole-doc similarity score dilutes away),
-    or 'embedding' (feature-hashed text vectors, IVF-bucketed cosine
-    pairs ≥ `cosine` — the embedding-space path; swap the hashing-trick
-    embedder for model vectors to dedupe semantically).
+    partial-passage reuse a whole-doc similarity score dilutes away).
+    Each mode has a planted-truth test (tests/test_planted_near_dups.py).
 
     decon_eval: optional parquet of benchmark/eval documents (needs a
     `text` column); any curated doc sharing a word-`decon_gram_words`-
-    gram with the eval set is dropped (n-gram decontamination). The
-    eval gram set is distinct + broadcast — benchmarks stay
-    broadcastable at any corpus scale, so the training side pays one
-    narrow gram pass and no corpus-scale shuffle."""
+    gram with the eval set is dropped (n-gram decontamination,
+    operators/dedup.decontamination_hits: the eval gram set is distinct
+    + broadcast, so the training side pays one narrow gram pass and no
+    corpus-scale shuffle)."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
@@ -401,36 +400,13 @@ def curate(
         texts = exact.select("doc_id", F.col("full_text").alias("text"))
         if near_dup == "minhash":
             pairs = minhash_lsh_dedup(texts, threshold=jaccard)
-        elif near_dup == "winnow":
+        else:  # "winnow"
             # containment, not an absolute count: random same-vocabulary
             # docs share incidental substrings (measured 99th percentile
             # 0.88 on the synthetic corpus), while a true near-dup reuses
             # ~all of the smaller doc's fingerprint set (planted one-word
             # edit measures 0.94) — whole-doc dedup wants near-total reuse
             pairs = winnow_near_dup_pairs(texts, min_shared=3, min_containment=0.9)
-        else:  # "embedding"
-            # embed → train coarse centroids (bounded hash-residue sample) →
-            # multi-probe IVF bucketing → per-bucket exact cosine. The only
-            # broadcast is the collected n×dim centroid list (bounded by
-            # construction); the pair/drop side stays un-broadcast for AQE.
-            from docling_pdf_spark.operators.dedup import embedding_near_dups_bucketed
-            from docling_pdf_spark.operators.similarity import (
-                kmeans_centroids,
-                text_embedding,
-            )
-
-            # persist: centroid training (sample count, seeds, Lloyd
-            # iterations), the multi-probe assignment and both sides of the
-            # per-bucket self-join would otherwise each recompute the full
-            # tokenize→explode→double-groupBy embedding DAG (review-found:
-            # ~6-8 passes of the funnel's most expensive derived stage)
-            emb = _persist(
-                text_embedding(texts, dim=32, id_col="doc_id", text_col="text")
-            )
-            cents = kmeans_centroids(emb, n=16, iters=3, id_col="doc_id")
-            pairs = embedding_near_dups_bucketed(
-                emb, cents, threshold=cosine, id_col="doc_id", nprobe=2
-            ).select(F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"))
         # two drop semantics:
         #   pairwise (default): drop doc_b of every pair — keeps every doc
         #     that is never the larger of a pair. Two docs that are both
@@ -499,24 +475,14 @@ def curate(
             )
 
         if decon_eval:
-            from docling_pdf_spark.operators.dedup import _gram_arrays
+            from docling_pdf_spark.operators.dedup import decontamination_hits
 
-            ev = read_exemplars(decon_eval)
-            ev_grams = (
-                _gram_arrays(ev, "doc_id", "text", n=decon_gram_words)
-                .select(F.explode(F.array_distinct("grams")).alias("g"))
-                .distinct()
-            )
-            tr_grams = _gram_arrays(
+            hits = decontamination_hits(
                 curated.select("doc_id", ws_norm(F.col("full_text")).alias("text")),
-                "doc_id",
-                "text",
-                n=decon_gram_words,
-            ).select("doc_id", F.explode(F.array_distinct("grams")).alias("g"))
-            contaminated = (
-                tr_grams.join(F.broadcast(ev_grams), "g").select("doc_id").distinct()
+                read_exemplars(decon_eval),
+                decon_gram_words,
             )
-            curated = curated.join(contaminated, "doc_id", "left_anti")
+            curated = curated.join(hits.select("doc_id"), "doc_id", "left_anti")
 
         def _materialize(df):
             # persist at a selection boundary (classifier, dsir, mix); the
@@ -579,8 +545,8 @@ def curate(
                     "doc_id", ws_norm(F.col("full_text")).alias("text")
                 )
                 tgt = read_exemplars(dsir_target)
-                ratios = dsir_log_ratios(raw_txt, tgt, hash_mode="fast")
-                w = dsir_weights(raw_txt, ratios, hash_mode="fast")
+                ratios = dsir_log_ratios(raw_txt, tgt)
+                w = dsir_weights(raw_txt, ratios)
                 ranked = global_row_number(
                     w,
                     [F.col("dsir_logweight").desc(), F.col("doc_id").asc()],
@@ -733,14 +699,11 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--min-tokens", type=int, default=10)
     ap.add_argument("--max-digit-ratio", type=float, default=0.3)
     ap.add_argument("--jaccard", type=float, default=0.8)
-    ap.add_argument("--cosine", type=float, default=0.9,
-                    help="cosine threshold for --near-dup embedding")
     ap.add_argument("--near-dup", choices=NEAR_DUP_MODES,
                     default="minhash",
                     help="near-dup detector: whole-doc Jaccard estimate "
-                         "(minhash), shared rolling-hash fingerprints "
-                         "for partial-passage reuse (winnow), or "
-                         "IVF-bucketed embedding cosine (embedding)")
+                         "(minhash) or shared rolling-hash fingerprints "
+                         "for partial-passage reuse (winnow)")
     ap.add_argument("--strip-boilerplate", type=int, default=None,
                     metavar="MIN_DOCS",
                     help="remove lines appearing in >= MIN_DOCS distinct "

@@ -142,32 +142,6 @@ def test_curate_winnow_mode_catches_the_near_dup(spark, tmp_path):
     assert kept == {"keep-1", "keep-2"}
 
 
-def test_curate_embedding_mode_drops_planted_cosine_pair(spark, tmp_path):
-    """r3 VERDICT #4: the embedding/IVF stack wired into the funnel —
-    the planted one-word-edit near-dup pair sits at hashing-trick
-    cosine ≥0.9 and must be dropped via the bucketed (nprobe=2) IVF
-    path; the disjoint-vocabulary doc survives. The drop side stays
-    un-broadcast (source-level invariant asserted in the high-dup test
-    covers every mode — the near-dup branch shares one anti-join)."""
-    from jobs.curate import curate
-
-    rows = [
-        _doc("keep-1", BASE),
-        _doc("near-dup", BASE.replace("lazy", "sleepy")),
-        _doc("keep-2", "an entirely different long document about mountain "
-                       "weather patterns and the seasonal snowfall records "
-                       "measured across forty alpine stations since twenty ten"),
-    ]
-    src = str(tmp_path / "docs.parquet")
-    pq.write_table(pa.Table.from_pylist(rows, schema=DOCUMENTS_PA), src)
-    out = str(tmp_path / "curated")
-    funnel = curate(spark, src, out, min_chars=80, near_dup="embedding",
-                    cosine=0.9)
-    assert funnel["dropped_near_dups"] == 1
-    kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert kept == {"keep-1", "keep-2"}
-
-
 def test_curate_decontaminates_against_eval_set(spark, tmp_path):
     """With --decon-eval, a curated doc sharing an 8-word gram with the
     benchmark set is dropped (and accounted as dropped_contaminated);
@@ -471,8 +445,9 @@ def test_curate_fails_fast_on_bad_near_dup_and_decon_args(spark, tmp_path):
 
     missing = str(tmp_path / "nope.parquet")
     out = str(tmp_path / "o")
-    with pytest.raises(ValueError, match="unknown near_dup mode"):
-        curate(spark, missing, out, near_dup="simhash")
+    for mode in ("simhash", "embedding"):
+        with pytest.raises(ValueError, match="unknown near_dup mode"):
+            curate(spark, missing, out, near_dup=mode)
     with pytest.raises(ValueError, match="decon_gram_words must be >= 2"):
         curate(spark, missing, out, decon_eval=missing, decon_gram_words=1)
 

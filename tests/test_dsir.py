@@ -91,10 +91,10 @@ def test_weight_identity_is_additive_over_grams(spark):
     docs = _docs(spark).limit(50)
     target = docs.where(F.col("doc_id") % 5 == 0)
     ratios = dsir_log_ratios(docs, target)
-    from docling_pdf_spark.operators.dsir import _bucketed_grams
+    from docling_pdf_spark.functions.arrowhash import bucketed_grams_arrow
 
     melted = (
-        _bucketed_grams(docs, 2, 10_000, "doc_id", "text")
+        bucketed_grams_arrow(docs, 2, 10_000, "doc_id", "text")
         .join(ratios, "bucket")
         .collect()
     )
@@ -109,30 +109,6 @@ def test_weight_identity_is_additive_over_grams(spark):
     assert set(got) == set(expect)
     for k in got:
         assert abs(got[k] - round(expect[k], 4)) < 1e-9, k
-
-
-def test_fast_hash_mode_preserves_separation(spark):
-    """The xxhash64 production path has no DuckDB twin, but it must
-    preserve the separation property (same bucketing quality)."""
-    rows = []
-    for i in range(30):
-        rows.append((i, " ".join(
-            f"alpha{j % 11} quality{(i + j) % 7}" for j in range(25)), "A"))
-    for i in range(30, 60):
-        rows.append((i, " ".join(
-            f"spam{j % 3} zzz{(i * j) % 13}" for j in range(25)), "B"))
-    docs = spark.createDataFrame(
-        rows, "doc_id bigint, text string, register string"
-    )
-    target = docs.where(
-        (F.col("register") == "A") & (F.col("doc_id") % 4 == 0)
-    )
-    ratios = dsir_log_ratios(docs, target, hash_mode="fast")
-    w = {
-        r.doc_id: r.dsir_logweight
-        for r in dsir_weights(docs, ratios, hash_mode="fast").collect()
-    }
-    assert min(w[i] for i in range(30)) > max(w[i] for i in range(30, 60))
 
 
 def test_target_total_counts_out_of_raw_vocabulary(spark):
@@ -156,15 +132,15 @@ def test_target_total_counts_out_of_raw_vocabulary(spark):
         r.bucket: r.log_ratio
         for r in dsir_log_ratios(raw, tgt, n_buckets=B).collect()
     }
-    from docling_pdf_spark.operators.dsir import _bucketed_grams
+    from docling_pdf_spark.functions.arrowhash import bucketed_grams_arrow
 
     raw_buckets = [
         r.bucket
-        for r in _bucketed_grams(raw, 2, B, "doc_id", "text").collect()
+        for r in bucketed_grams_arrow(raw, 2, B, "doc_id", "text").collect()
     ]
     tgt_buckets = {
         r.bucket
-        for r in _bucketed_grams(tgt, 2, B, "doc_id", "text").collect()
+        for r in bucketed_grams_arrow(tgt, 2, B, "doc_id", "text").collect()
     }
     rtot, ttot = len(raw_buckets), 5
     from collections import Counter

@@ -104,3 +104,15 @@ def test_winnow_has_no_false_pairs_with_an_oversized_document(spark):
     docs = spark.createDataFrame(rows, "doc_id string, text string")
     got = _pairs(winnow_near_dup_pairs(docs, min_shared=3, min_containment=0.9))
     assert got - truth == set()
+
+
+def test_every_curate_near_dup_mode_has_a_planted_truth_test():
+    """A near-dup mode `curate()` offers must be measured here first:
+    each mode in jobs.curate.NEAR_DUP_MODES needs its
+    test_<mode>_catches_planted_pairs_and_nothing_else in this file.
+    Spark-free."""
+    from jobs.curate import NEAR_DUP_MODES
+
+    missing = [m for m in NEAR_DUP_MODES
+               if f"test_{m}_catches_planted_pairs_and_nothing_else" not in globals()]
+    assert missing == [], f"near-dup modes without a planted-truth test: {missing}"
