@@ -457,9 +457,7 @@ def _winnow_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     from docling_pdf_spark.operators.winnow import winnow_near_dup_pairs
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return winnow_near_dup_pairs(
-        docs, min_shared=3, hash_mode="portable", min_containment=0.5
-    )
+    return winnow_near_dup_pairs(docs, min_shared=3, min_containment=0.5)
 
 
 # repo-local, not /tmp: a predictable world-writable /tmp path could be

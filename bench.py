@@ -31,6 +31,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from docling_pdf_spark.queries import q_winnow_fingerprints  # noqa: E402
+
 BENCH_QUERIES = [
     "pricing_summary",
     "top_orders",
@@ -58,21 +60,6 @@ BENCH_QUERIES = [
 
 CORPUS_DOCS = 10_000
 REPLICATE = 4  # JVM-side copies of the corpus for the extraction headline
-
-
-def _winnow_fast(spark, sf_dir):
-    """Bench-only row (r2 VERDICT #8): winnow_fingerprints with the
-    xxhash64 production hash. The driver entry must stay on the portable
-    md5 hash (that's what DuckDB can check), but ~90% of its bench cost
-    IS that hash — this row separates production cost from
-    oracle-portability cost. Not a driver entry: same operator, same
-    plan, only the hash differs."""
-    from pyspark.sql import functions as F
-
-    from docling_pdf_spark.operators.winnow import winnow_fingerprints
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return winnow_fingerprints(docs, hash_mode="fast")
 
 
 def _minhash_lsh(spark, sf_dir):
@@ -232,13 +219,13 @@ def _quality_classifier(spark, sf_dir):
 
 
 # bench-only extras: timed like BENCH_QUERIES but not part of the
-# driver's queries()/oracle_sql() contract. winnow keeps a fast-vs-
-# portable pair (its xxhash64 kernel is the faster one). MinHash and
-# SimHash have one signature path each (md5-low-60, DuckDB-checkable),
-# so their *_fast and *_portable keys time the SAME callable; both keys
-# stay so the JSON keeps every key it had.
+# driver's queries()/oracle_sql() contract. Winnow, MinHash and SimHash
+# have one hash path each (md5-low-60, DuckDB-checkable), so
+# winnow_fingerprints_fast times the winnow_fingerprints query again and
+# the *_fast and *_portable keys time the SAME callable; the keys stay
+# so the JSON keeps every key it had.
 EXTRA_BENCH = {
-    "winnow_fingerprints_fast": _winnow_fast,
+    "winnow_fingerprints_fast": q_winnow_fingerprints,
     "minhash_lsh_fast": _minhash_lsh,
     "minhash_lsh_portable": _minhash_lsh,
     "simhash_fast": _simhash,

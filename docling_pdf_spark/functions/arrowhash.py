@@ -30,7 +30,7 @@ NOT Python's Unicode \\s; substr counts code points — Python slicing
 matches because both count code points). Every kernel is pinned
 against its DuckDB twin by the existing oracle tests.
 
-All seven kernels share one scaffold, `_doc_kernel`: it owns the
+All six kernels share one scaffold, `_doc_kernel`: it owns the
 unsplittable-scan spread, the output schema, the NULL-text skip, the
 id `take`, the optional explode and the single `mapInArrow` call, so
 each public kernel is just its per-document function.
@@ -140,8 +140,9 @@ def _winnow_doc(t: str, k: int, w: int):
 
 
 def winnow_fingerprints_arrow(docs, k, w, id_col, text_col):
-    """(id, fingerprint) — bit-identical to the JVM expression form of
-    operators.winnow.winnow_fingerprints(hash_mode='portable')."""
+    """(id, fingerprint) — operators.winnow.winnow_fingerprints; the
+    same set DuckDB computes from operators.winnow
+    .winnow_fingerprints_sql."""
     return _doc_kernel(
         docs, id_col, text_col, [_long("fingerprint")],
         lambda t: _winnow_doc(t, k, w), explode=True,
@@ -337,10 +338,10 @@ def repetition_stats_arrow(docs, id_col, text_col, signals, gram_n):
 # ---------------- XXH64 (Spark F.xxhash64 twin, seed 42) -------------
 #
 # Public XXH64 spec (Collet; same algorithm Spark's XxHash64 expression
-# implements over the UTF-8 bytes with seed 42). Used by the fast-mode
-# winnow and embedding kernels: every message is hashed in a
-# batch of equal-length messages, fully vectorized in numpy uint64
-# (wrapping arithmetic == mod-2^64 by construction).
+# implements over the UTF-8 bytes with seed 42). Used by the embedding
+# kernel: every message is hashed in a batch of equal-length messages,
+# fully vectorized in numpy uint64 (wrapping arithmetic == mod-2^64 by
+# construction).
 
 _XP1 = 0x9E3779B185EBCA87
 _XP2 = 0xC2B2AE3D27D4EB4F
@@ -348,63 +349,6 @@ _XP3 = 0x165667B19E3779F9
 _XP4 = 0x85EBCA77C2B2AE63
 _XP5 = 0x27D4EB2F165667C5
 _M64 = (1 << 64) - 1
-
-
-def _xxh64_lanes8(lanes, seed: int = 42):
-    """Vectorized XXH64 of many 8-byte messages given as a uint64 LE
-    lane array — the small-input path (len=8 < 32) of the spec."""
-    with np.errstate(over="ignore"):
-        p1 = np.uint64(_XP1)
-        p2 = np.uint64(_XP2)
-        acc = np.full_like(lanes, np.uint64((seed + _XP5 + 8) & _M64))
-        k1 = lanes * p2
-        k1 = ((k1 << np.uint64(31)) | (k1 >> np.uint64(33))) * p1
-        acc ^= k1
-        acc = ((acc << np.uint64(27)) | (acc >> np.uint64(37))) * p1 + np.uint64(
-            _XP4
-        )
-        acc ^= acc >> np.uint64(33)
-        acc *= p2
-        acc ^= acc >> np.uint64(29)
-        acc *= np.uint64(_XP3)
-        acc ^= acc >> np.uint64(32)
-    return acc.view(np.int64)
-
-
-def _winnow_doc_fast(t: str, k: int, w: int):
-    """Fast-mode (xxhash64, seed 42 — F.xxhash64's default) twin of
-    _winnow_doc. ASCII docs with k=8 vectorize (8-byte grams -> uint64
-    lanes); others hash through the length-classed xxh64_strings."""
-    n = len(t)
-    m = n - k + 1
-    if m < w:
-        return None
-    tb = t.encode("utf-8")
-    if len(tb) == n and k == 8:
-        a = np.frombuffer(tb, dtype=np.uint8).astype(np.uint64)
-        lanes = np.zeros(m, dtype=np.uint64)
-        with np.errstate(over="ignore"):
-            for i in range(8):
-                lanes |= a[i : i + m] << np.uint64(8 * i)
-        hs = _xxh64_lanes8(lanes)
-    else:
-        # non-ASCII (or non-default k): grams are variable-length in
-        # bytes, so hash them through the length-classed vectorized
-        # path instead of a per-gram scalar loop (review-found cliff:
-        # one 'é' in a 10k-char doc sent every gram through interpreted
-        # Python at µs each)
-        hs = xxh64_strings([t[i : i + k] for i in range(m)]).view(np.int64)
-    wm = np.minimum.reduce([hs[i : m - w + 1 + i] for i in range(w)])
-    return (np.unique(wm),)
-
-
-def winnow_fingerprints_fast_arrow(docs, k, w, id_col, text_col):
-    """(id, fingerprint) — bit-identical to the JVM expression form of
-    operators.winnow.winnow_fingerprints(hash_mode='fast')."""
-    return _doc_kernel(
-        docs, id_col, text_col, [_long("fingerprint")],
-        lambda t: _winnow_doc_fast(t, k, w), explode=True,
-    )
 
 
 def _xxh64_fixed_len(mat, seed: int = 42):

@@ -11,16 +11,11 @@ partial-overlap near-dups (plagiarism/quotation/boilerplate reuse) that
 whole-document hashing misses.
 
 Fingerprints are one narrow mapInArrow stage (functions/arrowhash.py)
-— no shuffle until the consumer buckets by fingerprint. The default
+— no shuffle until the consumer buckets by fingerprint. The
 k-gram hash is the low 60 bits of md5 (hex chars 18..32), chosen
 because DuckDB computes the identical value
 (`CAST('0x' || substr(md5(s), 18, 15) AS BIGINT)`), making the operator
 exactly oracle-checkable.
-
-In the JVM reference form (_winnow_fingerprints_jvm) the hash array is
-projected as its own column BEFORE the window transform (same lesson
-as operators/dedup.shingles: an inlined array expression is
-re-evaluated per slice — O(n·w) recompute).
 """
 
 from __future__ import annotations
@@ -41,66 +36,15 @@ def winnow_fingerprints(
     w: int = WINNOW_W,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_mode: str = "portable",
 ) -> DataFrame:
     """(id, fingerprint) — the distinct winnowed fingerprint set.
 
-    hash_mode 'portable' (default): md5-low-60 — DuckDB computes the
-    identical value, so the driver query is exactly oracle-checked.
-    'fast': xxhash64, for when nothing external needs to reproduce the
-    hashes. Anything else raises ValueError. Since round 7 both modes
-    execute as ONE mapInArrow stage (functions/arrowhash.py): the JVM
-    form evaluated the hash inside an interpreted transform() lambda
-    at ~3-5 µs/gram; the Arrow kernel computes the identical
-    fingerprints at ~0.5 µs/gram and keeps the zero-Exchange
-    scan-speed shape (~10× at sf1.0)."""
+    ONE mapInArrow stage (functions/arrowhash.py), no Exchange;
+    DuckDB's winnow_fingerprints_sql computes the same set, so the
+    driver query is exactly oracle-checked."""
     from docling_pdf_spark.functions import arrowhash
 
-    if hash_mode == "portable":
-        kernel = arrowhash.winnow_fingerprints_arrow
-    elif hash_mode == "fast":
-        kernel = arrowhash.winnow_fingerprints_fast_arrow
-    else:
-        raise ValueError(f"hash_mode must be portable|fast, got {hash_mode!r}")
-    return kernel(docs, k, w, id_col, text_col)
-
-
-def _winnow_fingerprints_jvm(
-    docs: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Reference JVM expression form of winnow_fingerprints(hash_mode=
-    'fast') (interpreted transform / slice / array_min over
-    F.xxhash64) — retained for the Arrow-vs-JVM parity test."""
-    from docling_pdf_spark.functions.scanspread import spread_unsplittable
-
-    docs = spread_unsplittable(docs.select(F.col(id_col), F.col(text_col)))
-    text = F.col(text_col)
-    gram_starts = F.when(
-        F.length(text) >= k,
-        F.sequence(F.lit(1), F.length(text) - (k - 1)),
-    ).otherwise(F.array().cast("array<int>"))
-    hashed = docs.select(
-        F.col(id_col),
-        F.transform(
-            gram_starts, lambda i: F.xxhash64(text.substr(i, F.lit(k)))
-        ).alias("hs"),
-    )
-    hs = F.col("hs")
-    win_starts = F.when(
-        F.size(hs) >= w, F.sequence(F.lit(1), F.size(hs) - (w - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return hashed.select(
-        F.col(id_col),
-        F.explode(
-            F.array_distinct(
-                F.transform(win_starts, lambda j: F.array_min(F.slice(hs, j, w)))
-            )
-        ).alias("fingerprint"),
-    )
+    return arrowhash.winnow_fingerprints_arrow(docs, k, w, id_col, text_col)
 
 
 def winnow_fingerprints_sql(k: int = WINNOW_K, w: int = WINNOW_W) -> str:
@@ -130,7 +74,7 @@ def winnow_pairs_oracle_sql(
     w: int = WINNOW_W,
     max_bucket: int = MAX_LSH_BUCKET,
 ) -> str:
-    """DuckDB oracle for winnow_near_dup_pairs(hash_mode='portable') —
+    """DuckDB oracle for winnow_near_dup_pairs —
     generated so k/w, the bucket cap, and both thresholds are shared
     with the Spark plan by construction (mirror of the minhash/simhash
     oracle generators). Rounding parity: Spark F.round is HALF_UP and
@@ -165,14 +109,12 @@ def winnow_near_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_bucket: int = MAX_LSH_BUCKET,
-    hash_mode: str = "fast",
     min_containment: float = 0.0,
 ) -> DataFrame:
     """Candidate pairs sharing ≥ min_shared winnowed fingerprints —
     catches partial-overlap reuse (a shared passage of ≥ w+k−1 chars
     guarantees ≥1 shared fingerprint). Same one-shuffle bucket pattern
-    and mega-bucket cap as the other dedup operators. Pair generation
-    never leaves Spark, so it defaults to the fast hash.
+    and mega-bucket cap as the other dedup operators.
 
     Output includes `containment` = n_shared / min(|fp_a|, |fp_b|) —
     the scale-free near-dup criterion (Broder's containment): an
@@ -186,16 +128,17 @@ def winnow_near_dup_pairs(
     pairs among same-vocabulary fixture documents, 0 other pairs. The
     containment's smaller-set denominator is also its weak side: a
     document 100x the usual length over the same small vocabulary
-    contains almost every other document's fingerprints (55 false pairs
-    with one such document in the fixture's seed-102 draw).
+    contains almost every other document's fingerprints (45 false pairs
+    with one such document in the fixture's seed-102 draw, 105 at seed
+    103).
 
-    Measured in curate (`--near-dup winnow`, pairwise drop) on the
-    `curate_funnel` benchmark input (seed 111, 711 docs, 200 planted
-    one-word-edit pairs, 4 vCPUs): 138 of 200 planted pairs caught
-    against MinHash's 183, both dropping 0 other documents; 23 Spark
-    jobs against MinHash's 20, at about 3.7× MinHash's warm wall time
-    (9.7 s against 2.7 s)."""
-    fp = winnow_fingerprints(docs, k, w, id_col, text_col, hash_mode)
+    Measured in place of curate's MinHash near-dup stage (pairwise
+    drop) on the `curate_funnel` benchmark input (seed 111, 711 docs,
+    200 planted one-word-edit pairs, 4 vCPUs): 138 of 200 planted pairs
+    caught against MinHash's 183, both dropping 0 other documents; 23
+    Spark jobs against MinHash's 20, at about 3.7× MinHash's warm wall
+    time (9.7 s against 2.7 s). So curate runs MinHash only."""
+    fp = winnow_fingerprints(docs, k, w, id_col, text_col)
     sizes = fp.groupBy(id_col).agg(F.count("*").alias("n_fp"))
     pairs = _bucket_pairs(fp, ["fingerprint"], id_col, max_bucket).where(
         F.col("n_shared") >= min_shared

@@ -10,7 +10,7 @@ optional):
     [strip_boilerplate]   CCNet-style corpus-frequent line removal
     exact_dedup           keep the lowest doc_id per md5(full_text)
     near_dup_drop         drop the higher doc_id of every near-dup pair
-                          found by MinHash LSH or winnowing (--near-dup)
+                          found by MinHash LSH
                           (--cluster-resolve: all but each cluster's min)
     [decon]               eval-set n-gram anti-join, when a stage below
                           counts it first
@@ -44,7 +44,7 @@ would OOM at crawl-scale dup rates).
     spark-submit --py-files dist/docling_pdf_spark.zip jobs/curate.py \
         --input <documents parquet> --output <curated path> \
         [--min-chars 80] [--max-digit-ratio 0.3] [--jaccard 0.8] \
-        [--near-dup minhash|winnow]
+        [--near-dup minhash]
 """
 
 from __future__ import annotations
@@ -58,7 +58,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-NEAR_DUP_MODES = ("minhash", "winnow")
+NEAR_DUP_MODES = ("minhash",)
 
 # ledger stage → the funnel key its rows_in − rows_out counts toward;
 # unlisted stages drop no rows. Decon's drop lands in whichever of its two
@@ -122,10 +122,12 @@ def curate(
 ):
     """documents → curated extracted corpus; returns the funnel dict.
 
-    near_dup: 'minhash' (word-level Jaccard estimate ≥ `jaccard`) or
-    'winnow' (shared winnowed rolling-hash fingerprints — catches
-    partial-passage reuse a whole-doc similarity score dilutes away).
-    Each mode has a planted-truth test (tests/test_planted_near_dups.py).
+    near_dup: 'minhash' (word-level Jaccard estimate ≥ `jaccard`), the
+    only detector; it has a planted-truth test
+    (tests/test_planted_near_dups.py). Winnowing was measured in its
+    place on the curate_funnel input and caught fewer planted pairs
+    (138 of 200 against 183) at about 3.7× the wall time. The keyword
+    stays because perfbench/workloads.py passes near_dup="minhash".
 
     decon_eval: optional parquet of benchmark/eval documents (needs a
     `text` column); any curated doc sharing a word-`decon_gram_words`-
@@ -140,7 +142,6 @@ def curate(
     from docling_pdf_spark.functions.text import digit_ratio, token_count
     from docling_pdf_spark.operators.components import resolve_duplicates
     from docling_pdf_spark.operators.dedup import minhash_lsh_dedup
-    from docling_pdf_spark.operators.winnow import winnow_near_dup_pairs
     from docling_pdf_spark.pipeline import extract
 
     def _join_text_spans(delim: str) -> "F.Column":
@@ -398,15 +399,7 @@ def curate(
         # near-dup drop: for every candidate pair, drop doc_b
         # (deterministic: pairs are emitted with doc_a < doc_b)
         texts = exact.select("doc_id", F.col("full_text").alias("text"))
-        if near_dup == "minhash":
-            pairs = minhash_lsh_dedup(texts, threshold=jaccard)
-        else:  # "winnow"
-            # containment, not an absolute count: random same-vocabulary
-            # docs share incidental substrings (measured 99th percentile
-            # 0.88 on the synthetic corpus), while a true near-dup reuses
-            # ~all of the smaller doc's fingerprint set (planted one-word
-            # edit measures 0.94) — whole-doc dedup wants near-total reuse
-            pairs = winnow_near_dup_pairs(texts, min_shared=3, min_containment=0.9)
+        pairs = minhash_lsh_dedup(texts, threshold=jaccard)
         # two drop semantics:
         #   pairwise (default): drop doc_b of every pair — keeps every doc
         #     that is never the larger of a pair. Two docs that are both
@@ -702,8 +695,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--near-dup", choices=NEAR_DUP_MODES,
                     default="minhash",
                     help="near-dup detector: whole-doc Jaccard estimate "
-                         "(minhash) or shared rolling-hash fingerprints "
-                         "for partial-passage reuse (winnow)")
+                         "(minhash, the only one)")
     ap.add_argument("--strip-boilerplate", type=int, default=None,
                     metavar="MIN_DOCS",
                     help="remove lines appearing in >= MIN_DOCS distinct "

@@ -121,27 +121,6 @@ def test_curate_high_dup_corpus_no_forced_broadcast(spark, tmp_path):
     assert not re.search(r"F\.broadcast\(\s*(drop|losers)", src_text)
 
 
-def test_curate_winnow_mode_catches_the_near_dup(spark, tmp_path):
-    """The winnow near-dup mode drops the same planted near-dup (its
-    shared passages guarantee shared fingerprints)."""
-    from jobs.curate import curate
-
-    rows = [
-        _doc("keep-1", BASE),
-        _doc("near-dup", BASE.replace("lazy", "sleepy")),
-        _doc("keep-2", "an entirely different long document about mountain "
-                       "weather patterns and the seasonal snowfall records "
-                       "measured across forty alpine stations since twenty ten"),
-    ]
-    src = str(tmp_path / "docs.parquet")
-    pq.write_table(pa.Table.from_pylist(rows, schema=DOCUMENTS_PA), src)
-    out = str(tmp_path / "curated")
-    funnel = curate(spark, src, out, min_chars=80, near_dup="winnow")
-    assert funnel["dropped_near_dups"] == 1
-    kept = {r["doc_id"] for r in spark.read.parquet(out).collect()}
-    assert kept == {"keep-1", "keep-2"}
-
-
 def test_curate_decontaminates_against_eval_set(spark, tmp_path):
     """With --decon-eval, a curated doc sharing an 8-word gram with the
     benchmark set is dropped (and accounted as dropped_contaminated);
@@ -445,7 +424,7 @@ def test_curate_fails_fast_on_bad_near_dup_and_decon_args(spark, tmp_path):
 
     missing = str(tmp_path / "nope.parquet")
     out = str(tmp_path / "o")
-    for mode in ("simhash", "embedding"):
+    for mode in ("simhash", "embedding", "winnow"):
         with pytest.raises(ValueError, match="unknown near_dup mode"):
             curate(spark, missing, out, near_dup=mode)
     with pytest.raises(ValueError, match="decon_gram_words must be >= 2"):

@@ -422,9 +422,15 @@ def test_approx_count_distinct_within_tolerance(spark):
 def test_winnowing_guarantee_and_pairs(spark):
     """SIGMOD'03 guarantee: a shared substring of length ≥ w+k−1
     (= 11 here) produces ≥1 shared fingerprint; disjoint texts share
-    none; the pair consumer finds the overlapping pair only."""
+    none; the pair consumer finds the overlapping pair only. On edge
+    rows (non-ASCII, empty, NULL, shorter than one window, whitespace
+    runs, CJK) the Arrow kernel's fingerprints equal the DuckDB CTE's
+    row for row."""
+    import duckdb
+
     from docling_pdf_spark.operators.winnow import (
         winnow_fingerprints,
+        winnow_fingerprints_sql,
         winnow_near_dup_pairs,
     )
 
@@ -448,6 +454,19 @@ def test_winnowing_guarantee_and_pairs(spark):
     }
     assert (1, 2) in pairs and pairs[(1, 2)] >= 3
     assert not any(3 in p for p in pairs)
+
+    edge = [(1, "héllo wörld ünïcode ça va très bien"), (2, ""), (3, "short"),
+            (4, None), (5, "a  b   c    d     e      f"), (6, "12345678"),
+            (7, "12345678901"), (8, "日本語のテキストです。これはテスト。")]
+    got = sorted(map(tuple, winnow_fingerprints(
+        spark.createDataFrame(edge, "doc_id long, text string")).collect()))
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", edge)
+    want = sorted(con.execute(
+        f"WITH {winnow_fingerprints_sql()} SELECT doc_id, fingerprint FROM fp"
+    ).fetchall())
+    assert got == want and {d for d, _ in got} == {1, 5, 7, 8}
 
 
 # ------------------------------------------------- text functions
@@ -745,18 +764,15 @@ def test_text_embedding_large_dim_path_consistent(spark):
 
 
 def test_xxh64_kernel_matches_spark(spark):
-    """Round 7: the fast-mode kernels compute F.xxhash64 in numpy
-    (functions/arrowhash.py). The length-classed xxh64_strings and the
-    vectorized 8-byte-lane path must be bit-identical to the JVM
-    expression on ASCII, unicode, empty, and >32-byte inputs."""
+    """Round 7: the embedding kernel computes F.xxhash64 in numpy
+    (functions/arrowhash.py). The length-classed xxh64_strings must be
+    bit-identical to the JVM expression on ASCII, unicode, empty, and
+    >32-byte inputs."""
     import random
 
     import numpy as np
 
-    from docling_pdf_spark.functions.arrowhash import (
-        _xxh64_lanes8,
-        xxh64_strings,
-    )
+    from docling_pdf_spark.functions.arrowhash import xxh64_strings
 
     random.seed(20260822)
     samples = ["abcdefgh", "", "a", "abcd", "héllo wö", "日本語テキスト",
@@ -766,33 +782,6 @@ def test_xxh64_kernel_matches_spark(spark):
     df = spark.createDataFrame([(s,) for s in samples], "s string")
     jvm = [r[0] for r in df.select(F.xxhash64("s")).collect()]
     assert xxh64_strings(samples).view(np.int64).tolist() == jvm
-    eight = [(s, h) for s, h in zip(samples, jvm) if len(s.encode()) == 8]
-    lanes = np.array(
-        [int.from_bytes(s.encode(), "little") for s, _ in eight], dtype=np.uint64
-    )
-    assert len(eight) >= 2
-    assert _xxh64_lanes8(lanes).tolist() == [h for _, h in eight]
-
-
-def test_winnow_fast_arrow_matches_jvm_form(spark):
-    """The fast-mode Arrow kernel must reproduce the JVM interpreted-
-    transform form (_winnow_fingerprints_jvm) fingerprint-for-
-    fingerprint, including non-ASCII and sub-window-length documents.
-    Any hash_mode other than 'portable' or 'fast' is rejected."""
-    from docling_pdf_spark.operators.winnow import (
-        _winnow_fingerprints_jvm,
-        winnow_fingerprints,
-    )
-
-    rows = [(1, "héllo wörld ünïcode ça va très bien"), (2, ""), (3, "short"),
-            (4, None), (5, "a  b   c    d     e      f"), (6, "12345678"),
-            (7, "12345678901"), (8, "日本語のテキストです。これはテスト。")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    jvm = set(map(tuple, _winnow_fingerprints_jvm(docs).collect()))
-    arrow = set(map(tuple, winnow_fingerprints(docs, hash_mode="fast").collect()))
-    assert jvm == arrow and len(arrow) > 0
-    with pytest.raises(ValueError, match="hash_mode"):
-        winnow_fingerprints(docs, hash_mode="jvm-fast")
 
 
 def test_text_embedding_arrow_matches_jvm_form(spark):

@@ -96,8 +96,9 @@ def test_winnow_catches_planted_pairs_and_nothing_else(planted):
     "nearly every other document's fingerprints"))
 def test_winnow_has_no_false_pairs_with_an_oversized_document(spark):
     """Seed 102's fixture draw includes one document from the 0.5%
-    oversized cohort. Measured: winnow pairs it with 55 documents that
-    are not its duplicates (MinHash: 0)."""
+    oversized cohort. Measured: winnow pairs it with 45 documents that
+    are not its duplicates (105 at seed 103); MinHash pairs it with
+    none."""
     from docling_pdf_spark.operators.winnow import winnow_near_dup_pairs
 
     rows, truth = _planted_corpus(102)
